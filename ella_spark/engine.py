@@ -154,6 +154,17 @@ _CREATE_EXTERNAL_RE = re.compile(
     re.I,
 )
 _INFO_SCHEMA_RE = re.compile(r"\binformation_schema\s*\.\s*(tables|columns)\b", re.I)
+_WORD_RE = re.compile(r"\w+")
+_QUOTED_RE = re.compile(r"[`'\"]([^`'\"]+)[`'\"]")
+
+
+def _name_tokens(sql: str) -> set[str]:
+    """Every name ``sql`` may reference, lower-cased: each word, plus
+    the whole text between quotes (a backticked `odd-name`, a TVF's
+    'table' argument). A superset of the relation names Spark's parser
+    finds, compared case-insensitively like Spark's default resolution."""
+    low = sql.lower()
+    return set(_WORD_RE.findall(low)) | set(_QUOTED_RE.findall(low))
 
 #: monotonic suffix for TVF-rewrite temp views. The Spark session is
 #: shared (two Ella instances, or concurrent Lazy reads, may rewrite
@@ -688,6 +699,38 @@ class Ella:
         for entry in list(self.store.tables.values()):
             self._register(entry)
 
+    def _register_referenced(
+        self, sql: str, params: dict | list | None = None
+    ) -> None:
+        """Re-register the catalog objects ``sql`` may reference, and
+        what their stored SQL reads, transitively — each object after
+        the objects it reads, so a view's plan captures fresh topic
+        frames. An object is referenced when its bare name or its
+        view name is one of the statement's name tokens (or a string
+        parameter, for ``IDENTIFIER(:name)``): this can register too
+        much, never too little. Everything else keeps the frame of its
+        last registration, so a statement costs O(its footprint), not
+        O(catalog)."""
+        done: set = set()
+
+        def visit(text: str) -> None:
+            tokens = _name_tokens(text)
+            for entry in list(self.store.tables.values()):
+                if entry.ident in done or not (
+                    {entry.name.lower(), self._view_name(entry).lower()} & tokens
+                ):
+                    continue
+                done.add(entry.ident)
+                # a refreshed MV reads its snapshot, not its SQL
+                if entry.sql and not (
+                    entry.kind == "materialized_view" and entry.version > 0
+                ):
+                    visit(entry.sql)
+                self._register(entry)
+
+        values = params.values() if isinstance(params, dict) else params or ()
+        visit(" ".join([sql, *(f"'{v}'" for v in values if isinstance(v, str))]))
+
     def _register(self, entry: TableEntry) -> None:
         """Expose a catalog table to spark.sql.
 
@@ -991,7 +1034,7 @@ class Ella:
         from ella_spark.incremental import analyze_mv_sql
 
         entry = self._require(name, "materialized_view")
-        self._register_all()  # the SQL may reference topics/views
+        self._register_referenced(entry.sql)
         analysis = analyze_mv_sql(entry.sql)
         topics: list = []
         if analysis is not None:
@@ -2286,10 +2329,14 @@ class Ella:
         Parameters apply to relational statements (and the source
         query of INSERT INTO); DDL verbs take none and raise.
 
-        Topic views are re-registered first: Spark's parquet file index
-        is frozen per DataFrame, so shards published since registration
-        would otherwise be invisible (the reference's TopicExec re-lists
-        shards per scan, topic.rs:165-203 — same semantics).
+        The catalog objects the statement references are re-registered
+        first, with the topics and views their stored SQL reads: Spark's
+        parquet file index is frozen per DataFrame, so shards published
+        since registration would otherwise be invisible (the reference's
+        TopicExec re-lists shards per scan, topic.rs:165-203 — same
+        semantics). Nothing else is touched, so a direct
+        ``spark.sql``/``spark.table`` on a catalog name sees its data
+        as of that name's last registration.
 
         ``INSERT INTO <topic> SELECT ...|VALUES ...`` routes to the
         topic's distributed sink (the reference's DataSink path,
@@ -2306,7 +2353,7 @@ class Ella:
         import time as _time_mod
 
         sql = _NOW_RE.sub(str(_time_mod.time_ns()), sql)
-        self._register_all()
+        self._register_referenced(sql, params)
         if _INFO_SCHEMA_RE.search(sql):
             sql = self._register_information_schema(sql)
         # DDL dispatch runs BEFORE the ann_search rewrite so a stored

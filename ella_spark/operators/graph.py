@@ -551,6 +551,10 @@ def bfs_min_depth(
     frontier⋈edges expansion, distinct, anti-join and the emptiness
     probe all materialize through one lazy localCheckpoint + count.
     ``stats`` (optional) records {"levels": n} for tests.
+
+    An edge with a NULL ``dst`` leads nowhere and is skipped: a NULL
+    never survives the anti-join against ``visited``, so it would
+    otherwise re-enter every frontier and run the loop to the cap.
     """
     # anchor: min(src) at depth 0 — one row even when edges is empty
     # (min over an empty frame is NULL, matching the CTE's anchor)
@@ -564,6 +568,7 @@ def bfs_min_depth(
     for depth in range(1, depth_cap + 1):
         nxt = (
             frontier.join(edges, frontier["node"] == edges["src"])
+            .where(F.col("dst").isNotNull())
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")

@@ -1145,3 +1145,182 @@ def test_parameterized_query(db, spark):
     assert db.query("SELECT v FROM pq_t WHERE k = 99").df.collect()[0].v == 1.5
     with _pytest.raises(ValueError, match="params"):
         db.query("DROP TABLE pq_t", params={"x": 1})
+
+
+# ── per-statement registration: only what a statement references ────
+
+
+@pytest.fixture()
+def topic_reads(monkeypatch):
+    """Names of the topics ``Topic.read`` is called on, in call order."""
+    from ella_spark.topic import Topic
+
+    reads: list[str] = []
+    orig = Topic.read
+
+    def counting(self, *a, **kw):
+        reads.append(self.entry.name)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(Topic, "read", counting)
+    return reads
+
+
+def test_query_reads_only_referenced_topics(db, topic_reads):
+    """A statement's registration cost is its footprint, not the
+    catalog: counts, not timings, so the check cannot be flaky."""
+    cols = [Column("v", "float64"), Column("kind", "string")]
+    for i in range(40):
+        with db.create_topic(f"t{i:02d}", cols).publish() as pub:
+            pub.write(1_000, float(i), "a")
+            pub.write(2_000, float(i) + 1, "b")
+    db.create_view("v_base", "SELECT * FROM t03")
+    db.create_view("v_drift", "SELECT * FROM psi_drift('v_base', 'v', 'kind')")
+    db.create_view("v_top", "SELECT kind, sum(v) AS s FROM v_base GROUP BY kind")
+    topic_reads.clear()
+
+    assert db.query("SELECT 1 AS one").df.collect()[0].one == 1
+    assert topic_reads == []
+
+    assert db.query("SELECT sum(v) AS s FROM t07").df.collect()[0].s == 15.0
+    assert topic_reads == ["t07"]
+
+    # views over a view: only the one topic underneath, once each
+    topic_reads.clear()
+    rows = db.query("SELECT kind, s FROM v_top ORDER BY kind").df.collect()
+    assert [(r.kind, r.s) for r in rows] == [("a", 3.0), ("b", 4.0)]
+    assert topic_reads == ["t03"]
+    topic_reads.clear()
+    rows = db.query("SELECT kind, n FROM v_drift ORDER BY kind").df.collect()
+    assert [(r.kind, r.n) for r in rows] == [("a", 1), ("b", 1)]
+    assert topic_reads == ["t03"]
+
+
+def test_query_through_view_sees_new_shards(db):
+    """A publish to `a` after view `v` over it exists is visible through
+    `v` alone; re-registering `a` leaves another view over it intact."""
+    a = db.create_topic("a", [Column("x", "int64")])
+    with a.publish() as pub:
+        pub.write(1_000, 1)
+    db.create_view("v", "SELECT * FROM a")
+    db.create_view("w", "SELECT x FROM a WHERE x > 1")
+    assert db.query("SELECT count(*) AS n FROM v").df.collect()[0].n == 1
+
+    with a.publish() as pub:
+        pub.write(2_000, 2)
+    assert db.query("SELECT count(*) AS n FROM v").df.collect()[0].n == 2
+
+    # `a` re-registered directly; `w` (not referenced) is left as it was
+    assert db.query("SELECT sum(x) AS s FROM a").df.collect()[0].s == 3
+    with a.publish() as pub:
+        pub.write(3_000, 3)
+    rows = db.query("SELECT x FROM w ORDER BY x").df.collect()
+    assert [r.x for r in rows] == [2, 3]
+
+    # a name bound by a string parameter counts as referenced
+    with a.publish() as pub:
+        pub.write(4_000, 4)
+    lazy = db.query("SELECT count(*) AS n FROM IDENTIFIER(:t)", params={"t": "a"})
+    assert lazy.df.collect()[0].n == 4
+
+
+_TVF_NAMES = (
+    "psi_drift chi2_drift ks_drift cusum_drift js_divergence earth_movers "
+    "page_hinkley mann_whitney grubbs levene runs_test trend_robust "
+    "near_dup_pairs exact_dup_groups distinct_overlap set_churn "
+    "minhash_drift embedding_neardup"
+).split()
+
+#: (statement, the part of it Spark's parser accepts)
+_REFERENCE_CASES = [
+    (s, s)
+    for s in (
+        "SELECT * FROM hot WHERE time > 5",
+        "SELECT h.k, c.v FROM hot h JOIN c01 c ON h.k = c.k",
+        "SELECT * FROM a LEFT JOIN b USING (k) FULL OUTER JOIN c ON a.k = c.k",
+        "WITH x AS (SELECT * FROM a), y AS (SELECT * FROM x JOIN b USING (k)) "
+        "SELECT * FROM y",
+        "SELECT * FROM a WHERE k IN (SELECT k FROM b) "
+        "AND EXISTS (SELECT 1 FROM c WHERE c.k = a.k)",
+        "SELECT (SELECT max(v) FROM b) AS m, s.* FROM (SELECT * FROM a) s",
+        "SELECT * FROM a, LATERAL (SELECT * FROM b WHERE b.k = a.k)",
+        "SELECT kind FROM a GROUP BY kind HAVING count(*) > (SELECT count(*) FROM b)",
+        "SELECT k FROM a INTERSECT SELECT k FROM b EXCEPT SELECT k FROM c",
+        "SELECT * FROM `Odd-Name` JOIN `t03` USING (k)",
+        "SELECT * FROM MixedCase UNION ALL SELECT * FROM MIXEDCASE",
+        "SELECT * FROM sales__orders o JOIN sales.items i ON o.k = i.k",
+        "SELECT /*+ BROADCAST(b) */ * FROM a JOIN b USING (k)",
+        "SELECT * FROM a PIVOT (sum(v) FOR kind IN ('x', 'y'))",
+        "SELECT * FROM mv FOR VERSION AS OF 2",
+        "CREATE VIEW v AS SELECT kind, count(*) AS n FROM a GROUP BY kind",
+        "CREATE OR REPLACE VIEW v2 AS SELECT * FROM v JOIN b ON v.k = b.k",
+        "CREATE TABLE t2 AS SELECT * FROM a",
+        "INSERT INTO tgt SELECT * FROM src",
+        "SELECT * FROM point_lookup('hot', 'k', 42)",
+        "SELECT * FROM ann_search('vecs', 'embedding', 'qv', 5, 6)",
+        "SELECT d.kind FROM v_drift d "
+        "JOIN psi_drift('v_base', 'v', 'kind', 20) p ON d.kind = p.kind",
+        *(f"SELECT * FROM {fn}('src_t', 'col', 'col2')" for fn in _TVF_NAMES),
+    )
+] + [
+    # the engine's own DDL: Spark parses only the query part
+    (
+        "CREATE MATERIALIZED VIEW m AS SELECT kind, sum(v) FROM a "
+        "JOIN b USING (k) GROUP BY kind",
+        "SELECT kind, sum(v) FROM a JOIN b USING (k) GROUP BY kind",
+    ),
+    (
+        "CREATE TOPIC IF NOT EXISTS t3 AS SELECT * FROM ext WHERE k > 0",
+        "SELECT * FROM ext WHERE k > 0",
+    ),
+]
+
+
+def _parsed_names(spark, sql: str) -> set[str]:
+    """Every relation name part Spark's parser finds in ``sql`` (and
+    the literal arguments of table-valued function calls)."""
+    from py4j.java_gateway import JavaObject
+
+    plan_cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.LogicalPlan"
+    )
+
+    def seq(s):
+        it = s.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    names: set[str] = set()
+    todo = [spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)]
+    while todo:
+        plan = todo.pop()
+        kind = plan.getClass().getSimpleName()
+        if kind == "UnresolvedRelation":
+            names.update(seq(plan.multipartIdentifier()))
+        elif kind == "UnresolvedTableValuedFunction":
+            names.update(
+                str(a.value())
+                for a in seq(plan.functionArgs())
+                if a.getClass().getSimpleName() == "Literal"
+            )
+        todo.extend(seq(plan.children()))
+        todo.extend(seq(plan.innerChildren()))
+        todo.extend(seq(plan.subqueries()))
+        # plans held outside children: INSERT's target, time travel
+        todo.extend(
+            x
+            for x in seq(plan.productIterator())
+            if isinstance(x, JavaObject) and plan_cls.isInstance(x)
+        )
+    return names
+
+
+@pytest.mark.parametrize("sql,parsable", _REFERENCE_CASES)
+def test_name_tokens_cover_parsed_relations(spark, sql, parsable):
+    """Token matching may register too much but never too little: every
+    relation Spark's parser finds is among the statement's tokens."""
+    from ella_spark.engine import _name_tokens
+
+    parsed = _parsed_names(spark, parsable)
+    assert parsed, parsable  # the oracle itself found something
+    assert {n.lower() for n in parsed} <= _name_tokens(sql)

@@ -354,3 +354,20 @@ def test_bfs_min_depth_early_exit_level_count(spark):
     got = _bfs_run(spark, edges, cap=8, stats=stats)
     assert got == _bfs_reference(edges, 8)
     assert stats["levels"] == 3  # levels 1,2 discover; level 3 is empty
+
+
+def test_bfs_min_depth_skips_null_dst(spark):
+    """An edge to a NULL dst is not a node: it must neither appear in
+    the result nor keep the frontier alive (a NULL never matches the
+    visited anti-join, so it would re-enter every level up to the cap)."""
+    from ella_spark.operators.graph import bfs_min_depth
+
+    edf = spark.createDataFrame(
+        [(1, 2), (2, None), (2, 3), (3, None)], "src long, dst long"
+    )
+    stats: dict = {}
+    out = bfs_min_depth(edf.localCheckpoint(eager=False), 8, stats=stats)
+    # key=str: a NULL node must fail the comparison, not the sort
+    got = sorted(((r["node"], r["depth"]) for r in out.collect()), key=str)
+    assert got == _bfs_reference([(1, 2), (2, 3)], 8) == [(1, 0), (2, 1), (3, 2)]
+    assert stats["levels"] == 3  # levels 1,2 discover; level 3 is empty

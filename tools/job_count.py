@@ -45,7 +45,6 @@ def main() -> None:
         t0 = time.perf_counter()
         qs[n](spark, SF_DIR).count()
         sec = time.perf_counter() - t0
-        sc.setJobGroup(None, None)
         jobs = tracker.getJobIdsForGroup(group)
         out[n] = {"jobs": len(jobs), "sec": round(sec, 3)}
     print(json.dumps(out))
