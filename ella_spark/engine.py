@@ -166,6 +166,200 @@ def _name_tokens(sql: str) -> set[str]:
     low = sql.lower()
     return set(_WORD_RE.findall(low)) | set(_QUOTED_RE.findall(low))
 
+
+#: `time <op> literal` comparisons that bound a scan, and their mirror
+#: for `literal <op> time`
+_TIME_CMP = {
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "EqualTo": "=",
+}
+_MIRROR = {">": "<", ">=": "<=", "<": ">", "<=": ">=", "=": "="}
+_INT_BITS = {"byte": 8, "short": 16, "integer": 32, "long": 64}
+#: parse-tree nodes whose own strings name columns, functions or
+#: aliases, never a relation to read
+_NAMING_NODES = {
+    "UnresolvedAttribute",
+    "UnresolvedStar",
+    "UnresolvedFunction",
+    "UnresolvedAlias",
+    "Alias",
+}
+
+
+def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
+    """The ``time`` window each relation of ``sql`` needs, from Spark's
+    own parse: ``{name: (start_ns, end_ns)}``, half-open, ``None`` for
+    an open end, keyed by the lower-cased single-part relation name.
+
+    A name is in the result only when every mention of it in the parse
+    is a scan directly under a ``Filter`` (through at most a
+    ``SubqueryAlias``) whose condition ANDs at least one comparison
+    (``<``, ``<=``, ``>``, ``>=``, ``=``, ``BETWEEN``) of ``time`` —
+    unqualified or qualified by that scan's own alias — with an integral
+    literal or a ``+``/``-`` of integral literals; its window is the
+    hull of those scans. Any other mention (a join-level filter, an
+    ``OR``, a correlated ``outer.time``, a string argument, a parameter,
+    time travel) leaves the name out, as does a mention Spark's parse
+    does not carry (a comment, a hint), a parse error, or a plan that
+    is not inspectable (Spark Connect, FORCE_PLAN_OPAQUE). So a window
+    may be too wide, never too narrow. Subquery plans and CTE bodies
+    nest in the parse and are walked like the outer plan."""
+    import json
+
+    if FORCE_PLAN_OPAQUE or getattr(spark, "_jsparkSession", None) is None:
+        return {}
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    scans: dict[str, list] = {}  # name -> windows of its bounded scans
+    mentioned: set[str] = set()
+    strings: list[str] = []  # every string of the parse
+
+    def tree(flat: list, i: int = 0):
+        # toJSON flattens a tree pre-order; num-children rebuilds it
+        node, kids, i = flat[i], [], i + 1
+        for _ in range(node["num-children"]):
+            kid, i = tree(flat, i)
+            kids.append(kid)
+        return (node, kids), i
+
+    def cls(t) -> str:
+        return t[0]["class"].rsplit(".", 1)[-1]
+
+    def is_time(t, alias: str) -> bool:
+        if cls(t) != "UnresolvedAttribute":
+            return False
+        parts = t[0]["nameParts"].strip("[]").lower().split(", ")
+        return parts in ([TIME_COLUMN], [alias, TIME_COLUMN])
+
+    def integral(t):
+        """(value, bits) of an integral literal expression, else None;
+        None too when Spark's own arithmetic would overflow."""
+        if cls(t) == "Literal":
+            bits = _INT_BITS.get(t[0].get("dataType"))
+            if bits is None or t[0].get("value") is None:
+                return None
+            return int(t[0]["value"]), bits
+        if cls(t) not in ("Add", "Subtract"):
+            return None
+        a, b = integral(t[1][0]), integral(t[1][1])
+        if a is None or b is None:
+            return None
+        v = a[0] + b[0] if cls(t) == "Add" else a[0] - b[0]
+        bits = max(a[1], b[1])
+        return (v, bits) if -(1 << bits - 1) <= v < 1 << bits - 1 else None
+
+    def window(cond, alias: str) -> tuple:
+        lo = hi = None
+        todo = [tree(cond)[0]]
+        while todo:
+            t = todo.pop()
+            bounds = []  # (op, value) with time on the left
+            if cls(t) == "And":
+                todo.extend(t[1])
+            elif cls(t) in _TIME_CMP:
+                op, (left, right) = _TIME_CMP[cls(t)], t[1]
+                if is_time(left, alias) and (v := integral(right)):
+                    bounds = [(op, v[0])]
+                elif is_time(right, alias) and (v := integral(left)):
+                    bounds = [(_MIRROR[op], v[0])]
+            elif (
+                cls(t) == "UnresolvedFunction"
+                and t[0]["nameParts"] == "[between]"
+                and not t[0].get("isDistinct")
+                and len(t[1]) == 3
+                and is_time(t[1][0], alias)
+                and (a := integral(t[1][1]))
+                and (b := integral(t[1][2]))
+            ):
+                bounds = [(">=", a[0]), ("<=", b[0])]
+            for op, v in bounds:
+                if op in (">", ">=", "="):
+                    v0 = v + 1 if op == ">" else v
+                    lo = v0 if lo is None else max(lo, v0)
+                if op in ("<", "<=", "="):
+                    v1 = v if op == "<" else v + 1
+                    hi = v1 if hi is None else min(hi, v1)
+        # a bound outside the long range leaves that end open
+        return tuple(
+            None if v is None or not -(1 << 63) <= v < 1 << 63 else v
+            for v in (lo, hi)
+        )
+
+    def walk(value, names: bool = True) -> None:
+        if isinstance(value, str):
+            strings.append(value)
+            if names:
+                mentioned.update(_name_tokens(value))
+        elif isinstance(value, list):
+            if value and isinstance(value[0], dict) and "num-children" in value[0]:
+                walk_tree(tree(value)[0])
+            else:
+                for v in value:
+                    walk(v, names)
+        elif isinstance(value, dict):  # a product: tuple, AliasIdentifier, ...
+            naming = value.get("product-class", "").endswith("AliasIdentifier")
+            for k, v in value.items():
+                if k != "product-class":
+                    walk(v, names and not naming)
+
+    def walk_tree(t, bounded_scan=None) -> None:
+        node, kids = t
+        if cls(t) == "Filter":
+            scan, alias = kids[0], None
+            if cls(scan) == "SubqueryAlias":
+                alias = scan[0]["identifier"]["name"].lower()
+                scan = scan[1][0]
+            ident = scan[0].get("multipartIdentifier", "")
+            if cls(scan) == "UnresolvedRelation" and ", " not in ident:
+                name = ident.strip("[]").lower()
+                lo, hi = window(node["condition"], alias or name)
+                if (lo, hi) != (None, None):
+                    bounded_scan = scan[0]
+                    scans.setdefault(name, []).append((lo, hi))
+        own = node is bounded_scan or cls(t) in _NAMING_NODES
+        for k, v in node.items():
+            if k not in ("class", "num-children"):
+                walk(v, names=not (own and isinstance(v, str)))
+        for kid in kids:
+            walk_tree(kid, bounded_scan)
+
+    try:
+        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+        walk(json.loads(parsed.toJSON()))
+    except (
+        PySparkException,
+        Py4JError,
+        ValueError,
+        LookupError,
+        TypeError,
+        RecursionError,
+    ):
+        # a parse error or a plan shape not walked here: whole topics
+        return {}
+    low = sql.lower()
+
+    def count(name: str, text: str) -> int:
+        return len(re.findall(rf"(?<!\w){re.escape(name)}(?!\w)", text))
+
+    return {
+        name: _hull(ws)
+        for name, ws in scans.items()
+        if name not in mentioned
+        # every mention in the text is one the parse carries
+        and count(name, low) <= sum(count(name, s.lower()) for s in strings)
+    }
+
+
+def _hull(windows) -> tuple:
+    """The smallest window covering all ``windows`` (``None`` = open)."""
+    los, his = zip(*windows)
+    return (None if None in los else min(los), None if None in his else max(his))
+
+
 #: monotonic suffix for TVF-rewrite temp views. The Spark session is
 #: shared (two Ella instances, or concurrent Lazy reads, may rewrite
 #: at once), so fixed per-statement names like ``__psi_drift_0`` can
@@ -710,26 +904,62 @@ class Ella:
         parameter, for ``IDENTIFIER(:name)``): this can register too
         much, never too little. Everything else keeps the frame of its
         last registration, so a statement costs O(its footprint), not
-        O(catalog)."""
-        done: set = set()
+        O(catalog).
 
-        def visit(text: str) -> None:
-            tokens = _name_tokens(text)
+        A topic is registered over the hull of the ``time`` windows
+        ``_time_windows`` finds for it in the statement and in every
+        stored SQL visited (bucket and manifest pruning in
+        ``Topic.read``), so a range query lists and opens only the
+        shards its window touches; a topic any text reads unbounded, or
+        a string parameter names, is registered whole."""
+        done: set = set()
+        order: list[TableEntry] = []
+        texts: list[tuple[str, set]] = []
+
+        def visit(text: str, tokens: set) -> None:
+            texts.append((text, tokens))
             for entry in list(self.store.tables.values()):
                 if entry.ident in done or not (
                     {entry.name.lower(), self._view_name(entry).lower()} & tokens
                 ):
                     continue
                 done.add(entry.ident)
-                # a refreshed MV reads its snapshot, not its SQL
-                if entry.sql and not (
-                    entry.kind == "materialized_view" and entry.version > 0
-                ):
-                    visit(entry.sql)
-                self._register(entry)
+                if self._reads_sql(entry):
+                    visit(entry.sql, _name_tokens(entry.sql))
+                order.append(entry)
 
         values = params.values() if isinstance(params, dict) else params or ()
-        visit(" ".join([sql, *(f"'{v}'" for v in values if isinstance(v, str))]))
+        named = _name_tokens(" ".join(f"'{v}'" for v in values if isinstance(v, str)))
+        visit(sql, _name_tokens(sql) | named)
+        topics = {
+            self._view_name(e).lower(): e for e in order if e.kind == "topic"
+        }
+        windows = [
+            (tokens, _time_windows(self.spark, text) if topics.keys() & tokens else {})
+            for text, tokens in texts
+        ] + [(named, {})]
+        for entry in order:
+            view = self._view_name(entry).lower()
+            found = [
+                w.get(view)
+                for tokens, w in windows
+                if {entry.name.lower(), view} & tokens
+            ]
+            if view not in topics or None in found:
+                self._register(entry)
+            else:
+                Topic(self.store, entry).read(
+                    self.spark, *_hull(found)
+                ).createOrReplaceTempView(self._view_name(entry))
+
+    @staticmethod
+    def _reads_sql(entry: TableEntry) -> bool:
+        """True when ``entry`` reads through its stored SQL: a view, or
+        a materialized view before its first refresh (after it, the MV
+        reads its snapshot)."""
+        return bool(entry.sql) and not (
+            entry.kind == "materialized_view" and entry.version > 0
+        )
 
     def _register(self, entry: TableEntry) -> None:
         """Expose a catalog table to spark.sql.
@@ -819,7 +1049,6 @@ class Ella:
         """Store a named plan re-resolved at scan time (view.rs:23-28):
         persisted as SQL text, registered as a Spark temp view (Catalyst
         inlines it per query exactly like the reference re-plans)."""
-        catalog, schema, base = self._split(name)
         sql = query if isinstance(query, str) else query._sql
         if sql is None:
             # Lazy built from a DataFrame without SQL text: persist via
@@ -829,6 +1058,15 @@ class Ella:
             raise ValueError(
                 "create_view needs SQL text; build the Lazy via Ella.query(sql)"
             )
+        # the last statement may have registered a topic the view reads
+        # over another window: register what it reads over its own
+        self._register_referenced(sql)
+        self._put_view(name, sql, replace)
+
+    def _put_view(self, name: str, sql: str, replace: bool) -> None:
+        """Store and register a view whose dependencies are registered
+        over windows that cover its SQL."""
+        catalog, schema, base = self._split(name)
         entry = TableEntry(
             catalog=catalog, schema=schema, name=base, kind="view", columns=[], sql=sql
         )
@@ -2334,9 +2572,13 @@ class Ella:
         parquet file index is frozen per DataFrame, so shards published
         since registration would otherwise be invisible (the reference's
         TopicExec re-lists shards per scan, topic.rs:165-203 — same
-        semantics). Nothing else is touched, so a direct
-        ``spark.sql``/``spark.table`` on a catalog name sees its data
-        as of that name's last registration.
+        semantics). A topic is registered over the ``time`` window the
+        statement needs (every reading scan filtered on literal ``time``
+        bounds; otherwise the whole topic), so only the shards that
+        window touches are listed and opened. Nothing else is touched,
+        so a direct ``spark.sql``/``spark.table`` on a catalog name sees
+        what that name's last registration covered: for a topic, only
+        the window of the last statement that referenced it.
 
         ``INSERT INTO <topic> SELECT ...|VALUES ...`` routes to the
         topic's distributed sink (the reference's DataSink path,
@@ -3205,7 +3447,8 @@ class Ella:
             self._register(topic.entry)
             return empty()
         if m := _CREATE_VIEW_RE.match(sql):
-            self.create_view(m.group(2), m.group(3).strip(), replace=bool(m.group(1)))
+            # the statement itself registered what the view reads
+            self._put_view(m.group(2), m.group(3).strip(), replace=bool(m.group(1)))
             return empty()
         if m := _DROP_RE.match(sql):
             try:
@@ -3419,7 +3662,11 @@ class Ella:
         return None
 
     def read(self, name: str) -> DataFrame:
-        return self._frame_for(self._require(name, None))
+        entry = self._require(name, None)
+        if self._reads_sql(entry):
+            # its topics as registered may cover another window
+            self._register_referenced(entry.sql)
+        return self._frame_for(entry)
 
     def subscribe(self, name: str) -> DataFrame:
         """Streaming scan of a topic (Subscriber parity,

@@ -50,6 +50,12 @@ PERF_CONFS = {
     # tables are broadcast explicitly (sources.BROADCAST_TABLES).
     "spark.sql.autoBroadcastJoinThreshold": "10MB",
     "spark.sql.files.maxPartitionBytes": "128MB",
+    # A file index over more root paths than this lists them with a
+    # Spark job. Topic reads pass explicit shard lists (manifest-pruned
+    # time windows, incremental MV deltas) of any length, where a
+    # listing job per statement can cost more than the query it
+    # serves: list on the driver at every path count.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
 }
 
 
@@ -106,6 +112,19 @@ def _ship_package(spark: SparkSession) -> None:
         pass
 
 
+def default_driver_memory() -> str:
+    """Driver heap for local mode, where every task thread shares it:
+    half the host's physical memory, capped at 16g (enough to keep GC
+    pauses out of query timings) and at least 1g. A fixed 16g would
+    exceed the RAM of a small host. ``$SPARK_GRAFT_DRIVER_MEM``
+    overrides it."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_session(app_name: str = "ella_spark", master: str | None = None) -> SparkSession:
     """Build (or get) a SparkSession with ella_spark defaults."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -123,8 +142,9 @@ def get_session(app_name: str = "ella_spark", master: str | None = None) -> Spar
             os.path.join(tempfile.gettempdir(), "ella_spark_warehouse"),
         ),
     )
-    # 32 concurrent task threads share one driver heap in local mode;
-    # 16g keeps GC pauses out of the query timings (128 GiB available).
-    builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+    )
     spark = builder.getOrCreate()
     return configure(spark)

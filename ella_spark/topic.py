@@ -18,6 +18,8 @@ row-group min/max stats prune time-range scans.
 
 from __future__ import annotations
 
+import functools
+import operator
 import time as _time
 import uuid
 from pathlib import Path
@@ -223,8 +225,6 @@ class Topic:
         surviving rows either way, so results never depend on bloom
         coverage.
         """
-        from pyspark.sql import functions as F
-
         from ella_spark.session import configure
 
         configure(spark)
@@ -261,11 +261,7 @@ class Topic:
                         continue
                 keep.append(p)
             if len(keep) < len(files):
-                df = self.read_files(spark, keep)
-                if start_ns is not None:
-                    df = df.where(F.col(TIME_COLUMN) >= start_ns)
-                if end_ns is not None:
-                    df = df.where(F.col(TIME_COLUMN) < end_ns)
+                df = self._time_cut(self._read_paths(spark, keep), start_ns, end_ns)
                 return self._apply_col_eq(
                     self._apply_col_ranges(df, col_ranges), col_eq
                 )
@@ -274,19 +270,31 @@ class Topic:
             .option("basePath", str(self.path))
             .parquet(str(self.path))
         )
-        if start_ns is not None:
-            df = df.where(
-                (F.col(PARTITION_COL) >= time_bucket(start_ns))
-                & (F.col(TIME_COLUMN) >= start_ns)
-            )
-        if end_ns is not None:
-            df = df.where(
-                (F.col(PARTITION_COL) <= time_bucket(end_ns - 1))
-                & (F.col(TIME_COLUMN) < end_ns)
-            )
+        df = self._time_cut(df, start_ns, end_ns, bucket=True)
         return self._apply_col_eq(
             self._apply_col_ranges(df.drop(PARTITION_COL), col_ranges), col_eq
         )
+
+    @staticmethod
+    def _time_cut(
+        df: DataFrame, start_ns: int | None, end_ns: int | None, bucket: bool = False
+    ) -> DataFrame:
+        """``df`` restricted to ``[start_ns, end_ns)`` in ONE ``where``
+        (every frame operation is one more analysis on a statement's
+        path); with ``bucket`` the ``__bucket`` partition column is cut
+        too, so whole day directories prune out of the listing."""
+        from pyspark.sql import functions as F
+
+        conds = []
+        if start_ns is not None:
+            conds.append(F.col(TIME_COLUMN) >= start_ns)
+            if bucket:
+                conds.append(F.col(PARTITION_COL) >= time_bucket(start_ns))
+        if end_ns is not None:
+            conds.append(F.col(TIME_COLUMN) < end_ns)
+            if bucket:
+                conds.append(F.col(PARTITION_COL) <= time_bucket(end_ns - 1))
+        return df.where(functools.reduce(operator.and_, conds)) if conds else df
 
     @staticmethod
     def _misses_blooms(ent: dict, eq_probe: dict) -> bool:
@@ -432,6 +440,9 @@ class Topic:
         from ella_spark.session import configure
 
         configure(spark)
+        return self._read_paths(spark, paths)
+
+    def _read_paths(self, spark: SparkSession, paths: list) -> DataFrame:
         if not paths:
             # JVM-side empty relation (Range 0 + typed NULL projection):
             # createDataFrame([], schema) builds an RDD-backed frame
@@ -452,12 +463,11 @@ class Topic:
                     for f in self.spark_schema().fields
                 ]
             )
-        df = (
-            spark.read.schema(self._partitioned_schema())
-            .option("basePath", str(self.path))
-            .parquet(*[str(p) for p in paths])
+        # no basePath: each file's own directory is its base, so no
+        # __bucket column is inferred and none needs dropping
+        return spark.read.schema(self.spark_schema()).parquet(
+            *[str(p) for p in paths]
         )
-        return df.drop(PARTITION_COL)
 
     def bucket_dirs(self) -> list[Path]:
         return sorted(

@@ -1324,3 +1324,227 @@ def test_name_tokens_cover_parsed_relations(spark, sql, parsable):
     parsed = _parsed_names(spark, parsable)
     assert parsed, parsable  # the oracle itself found something
     assert {n.lower() for n in parsed} <= _name_tokens(sql)
+
+
+# ── time-window registration: a topic over the window a statement needs ──
+
+
+def _day_sharded(db, name, days, per_day, rows=4):
+    """A topic of ``per_day`` shards in each day bucket of ``days``;
+    shard ``s`` of day ``d`` holds ``rows`` rows from ``d * DAY + s *
+    DAY / per_day`` on, so shards cover disjoint, increasing ranges."""
+    from ella_spark.topic import DAY_NS
+
+    topic = db.create_topic(name, [Column("k", "int64"), Column("v", "float64")])
+    with topic.publish() as pub:
+        for d in days:
+            for s in range(per_day):
+                t0 = d * DAY_NS + s * (DAY_NS // per_day)
+                pub.write_batch(
+                    [(t0 + i * 1_000, (d * per_day + s + i) % 7, float(i)) for i in range(rows)]
+                )
+                pub.flush()
+    return topic
+
+
+def _window_cases():
+    """(statements, params of each, whether the last one must register
+    ``ev`` over a window: True / False / None for either)."""
+    from ella_spark.topic import DAY_NS as D
+
+    x = D + D // 3 + 2_000  # an existing time
+    return [
+        ([f"SELECT * FROM ev WHERE {D} <= time AND {2 * D} > time"], None, True),
+        ([f"SELECT * FROM ev WHERE time BETWEEN {D // 2} AND {D + D // 2}"], None, True),
+        ([f"SELECT k, v FROM ev WHERE time = {x}"], None, True),
+        ([f"SELECT * FROM ev WHERE time >= {D + 5}"], None, True),
+        ([f"SELECT count(*) AS n FROM ev WHERE time < now() - {D}"], None, True),
+        ([f"SELECT * FROM ev WHERE time >= {-D // 2} AND time < 0"], None, True),
+        ([f"SELECT * FROM ev WHERE time < {-D + 5_000}"], None, True),
+        ([f"SELECT e.k, e.v FROM ev AS e WHERE e.TIME >= {D} AND e.time < {2 * D}"], None, True),
+        ([f"SELECT * FROM EV WHERE TIME < {D}"], None, True),
+        ([f"SELECT * FROM `ev` WHERE `time` >= {2 * D}"], None, True),
+        ([f"SELECT * FROM ev WHERE time < {D} OR time >= {2 * D}"], None, False),
+        (
+            [
+                "SELECT o.k, o.time FROM other o WHERE EXISTS "
+                f"(SELECT 1 FROM ev WHERE ev.k = o.k AND o.time > {D})"
+            ],
+            None,
+            False,
+        ),
+        (
+            [
+                "SELECT a.k, a.v, b.v AS w FROM "
+                f"(SELECT * FROM ev WHERE time >= 0 AND time < {D}) a "
+                f"JOIN (SELECT * FROM ev WHERE time >= {2 * D}) b ON a.k = b.k"
+            ],
+            None,
+            True,
+        ),
+        (
+            [
+                "WITH ev AS (SELECT * FROM other WHERE time >= 0) "
+                f"SELECT * FROM ev WHERE time < {D}"
+            ],
+            None,
+            None,
+        ),
+        (
+            [
+                f"WITH e AS (SELECT * FROM ev WHERE time >= {D}) "
+                f"SELECT * FROM e WHERE time < {2 * D}"
+            ],
+            None,
+            True,
+        ),
+        (
+            [
+                "CREATE OR REPLACE VIEW ev_early AS "
+                f"SELECT * FROM ev WHERE time >= 0 AND time < {D}",
+                f"SELECT * FROM ev_early UNION ALL SELECT * FROM ev WHERE time >= {2 * D}",
+            ],
+            None,
+            True,
+        ),
+        (
+            [f"INSERT INTO sink SELECT time, k, v FROM ev WHERE time >= {D} AND time < {2 * D}"],
+            None,
+            True,
+        ),
+        (
+            [
+                f"CREATE OR REPLACE VIEW ev_mid AS SELECT * FROM ev WHERE time BETWEEN 0 AND {D}",
+                "SELECT * FROM ev_mid",
+            ],
+            None,
+            True,
+        ),
+        (
+            [
+                "SELECT k, v FROM point_lookup('ev', 'k', 3) "
+                f"UNION ALL SELECT k, v FROM ev WHERE time >= {D}"
+            ],
+            None,
+            False,
+        ),
+        ([f"SELECT count(*) AS n FROM IDENTIFIER(:t) WHERE time >= {D}"], {"t": "ev"}, False),
+        (
+            [
+                f"SELECT k FROM ev WHERE time >= {2 * D} "
+                "UNION ALL SELECT k FROM IDENTIFIER(:t)"
+            ],
+            {"t": "ev"},
+            False,
+        ),
+        # an engine verb Spark cannot parse (it rebuilds the manifest)
+        (["ANALYZE ev", f"SELECT * FROM ev WHERE time >= {D}"], None, True),
+    ]
+
+
+def test_time_window_registration_matches_whole_topic(db, monkeypatch):
+    """Registering a topic over a statement's window returns exactly
+    the rows of a whole-topic registration, on a topic with a manifest,
+    four day buckets (one before the epoch) and a shard published after
+    the manifest was built; the filters that must not bound a topic
+    register it whole."""
+    import ella_spark.engine as engine
+    from ella_spark.maintenance import build_manifest
+    from ella_spark.topic import DAY_NS as D, Topic
+
+    ev = _day_sharded(db, "ev", days=(-1, 0, 1, 2), per_day=3)
+    build_manifest(ev)
+    with ev.publish() as pub:  # not in the manifest
+        pub.write(D + 7, 3, 9.0)
+        pub.write(2 * D - 1, 5, 9.5)
+    _day_sharded(db, "other", days=(0, 1, 2), per_day=2)
+    db.create_topic("sink", [Column("k", "int64"), Column("v", "float64")])
+
+    windows: list = []
+    orig = Topic.read
+
+    def spying(self, spark, start_ns=None, end_ns=None, **kw):
+        if self.entry.name == "ev":
+            windows.append((start_ns, end_ns))
+        return orig(self, spark, start_ns, end_ns, **kw)
+
+    monkeypatch.setattr(Topic, "read", spying)
+
+    def rows(stmts, params):
+        for sql in stmts:
+            lazy = db.query(sql, params if sql is stmts[-1] else None)
+        return sorted((tuple(r) for r in lazy.df.collect()), key=repr)
+
+    for stmts, params, bounded in _window_cases():
+        windows.clear()
+        got = rows(stmts, params)
+        if bounded is not None:
+            assert any(w != (None, None) for w in windows) == bounded, stmts
+        with monkeypatch.context() as whole:
+            whole.setattr(engine, "_time_windows", lambda spark, sql: {})
+            want = rows(stmts, params)
+        assert got and got == want, stmts
+
+
+def test_time_window_scans_only_its_shards(db, monkeypatch):
+    """On 160 shards over 10 days with a manifest, a one-day window
+    scans that day's 16 shards and a half-day window 8; an unbounded
+    statement, an OR, or a plan that cannot be inspected scans all 160,
+    and an unbounded statement after a bounded one sees every row."""
+    import ella_spark.engine as engine
+    from ella_spark.maintenance import build_manifest
+    from ella_spark.topic import DAY_NS as D
+
+    build_manifest(_day_sharded(db, "hot", days=range(10), per_day=16))
+    day = f"time >= {3 * D} AND time < {4 * D}"
+
+    def files(where: str) -> int:
+        return len(db.query(f"SELECT k FROM hot WHERE {where}").df.inputFiles())
+
+    def count(where: str = "true") -> int:
+        return db.query(f"SELECT count(*) AS n FROM hot WHERE {where}").df.collect()[0].n
+
+    assert files(day) == 16
+    assert files(f"time >= {3 * D} AND time < {3 * D + D // 2}") == 8
+    assert files("true") == 160
+    assert files(f"time < {D} OR time >= {9 * D}") == 160
+    assert count(day) == 64
+    assert count() == 640  # after a bounded statement
+    monkeypatch.setattr(engine, "FORCE_PLAN_OPAQUE", True)
+    assert files(day) == 160
+    assert count(day) == 64
+
+
+def test_bounded_read_of_many_shards_starts_no_listing_job(db, spark):
+    """A bounded read keeping 40 shards passes 40 explicit paths, past
+    Spark's parallel-listing threshold (32 by default): building the
+    frame must not start a Spark job to list them."""
+    from ella_spark.maintenance import build_manifest
+    from ella_spark.topic import DAY_NS as D
+
+    topic = _day_sharded(db, "hot", days=range(4), per_day=16)
+    build_manifest(topic)
+    sc = spark.sparkContext
+    sc.setJobGroup("bounded-read-listing", "bounded read of 40 shards")
+    try:
+        df = topic.read(spark, 1 * D, 3 * D + 8 * (D // 16))
+        jobs = list(sc.statusTracker().getJobIdsForGroup("bounded-read-listing"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(df.inputFiles()) == 40
+    assert jobs == []
+
+
+def test_view_registered_after_another_window_reads_its_own(db, spark):
+    """A view created or read after a statement registered its topic
+    over another window still sees every row its own SQL selects."""
+    from ella_spark.topic import DAY_NS as D
+
+    _day_sharded(db, "ev", days=(0, 1, 2), per_day=2)
+    late = db.query(f"SELECT * FROM ev WHERE time >= {D}")
+    early = f"SELECT count(*) AS n FROM ev WHERE time < {D}"
+    assert db.query(early).df.collect()[0].n == 8
+    late.create_view("late")
+    assert spark.table("late").count() == 16
+    assert db.query(early).df.collect()[0].n == 8
+    assert db.read("late").count() == 16

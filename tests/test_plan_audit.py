@@ -660,6 +660,32 @@ def test_q5_region_prefilter_semi_joins(spark):
     assert plan.count("LeftSemi") == 2, plan
 
 
+def test_q7_nation_pair_prefilter_semi_joins(spark):
+    """q7_volume_shipping (r15): supplier and customer are each
+    pre-filtered to the two nations' keys by a broadcast LEFT SEMI join
+    before the fact joins, so only the pair's lines reach the
+    shuffles."""
+    plan = _plan(spark, "q7_volume_shipping")
+    assert plan.count("LeftSemi") == 2, plan
+
+
+def test_q8_region_prefilter_semi_join(spark):
+    """q8_market_share (r15): customer is pre-filtered to AMERICA's
+    nation keys by one broadcast LEFT SEMI join before the orders
+    join."""
+    plan = _plan(spark, "q8_market_share")
+    assert plan.count("LeftSemi") == 1, plan
+
+
+def test_q11_nation_prefilter_semi_join(spark):
+    """q11_important_parts (r15): supplier is pre-filtered to NATION_3's
+    key by a broadcast LEFT SEMI join before the lineitem join; the
+    per-part value frame feeds both the rows and the threshold total,
+    so the plan carries the semi once per branch."""
+    plan = _plan(spark, "q11_important_parts")
+    assert plan.count("LeftSemi") == 2, plan
+
+
 def test_q21_single_lineitem_pass(spark):
     """q21_waiting_suppliers: the EXISTS + NOT EXISTS pair is
     decorrelated into ONE lineitem(x)orders pass + a window over the
