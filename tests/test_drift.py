@@ -327,8 +327,8 @@ def test_tvf_rewrite_views_are_unique_and_span_spliced(spark, tmp_path):
 
     # two rewrites of the SAME call text -> distinct temp views, so a
     # second statement can never clobber the first's view mid-analysis
-    s1 = db._rewrite_psi_drift("SELECT * FROM psi_drift('m', 'v', 'kind')")
-    s2 = db._rewrite_psi_drift("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    s1 = db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    s2 = db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
     v1 = s1.split("FROM ")[1].strip()
     v2 = s2.split("FROM ")[1].strip()
     assert v1 != v2 and v1.startswith("__psi_drift_")
@@ -342,7 +342,7 @@ def test_tvf_rewrite_views_are_unique_and_span_spliced(spark, tmp_path):
     assert out == "SELECT 'xyz' FROM v9"
 
     # two distinct calls in ONE statement each get their own view
-    s3 = db._rewrite_psi_drift(
+    s3 = db._apply_tvf_rewrites(
         "SELECT * FROM psi_drift('m', 'v', 'kind') "
         "UNION ALL SELECT * FROM psi_drift('m', 'v', 'kind', 4)"
     )
@@ -378,7 +378,7 @@ def test_tvf_view_gc_deferred_and_session_correct(spark, tmp_path):
 
     # simulate a statement that registered cap+8 views: NONE may be
     # evicted while pending (they are all part of the same statement)
-    db._rewrite_psi_drift("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
     first_view = db._tvf_views_pending[0]
     db._tvf_views_pending.extend(
         f"__fake_{i}" for i in range(_TVF_VIEW_CAP + 8)
@@ -411,7 +411,7 @@ def test_tvf_view_gc_deferred_and_session_correct(spark, tmp_path):
     with t2.publish() as pub:
         for i, v in enumerate([1.0, 11.0]):
             pub.write((i + 1) * ns, "a", v)
-    db2._rewrite_psi_drift("SELECT * FROM psi_drift('m2', 'v', 'kind')")
+    db2._apply_tvf_rewrites("SELECT * FROM psi_drift('m2', 'v', 'kind')")
     v2 = db2._tvf_views_pending[0]
     db2._apply_tvf_rewrites("SELECT 1")  # promote v2 to the live window
     assert spark2.catalog.tableExists(v2)
@@ -442,7 +442,7 @@ def test_tvf_live_window_holds_sessions_weakly(spark, tmp_path):
     with t.publish() as pub:
         for i, v in enumerate([1.0, 11.0]):
             pub.write((i + 1) * ns, "a", v)
-    db._rewrite_psi_drift("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
     db._apply_tvf_rewrites("SELECT 1")  # promote pending -> live
     ref, _name = eng._TVF_VIEW_LIVE[-1]
     assert ref() is spark  # weak, but resolves while the session lives

@@ -1326,6 +1326,32 @@ def test_name_tokens_cover_parsed_relations(spark, sql, parsable):
     assert {n.lower() for n in parsed} <= _name_tokens(sql)
 
 
+def test_every_tvf_has_a_parser_oracle_case():
+    """The SQL table functions are exactly the ones the parser-oracle
+    cases call (``ann_search`` and ``point_lookup`` have their own), so
+    a new function cannot skip the name-token check above."""
+    from ella_spark.tvf import TVFS
+
+    assert {t.name for t in TVFS} == {*_TVF_NAMES, "ann_search", "point_lookup"}
+
+
+def test_drop_registers_nothing(db, topic_reads):
+    """A DROP reads nothing: dropping a view runs neither its plan nor
+    its table functions, and a view whose table is gone can still be
+    dropped from SQL."""
+    cols = [Column("v", "float64"), Column("kind", "string")]
+    with db.create_topic("t", cols).publish() as pub:
+        pub.write(1_000, 1.0, "a")
+    db.query("CREATE VIEW v AS SELECT * FROM t")
+    db.query("CREATE VIEW w AS SELECT * FROM psi_drift('t', 'v', 'kind')")
+    topic_reads.clear()
+    db.query("DROP VIEW w")
+    assert topic_reads == []
+    db.query("DROP TABLE t")
+    db.query("DROP VIEW v")
+    assert db.tables() == []
+
+
 # ── time-window registration: a topic over the window a statement needs ──
 
 
@@ -1548,3 +1574,198 @@ def test_view_registered_after_another_window_reads_its_own(db, spark):
     assert spark.table("late").count() == 16
     assert db.query(early).df.collect()[0].n == 8
     assert db.read("late").count() == 16
+
+
+# ── SQL table functions: which texts are rewritten, and how they fail ──
+
+#: (statement, the rewritten text with each view number as ``#``, or
+#: the exact ``ValueError`` message, or an analysis error's condition).
+#: Topic ``t`` and view ``w`` over it come from ``tvf_db``.
+_TVF_GOLDEN = [
+    # every function, with and without each optional argument
+    ("SELECT * FROM ann_search('t', 'emb', 't')",
+     "no vector index on t.emb; call create_vector_index first"),
+    ("SELECT * FROM ann_search('t', 'emb', 't', 3)",
+     "no vector index on t.emb; call create_vector_index first"),
+    ("SELECT * FROM ann_search('t', 'emb', 't', 3, 2)",
+     "no vector index on t.emb; call create_vector_index first"),
+    ("SELECT * FROM point_lookup('t', 'doc_id', 2)",
+     "SELECT * FROM __point_lookup_#"),
+    ("SELECT * FROM psi_drift('t', 'v', 'kind')", "SELECT * FROM __psi_drift_#"),
+    ("SELECT * FROM psi_drift('w', 'v', 'kind', 4)", "SELECT * FROM __psi_drift_#"),
+    # an unknown table proves a match as well as a rewrite does, and
+    # runs no operator
+    ("SELECT * FROM chi2_drift('t', 'kind', 'txt')", "SELECT * FROM __chi2_drift_#"),
+    ("SELECT * FROM ks_drift('nope', 'v', 'kind')", "ks_drift: unknown table 'nope'"),
+    ("SELECT * FROM cusum_drift('nope', 'v', 'kind')",
+     "cusum_drift: unknown table 'nope'"),
+    ("SELECT * FROM cusum_drift('t', 'v', 'kind', 'time')",
+     "SELECT * FROM __cusum_drift_#"),
+    ("SELECT * FROM js_divergence('t', 'v', 'kind')",
+     "SELECT * FROM __js_divergence_#"),
+    ("SELECT * FROM js_divergence('t', 'v', 'kind', 1)",
+     "SELECT * FROM __js_divergence_#"),
+    ("SELECT * FROM earth_movers('t', 'v', 'kind')", "SELECT * FROM __earth_movers_#"),
+    ("SELECT * FROM page_hinkley('t', 'v', 'kind')", "SELECT * FROM __page_hinkley_#"),
+    ("SELECT * FROM page_hinkley('nope', 'v', 'kind', 'time')",
+     "page_hinkley: unknown table 'nope'"),
+    ("SELECT * FROM page_hinkley('nope', 'v', 'kind', 25)",
+     "page_hinkley: unknown table 'nope'"),
+    ("SELECT * FROM page_hinkley('t', 'v', 'kind', 'time', 2.5)",
+     "SELECT * FROM __page_hinkley_#"),
+    ("SELECT * FROM mann_whitney('t', 'v', 'kind')", "SELECT * FROM __mann_whitney_#"),
+    ("SELECT * FROM grubbs('w', 'v', 'kind')", "SELECT * FROM __grubbs_#"),
+    ("SELECT * FROM levene('t', 'v', 'kind')", "SELECT * FROM __levene_#"),
+    ("SELECT * FROM runs_test('nope', 'v', 'kind')", "runs_test: unknown table 'nope'"),
+    ("SELECT * FROM runs_test('t', 'v', 'kind', 'time')",
+     "SELECT * FROM __runs_test_#"),
+    ("SELECT * FROM trend_robust('t', 'v', 'kind')", "SELECT * FROM __trend_robust_#"),
+    ("SELECT * FROM trend_robust('nope', 'v', 'kind', 'time')",
+     "trend_robust: unknown table 'nope'"),
+    ("SELECT * FROM trend_robust('nope', 'v', 'kind', 7)",
+     "trend_robust: unknown table 'nope'"),
+    ("SELECT * FROM trend_robust('t', 'v', 'kind', 'time', 1)",
+     "SELECT * FROM __trend_robust_#"),
+    ("SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id')",
+     "SELECT * FROM __near_dup_pairs_#"),
+    ("SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id', 1)",
+     "SELECT * FROM __near_dup_pairs_#"),
+    ("SELECT * FROM near_dup_pairs('nope', 'txt', 'doc_id', 0.8)",
+     "near_dup_pairs: unknown table 'nope'"),
+    ("SELECT * FROM exact_dup_groups('w', 'txt', 'doc_id')",
+     "SELECT * FROM __exact_dup_groups_#"),
+    ("SELECT * FROM distinct_overlap('nope', 'kind', 'txt')",
+     "distinct_overlap: unknown table 'nope'"),
+    ("SELECT * FROM distinct_overlap('t', 'kind', 'txt', 2)",
+     "SELECT * FROM __distinct_overlap_#"),
+    ("SELECT * FROM set_churn('nope', 'kind', 'txt')", "set_churn: unknown table 'nope'"),
+    ("SELECT * FROM set_churn('t', 'kind', 'txt', 'time', 7)",
+     "SELECT * FROM __set_churn_#"),
+    ("SELECT * FROM minhash_drift('nope', 'kind', 'txt')",
+     "minhash_drift: unknown table 'nope'"),
+    ("SELECT * FROM minhash_drift('nope', 'kind', 'txt', 'time')",
+     "minhash_drift: unknown table 'nope'"),
+    ("SELECT * FROM minhash_drift('t', 'kind', 'txt', 'time', 2)",
+     "SELECT * FROM __minhash_drift_#"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id')",
+     "SELECT * FROM __embedding_neardup_#"),
+    ("SELECT * FROM embedding_neardup('nope', 'emb', 'doc_id', 'kind')",
+     "embedding_neardup: unknown table 'nope'"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', .5)",
+     "SELECT * FROM __embedding_neardup_#"),
+    ("SELECT * FROM embedding_neardup('nope', 'emb', 'doc_id', 'kind', 1)",
+     "embedding_neardup: unknown table 'nope'"),
+    # mixed case, two calls in one statement, the surrounding text kept
+    ("SELECT * FROM PSI_Drift('t', 'v', 'kind')", "SELECT * FROM __psi_drift_#"),
+    ("SELECT a.n FROM Chi2_DRIFT( 't' ,'kind','txt' ) a "
+     "JOIN grubbs('t', 'v', 'kind') b ON a.slice = b.slice WHERE a.n > 'psi_drift'",
+     "SELECT a.n FROM __chi2_drift_# a "
+     "JOIN __grubbs_# b ON a.slice = b.slice WHERE a.n > 'psi_drift'"),
+    ("SELECT * FROM ks_drift('t', 'v', 'kind') UNION ALL "
+     "SELECT * FROM ks_drift('w', 'v', 'kind')",
+     "SELECT * FROM __ks_drift_# UNION ALL SELECT * FROM __ks_drift_#"),
+    # a quoted number in the time or bucket slot is the numeric argument
+    ("SELECT * FROM set_churn('t', 'kind', 'txt', '7')", "SELECT * FROM __set_churn_#"),
+    ("SELECT * FROM trend_robust('t', 'v', 'kind', '0')",
+     "bucket_days must be >= 1, got 0"),
+    ("SELECT * FROM set_churn('t', 'kind', 'txt', '0')",
+     "bucket_days must be >= 1, got 0"),
+    ("SELECT * FROM minhash_drift('t', 'kind', 'txt', '0')",
+     "bucket_days must be >= 1, got 0"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', '.5')",
+     "SELECT * FROM __embedding_neardup_#"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', '0')",
+     "cosine threshold must be in (0, 1], got 0.0"),
+    # ...but only the unquoted slot's shape: this stays a bucket column
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', '1e-1')",
+     "UNRESOLVED_COLUMN.WITH_SUGGESTION"),
+    # point_lookup literals: negative, decimal, quoted
+    ("SELECT * FROM point_lookup('t', 'doc_id', -3)", "SELECT * FROM __point_lookup_#"),
+    ("SELECT * FROM point_lookup('t', 'v', 1.5)", "SELECT * FROM __point_lookup_#"),
+    ("SELECT * FROM point_lookup('t', 'kind', 'a')", "SELECT * FROM __point_lookup_#"),
+    ("SELECT * FROM point_lookup('t', 'kind', '')", "SELECT * FROM __point_lookup_#"),
+    ("SELECT * FROM point_lookup('w', 'kind', 'a')", "point_lookup: 'w' is not a topic"),
+    ("SELECT * FROM point_lookup('nope', 'kind', 'a')",
+     "point_lookup: 'nope' is not a topic"),
+    # texts no function matches stay as they are
+    ("SELECT * FROM psi_drift ('t', 'v', 'kind')",
+     "SELECT * FROM psi_drift ('t', 'v', 'kind')"),
+    ("SELECT * FROM q_psi_drift('t', 'v', 'kind')",
+     "SELECT * FROM q_psi_drift('t', 'v', 'kind')"),
+    ("SELECT * FROM psi_drift('t', 'v', 'kind', 4, 5)",
+     "SELECT * FROM psi_drift('t', 'v', 'kind', 4, 5)"),
+    ("SELECT * FROM psi_drift('t', 'v', 'kind', '4')",
+     "SELECT * FROM psi_drift('t', 'v', 'kind', '4')"),
+    ("SELECT * FROM chi2_drift('t', 'kind', 'txt', 4)",
+     "SELECT * FROM chi2_drift('t', 'kind', 'txt', 4)"),
+    ("SELECT * FROM psi_drift('', 'v', 'kind')",
+     "SELECT * FROM psi_drift('', 'v', 'kind')"),
+    ("SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id', .5)",
+     "SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id', .5)"),
+    ("SELECT * FROM page_hinkley('t', 'v', 'kind', -1)",
+     "SELECT * FROM page_hinkley('t', 'v', 'kind', -1)"),
+    ("SELECT * FROM point_lookup('t', 'doc_id', x)",
+     "SELECT * FROM point_lookup('t', 'doc_id', x)"),
+    ("SELECT * FROM ann_search('t', 'emb')", "SELECT * FROM ann_search('t', 'emb')"),
+    # each validator's bound, and the unknown-table message
+    ("SELECT * FROM psi_drift('t', 'v', 'kind', 0)", "bucket count must be >= 1, got 0"),
+    ("SELECT * FROM js_divergence('t', 'v', 'kind', 0)",
+     "bucket count must be >= 1, got 0"),
+    ("SELECT * FROM trend_robust('t', 'v', 'kind', 'time', 0)",
+     "bucket_days must be >= 1, got 0"),
+    ("SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id', 0)",
+     "min_jaccard must be in (0, 1], got 0.0"),
+    ("SELECT * FROM near_dup_pairs('t', 'txt', 'doc_id', 1.01)",
+     "min_jaccard must be in (0, 1], got 1.01"),
+    ("SELECT * FROM distinct_overlap('t', 'kind', 'txt', 1)", "k must be >= 2, got 1"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', 'kind', 1.5)",
+     "cosine threshold must be in (0, 1], got 1.5"),
+    ("SELECT * FROM levene('nope', 'v', 'kind')", "levene: unknown table 'nope'"),
+    ("SELECT * FROM near_dup_pairs('nope', 'txt', 'doc_id', 0)",
+     "near_dup_pairs: unknown table 'nope'"),
+    # functions run in a fixed order, whatever the text order: the
+    # first function's error wins
+    ("SELECT * FROM chi2_drift('nope', 'kind', 'txt') "
+     "JOIN psi_drift('gone', 'v', 'kind')", "psi_drift: unknown table 'gone'"),
+    ("SELECT * FROM embedding_neardup('t', 'emb', 'doc_id', 2) "
+     "JOIN exact_dup_groups('nope', 'txt', 'doc_id')",
+     "exact_dup_groups: unknown table 'nope'"),
+]
+
+
+@pytest.fixture(scope="module")
+def tvf_db(spark, tmp_path_factory):
+    """A three-row topic ``t`` and a view ``w`` over it."""
+    db = Ella.create(str(tmp_path_factory.mktemp("tvf") / "db"), spark)
+    t = db.create_topic(
+        "t",
+        [
+            Column("kind", "string"),
+            Column("v", "float64"),
+            Column("txt", "string"),
+            Column("doc_id", "int64"),
+            Column("emb", "float64", row_shape=(2,)),
+        ],
+    )
+    with t.publish() as pub:
+        for i in range(3):
+            pub.write((i + 1) * 1_000, "ab"[i % 2], float(i), f"doc {i}", i, [1.0, i])
+    db.create_view("w", "SELECT * FROM t")
+    return db
+
+
+@pytest.mark.parametrize("sql,expected", _TVF_GOLDEN)
+def test_tvf_rewrite_golden(tvf_db, sql, expected):
+    """Which statements each SQL table function rewrites, into what
+    text, and with which error it refuses bad arguments."""
+    import re
+
+    from pyspark.errors import AnalysisException
+
+    try:
+        got = tvf_db._apply_tvf_rewrites(sql)
+    except ValueError as e:
+        got = str(e)
+    except AnalysisException as e:
+        got = e.getCondition()
+    assert re.sub(r"(__[a-z0-9_]+?_)\d+\b", r"\1#", got) == expected
