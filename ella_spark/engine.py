@@ -12,12 +12,17 @@ from __future__ import annotations
 
 import collections
 import itertools
+import json
 import os
 import re
 import shutil
+import time
 import uuid
 import weakref
+from dataclasses import dataclass
+from functools import cached_property
 from pathlib import Path
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -33,56 +38,6 @@ from ella_spark.topic import Publisher, Topic
 from ella_spark.tvf import TVFS
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
 
-#: `INSERT INTO <table> <source query>` — the only DML the reference
-#: supports (everything else is DDL or SELECT).
-_INSERT_RE = re.compile(r"^\s*insert\s+into\s+([A-Za-z0-9_.]+)\s+(.+)$", re.I | re.S)
-
-#: DDL statements dispatched imperatively against the catalog, exactly
-#: the set the reference's LocalBackend handles (lazy/backend.rs:66-161).
-_CREATE_VIEW_RE = re.compile(
-    r"^\s*create\s+(or\s+replace\s+)?view\s+([A-Za-z0-9_.]+)\s+as\s+(.+)$",
-    re.I | re.S,
-)
-_CREATE_MATVIEW_RE = re.compile(
-    r"^\s*create\s+(or\s+replace\s+)?materialized\s+view\s+([A-Za-z0-9_.]+)"
-    r"(?:\s+keep\s+versions\s+(\d+))?"
-    r"\s+as\s+(.+)$",
-    re.I | re.S,
-)
-_REFRESH_MATVIEW_RE = re.compile(
-    r"^\s*refresh\s+materialized\s+view\s+([A-Za-z0-9_.]+)\s*$", re.I
-)
-#: `CREATE TOPIC <t> AS SELECT ...` — CTAS into a topic: schema derives
-#: from the SELECT (which must produce the epoch-ns `time` column) and
-#: the rows flow through the distributed INSERT sink in the same
-#: statement. Beyond-reference SQL-surface convenience.
-_CTAS_RE = re.compile(
-    r"^\s*create\s+topic\s+(if\s+not\s+exists\s+)?([A-Za-z0-9_.]+)"
-    r"\s+as\s+(select\b.+)$",
-    re.I | re.S,
-)
-#: `COPY (<query>) TO '<path>' [(FORMAT PARQUET|CSV)]` — query-result
-#: export through Spark's distributed writers (the DuckDB/Postgres
-#: COPY idiom; default parquet).
-_COPY_RE = re.compile(
-    r"^\s*copy\s*\((?P<q>.+)\)\s*to\s*'(?P<path>[^']+)'\s*"
-    r"(?:\(\s*format\s+(?P<fmt>parquet|csv)\s*\))?\s*;?\s*$",
-    re.I | re.S,
-)
-#: `ALTER TABLE <t> ADD COLUMN <name> <type>` — topic schema evolution
-#: (beyond-reference: the reference has no ALTER; at 100 TB adding a
-#: column must not rewrite history, which explicit-schema reads give
-#: for free).
-_ALTER_ADD_RE = re.compile(
-    r"^\s*alter\s+table\s+([A-Za-z0-9_.]+)\s+add\s+column\s+"
-    r"([A-Za-z0-9_]+)\s+([A-Za-z0-9_]+)\s*$",
-    re.I,
-)
-_ALTER_DROP_RE = re.compile(
-    r"^\s*alter\s+table\s+([A-Za-z0-9_.]+)\s+drop\s+column\s+"
-    r"([A-Za-z0-9_]+)\s*$",
-    re.I,
-)
 #: SQL type name -> ella dtype (ella dtype names pass through)
 _SQL_DTYPES = {
     "bigint": "int64", "long": "int64", "double": "float64",
@@ -90,71 +45,46 @@ _SQL_DTYPES = {
     "integer": "int32", "smallint": "int16", "tinyint": "int8",
     "varchar": "string", "text": "string", "boolean": "bool",
 }
-_DROP_RE = re.compile(
-    r"^\s*drop\s+(table|materialized\s+view|view)\s+(if\s+exists\s+)?"
-    r"([A-Za-z0-9_.]+)\s*$",
-    re.I,
-)
-_CREATE_SCHEMA_RE = re.compile(
-    r"^\s*create\s+(schema|database)\s+(if\s+not\s+exists\s+)?([A-Za-z0-9_.]+)\s*$",
-    re.I,
-)
-_CREATE_CATALOG_RE = re.compile(
-    r"^\s*create\s+catalog\s+(if\s+not\s+exists\s+)?([A-Za-z0-9_.]+)\s*$", re.I
-)
 #: `now()` in query text — evaluated ONCE per statement as epoch-ns
 #: (the reference's streaming query-time cut, README.md:96-105; Time
 #: is ns, ella-common/src/time.rs:28-45). Spark's own now() returns a
 #: µs timestamp which would not compare against our ns long columns.
 _NOW_RE = re.compile(r"\bnow\s*\(\s*\)", re.I)
-_DROP_SCHEMA_RE = re.compile(
-    r"^\s*drop\s+(?:schema|database)\s+(if\s+exists\s+)?([A-Za-z0-9_.]+)"
-    r"\s*(cascade)?\s*$",
-    re.I,
-)
-_SHOW_TABLES_RE = re.compile(r"^\s*show\s+tables\s*$", re.I)
-_SHOW_SCHEMAS_RE = re.compile(r"^\s*show\s+(?:schemas|databases)\s*$", re.I)
-_SHOW_CATALOGS_RE = re.compile(r"^\s*show\s+catalogs\s*$", re.I)
-_DROP_CATALOG_RE = re.compile(
-    r"^\s*drop\s+catalog\s+(if\s+exists\s+)?([A-Za-z0-9_]+)\s*(cascade)?\s*$",
-    re.I,
-)
-_DESCRIBE_RE = re.compile(
-    r"^\s*(?:describe|desc)\s+(?:table\s+)?([A-Za-z0-9_.]+)\s*$", re.I
-)
-#: `VACUUM [<topic>]` — one maintenance pass (compact + manifest +
-#: orphan cleanup; all topics without a name). `ANALYZE <topic>
-#: [(col, ...)]` — (re)build the shard-stats manifest, with optional
-#: Bloom columns. The Postgres/DuckDB housekeeping verbs mapped onto
-#: ella_spark.maintenance.
-_VACUUM_RE = re.compile(r"^\s*vacuum(?:\s+([A-Za-z0-9_.]+))?\s*;?\s*$", re.I)
-_ANALYZE_RE = re.compile(
-    r"^\s*analyze\s+([A-Za-z0-9_.]+)"
-    r"(?:\s*\(\s*([A-Za-z0-9_,\s]+)\))?\s*;?\s*$",
-    re.I,
-)
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*show\s+create\s+table\s+([A-Za-z0-9_.]+)\s*;?\s*$", re.I
-)
-_EXPLAIN_RE = re.compile(r"^\s*explain\s+(analyze\s+)?(select\b.+)$", re.I | re.S)
-#: `SET <key> = <value>` / `SET <key> TO <value>` — DataFusion's
-#: Statement plan (the reference `unimplemented!()`s it); routed to
-#: the Spark session conf.
-_SET_RE = re.compile(
-    r"^\s*set\s+([A-Za-z0-9_.]+)\s*(?:=|\s+to\s+)\s*(.+?)\s*;?\s*$", re.I
-)
-#: DataFusion-dialect `CREATE EXTERNAL TABLE t STORED AS fmt
-#: [WITH HEADER ROW] LOCATION 'path'` — the reference declares this
-#: verb but `todo!()`s it (lazy/backend.rs:81-83); implemented here
-#: like materialized views: catalog-registered, schema inferred at
-#: registration, data stays in place and is never deleted on DROP.
-_CREATE_EXTERNAL_RE = re.compile(
-    r"^\s*create\s+external\s+table\s+(if\s+not\s+exists\s+)?([\w.]+)\s+"
-    r"stored\s+as\s+(parquet|csv|json)\s+(with\s+header\s+row\s+)?"
-    r"location\s+'([^']+)'\s*;?\s*$",
-    re.I,
-)
 _INFO_SCHEMA_RE = re.compile(r"\binformation_schema\s*\.\s*(tables|columns)\b", re.I)
+
+# pattern fragments of the statement table (``Ella._STATEMENTS``)
+
+#: a catalog object name, optionally schema- or catalog-qualified
+_NAME = r"([A-Za-z0-9_.]+)"
+_IF_EXISTS = r"(if\s+exists\s+)?"
+_IF_NOT_EXISTS = r"(if\s+not\s+exists\s+)?"
+_OR_REPLACE = r"(or\s+replace\s+)?"
+#: end of a statement: an optional `;`
+_END = r"\s*;?\s*$"
+#: result schemas: no rows, one row count
+_OK = "ok boolean"
+_COUNT = "count long"
+
+
+@dataclass(frozen=True)
+class _Verb:
+    """One statement shape ``Ella.query`` runs: ``run(db, match)``, or
+    ``run(db, match, params)`` for a verb that takes ``params``. It
+    returns the rows of the ``result`` schema (a scalar is one row;
+    ``_OK`` verbs yield none), or with ``result=None`` the frame."""
+
+    pattern: str
+    run: Callable
+    result: str | None = _OK
+    params: bool = False
+    #: the statement reads catalog data: register what it names first
+    reads: bool = False
+
+    @cached_property
+    def regex(self) -> re.Pattern:
+        return re.compile(r"\s*" + self.pattern, re.I | re.S)
+
+
 _WORD_RE = re.compile(r"\w+")
 _QUOTED_RE = re.compile(r"[`'\"]([^`'\"]+)[`'\"]")
 
@@ -208,8 +138,6 @@ def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
     is not inspectable (Spark Connect, FORCE_PLAN_OPAQUE). So a window
     may be too wide, never too narrow. Subquery plans and CTE bodies
     nest in the parse and are walked like the outer plan."""
-    import json
-
     if FORCE_PLAN_OPAQUE or getattr(spark, "_jsparkSession", None) is None:
         return {}
     from py4j.protocol import Py4JError
@@ -526,11 +454,9 @@ def _trim_log(entry: TableEntry, new_version: int) -> list:
     """Append (new_version, now_ns) to the MV's commit log, trimmed to
     the retention window — the map `FOR TIMESTAMP AS OF` resolves
     against."""
-    import time as _t
-
     cutoff = new_version - max(entry.keep_versions, 1) + 1
     log = [t for t in entry.version_log if cutoff <= t[0] < new_version]
-    log.append((new_version, _t.time_ns()))
+    log.append((new_version, time.time_ns()))
     return log
 
 
@@ -791,27 +717,19 @@ class Ella:
         if entry.kind == "external":
             return self._external_frame(entry)
         if entry.kind == "materialized_view" and entry.version > 0:
-            import json as _json
-
             from pyspark.sql.types import StructType
 
             snap = self.store.table_path(entry) / f"v={entry.version}"
             df = self.spark.read.schema(
-                StructType.fromJson(_json.loads(entry.result_schema))
+                StructType.fromJson(json.loads(entry.result_schema))
             ).parquet(str(snap))
             if not include_hidden:
                 # avg MVs carry mergeable __mv_* state columns in the
                 # snapshot files; every read projects them away
                 df = df.drop(*[c for c in df.columns if c.startswith("__mv_")])
             return df
-        # view, or a materialized view before its first refresh; the
-        # stored SQL keeps durable ann_search(...) / VERSION AS OF
-        # text — rewrite here, at every read
-        sql = entry.sql
-        sql = self._apply_tvf_rewrites(sql)
-        if _VERSION_ASOF_RE.search(sql) or _TIMESTAMP_ASOF_RE.search(sql):
-            sql = self._rewrite_version_asof(sql)
-        return self.spark.sql(sql)
+        # view, or a materialized view before its first refresh
+        return self.spark.sql(self._rewrite_reads(entry.sql))
 
     def _unregister(self, entry: TableEntry) -> None:
         self.spark.catalog.dropTempView(self._view_name(entry))
@@ -944,10 +862,8 @@ class Ella:
                 "header", "true" if spec.get("header", True) else "false"
             )
         if spec.get("schema_json"):
-            import json as _json
-
             reader = reader.schema(
-                T.StructType.fromJson(_json.loads(spec["schema_json"]))
+                T.StructType.fromJson(json.loads(spec["schema_json"]))
             )
         elif spec.get("format") in ("csv", "json"):
             # registration-time path (and pre-pin catalog entries):
@@ -1212,24 +1128,7 @@ class Ella:
         Single-quoted string literals are masked first — `'mv FOR
         VERSION AS OF 1'` is data, not time travel."""
 
-        def _sub(m: re.Match) -> str:
-            ident, version = m.group(1), int(m.group(2))
-            key = self._split(ident)
-            entry = self.store.tables.get(key)
-            if entry is None or entry.kind != "materialized_view":
-                # not an MV (e.g. the token sequence inside a string
-                # literal): leave the text for Spark to parse
-                return m.group(0)
-            view = f"__mv_asof_{ident.replace('.', '_')}_{version}"
-            self.read_mv_version(ident, version).createOrReplaceTempView(view)
-            return view
-
-        def _tsub(m: re.Match) -> str:
-            ident, bound = m.group(1), m.group(2)
-            key = self._split(ident)
-            entry = self.store.tables.get(key)
-            if entry is None or entry.kind != "materialized_view":
-                return m.group(0)
+        def version_at(ident: str, bound: str) -> int:
             if bound.startswith("'"):
                 from datetime import datetime, timezone
 
@@ -1245,7 +1144,16 @@ class Ella:
                 )
             else:
                 ts_ns = int(bound)
-            version = self.resolve_mv_version_asof(ident, ts_ns)
+            return self.resolve_mv_version_asof(ident, ts_ns)
+
+        def _sub(m: re.Match, version_of: Callable[[str, str], int]) -> str:
+            ident = m.group(1)
+            entry = self.store.tables.get(self._split(ident))
+            if entry is None or entry.kind != "materialized_view":
+                # not an MV (e.g. the token sequence inside a string
+                # literal): leave the text for Spark to parse
+                return m.group(0)
+            version = version_of(ident, m.group(2))
             view = f"__mv_asof_{ident.replace('.', '_')}_{version}"
             self.read_mv_version(ident, version).createOrReplaceTempView(view)
             return view
@@ -1264,8 +1172,8 @@ class Ella:
             cands = []
             for rx, fn in (
                 (_SQL_STRING_RE, None),
-                (_TIMESTAMP_ASOF_RE, _tsub),
-                (_VERSION_ASOF_RE, _sub),
+                (_TIMESTAMP_ASOF_RE, version_at),
+                (_VERSION_ASOF_RE, lambda ident, version: int(version)),
             ):
                 m = rx.search(sql, pos)
                 if m is not None:
@@ -1274,7 +1182,7 @@ class Ella:
                 break
             _, _, m, fn = min(cands)
             out.append(sql[pos : m.start()])
-            out.append(m.group(0) if fn is None else fn(m))
+            out.append(m.group(0) if fn is None else _sub(m, fn))
             pos = m.end()
         out.append(sql[pos:])
         return "".join(out)
@@ -1323,10 +1231,7 @@ class Ella:
                     name
                 )
         try:
-            sql = entry.sql
-            sql = self._apply_tvf_rewrites(sql)
-            if _VERSION_ASOF_RE.search(sql) or _TIMESTAMP_ASOF_RE.search(sql):
-                sql = self._rewrite_version_asof(sql)
+            sql = self._rewrite_reads(entry.sql)
             if analysis is not None and topics and analysis.hidden_sql:
                 try:
                     df = self._with_visible_avgs(entry.sql, analysis)
@@ -1775,7 +1680,6 @@ class Ella:
     def _refresh_delta(self, entry: TableEntry, analysis, topic) -> int | None:
         """Delta refresh; None → caller falls back to full recompute."""
         import dataclasses
-        import json as _json
 
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
@@ -1841,8 +1745,6 @@ class Ella:
         via MAX; avg by SUMming its hidden sum+count state and
         recomputing the visible column; distinct-keys via
         dropDuplicates)."""
-        import json as _json
-
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
@@ -1866,7 +1768,7 @@ class Ella:
             # delta partials (which carry only the hidden state)
             old = old.drop(*derived)
         union = old.unionByName(delta_df)
-        schema = StructType.fromJson(_json.loads(entry.result_schema))
+        schema = StructType.fromJson(json.loads(entry.result_schema))
         dtypes = {f.name: f.dataType for f in schema.fields}
         if analysis.aggs:
             # self-mergeable aggregates: re-aggregating partials with
@@ -2236,8 +2138,7 @@ class Ella:
         for i, name in enumerate(analysis.tables):
             new_state[_state_key("topic", i)] = name
             new_state[_state_key("shards", i)] = [p.name for p in cur[i]]
-        sql = analysis.hidden_sql or entry.sql
-        sql = self._apply_tvf_rewrites(sql)
+        sql = self._rewrite_reads(analysis.hidden_sql or entry.sql)
         try:
             terms = []
             for i in range(n_tables):
@@ -2374,12 +2275,20 @@ class Ella:
     def query(self, sql: str, params: dict | list | None = None) -> Lazy:
         """Parse + plan, deferred: `ella.query(sql)` → Lazy.
 
+        Each statement is classified once, by the first entry of the
+        statement table ``_STATEMENTS`` whose pattern it matches
+        (README.md "SQL statements" lists them); anything else is a
+        read that Spark runs. One path serves every entry: substitute
+        ``now()``, refuse ``params`` for a verb that takes none (before
+        any catalog or Spark side effect), register what a verb that
+        reads names, then run it.
+
         ``params`` binds named (``:name`` with a dict) or positional
         (``?`` with a list) markers via Spark's parameterized SQL —
         the Flight SQL prepared-statement analog, with literals kept
         out of the query text (no injection, stable plan cache keys).
-        Parameters apply to relational statements (and the source
-        query of INSERT INTO); DDL verbs take none and raise.
+        Reads, the source query of ``INSERT INTO`` and the query of
+        ``EXPLAIN`` take parameters; every other verb raises.
 
         The catalog objects the statement references are re-registered
         first, with the topics and views their stored SQL reads: Spark's
@@ -2394,10 +2303,10 @@ class Ella:
         what that name's last registration covered: for a topic, only
         the window of the last statement that referenced it.
 
-        ``INSERT INTO <topic> SELECT ...|VALUES ...`` routes to the
-        topic's distributed sink (the reference's DataSink path,
-        topic.rs:205-213 via InsertExec) and yields a single-row
-        ``count`` frame, matching the reference's returned row count.
+        Every read runs through ``_rewrite_reads`` (information_schema,
+        table functions, time travel), and the returned Lazy keeps the
+        text from before it: a view or MV created from the Lazy, like
+        one created by ``CREATE VIEW``, stores the durable text.
 
         ``now()`` is substituted once per statement with the current
         epoch-ns, so ``WHERE time < now()`` is the reference's bounded
@@ -2406,71 +2315,33 @@ class Ella:
         ``subscribe()`` (Spark separates batch and streaming plans —
         SURVEY §1.4.3).
         """
-        import time as _time_mod
-
-        sql = _NOW_RE.sub(str(_time_mod.time_ns()), sql)
-        if not _DROP_RE.match(sql):
-            # a DROP reads nothing: registering what it drops would
-            # analyze that object's plan (failing for a view whose
-            # table is gone) and run its table functions
+        sql = _NOW_RE.sub(str(time.time_ns()), sql)
+        for verb in self._STATEMENTS:
+            if m := verb.regex.match(sql):
+                break
+        if params is not None and not verb.params:
+            raise ValueError("params apply to relational statements, not DDL")
+        if verb.reads:
             self._register_referenced(sql, params)
+        out = verb.run(self, m, params) if verb.params else verb.run(self, m)
+        if verb.result == _OK:
+            out = self.spark.createDataFrame([], _OK)
+        elif verb.result is not None:
+            rows = out if isinstance(out, list) else [(out,)]
+            out = self.spark.createDataFrame(rows, verb.result)
+        return Lazy(out, engine=self, sql=sql)
+
+    def _rewrite_reads(self, sql: str) -> str:
+        """The text Spark runs for a read: ``information_schema``
+        names, table-function calls and time travel become temp views.
+        Stored view/MV SQL keeps the durable text and is rewritten at
+        every read, so no session-scoped view name is ever persisted."""
         if _INFO_SCHEMA_RE.search(sql):
             sql = self._register_information_schema(sql)
-        # DDL dispatch runs BEFORE the ann_search rewrite so a stored
-        # view/MV keeps the durable `ann_search(...)` text, never a
-        # session-scoped __ann_search_N temp-view name that would be
-        # dangling after reopen; _frame_for re-applies the rewrite at
-        # every read/refresh instead.
-        ddl = self._dispatch_ddl(sql)
-        if ddl is not None:
-            if params is not None:
-                raise ValueError(
-                    "params apply to relational statements, not DDL"
-                )
-            return ddl
-        # Lazy keeps the PRE-rewrite text: creating a view/MV from a
-        # Lazy must persist durable ann_search(...) / VERSION AS OF
-        # SQL, never the session-scoped temp-view names the rewrites
-        # substitute (those dangle after reopen; _frame_for and the
-        # refresh paths re-apply the rewrites at every read instead).
-        durable_sql = sql
         sql = self._apply_tvf_rewrites(sql)
         if _VERSION_ASOF_RE.search(sql) or _TIMESTAMP_ASOF_RE.search(sql):
             sql = self._rewrite_version_asof(sql)
-        m = _INSERT_RE.match(sql)
-        if m:
-            topic = self.topic(m.group(1))
-            src = (
-                self.spark.sql(m.group(2), args=params)
-                if params is not None
-                else self.spark.sql(m.group(2))
-            )
-            names = [c.name for c in topic.entry.columns]
-            if len(src.columns) == len(names) - 1:
-                # time omitted: auto-fill now() like the publisher
-                # (pyella publisher.rs:119-123 behavior)
-                import time as _time
-
-                import pyspark.sql.functions as F
-
-                src = src.select(
-                    F.lit(_time.time_ns()).cast("long").alias(TIME_COLUMN), "*"
-                )
-            if src.columns != names and len(src.columns) == len(names):
-                src = src.toDF(*names)
-            n = topic.insert(src)
-            self._register(topic.entry)
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"),
-                engine=self,
-                sql=durable_sql,
-            )
-        df = (
-            self.spark.sql(sql, args=params)
-            if params is not None
-            else self.spark.sql(sql)
-        )
-        return Lazy(df, engine=self, sql=durable_sql)
+        return sql
 
     def _register_information_schema(self, sql: str) -> str:
         """information_schema.tables / .columns over the catalog store.
@@ -2491,392 +2362,426 @@ class Ella:
             (e.catalog, e.schema, e.name, kind_to_type.get(e.kind, e.kind.upper()))
             for e in entries
         ]
-        self.spark.createDataFrame(
-            tables or [(None,) * 4],
-            "table_catalog string, table_schema string, "
-            "table_name string, table_type string",
-        ).where("table_name is not null").createOrReplaceTempView(
-            "__information_schema_tables"
-        )
         columns = [
             (e.catalog, e.schema, e.name, c.name, i + 1,
              "NO" if c.required else "YES", c.dtype)
             for e in entries
             for i, c in enumerate(e.columns)
         ]
-        self.spark.createDataFrame(
-            columns or [(None,) * 7],
-            "table_catalog string, table_schema string, table_name string, "
-            "column_name string, ordinal_position int, "
-            "is_nullable string, data_type string",
-        ).where("table_name is not null").createOrReplaceTempView(
-            "__information_schema_columns"
-        )
+        for name, rows, schema in (
+            ("tables", tables, "table_type string"),
+            (
+                "columns",
+                columns,
+                "column_name string, ordinal_position int, "
+                "is_nullable string, data_type string",
+            ),
+        ):
+            self.spark.createDataFrame(
+                rows,
+                "table_catalog string, table_schema string, table_name string, "
+                + schema,
+            ).createOrReplaceTempView(f"__information_schema_{name}")
         return _INFO_SCHEMA_RE.sub(
             lambda m: f"__information_schema_{m.group(1).lower()}", sql
         )
 
-    def _dispatch_ddl(self, sql: str) -> Lazy | None:
-        """Imperative DDL dispatch (LocalBackend::stream parity,
-        lazy/backend.rs:66-161): CREATE VIEW / DROP TABLE|VIEW /
-        CREATE SCHEMA|DATABASE / CREATE CATALOG route to the catalog;
-        anything else returns None and flows to spark.sql."""
-        empty = lambda: Lazy(  # noqa: E731 — DDL yields an empty frame
-            self.spark.createDataFrame([], "ok boolean"), engine=self, sql=sql
+    # -- SQL statements (LocalBackend::stream parity, lazy/backend.rs:66-161) --
+
+    def _set(self, m: re.Match) -> None:
+        """DataFusion `SET <key> = <value>` / `SET <key> TO <value>` (a
+        Statement plan, which the reference `unimplemented!()`s —
+        backend.rs:163), routed to the Spark session conf: runtime-
+        settable SQL confs apply immediately; static/core confs raise
+        Spark's own CANNOT_MODIFY_CONFIG error, surfaced as-is."""
+        # Unwrap exactly ONE matching pair of quotes: .strip("'\"")
+        # would eat any RUN of quote chars from both ends, mangling
+        # values that legitimately start/end with a quote.
+        value = m[2].strip()
+        if len(value) >= 2 and value[0] == value[-1] and value[0] in "'\"":
+            value = value[1:-1]
+        self.spark.conf.set(m[1], value)
+
+    def _create_topic_as(self, m: re.Match) -> int:
+        """`CREATE TOPIC <t> AS SELECT ...` — CTAS into a topic: schema
+        derives from the SELECT (which must produce the epoch-ns `time`
+        column) and the rows flow through the distributed INSERT sink in
+        the same statement. Beyond-reference SQL-surface convenience."""
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        if m[1] and (existing := self.store.resolve(m[2])) is not None:
+            # IF NOT EXISTS on a pre-existing TOPIC is a no-op
+            # (Spark/Postgres CTAS semantics): re-running the
+            # statement must not append a second copy of the data.
+            # A same-named view/MV/external is a KIND conflict and
+            # raises, exactly as plain create_topic would — the
+            # no-op must not silently mask it.
+            if existing.kind != "topic":
+                raise ValueError(
+                    f"cannot CREATE TOPIC {m[2]!r}: a "
+                    f"{existing.kind} with that name already exists"
+                )
+            return 0
+        df = self.spark.sql(self._rewrite_reads(m[3].strip()))
+        if TIME_COLUMN not in df.columns:
+            raise ValueError(
+                "CREATE TOPIC ... AS SELECT requires the SELECT to "
+                f"produce an epoch-ns '{TIME_COLUMN}' column "
+                "(topics are time-indexed; add e.g. "
+                "`unix_micros(now()) * 1000 AS time`)"
+            )
+        time_type = df.schema[TIME_COLUMN].dataType
+        if isinstance(time_type, (T.TimestampType, T.TimestampNTZType)):
+            # cast(timestamp AS long) yields epoch SECONDS; topics
+            # index epoch NANOSECONDS — convert explicitly so rows
+            # land in the right day buckets. TIMESTAMP_NTZ (what a
+            # raw-parquet external table surfaces) first casts to
+            # TIMESTAMP: the session tz is pinned UTC by
+            # configure(), so the wall time IS the instant.
+            df = df.withColumn(
+                TIME_COLUMN,
+                F.unix_micros(F.col(TIME_COLUMN).cast("timestamp"))
+                * F.lit(1000),
+            )
+        elif isinstance(
+            time_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+        ):
+            df = df.withColumn(TIME_COLUMN, F.col(TIME_COLUMN).cast("long"))
+        else:
+            raise ValueError(
+                f"CTAS '{TIME_COLUMN}' column must be integral epoch-ns "
+                f"or TIMESTAMP, got {time_type.simpleString()}"
+            )
+        cols = [
+            Column.from_struct_field(f)
+            for f in df.schema.fields
+            if f.name != TIME_COLUMN
+        ]
+        t = self.create_topic(m[2], cols, if_not_exists=bool(m[1]))
+        n = t.insert(df)
+        self._register(t.entry)
+        return n
+
+    def _copy(self, m: re.Match) -> int:
+        """`COPY (<query>) TO '<path>' [(FORMAT PARQUET|CSV)]` —
+        query-result export through Spark's distributed writers (the
+        DuckDB/Postgres COPY idiom; default parquet)."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        # Count rows with an Observation attached to the write job
+        # itself (the Topic.insert pattern): one job total, and no
+        # re-read miscounts (CSV re-reads without schema/multiLine
+        # can split on quoted newlines).
+        obs = Observation("copy_to_count")
+        out = self.query(m["q"].strip()).df.observe(
+            obs, F.count(F.lit(1)).alias("n")
         )
-        if m := _SET_RE.match(sql):
-            # DataFusion `SET <key> = <value>` (a Statement plan, which
-            # the reference `unimplemented!()`s — backend.rs:163).
-            # Routed to the Spark session conf: runtime-settable SQL
-            # confs apply immediately; static/core confs raise Spark's
-            # own CANNOT_MODIFY_CONFIG error, surfaced as-is.
-            # Unwrap exactly ONE matching pair of quotes: .strip("'\"")
-            # would eat any RUN of quote chars from both ends, mangling
-            # values that legitimately start/end with a quote.
-            value = m.group(2).strip()
-            if len(value) >= 2 and value[0] == value[-1] and value[0] in "'\"":
-                value = value[1:-1]
-            self.spark.conf.set(m.group(1), value)
-            return empty()
-        if m := _CREATE_MATVIEW_RE.match(sql):
-            n = self.create_materialized_view(
-                m.group(2),
-                m.group(4).strip(),
-                replace=bool(m.group(1)),
-                keep_versions=int(m.group(3)) if m.group(3) else 1,
-            )
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"), engine=self, sql=sql
-            )
-        if m := _REFRESH_MATVIEW_RE.match(sql):
-            n = self.refresh_materialized(m.group(1))
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"), engine=self, sql=sql
-            )
-        if m := _CTAS_RE.match(sql):
-            from pyspark.sql import functions as F
-            from pyspark.sql import types as T
+        writer = out.write.mode("errorifexists")
+        if (m["fmt"] or "parquet").lower() == "csv":
+            writer.option("header", "true").csv(m["path"])
+        else:
+            writer.parquet(m["path"])
+        return obs.get["n"]
 
-            if m.group(1) and (existing := self.store.resolve(m.group(2))) is not None:
-                # IF NOT EXISTS on a pre-existing TOPIC is a no-op
-                # (Spark/Postgres CTAS semantics): re-running the
-                # statement must not append a second copy of the data.
-                # A same-named view/MV/external is a KIND conflict and
-                # raises, exactly as plain create_topic would — the
-                # no-op must not silently mask it.
-                if existing.kind != "topic":
-                    raise ValueError(
-                        f"cannot CREATE TOPIC {m.group(2)!r}: a "
-                        f"{existing.kind} with that name already exists"
-                    )
-                return Lazy(
-                    self.spark.createDataFrame([(0,)], "count long"),
-                    engine=self,
-                    sql=sql,
-                )
-            df = self.spark.sql(m.group(3).strip())
-            if TIME_COLUMN not in df.columns:
-                raise ValueError(
-                    "CREATE TOPIC ... AS SELECT requires the SELECT to "
-                    f"produce an epoch-ns '{TIME_COLUMN}' column "
-                    "(topics are time-indexed; add e.g. "
-                    "`unix_micros(now()) * 1000 AS time`)"
-                )
-            time_type = df.schema[TIME_COLUMN].dataType
-            if isinstance(time_type, (T.TimestampType, T.TimestampNTZType)):
-                # cast(timestamp AS long) yields epoch SECONDS; topics
-                # index epoch NANOSECONDS — convert explicitly so rows
-                # land in the right day buckets. TIMESTAMP_NTZ (what a
-                # raw-parquet external table surfaces) first casts to
-                # TIMESTAMP: the session tz is pinned UTC by
-                # configure(), so the wall time IS the instant.
-                df = df.withColumn(
-                    TIME_COLUMN,
-                    F.unix_micros(F.col(TIME_COLUMN).cast("timestamp"))
-                    * F.lit(1000),
-                )
-            elif isinstance(
-                time_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-            ):
-                df = df.withColumn(TIME_COLUMN, F.col(TIME_COLUMN).cast("long"))
-            else:
-                raise ValueError(
-                    f"CTAS '{TIME_COLUMN}' column must be integral epoch-ns "
-                    f"or TIMESTAMP, got {time_type.simpleString()}"
-                )
-            cols = [
-                Column.from_struct_field(f)
-                for f in df.schema.fields
-                if f.name != TIME_COLUMN
-            ]
-            t = self.create_topic(
-                m.group(2), cols, if_not_exists=bool(m.group(1))
-            )
-            n = t.insert(df)
-            self._register(t.entry)
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"),
-                engine=self,
-                sql=sql,
-            )
-        if m := _COPY_RE.match(sql):
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
+    def _alter(self, m: re.Match) -> None:
+        """`ALTER TABLE <t> ADD COLUMN <name> <type> | DROP COLUMN
+        <name>` — topic schema evolution (beyond-reference: the
+        reference has no ALTER; at 100 TB adding a column must not
+        rewrite history, which explicit-schema reads give for free)."""
+        topic = self.topic(m[1])
+        if m[2]:
+            typ = m[3].lower()
+            topic.add_column(Column(m[2], _SQL_DTYPES.get(typ, typ)))
+        else:
+            topic.drop_column(m[4])
+        self._register(topic.entry)
 
-            # Count rows with an Observation attached to the write job
-            # itself (the Topic.insert pattern): one job total, and no
-            # re-read miscounts (CSV re-reads without schema/multiLine
-            # can split on quoted newlines).
-            obs = Observation("copy_to_count")
-            out = self.query(m.group("q").strip()).df.observe(
-                obs, F.count(F.lit(1)).alias("n")
-            )
-            fmt = (m.group("fmt") or "parquet").lower()
-            writer = out.write.mode("errorifexists")
-            if fmt == "csv":
-                writer.option("header", "true").csv(m.group("path"))
-            else:
-                writer.parquet(m.group("path"))
-            n = obs.get["n"]
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"),
-                engine=self,
-                sql=sql,
-            )
-        if m := _CREATE_EXTERNAL_RE.match(sql):
-            self.create_external_table(
-                m.group(2),
-                m.group(3),
-                m.group(5),
-                header=bool(m.group(4)),
-                if_not_exists=bool(m.group(1)),
-            )
-            return empty()
-        if m := _ALTER_ADD_RE.match(sql):
-            name, col, typ = m.group(1), m.group(2), m.group(3).lower()
-            topic = self.topic(name)
-            topic.add_column(Column(col, _SQL_DTYPES.get(typ, typ)))
-            self._register(topic.entry)
-            return empty()
-        if m := _ALTER_DROP_RE.match(sql):
-            topic = self.topic(m.group(1))
-            topic.drop_column(m.group(2))
-            self._register(topic.entry)
-            return empty()
-        if m := _CREATE_VIEW_RE.match(sql):
-            # the statement itself registered what the view reads
-            self._put_view(m.group(2), m.group(3).strip(), replace=bool(m.group(1)))
-            return empty()
-        if m := _DROP_RE.match(sql):
-            try:
-                self.drop_table(m.group(3))
-            except ValueError:
-                if not m.group(2):  # no IF EXISTS → propagate
-                    raise
-            return empty()
-        if m := _CREATE_SCHEMA_RE.match(sql):
-            self.create_schema(m.group(3), if_not_exists=bool(m.group(2)))
-            return empty()
-        if m := _CREATE_CATALOG_RE.match(sql):
-            self.create_catalog(m.group(2), if_not_exists=bool(m.group(1)))
-            return empty()
-        if m := _DROP_SCHEMA_RE.match(sql):
-            self.drop_schema(
-                m.group(2), cascade=bool(m.group(3)), if_exists=bool(m.group(1))
-            )
-            return empty()
-        if m := _DROP_CATALOG_RE.match(sql):
-            self.drop_catalog(
-                m.group(2), cascade=bool(m.group(3)), if_exists=bool(m.group(1))
-            )
-            return empty()
-        if _SHOW_SCHEMAS_RE.match(sql):
-            return Lazy(
-                self.spark.createDataFrame(
-                    sorted(self.store.schemas), "catalog string, schema string"
-                ),
-                engine=self,
-                sql=sql,
-            )
-        if _SHOW_CATALOGS_RE.match(sql):
-            return Lazy(
-                self.spark.createDataFrame(
-                    [(c,) for c in sorted(self.store.catalogs)], "catalog string"
-                ),
-                engine=self,
-                sql=sql,
-            )
-        if _SHOW_TABLES_RE.match(sql):
-            rows = [
-                (e.catalog, e.schema, e.name, e.kind)
-                for e in sorted(self.store.tables.values(), key=lambda e: e.ident)
-            ]
-            return Lazy(
-                self.spark.createDataFrame(
-                    rows, "catalog string, schema string, name string, kind string"
-                ),
-                engine=self,
-                sql=sql,
-            )
-        if m := _VACUUM_RE.match(sql):
-            from ella_spark.maintenance import (
-                Maintainer,
-                build_manifest,
-                compact_topic,
-            )
+    def _drop(self, m: re.Match) -> None:
+        try:
+            self.drop_table(m[2])
+        except ValueError:
+            if not m[1]:  # no IF EXISTS → propagate
+                raise
 
-            if m.group(1):
-                t = self.topic(m.group(1))
-                out = compact_topic(t)
-                n = build_manifest(t)
-                report = {
-                    "compacted": [str(out)] if out is not None else [],
-                    "manifest_entries": n,
-                }
-            else:
-                report = Maintainer(self).run_once(refresh_views=False)
-                report.pop("refreshed", None)
-            import json as _json
+    def _vacuum(self, m: re.Match) -> str:
+        """`VACUUM [<topic>]` — one maintenance pass (compact + manifest
+        + orphan cleanup; all topics without a name): the Postgres/
+        DuckDB housekeeping verb mapped onto ella_spark.maintenance."""
+        from ella_spark.maintenance import Maintainer, build_manifest, compact_topic
 
-            return Lazy(
-                self.spark.createDataFrame(
-                    [(_json.dumps(report),)], "report string"
-                ),
-                engine=self,
-                sql=sql,
-            )
-        if m := _ANALYZE_RE.match(sql):
-            from ella_spark.maintenance import build_manifest
+        if m[1]:
+            t = self.topic(m[1])
+            out = compact_topic(t)
+            n = build_manifest(t)
+            report = {
+                "compacted": [str(out)] if out is not None else [],
+                "manifest_entries": n,
+            }
+        else:
+            report = Maintainer(self).run_once(refresh_views=False)
+            report.pop("refreshed", None)
+        return json.dumps(report)
 
-            t = self.topic(m.group(1))
-            if m.group(2):
-                cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
-            else:
-                # no explicit columns: declared secondary indexes opt
-                # in, matching the Maintainer's auto-bloom rule
-                cols = [
-                    c for c, _asc in t.entry.indexes if c != TIME_COLUMN
-                ] or None
-            n = build_manifest(t, bloom_cols=cols)
-            return Lazy(
-                self.spark.createDataFrame([(n,)], "count long"),
-                engine=self,
-                sql=sql,
+    def _analyze(self, m: re.Match) -> int:
+        """`ANALYZE <topic> [(col, ...)]` — (re)build the shard-stats
+        manifest, with optional Bloom columns."""
+        from ella_spark.maintenance import build_manifest
+
+        t = self.topic(m[1])
+        if m[2]:
+            cols = [c.strip() for c in m[2].split(",") if c.strip()]
+        else:
+            # no explicit columns: declared secondary indexes opt
+            # in, matching the Maintainer's auto-bloom rule
+            cols = [c for c, _asc in t.entry.indexes if c != TIME_COLUMN] or None
+        return build_manifest(t, bloom_cols=cols)
+
+    def _show_create(self, m: re.Match) -> str:
+        entry = self.store.resolve(m[1])
+        if entry is None:
+            raise ValueError(f"unknown table {m[1]!r}")
+        if entry.kind == "topic":
+            cols = ", ".join(
+                f"{c.name} {c.dtype}" + (" NOT NULL" if c.required else "")
+                for c in entry.columns
             )
-        if m := _SHOW_CREATE_RE.match(sql):
-            entry = self.store.resolve(m.group(1))
-            if entry is None:
-                raise ValueError(f"unknown table {m.group(1)!r}")
-            if entry.kind == "topic":
-                cols = ", ".join(
-                    f"{c.name} {c.dtype}"
-                    + (" NOT NULL" if c.required else "")
-                    for c in entry.columns
-                )
-                ddl = f"CREATE TOPIC {entry.name} ({cols})"
-            elif entry.kind == "materialized_view":
-                ddl = (
-                    f"CREATE MATERIALIZED VIEW {entry.name} AS {entry.sql}"
-                )
-            elif entry.kind == "external":
-                spec = entry.refresh_state or {}
-                hdr = (
-                    " WITH HEADER ROW"
-                    if spec.get("format") == "csv" and spec.get("header", True)
-                    else ""
-                )
-                ddl = (
-                    f"CREATE EXTERNAL TABLE {entry.name} STORED AS "
-                    f"{spec.get('format', 'parquet').upper()}{hdr} "
-                    f"LOCATION '{spec.get('path', '')}'"
-                )
-            else:
-                ddl = f"CREATE VIEW {entry.name} AS {entry.sql}"
-            return Lazy(
-                self.spark.createDataFrame([(ddl,)], "ddl string"),
-                engine=self,
-                sql=sql,
+            return f"CREATE TOPIC {entry.name} ({cols})"
+        if entry.kind == "materialized_view":
+            return f"CREATE MATERIALIZED VIEW {entry.name} AS {entry.sql}"
+        if entry.kind == "external":
+            spec = entry.refresh_state or {}
+            hdr = (
+                " WITH HEADER ROW"
+                if spec.get("format") == "csv" and spec.get("header", True)
+                else ""
             )
-        if m := _EXPLAIN_RE.match(sql):
-            # DataFusion-shaped EXPLAIN output: (plan_type, plan) rows
-            # (the reference inherits `EXPLAIN [ANALYZE] <query>` from
-            # DataFusion's SessionState). ANALYZE executes the query
-            # first so the reported physical plan is the AQE-final one.
-            df = self.spark.sql(m.group(2))
+            return (
+                f"CREATE EXTERNAL TABLE {entry.name} STORED AS "
+                f"{spec.get('format', 'parquet').upper()}{hdr} "
+                f"LOCATION '{spec.get('path', '')}'"
+            )
+        return f"CREATE VIEW {entry.name} AS {entry.sql}"
+
+    def _explain(self, m: re.Match, params) -> list:
+        """DataFusion-shaped EXPLAIN output: (plan_type, plan) rows (the
+        reference inherits `EXPLAIN [ANALYZE] <query>` from DataFusion's
+        SessionState). ANALYZE executes the query first so the reported
+        physical plan is the AQE-final one."""
+        df = self.spark.sql(self._rewrite_reads(m[2]), args=params)
+        try:
+            qe = _jdf_qe(df)
+            logical = qe.optimizedPlan().toString()
+            physical = qe.executedPlan().toString()
+        except Exception:
+            # Connect sessions have no _jdf: capture explain text
+            import contextlib as _ctx
+            import io as _io
+
+            buf = _io.StringIO()
+            with _ctx.redirect_stdout(buf):
+                df.explain("extended")
+            logical = physical = buf.getvalue()
+        rows = [("logical_plan", logical)]
+        if m[1]:
+            # DataFusion's ANALYZE annotates the executed plan with
+            # runtime metrics ("Plan with Metrics"); surface Spark's
+            # per-operator SQLMetrics the same way. The plan must be
+            # executed through THIS QueryExecution instance —
+            # df.count() builds a different plan whose run leaves
+            # these metrics zero — so drive qe.toRdd().count(): a
+            # distributed row count, nothing collected to the
+            # driver beyond the scalar.
             try:
                 qe = _jdf_qe(df)
-                logical = qe.optimizedPlan().toString()
+                n = qe.toRdd().count()
+                rows.append(("row_count", str(n)))
+                rows.append(
+                    ("plan_with_metrics", _plan_with_metrics(qe.executedPlan()))
+                )
+                # Re-capture AFTER execution: under AQE the
+                # pre-run executedPlan stringifies with
+                # isFinalPlan=false; only the post-run walk shows
+                # the plan that actually executed.
                 physical = qe.executedPlan().toString()
             except Exception:
-                # Connect sessions have no _jdf: capture explain text
-                import contextlib as _ctx
-                import io as _io
+                # Connect: metrics not driver-inspectable
+                rows.append(("row_count", str(df.count())))
+        rows.append(("physical_plan", physical))
+        return rows
 
-                buf = _io.StringIO()
-                with _ctx.redirect_stdout(buf):
-                    df.explain("extended")
-                logical = physical = buf.getvalue()
-            rows = [("logical_plan", logical)]
-            if m.group(1):
-                # DataFusion's ANALYZE annotates the executed plan with
-                # runtime metrics ("Plan with Metrics"); surface Spark's
-                # per-operator SQLMetrics the same way. The plan must be
-                # executed through THIS QueryExecution instance —
-                # df.count() builds a different plan whose run leaves
-                # these metrics zero — so drive qe.toRdd().count(): a
-                # distributed row count, nothing collected to the
-                # driver beyond the scalar.
-                try:
-                    qe = _jdf_qe(df)
-                    n = qe.toRdd().count()
-                    rows.append(("row_count", str(n)))
-                    rows.append(
-                        ("plan_with_metrics", _plan_with_metrics(qe.executedPlan()))
-                    )
-                    # Re-capture AFTER execution: under AQE the
-                    # pre-run executedPlan stringifies with
-                    # isFinalPlan=false; only the post-run walk shows
-                    # the plan that actually executed.
-                    physical = qe.executedPlan().toString()
-                except Exception:
-                    # Connect: metrics not driver-inspectable
-                    rows.append(("row_count", str(df.count())))
-            rows.append(("physical_plan", physical))
-            return Lazy(
-                self.spark.createDataFrame(rows, "plan_type string, plan string"),
-                engine=self,
-                sql=sql,
+    def _describe(self, m: re.Match) -> list:
+        entry = self._require(m[1], None)
+        if entry.kind == "topic":
+            return [
+                (
+                    c.name,
+                    c.dtype
+                    + (str(list(c.row_shape)) if c.row_shape is not None else ""),
+                    not c.required,
+                )
+                for c in entry.columns
+            ]
+        if entry.kind == "external":
+            fields = self._external_frame(entry).schema.fields
+        else:  # view: describe the resolved plan's schema
+            fields = self.spark.sql(self._rewrite_reads(entry.sql)).schema.fields
+        return [(f.name, f.dataType.simpleString(), f.nullable) for f in fields]
+
+    def _insert(self, m: re.Match, params) -> int:
+        """`INSERT INTO <topic> SELECT ...|VALUES ...` — the only DML the
+        reference supports — routes to the topic's distributed sink (the
+        reference's DataSink path, topic.rs:205-213 via InsertExec) and
+        returns the reference's row count."""
+        topic = self.topic(m[1])
+        src = self.spark.sql(self._rewrite_reads(m[2]), args=params)
+        names = [c.name for c in topic.entry.columns]
+        if len(src.columns) == len(names) - 1:
+            # time omitted: auto-fill now() like the publisher
+            # (pyella publisher.rs:119-123 behavior)
+            import pyspark.sql.functions as F
+
+            src = src.select(
+                F.lit(time.time_ns()).cast("long").alias(TIME_COLUMN), "*"
             )
-        if m := _DESCRIBE_RE.match(sql):
-            entry = self._require(m.group(1), None)
-            if entry.kind == "topic":
-                rows = [
-                    (
-                        c.name,
-                        c.dtype
-                        + (str(list(c.row_shape)) if c.row_shape is not None else ""),
-                        not c.required,
-                    )
-                    for c in entry.columns
-                ]
-            elif entry.kind == "external":
-                rows = [
-                    (f.name, f.dataType.simpleString(), f.nullable)
-                    for f in self._external_frame(entry).schema.fields
-                ]
-            else:  # view: describe the resolved plan's schema
-                rows = [
-                    (f.name, f.dataType.simpleString(), f.nullable)
-                    for f in self.spark.sql(entry.sql).schema.fields
-                ]
-            return Lazy(
-                self.spark.createDataFrame(
-                    rows, "col_name string, data_type string, nullable boolean"
-                ),
-                engine=self,
-                sql=sql,
-            )
-        return None
+        if src.columns != names and len(src.columns) == len(names):
+            src = src.toDF(*names)
+        n = topic.insert(src)
+        self._register(topic.entry)
+        return n
+
+    #: Every statement ``query`` runs, tried in order; the first match
+    #: wins and the last entry, a read that Spark runs, matches anything.
+    #: README.md "SQL statements" is the same table for users.
+    _STATEMENTS = (
+        _Verb(rf"set\s+{_NAME}\s*(?:=|\s+to\s+)\s*(.+?){_END}", _set),
+        _Verb(
+            rf"create\s+{_OR_REPLACE}materialized\s+view\s+{_NAME}"
+            r"(?:\s+keep\s+versions\s+(\d+))?\s+as\s+(.+)$",
+            lambda db, m: db.create_materialized_view(
+                m[2], m[4].strip(), replace=bool(m[1]), keep_versions=int(m[3] or 1)
+            ),
+            _COUNT,
+        ),
+        _Verb(
+            rf"refresh\s+materialized\s+view\s+{_NAME}{_END}",
+            lambda db, m: db.refresh_materialized(m[1]),
+            _COUNT,
+        ),
+        _Verb(
+            rf"create\s+topic\s+{_IF_NOT_EXISTS}{_NAME}\s+as\s+(select\b.+)$",
+            _create_topic_as,
+            _COUNT,
+            reads=True,
+        ),
+        _Verb(
+            r"copy\s*\((?P<q>.+)\)\s*to\s*'(?P<path>[^']+)'\s*"
+            rf"(?:\(\s*format\s+(?P<fmt>parquet|csv)\s*\))?{_END}",
+            _copy,
+            _COUNT,
+        ),
+        # DataFusion-dialect CREATE EXTERNAL TABLE: the reference declares
+        # it but `todo!()`s it (lazy/backend.rs:81-83)
+        _Verb(
+            rf"create\s+external\s+table\s+{_IF_NOT_EXISTS}{_NAME}\s+"
+            r"stored\s+as\s+(parquet|csv|json)\s+(with\s+header\s+row\s+)?"
+            rf"location\s+'([^']+)'{_END}",
+            lambda db, m: db.create_external_table(
+                m[2], m[3], m[5], header=bool(m[4]), if_not_exists=bool(m[1])
+            ),
+        ),
+        _Verb(
+            rf"alter\s+table\s+{_NAME}\s+"
+            rf"(?:add\s+column\s+(\w+)\s+(\w+)|drop\s+column\s+(\w+)){_END}",
+            _alter,
+        ),
+        _Verb(
+            rf"create\s+{_OR_REPLACE}view\s+{_NAME}\s+as\s+(.+)$",
+            # the statement registered what the view reads
+            lambda db, m: db._put_view(m[2], m[3].strip(), replace=bool(m[1])),
+            reads=True,
+        ),
+        _Verb(
+            rf"drop\s+(?:table|materialized\s+view|view)\s+"
+            rf"{_IF_EXISTS}{_NAME}{_END}",
+            _drop,
+        ),
+        _Verb(
+            rf"create\s+(?:schema|database)\s+{_IF_NOT_EXISTS}{_NAME}{_END}",
+            lambda db, m: db.create_schema(m[2], if_not_exists=bool(m[1])),
+        ),
+        _Verb(
+            rf"create\s+catalog\s+{_IF_NOT_EXISTS}{_NAME}{_END}",
+            lambda db, m: db.create_catalog(m[2], if_not_exists=bool(m[1])),
+        ),
+        _Verb(
+            rf"drop\s+(?:schema|database)\s+{_IF_EXISTS}{_NAME}\s*(cascade)?{_END}",
+            lambda db, m: db.drop_schema(
+                m[2], cascade=bool(m[3]), if_exists=bool(m[1])
+            ),
+        ),
+        _Verb(
+            rf"drop\s+catalog\s+{_IF_EXISTS}{_NAME}\s*(cascade)?{_END}",
+            lambda db, m: db.drop_catalog(
+                m[2], cascade=bool(m[3]), if_exists=bool(m[1])
+            ),
+        ),
+        _Verb(
+            rf"show\s+(?:schemas|databases){_END}",
+            lambda db, m: sorted(db.store.schemas),
+            "catalog string, schema string",
+        ),
+        _Verb(
+            rf"show\s+catalogs{_END}",
+            lambda db, m: [(c,) for c in sorted(db.store.catalogs)],
+            "catalog string",
+        ),
+        _Verb(
+            rf"show\s+tables{_END}",
+            lambda db, m: [
+                (e.catalog, e.schema, e.name, e.kind)
+                for e in sorted(db.store.tables.values(), key=lambda e: e.ident)
+            ],
+            "catalog string, schema string, name string, kind string",
+        ),
+        _Verb(rf"vacuum(?:\s+{_NAME})?{_END}", _vacuum, "report string"),
+        _Verb(
+            rf"analyze\s+{_NAME}(?:\s*\(\s*([A-Za-z0-9_,\s]+)\))?{_END}",
+            _analyze,
+            _COUNT,
+        ),
+        _Verb(rf"show\s+create\s+table\s+{_NAME}{_END}", _show_create, "ddl string"),
+        _Verb(
+            r"explain\s+(analyze\s+)?(select\b.+)$",
+            _explain,
+            "plan_type string, plan string",
+            params=True,
+            reads=True,
+        ),
+        _Verb(
+            rf"(?:describe|desc)\s+(?:table\s+)?{_NAME}{_END}",
+            _describe,
+            "col_name string, data_type string, nullable boolean",
+            reads=True,
+        ),
+        _Verb(
+            rf"insert\s+into\s+{_NAME}\s+(.+)$",
+            _insert,
+            _COUNT,
+            params=True,
+            reads=True,
+        ),
+        _Verb(
+            "",
+            lambda db, m, params: db.spark.sql(
+                db._rewrite_reads(m.string), args=params
+            ),
+            None,
+            params=True,
+            reads=True,
+        ),
+    )
 
     def read(self, name: str) -> DataFrame:
         entry = self._require(name, None)
@@ -3011,8 +2916,6 @@ def _create_vector_index(
     alongside the data it indexes; rebuilding after major corpus drift
     is one call.
     """
-    import json
-
     from ella_spark.operators.similarity import (
         pq_encode,
         train_ivf_centroids,
@@ -3069,8 +2972,6 @@ def _create_vector_index(
 
 
 def _load_vector_index(self: Ella, table: str, column: str) -> dict:
-    import json
-
     entry = self.store.tables[self._split(table)]
     key = (entry.ident, column)
     cache = _vix_cache(self)

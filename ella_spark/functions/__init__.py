@@ -54,7 +54,9 @@ def t_exp(a: Column) -> Column:
 
 
 def t_ln(a: Column) -> Column:
-    return F.transform(a, F.log)
+    # not F.log itself: its optional second argument makes transform
+    # pass the element index too
+    return F.transform(a, lambda x: F.log(x))
 
 
 def t_sqrt(a: Column) -> Column:

@@ -197,20 +197,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: per hash function, min of seeded xxhash64
-    over the shingle set. Deterministic, JVM-side.
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i)))
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",

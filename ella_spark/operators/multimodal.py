@@ -73,14 +73,6 @@ def fake_decoder(payload: bytes) -> list[float]:
     return [b / 255.0 for b in h[:8]]
 
 
-def real_decoder_unavailable(payload: bytes):  # pragma: no cover
-    """Marker decoder for environments without media libraries."""
-    raise NotImplementedError(
-        "media codecs (PIL/ffmpeg) are not installed in this environment; "
-        "pass decoder=fake_decoder or a real kernel"
-    )
-
-
 def extract_features(
     df: DataFrame,
     decoder: Callable[[bytes], list[float]] = fake_decoder,

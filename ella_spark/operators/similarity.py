@@ -108,48 +108,6 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def _planes_lit(dim: int, total_planes: int) -> Column:
-    """All hyperplanes as ONE literal array<array<double>>.
-
-    A single nested literal keeps the Catalyst tree tiny; building
-    per-plane `F.array(*[F.lit(v) ...])` expressions instead creates
-    total_planes*dim AST nodes and blows up analysis + codegen time
-    (measured: ~27 s of pure plan overhead at 32 planes x 64 dims)."""
-    return F.array(*[F.lit(_hyperplane(dim, p)) for p in range(total_planes)])
-
-
-def _projection_bits(vec: Column, planes: Column) -> Column:
-    """Sign bit of the projection onto every plane, in one pass over
-    the planes array (array<boolean>)."""
-    return F.transform(
-        planes,
-        lambda p: F.aggregate(
-            F.zip_with(p, vec, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        >= 0,
-    )
-
-
-def _pack_bits(bits_slice: Column) -> Column:
-    """Pack an array<boolean> into a long signature."""
-    return F.aggregate(
-        bits_slice,
-        F.lit(0).cast("long"),
-        lambda acc, b: acc * 2 + F.when(b, 1).otherwise(0),
-    )
-
-
-def lsh_bucket_signature(vec: Column, dim: int, num_planes: int = 8) -> Column:
-    """Random-hyperplane LSH signature: one bit per plane (sign of the
-    projection), packed to a long. Vectors with small angular distance
-    collide with high probability. (JVM expression form — fine for a
-    single signature; the multi-table search path uses the vectorized
-    `_signatures_udf` instead.)"""
-    return _pack_bits(_projection_bits(vec, _planes_lit(dim, num_planes)))
-
-
 def _signatures_udf(dim: int, num_planes: int, num_tables: int):
     """Arrow-batched UDF: embedding -> one packed signature per LSH
     table, all tables in one numpy matmul against the plane matrix.
@@ -157,8 +115,8 @@ def _signatures_udf(dim: int, num_planes: int, num_tables: int):
     Replaces a (num_tables*num_planes x dim)-literal expression tree:
     the JVM form spends seconds in analysis/codegen at 32x64 and
     re-traverses the vector per plane, while here each Arrow batch is
-    one (P, dim) @ (dim,) product per row. Bit order matches
-    `_pack_bits` (first plane in a table = most significant bit)."""
+    one (P, dim) @ (dim,) product per row. The first plane in a table
+    is the most significant bit of its signature."""
     import numpy as np
     import pandas as pd
 
@@ -197,8 +155,8 @@ def lsh_topk(
     an equi-join on (table, signature). Candidate generation carries
     ONLY ids — vectors are re-attached after the pair dedup, so the
     bucket join and dropDuplicates never shuffle the (large) embedding
-    arrays. All plane projections are computed in a single pass over a
-    literal plane matrix (see `_planes_lit`). Exact cosine re-ranks
+    arrays. All plane projections of a row are one numpy product
+    (`_signatures_udf`). Exact cosine re-ranks
     the candidates; the (small) query side is broadcast everywhere.
     """
     sigs_udf = _signatures_udf(dim, num_planes, num_tables)

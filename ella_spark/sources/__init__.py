@@ -146,8 +146,3 @@ def fan_out(df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register every test table as a temp view for spark.sql use."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -94,14 +94,6 @@ def wait_stop_on_inactive(
     raise TimeoutError("publishers still active after timeout")
 
 
-def read_available(topic: Topic, spark) -> DataFrame:
-    """Bounded 'history then live so-far' read: Trigger.AvailableNow
-    semantics without keeping a long-lived query — equivalent to the
-    reference's unbounded scan ending when publishers drop
-    (README.md:96-105), for the common test/batch case."""
-    return topic.read(spark)
-
-
 class Lagged(RuntimeError):
     """Subscriber fell more than the queue bound behind the live feed
     (reference parity: the broadcast channel errors a slow subscriber

@@ -144,11 +144,6 @@ def _spark_to_tensor_type(t: DataType) -> str:
     raise ValueError(f"no TensorType mapping for Spark type {t}")
 
 
-def time_column() -> Column:
-    """The auto-prepended required time column (info.rs:397-424)."""
-    return Column(TIME_COLUMN, "timestamp", required=True)
-
-
 def topic_schema(columns: list[Column], time_name: str = TIME_COLUMN) -> StructType:
     """Build the topic StructType with the time column auto-prepended
     as required + primary index member, exactly like

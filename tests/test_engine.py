@@ -1769,3 +1769,480 @@ def test_tvf_rewrite_golden(tvf_db, sql, expected):
     except AnalysisException as e:
         got = e.getCondition()
     assert re.sub(r"(__[a-z0-9_]+?_)\d+\b", r"\1#", got) == expected
+
+
+# ── SQL statements: every verb Ella.query runs, golden ──────────────
+
+#: (statement, params) run in order over the ``statement_db`` topics
+#: ``g`` (k, v, s) and ``h`` (k); ``<tmp>`` is the test's directory
+_STATEMENT_SCRIPT = [
+    ("SELECT k, v, s FROM g ORDER BY time", None),
+    ("SELECT count(*) AS n FROM g WHERE time < now()", None),
+    ("SELECT k FROM g WHERE k >= :lo ORDER BY k", {"lo": 1}),
+    ("SELECT k FROM g WHERE k = ? OR k = ? ORDER BY k", [0, 2]),
+    ("SELECT count(*) AS n FROM point_lookup('g', 'k', 2)", None),
+    ("INSERT INTO h SELECT 4000 AS time, 3 AS k", None),
+    ("INSERT INTO h VALUES (5000, 4)", None),
+    ("insert into h select :k AS k", {"k": 5}),
+    ("INSERT INTO h SELECT 6000 AS time, ? AS k", [6]),
+    ("INSERT INTO nope VALUES (1, 2)", None),
+    ("SELECT k FROM h ORDER BY k", None),
+    ("SELECT time FROM h WHERE k < 5 ORDER BY time", None),
+    ("CREATE VIEW gv AS SELECT k, v * 2 AS v2 FROM g WHERE k < 2", None),
+    ("SELECT * FROM gv ORDER BY k", None),
+    ("CREATE VIEW gv AS SELECT 1 AS x", None),
+    ("create or replace view gv as\n  select k from g where k < 1", None),
+    ("SELECT * FROM gv", None),
+    ("CREATE VIEW dv AS SELECT count(*) AS n FROM psi_drift('g', 'v', 's')", None),
+    ("SELECT * FROM dv", None),
+    ("DESCRIBE gv", None),
+    ("DESC TABLE g", None),
+    ("describe table nope", None),
+    ("SHOW TABLES", None),
+    ("SHOW TABLES", {"x": 1}),
+    ("SHOW SCHEMAS", None),
+    ("SHOW DATABASES", None),
+    ("SHOW CATALOGS", None),
+    ("CREATE SCHEMA aux", None),
+    ("CREATE SCHEMA aux", None),
+    ("CREATE SCHEMA IF NOT EXISTS aux", None),
+    ("CREATE DATABASE aux2", None),
+    ("CREATE CATALOG side", None),
+    ("CREATE CATALOG side", None),
+    ("CREATE CATALOG IF NOT EXISTS side", None),
+    ("SHOW SCHEMAS", None),
+    ("SHOW CATALOGS", None),
+    ("CREATE TOPIC ct AS SELECT time, k, v FROM g WHERE k < 2", None),
+    ("SELECT time, k, v FROM ct ORDER BY time", None),
+    ("CREATE TOPIC IF NOT EXISTS ct AS SELECT time, k, v FROM g", None),
+    ("CREATE TOPIC IF NOT EXISTS gv AS SELECT time FROM g", None),
+    ("CREATE TOPIC bad AS SELECT k FROM g", None),
+    ("CREATE TOPIC bad AS SELECT 'x' AS time", None),
+    ("CREATE TOPIC cts AS SELECT TIMESTAMP '1970-01-01 00:00:01' AS time, 1 AS k", None),
+    ("SELECT time, k FROM cts", None),
+    ("CREATE TOPIC aux.s1 AS SELECT time, k FROM g", None),
+    ("SELECT k FROM aux__s1 ORDER BY k", None),
+    ("ALTER TABLE ct ADD COLUMN tag VARCHAR", None),
+    ("ALTER TABLE ct ADD COLUMN n bigint", None),
+    ("DESCRIBE ct", None),
+    ("ALTER TABLE ct DROP COLUMN tag", None),
+    ("SELECT * FROM ct ORDER BY time", None),
+    ("ALTER TABLE nope ADD COLUMN x int", None),
+    ("COPY (SELECT k FROM g WHERE k < 2) TO '<tmp>/c1'", None),
+    ("COPY (SELECT k, s FROM g) TO '<tmp>/c2' (FORMAT CSV);", None),
+    ("COPY (SELECT k FROM g) TO '<tmp>/c1'", None),
+    ("CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '<tmp>/c1'", None),
+    ("SELECT k FROM ext ORDER BY k", None),
+    ("CREATE EXTERNAL TABLE IF NOT EXISTS ext STORED AS PARQUET LOCATION '<tmp>/c1'", None),
+    ("CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '<tmp>/c1'", None),
+    ("CREATE EXTERNAL TABLE extc STORED AS CSV WITH HEADER ROW LOCATION '<tmp>/c2';", None),
+    ("DESCRIBE extc", None),
+    ("SHOW CREATE TABLE ext", None),
+    ("SHOW CREATE TABLE extc", None),
+    ("SHOW CREATE TABLE g", None),
+    ("SHOW CREATE TABLE gv", None),
+    ("SHOW CREATE TABLE nope", None),
+    ("CREATE MATERIALIZED VIEW mv AS SELECT k, sum(v) AS s FROM g GROUP BY k", None),
+    (
+        "CREATE OR REPLACE MATERIALIZED VIEW mv KEEP VERSIONS 2 AS "
+        "SELECT k, count(*) AS n FROM g GROUP BY k",
+        None,
+    ),
+    ("REFRESH MATERIALIZED VIEW mv", None),
+    ("SELECT k, n FROM mv ORDER BY k", None),
+    ("SELECT count(*) AS n FROM mv FOR VERSION AS OF 1", None),
+    ("SHOW CREATE TABLE mv", None),
+    ("REFRESH MATERIALIZED VIEW gv", None),
+    ("EXPLAIN SELECT k FROM g WHERE k > 1", None),
+    ("EXPLAIN ANALYZE SELECT k FROM g", None),
+    ("ANALYZE g", None),
+    ("ANALYZE g (k, s);", None),
+    ("ANALYZE nope", None),
+    ("VACUUM g", None),
+    ("VACUUM", None),
+    ("SELECT k FROM g ORDER BY k", None),
+    ("SET spark.ella.golden = 'a b'", None),
+    ("SET spark.ella.golden TO 7;", None),
+    ("SELECT table_name, table_type FROM information_schema.tables ORDER BY 1", None),
+    (
+        "SELECT column_name, ordinal_position, is_nullable, data_type "
+        "FROM information_schema.columns WHERE table_name = 'g' ORDER BY 2",
+        None,
+    ),
+    ("DROP VIEW dv", None),
+    ("DROP TABLE nope", None),
+    ("DROP TABLE IF EXISTS nope", None),
+    ("DROP VIEW IF EXISTS gv", None),
+    ("DROP MATERIALIZED VIEW mv", None),
+    ("DROP TABLE ext", None),
+    ("SELECT k FROM ext", None),
+    ("DROP SCHEMA aux", None),
+    ("DROP SCHEMA aux CASCADE", None),
+    ("DROP SCHEMA IF EXISTS aux", None),
+    ("DROP SCHEMA aux", None),
+    ("DROP DATABASE aux2", None),
+    ("DROP CATALOG side CASCADE", None),
+    ("DROP CATALOG IF EXISTS side", None),
+    ("DROP CATALOG side", None),
+    ("SHOW TABLES", None),
+]
+
+#: what each statement of _STATEMENT_SCRIPT did, in order (frame or
+#: error, entries added or changed with their stored SQL, entries removed)
+_STATEMENT_GOLDEN = [
+    # SELECT k, v, s FROM g ORDER BY time
+    [["struct<k:bigint,v:double,s:string>",
+      [[0, 0.0, "a"], [1, 1.0, "b"], [2, 2.0, "a"]]],
+     {}, []],
+    # SELECT count(*) AS n FROM g WHERE time < now()
+    [["struct<n:bigint>", [[3]]], {}, []],
+    # SELECT k FROM g WHERE k >= :lo ORDER BY k
+    [["struct<k:bigint>", [[1], [2]]], {}, []],
+    # SELECT k FROM g WHERE k = ? OR k = ? ORDER BY k
+    [["struct<k:bigint>", [[0], [2]]], {}, []],
+    # SELECT count(*) AS n FROM point_lookup('g', 'k', 2)
+    [["struct<n:bigint>", [[1]]], {}, []],
+    # INSERT INTO h SELECT 4000 AS time, 3 AS k
+    [["struct<count:bigint>", [[1]]], {}, []],
+    # INSERT INTO h VALUES (5000, 4)
+    [["struct<count:bigint>", [[1]]], {}, []],
+    # insert into h select :k AS k
+    [["struct<count:bigint>", [[1]]], {}, []],
+    # INSERT INTO h SELECT 6000 AS time, ? AS k
+    [["struct<count:bigint>", [[1]]], {}, []],
+    # INSERT INTO nope VALUES (1, 2)
+    [["ValueError", "table 'nope' does not exist"], {}, []],
+    # SELECT k FROM h ORDER BY k
+    [["struct<k:bigint>", [[3], [4], [5], [6]]], {}, []],
+    # SELECT time FROM h WHERE k < 5 ORDER BY time
+    [["struct<time:bigint>", [[4000], [5000]]], {}, []],
+    # CREATE VIEW gv AS SELECT k, v * 2 AS v2 FROM g WHERE k < 2
+    [["struct<ok:boolean>", []],
+     {"ella.public.gv": "SELECT k, v * 2 AS v2 FROM g WHERE k < 2"}, []],
+    # SELECT * FROM gv ORDER BY k
+    [["struct<k:bigint,v2:double>", [[0, 0.0], [1, 2.0]]], {}, []],
+    # CREATE VIEW gv AS SELECT 1 AS x
+    [["ValueError", "table ella.public.gv already exists"], {}, []],
+    # create or replace view gv as   select k from g where k < 1
+    [["struct<ok:boolean>", []], {"ella.public.gv": "select k from g where k < 1"}, []],
+    # SELECT * FROM gv
+    [["struct<k:bigint>", [[0]]], {}, []],
+    # CREATE VIEW dv AS SELECT count(*) AS n FROM psi_drift('g', 'v', 's')
+    [["struct<ok:boolean>", []],
+     {"ella.public.dv": "SELECT count(*) AS n FROM psi_drift('g', 'v', 's')"}, []],
+    # SELECT * FROM dv
+    [["struct<n:bigint>", [[2]]], {}, []],
+    # DESCRIBE gv
+    [["struct<col_name:string,data_type:string,nullable:boolean>",
+      [["k", "bigint", True]]],
+     {}, []],
+    # DESC TABLE g
+    [["struct<col_name:string,data_type:string,nullable:boolean>",
+      [["time", "timestamp", False], ["k", "int64", True], ["v", "float64", True],
+       ["s", "string", True]]],
+     {}, []],
+    # describe table nope
+    [["ValueError", "table 'nope' does not exist"], {}, []],
+    # SHOW TABLES
+    [["struct<catalog:string,schema:string,name:string,kind:string>",
+      [["ella", "public", "dv", "view"], ["ella", "public", "g", "topic"],
+       ["ella", "public", "gv", "view"], ["ella", "public", "h", "topic"]]],
+     {}, []],
+    # SHOW TABLES
+    [["ValueError", "params apply to relational statements, not DDL"], {}, []],
+    # SHOW SCHEMAS
+    [["struct<catalog:string,schema:string>", [["ella", "public"]]], {}, []],
+    # SHOW DATABASES
+    [["struct<catalog:string,schema:string>", [["ella", "public"]]], {}, []],
+    # SHOW CATALOGS
+    [["struct<catalog:string>", [["ella"]]], {}, []],
+    # CREATE SCHEMA aux
+    [["struct<ok:boolean>", []], {}, []],
+    # CREATE SCHEMA aux
+    [["ValueError", "schema ella.aux already exists"], {}, []],
+    # CREATE SCHEMA IF NOT EXISTS aux
+    [["struct<ok:boolean>", []], {}, []],
+    # CREATE DATABASE aux2
+    [["struct<ok:boolean>", []], {}, []],
+    # CREATE CATALOG side
+    [["struct<ok:boolean>", []], {}, []],
+    # CREATE CATALOG side
+    [["ValueError", "catalog 'side' already exists"], {}, []],
+    # CREATE CATALOG IF NOT EXISTS side
+    [["struct<ok:boolean>", []], {}, []],
+    # SHOW SCHEMAS
+    [["struct<catalog:string,schema:string>",
+      [["ella", "aux"], ["ella", "aux2"], ["ella", "public"]]],
+     {}, []],
+    # SHOW CATALOGS
+    [["struct<catalog:string>", [["ella"], ["side"]]], {}, []],
+    # CREATE TOPIC ct AS SELECT time, k, v FROM g WHERE k < 2
+    [["struct<count:bigint>", [[2]]], {"ella.public.ct": None}, []],
+    # SELECT time, k, v FROM ct ORDER BY time
+    [["struct<time:bigint,k:bigint,v:double>", [[1000, 0, 0.0], [2000, 1, 1.0]]], {},
+     []],
+    # CREATE TOPIC IF NOT EXISTS ct AS SELECT time, k, v FROM g
+    [["struct<count:bigint>", [[0]]], {}, []],
+    # CREATE TOPIC IF NOT EXISTS gv AS SELECT time FROM g
+    [["ValueError", "cannot CREATE TOPIC 'gv': a view with that name already exists"],
+     {}, []],
+    # CREATE TOPIC bad AS SELECT k FROM g
+    [["ValueError",
+      "CREATE TOPIC ... AS SELECT requires the SELECT to produce an epoch-ns 'time' "
+      "column (topics are time-indexed; add e.g. `unix_micros(now()) * 1000 AS time`)"],
+     {}, []],
+    # CREATE TOPIC bad AS SELECT 'x' AS time
+    [["ValueError",
+      "CTAS 'time' column must be integral epoch-ns or TIMESTAMP, got string"],
+     {}, []],
+    # CREATE TOPIC cts AS SELECT TIMESTAMP '1970-01-01 00:00:01' AS time, 1 AS k
+    [["struct<count:bigint>", [[1]]], {"ella.public.cts": None}, []],
+    # SELECT time, k FROM cts
+    [["struct<time:bigint,k:int>", [[1000000000, 1]]], {}, []],
+    # CREATE TOPIC aux.s1 AS SELECT time, k FROM g
+    [["struct<count:bigint>", [[3]]], {"ella.aux.s1": None}, []],
+    # SELECT k FROM aux__s1 ORDER BY k
+    [["struct<k:bigint>", [[0], [1], [2]]], {}, []],
+    # ALTER TABLE ct ADD COLUMN tag VARCHAR
+    [["struct<ok:boolean>", []], {}, []],
+    # ALTER TABLE ct ADD COLUMN n bigint
+    [["struct<ok:boolean>", []], {}, []],
+    # DESCRIBE ct
+    [["struct<col_name:string,data_type:string,nullable:boolean>",
+      [["time", "timestamp", False], ["k", "int64", True], ["v", "float64", True],
+       ["tag", "string", True], ["n", "int64", True]]],
+     {}, []],
+    # ALTER TABLE ct DROP COLUMN tag
+    [["struct<ok:boolean>", []], {}, []],
+    # SELECT * FROM ct ORDER BY time
+    [["struct<time:bigint,k:bigint,v:double,n:bigint>",
+      [[1000, 0, 0.0, None], [2000, 1, 1.0, None]]],
+     {}, []],
+    # ALTER TABLE nope ADD COLUMN x int
+    [["ValueError", "table 'nope' does not exist"], {}, []],
+    # COPY (SELECT k FROM g WHERE k < 2) TO '<tmp>/c1'
+    [["struct<count:bigint>", [[2]]], {}, []],
+    # COPY (SELECT k, s FROM g) TO '<tmp>/c2' (FORMAT CSV);
+    [["struct<count:bigint>", [[3]]], {}, []],
+    # COPY (SELECT k FROM g) TO '<tmp>/c1'
+    [["AnalysisException", "PATH_ALREADY_EXISTS"], {}, []],
+    # CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '<tmp>/c1'
+    [["struct<ok:boolean>", []], {"ella.public.ext": None}, []],
+    # SELECT k FROM ext ORDER BY k
+    [["struct<k:bigint>", [[0], [1]]], {}, []],
+    # CREATE EXTERNAL TABLE IF NOT EXISTS ext STORED AS PARQUET LOCATION '<tm...
+    [["struct<ok:boolean>", []], {}, []],
+    # CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '<tmp>/c1'
+    [["ValueError", "table 'ext' already exists"], {}, []],
+    # CREATE EXTERNAL TABLE extc STORED AS CSV WITH HEADER ROW LOCATION '<tmp...
+    [["struct<ok:boolean>", []], {"ella.public.extc": None}, []],
+    # DESCRIBE extc
+    [["struct<col_name:string,data_type:string,nullable:boolean>",
+      [["k", "int", True], ["s", "string", True]]],
+     {}, []],
+    # SHOW CREATE TABLE ext
+    [["struct<ddl:string>",
+      [["CREATE EXTERNAL TABLE ext STORED AS PARQUET LOCATION '<tmp>/c1'"]]],
+     {}, []],
+    # SHOW CREATE TABLE extc
+    [["struct<ddl:string>",
+      [["CREATE EXTERNAL TABLE extc STORED AS CSV WITH HEADER ROW LOCATION "
+        "'<tmp>/c2'"]]],
+     {}, []],
+    # SHOW CREATE TABLE g
+    [["struct<ddl:string>",
+      [["CREATE TOPIC g (time timestamp NOT NULL, k int64, v float64, s string)"]]],
+     {}, []],
+    # SHOW CREATE TABLE gv
+    [["struct<ddl:string>", [["CREATE VIEW gv AS select k from g where k < 1"]]], {},
+     []],
+    # SHOW CREATE TABLE nope
+    [["ValueError", "unknown table 'nope'"], {}, []],
+    # CREATE MATERIALIZED VIEW mv AS SELECT k, sum(v) AS s FROM g GROUP BY k
+    [["struct<count:bigint>", [[3]]],
+     {"ella.public.mv": "SELECT k, sum(v) AS s FROM g GROUP BY k"}, []],
+    # CREATE OR REPLACE MATERIALIZED VIEW mv KEEP VERSIONS 2 AS SELECT k, cou...
+    [["struct<count:bigint>", [[3]]],
+     {"ella.public.mv": "SELECT k, count(*) AS n FROM g GROUP BY k"}, []],
+    # REFRESH MATERIALIZED VIEW mv
+    [["struct<count:bigint>", [[3]]], {}, []],
+    # SELECT k, n FROM mv ORDER BY k
+    [["struct<k:bigint,n:bigint>", [[0, 1], [1, 1], [2, 1]]], {}, []],
+    # SELECT count(*) AS n FROM mv FOR VERSION AS OF 1
+    [["struct<n:bigint>", [[3]]], {}, []],
+    # SHOW CREATE TABLE mv
+    [["struct<ddl:string>",
+      [["CREATE MATERIALIZED VIEW mv AS SELECT k, count(*) AS n FROM g GROUP BY k"]]],
+     {}, []],
+    # REFRESH MATERIALIZED VIEW gv
+    [["ValueError", "'gv' is a view, expected materialized_view"], {}, []],
+    # EXPLAIN SELECT k FROM g WHERE k > 1
+    [["struct<plan_type:string,plan:string>",
+      [["logical_plan", True], ["physical_plan", True]]],
+     {}, []],
+    # EXPLAIN ANALYZE SELECT k FROM g
+    [["struct<plan_type:string,plan:string>",
+      [["logical_plan", True], ["row_count", "3"], ["plan_with_metrics", True],
+       ["physical_plan", True]]],
+     {}, []],
+    # ANALYZE g
+    [["struct<count:bigint>", [[1]]], {}, []],
+    # ANALYZE g (k, s);
+    [["struct<count:bigint>", [[0]]], {}, []],
+    # ANALYZE nope
+    [["ValueError", "table 'nope' does not exist"], {}, []],
+    # VACUUM g
+    [["struct<report:string>", [["compacted", "manifest_entries"]]], {}, []],
+    # VACUUM
+    [["struct<report:string>",
+      [["cleaned", "compacted", "errors", "expired", "manifest_entries"]]],
+     {}, []],
+    # SELECT k FROM g ORDER BY k
+    [["struct<k:bigint>", [[0], [1], [2]]], {}, []],
+    # SET spark.ella.golden = 'a b'
+    [["struct<ok:boolean>", []], {}, []],
+    # SET spark.ella.golden TO 7;
+    [["struct<ok:boolean>", []], {}, []],
+    # SELECT table_name, table_type FROM information_schema.tables ORDER BY 1
+    [["struct<table_name:string,table_type:string>",
+      [["ct", "BASE TABLE"], ["cts", "BASE TABLE"], ["dv", "VIEW"],
+       ["ext", "BASE TABLE"], ["extc", "BASE TABLE"], ["g", "BASE TABLE"],
+       ["gv", "VIEW"], ["h", "BASE TABLE"], ["mv", "VIEW"], ["s1", "BASE TABLE"]]],
+     {}, []],
+    # SELECT column_name, ordinal_position, is_nullable, data_type FROM infor...
+    [[
+      "struct<column_name:string,ordinal_position:int,is_nullable:string,"
+      "data_type:string>",
+      [["time", 1, "NO", "timestamp"], ["k", 2, "YES", "int64"],
+       ["v", 3, "YES", "float64"], ["s", 4, "YES", "string"]]],
+     {}, []],
+    # DROP VIEW dv
+    [["struct<ok:boolean>", []], {}, ["ella.public.dv"]],
+    # DROP TABLE nope
+    [["ValueError", "table 'nope' does not exist"], {}, []],
+    # DROP TABLE IF EXISTS nope
+    [["struct<ok:boolean>", []], {}, []],
+    # DROP VIEW IF EXISTS gv
+    [["struct<ok:boolean>", []], {}, ["ella.public.gv"]],
+    # DROP MATERIALIZED VIEW mv
+    [["struct<ok:boolean>", []], {}, ["ella.public.mv"]],
+    # DROP TABLE ext
+    [["struct<ok:boolean>", []], {}, ["ella.public.ext"]],
+    # SELECT k FROM ext
+    [["AnalysisException", "TABLE_OR_VIEW_NOT_FOUND"], {}, []],
+    # DROP SCHEMA aux
+    [["ValueError",
+      "schema ella.aux is not empty (1 tables); use DROP SCHEMA ... CASCADE"],
+     {}, []],
+    # DROP SCHEMA aux CASCADE
+    [["struct<ok:boolean>", []], {}, ["ella.aux.s1"]],
+    # DROP SCHEMA IF EXISTS aux
+    [["struct<ok:boolean>", []], {}, []],
+    # DROP SCHEMA aux
+    [["ValueError", "schema ella.aux does not exist"], {}, []],
+    # DROP DATABASE aux2
+    [["struct<ok:boolean>", []], {}, []],
+    # DROP CATALOG side CASCADE
+    [["struct<ok:boolean>", []], {}, []],
+    # DROP CATALOG IF EXISTS side
+    [["struct<ok:boolean>", []], {}, []],
+    # DROP CATALOG side
+    [["ValueError", "catalog 'side' does not exist"], {}, []],
+    # SHOW TABLES
+    [["struct<catalog:string,schema:string,name:string,kind:string>",
+      [["ella", "public", "ct", "topic"], ["ella", "public", "cts", "topic"],
+       ["ella", "public", "extc", "external"], ["ella", "public", "g", "topic"],
+       ["ella", "public", "h", "topic"]]],
+     {}, []],
+]
+
+
+def _observe_statement(db, sql, params, tmp):
+    """What one statement did: its frame (schema and rows) or its error
+    (type and message, or Spark's error condition), the catalog entries
+    it added or changed (with their stored SQL) and the ones it removed."""
+    import json
+
+    before = {".".join(e.ident): e.sql for e in db.store.tables.values()}
+    try:
+        df = db.query(sql.replace("<tmp>", tmp), params).df
+        rows = [tuple(r) for r in df.collect()]
+        if df.columns == ["plan_type", "plan"]:
+            rows = [(t, p if t == "row_count" else bool(p)) for t, p in rows]
+        elif df.columns == ["report"]:
+            rows = [tuple(sorted(json.loads(r))) for (r,) in rows]
+        out = (df.schema.simpleString(), rows)
+    except Exception as e:  # noqa: BLE001 — the error is the outcome
+        cond = getattr(e, "getCondition", None)
+        out = (type(e).__name__, cond() if cond else str(e))
+    after = {".".join(e.ident): e.sql for e in db.store.tables.values()}
+    changed = {k: v for k, v in after.items() if before.get(k, "-") != v}
+    out = [out, changed, sorted(before.keys() - after.keys())]
+    return json.loads(json.dumps(out).replace(tmp, "<tmp>"))
+
+
+@pytest.fixture()
+def statement_db(db):
+    g = db.create_topic(
+        "g", [Column("k", "int64"), Column("v", "float64"), Column("s", "string")]
+    )
+    with g.publish() as pub:
+        for i in range(3):
+            pub.write((i + 1) * 1_000, i, float(i), "ab"[i % 2])
+    db.create_topic("h", [Column("k", "int64")])
+    return db
+
+
+def test_statement_golden(statement_db, tmp_path):
+    """Every verb Ella.query runs, in one sequence: its frame or error,
+    and the catalog entries it added, changed or removed."""
+    tmp = str(tmp_path)
+    for (sql, params), expected in zip(
+        _STATEMENT_SCRIPT, _STATEMENT_GOLDEN, strict=True
+    ):
+        assert _observe_statement(statement_db, sql, params, tmp) == expected, sql
+
+
+def test_drop_with_params_drops_nothing(db):
+    db.create_topic("u", [Column("k", "int64")])
+    with pytest.raises(ValueError, match="params apply to relational statements"):
+        db.query("DROP TABLE u", params={"x": 1})
+    assert "ella.public.u" in db.tables()
+
+
+def test_create_view_with_params_stores_nothing(statement_db):
+    with pytest.raises(ValueError, match="params apply to relational statements"):
+        statement_db.query(
+            "CREATE VIEW vp AS SELECT k FROM g WHERE v > :x", params={"x": 1}
+        )
+    assert "ella.public.vp" not in statement_db.tables()
+
+
+def test_view_over_information_schema_reopens(statement_db, spark, tmp_path):
+    sql = "SELECT table_name FROM information_schema.tables"
+    statement_db.query(f"CREATE VIEW vi AS {sql}")
+    assert statement_db.store.resolve("vi").sql == sql
+    reopened = Ella.open(str(tmp_path / "db"), spark.newSession())
+    rows = reopened.query("SELECT table_name FROM vi ORDER BY 1").df.collect()
+    assert [r.table_name for r in rows] == ["g", "h", "vi"]
+
+
+@pytest.mark.parametrize(
+    "sql,params,row_count",
+    [
+        ("EXPLAIN SELECT * FROM point_lookup('g', 'k', 2)", None, None),
+        ("EXPLAIN SELECT * FROM psi_drift('g', 'v', 's')", None, None),
+        ("EXPLAIN SELECT k FROM g WHERE k > :x", {"x": 0}, None),
+        ("EXPLAIN ANALYZE SELECT k FROM g WHERE k > :x", {"x": 0}, "2"),
+        ("EXPLAIN ANALYZE SELECT k FROM g WHERE k = ?", [2], "1"),
+    ],
+)
+def test_explain_rewrites_and_binds(statement_db, sql, params, row_count):
+    """EXPLAIN's query goes through the table-function rewrite and binds
+    the statement's params, like the SELECT it explains."""
+    rows = statement_db.query(sql, params).df.collect()
+    kinds = [r.plan_type for r in rows]
+    assert kinds[0] == "logical_plan" and kinds[-1] == "physical_plan"
+    assert all(r.plan for r in rows)
+    if row_count is not None:
+        assert dict(rows)["row_count"] == row_count

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -327,3 +328,37 @@ def test_shape_ops_column_variants(spark):
     assert out["mid"] == list(T.t_slice_axis(v, 0, 1, -1))
     assert out["head"] == list(T.t_slice_axis(v, 0, None, 2))
     assert out["tail"] == list(T.t_slice_axis(v, 0, -2))
+
+
+# tensor ops nothing else in the package calls, against numpy; ``a`` has
+# negatives and a zero, ``b`` is positive (``t_ln``, ``t_div``)
+_NUMPY_OPS = [
+    ("t_sub", lambda a, b: T.t_sub(a, b), lambda a, b: a - b),
+    ("t_div", lambda a, b: T.t_div(a, b), lambda a, b: a / b),
+    ("t_offset", lambda a, b: T.t_offset(a, 1.5), lambda a, b: a + 1.5),
+    ("t_abs", lambda a, b: T.t_abs(a), lambda a, b: np.abs(a)),
+    ("t_exp", lambda a, b: T.t_exp(a), lambda a, b: np.exp(a)),
+    ("t_ln", lambda a, b: T.t_ln(b), lambda a, b: np.log(b)),
+    ("t_pow", lambda a, b: T.t_pow(a, 3), lambda a, b: np.power(a, 3)),
+    ("t_eq", lambda a, b: T.t_eq(a, b), lambda a, b: a == b),
+    ("t_min", lambda a, b: T.t_min(a), lambda a, b: np.min(a)),
+    ("t_max", lambda a, b: T.t_max(a), lambda a, b: np.max(a)),
+]
+
+
+@pytest.mark.parametrize("name,op,ref", _NUMPY_OPS, ids=[o[0] for o in _NUMPY_OPS])
+def test_tensor_ops_match_numpy(spark, name, op, ref):
+    rows = [
+        (1, [1.5, -4.0, 0.5], [2.0, 4.0, 0.25]),
+        (2, None, None),
+        (3, [-2.0, 0.0, 3.0], [1.0, 8.0, 3.0]),
+    ]
+    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    got = df.select("id", op(F.col("a"), F.col("b")).alias("r")).orderBy("id").collect()
+    for (_, a, b), r in zip(rows, got):
+        if a is None:
+            assert r.r is None
+        else:
+            assert np.asarray(r.r, dtype=float) == pytest.approx(
+                np.asarray(ref(np.array(a), np.array(b)), dtype=float)
+            )
