@@ -923,9 +923,12 @@ class Ella:
                 "— drop it first (REPLACE only replaces materialized "
                 "views)"
             )
-        replacing = (
-            replace and prev is not None and prev.kind == "materialized_view"
-        )
+        if prev is not None and not replace:
+            # refuse before any side effect: the failure cleanup below
+            # drops the entry this call created, which here would be
+            # the existing view
+            raise ValueError(f"table {'.'.join(prev.ident)} already exists")
+        replacing = prev is not None
         entry = TableEntry(
             catalog=catalog,
             schema=schema,
@@ -1234,7 +1237,7 @@ class Ella:
             sql = self._rewrite_reads(entry.sql)
             if analysis is not None and topics and analysis.hidden_sql:
                 try:
-                    df = self._with_visible_avgs(entry.sql, analysis)
+                    df = self._with_visible(entry.sql, analysis)
                 except AnalysisException:
                     # the hidden rewrite can be unsupported for the
                     # actual argument types (e.g. hll_sketch_agg
@@ -1273,21 +1276,7 @@ class Ella:
         against the actual output schema (catches `AS __mv_x` and the
         no-AS alias form alike; a regex over the SQL text would also
         false-positive on string literals)."""
-        legit: set[str] = set()
-        if analysis is not None:
-            legit = (
-                {c for pair in analysis.avgs.values() for c in pair}
-                | {c for tup in analysis.stats.values() for c in tup[1:]}
-                | {c for tup in analysis.corrs.values() for c in tup[1:]}
-                | {c for tup in analysis.moments.values() for c in tup[1:]}
-                | set(analysis.approxs.values())
-                | {h for _, h in analysis.argmaxs.values()}
-                | {h for _, _, h in analysis.klls.values()}
-                | set(analysis.dists.values())
-                | {h for _, h in analysis.dsums.values()}
-                | {h for _, h in analysis.modes.values()}
-                | {h for _, _, h in analysis.topks.values()}
-            )
+        legit = set(analysis.hidden_cols) if analysis is not None else set()
         bad = [
             c
             for c in df.columns
@@ -1300,382 +1289,72 @@ class Ella:
                 "rename them"
             )
 
-    #: KLL capacity for approx_percentile MV state: groups up to this
-    #: many rows keep an uncompacted sketch (estimates exactly the
-    #: discrete quantile); larger groups stay within the KLL rank
-    #: error. ~16 KB of doubles per group at the cap.
-    _KLL_MV_K = 2048
-
-    @staticmethod
-    def _kll_merge_udf():
-        from ella_spark.operators.sketch import kll_merge_states_udf
-
-        return kll_merge_states_udf(Ella._KLL_MV_K)
-
-    def _attach_kll_state(self, df: DataFrame, analysis) -> DataFrame:
-        """Join the approx_percentile hidden state (per-group KLL
-        sketches) onto the hidden-partials frame. The state is built
-        by an applyInPandas side-query over the SAME FROM/WHERE
-        binding the hidden SQL used — sketches are not expressible in
-        SQL. One bucket-keyed shuffle per percentile column; the
-        sketch rows are O(groups), never O(rows)."""
-        import functools
-
-        import pandas as _pd
-
-        from pyspark.sql import functions as F
-
-        from ella_spark.operators.sketch import kll_build
-
-        if not analysis.klls:
-            return df
-        k = self._KLL_MV_K
-        # ONE side-query + ONE applyInPandas pass builds every
-        # percentile column's state (several percentiles over the same
-        # argument would otherwise scan the source once each)
-        val_cols = {
-            h: f"__v_{i}"
-            for i, (_, _, h) in enumerate(analysis.klls.values())
-        }
-        sel = ", ".join(
-            analysis.key_items
-            + [
-                f"CAST(({arg}) AS DOUBLE) AS {val_cols[h]}"
-                for (arg, _prob, h) in analysis.klls.values()
-            ]
-        )
-        q = f"SELECT {sel} FROM {analysis.from_text}"
-        if analysis.where:
-            q += f" WHERE {analysis.where}"
-        src = self.spark.sql(q)
-        state_fields = ", ".join(
-            f"{h} array<array<double>>" for h in val_cols
-        )
-        if analysis.keys:
-            grouped = src.groupBy(*analysis.keys)
-            key_fields = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in src.schema.fields
-                if f.name in analysis.keys
-            )
-            out_schema = f"{key_fields}, {state_fields}"
-        else:
-            src = src.withColumn("__g", F.lit(1))
-            grouped = src.groupBy("__g")
-            out_schema = f"__g int, {state_fields}"
-
-        def build(pdf: _pd.DataFrame) -> _pd.DataFrame:
-            row = {
-                c: [pdf[c].iloc[0]]
-                for c in pdf.columns
-                if not c.startswith("__v_")
-            }
-            for h, vc in val_cols.items():
-                levels = kll_build(pdf[vc].to_numpy(dtype=float), k)
-                row[h] = [[list(map(float, l)) for l in levels]]
-            return _pd.DataFrame(row)
-
-        state = grouped.applyInPandas(build, schema=out_schema)
-        if analysis.keys:
-            # NULL-SAFE key join: a NULL group key is a real group in
-            # the hidden partials and must match its sketch row (a
-            # plain equality join would leave its percentile NULL)
-            right = state
-            cond = functools.reduce(
-                lambda a, b: a & b,
-                [df[kk].eqNullSafe(right[kk]) for kk in analysis.keys],
-            )
-            df = df.join(right, cond, "left").drop(
-                *[right[kk] for kk in analysis.keys]
-            )
-        else:
-            # LEFT join on true, not crossJoin: an empty source (or a
-            # WHERE that filters everything) leaves the state frame
-            # empty, and a crossJoin would wipe the global aggregate's
-            # single row — the left join keeps it with NULL state
-            df = df.join(
-                F.broadcast(state.drop("__g")), F.lit(True), "left"
-            )
-        return df
-
-    def _attach_mode_state(self, df: DataFrame, analysis) -> DataFrame:
-        """Join the mode() hidden state (per-group value -> count
-        maps) onto the hidden-partials frame. A count-per-value needs
-        a second grouping level, inexpressible in the one-pass hidden
-        SQL, so — the KLL-state pattern — a side-query over the SAME
-        FROM/WHERE binding builds it; unlike KLL it is pure SQL (no
-        pandas). Two shuffles per mode column ((keys, value) counts,
-        then (keys) map assembly); the state rows are O(groups), each
-        O(distinct values in the group) — the count-map any exact mode
-        computation holds."""
+    def _attach_side_state(self, df: DataFrame, analysis) -> DataFrame:
+        """Join the hidden state that families build by a side query
+        (KLL sketches, mode count-maps — incremental.FAMILIES) onto
+        the hidden-partials frame. Each side query replays the SAME
+        FROM/WHERE binding the hidden SQL used, selecting the group
+        keys next to the family's own items."""
         import functools
 
         from pyspark.sql import functions as F
 
-        if not analysis.modes:
-            return df
-        for _alias, (arg, h) in analysis.modes.items():
-            sel = ", ".join(analysis.key_items + [f"({arg}) AS __mv_x"])
+        def query(extra: list[str]) -> DataFrame:
+            sel = ", ".join(analysis.key_items + extra)
             q = f"SELECT {sel} FROM {analysis.from_text}"
-            q += f" WHERE {analysis.where}" if analysis.where else ""
-            src = self.spark.sql(q).where(F.col("__mv_x").isNotNull())
-            if analysis.keys:
-                cnt = src.groupBy(*analysis.keys, "__mv_x").agg(
-                    F.count(F.lit(1)).alias("__mv_n")
-                )
-                state = cnt.groupBy(*analysis.keys).agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__mv_x", "__mv_n"))
-                    ).alias(h)
-                )
-                # RENAME the state keys before joining: df and state
-                # both descend from the same base relation here (both
-                # are spark.sql over the topic view), so df[k] and
-                # state[k] can resolve to the SAME attribute and the
-                # equality folds to trivially-true (observed: Spark's
-                # 'trivially true equals predicate' warning + a cross-
-                # join-shaped result). The applyInPandas KLL state
-                # never hits this (its plan breaks the lineage).
-                ren = {kk: f"__mv_modek_{kk}" for kk in analysis.keys}
-                state = state.select(
-                    *[F.col(kk).alias(rn) for kk, rn in ren.items()],
-                    F.col(h),
-                )
-                # NULL-SAFE key join (the KLL rationale: NULL keys are
-                # real groups); groups whose arg is all-NULL are
-                # absent from the state frame -> NULL state -> NULL
-                # mode, matching plain mode() over zero non-null rows
+            return self.spark.sql(
+                q + (f" WHERE {analysis.where}" if analysis.where else "")
+            )
+
+        keys = analysis.keys
+        # RENAME the state keys before joining: df and the state both
+        # descend from the same base relation (both are spark.sql over
+        # the topic view), so df[k] and state[k] can resolve to the
+        # SAME attribute and the equality folds to trivially-true
+        # (observed: a cross-join-shaped result)
+        ren = {kk: f"__mv_sidek_{kk}" for kk in keys}
+        for fam, items in analysis.by_family():
+            if fam.side is None:
+                continue
+            for state in fam.side(query, keys, items):
+                if not keys:
+                    # LEFT join on true, not crossJoin: an empty source
+                    # leaves the state frame empty, and a crossJoin
+                    # would wipe the global aggregate's single row
+                    df = df.join(F.broadcast(state), F.lit(True), "left")
+                    continue
+                # NULL-SAFE key join: a NULL group key is a real group
+                # in the hidden partials and must match its state row
                 cond = functools.reduce(
                     lambda a, b: a & b,
-                    [
-                        df[kk].eqNullSafe(F.col(rn))
-                        for kk, rn in ren.items()
-                    ],
+                    [df[kk].eqNullSafe(F.col(rn)) for kk, rn in ren.items()],
                 )
-                df = df.join(state, cond, "left").drop(*ren.values())
-            else:
-                state = src.groupBy(F.col("__mv_x")).agg(
-                    F.count(F.lit(1)).alias("__mv_n")
-                ).agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("__mv_x", "__mv_n"))
-                    ).alias(h)
-                )
-                # LEFT join on true (not crossJoin): an all-NULL/empty
-                # source leaves the state frame empty and must not
-                # wipe the global aggregate's single row
-                df = df.join(F.broadcast(state), F.lit(True), "left")
+                df = df.join(
+                    state.withColumnsRenamed(ren), cond, "left"
+                ).drop(*ren.values())
         return df
 
-    @staticmethod
-    def _mode_visible_expr(h: str):
-        """Visible mode from the count-map state: the entry with the
-        highest count, ties to the SMALLEST value (deterministic in
-        both refresh paths — a documented deviation from plain
-        Spark's implementation-chosen tied pick). NULL/empty state ->
-        NULL, matching mode() over zero non-null rows."""
-        from pyspark.sql import functions as F
-
-        return F.expr(
-            f"try_element_at(array_sort(map_entries({h}), "
-            "(a, b) -> CASE WHEN a.value > b.value THEN -1 "
-            "WHEN a.value < b.value THEN 1 "
-            "WHEN a.key < b.key THEN -1 "
-            "WHEN a.key > b.key THEN 1 ELSE 0 END), 1).key"
-        )
-
-    @staticmethod
-    def _kll_quantile_expr(h, prob: float, dtype):
-        """Visible percentile column from serialized KLL levels
-        (sketch.kll_quantile_udf; None for empty state — Spark's own
-        approx_percentile over zero non-null rows is NULL too)."""
-        from pyspark.sql import functions as F
-
-        from ella_spark.operators.sketch import kll_quantile_udf
-
-        return kll_quantile_udf(prob)(F.col(h)).cast(dtype)
-
-    def _with_visible_avgs(self, orig_sql: str, analysis) -> DataFrame:
-        """Run the hidden-partials SQL and append the visible avg /
-        variance-family columns (recomputed from the mergeable hidden
-        state), each cast to the dtype the ORIGINAL SQL would
-        produce — the snapshot then carries visible cols in select
-        order followed by the mergeable hidden state."""
+    def _with_visible(self, orig_sql: str, analysis) -> DataFrame:
+        """Run the hidden-partials SQL, attach side-query state and
+        derive the visible columns, each cast to the dtype the
+        ORIGINAL SQL would produce — the snapshot then carries visible
+        cols in select order followed by the mergeable hidden state."""
         orig_fields = {f.name: f.dataType for f in self.spark.sql(orig_sql).schema}
         df = self.spark.sql(analysis.hidden_sql)
-        df = self._attach_kll_state(df, analysis)
-        df = self._attach_mode_state(df, analysis)
+        df = self._attach_side_state(df, analysis)
         return self._derive_visible(df, analysis, orig_fields)
 
     @staticmethod
     def _derive_visible(df: DataFrame, analysis, dtypes) -> DataFrame:
-        """Visible avg / variance columns from hidden state, selected
-        in out_cols order followed by the hidden columns."""
-        from pyspark.sql import functions as F
-
-        for alias, (hsum, hcnt) in analysis.avgs.items():
-            df = df.withColumn(
-                alias,
-                F.when(F.col(hcnt) > 0, F.col(hsum) / F.col(hcnt)).cast(
-                    dtypes[alias]
-                ),
-            )
-        for alias, (fn, hcnt, hmean, hm2) in analysis.stats.items():
-            n = F.col(hcnt).cast("double")
-            # Welford state: M2 is already the centered second moment;
-            # clamp tiny negative rounding from the merge
-            m2 = F.greatest(F.col(hm2), F.lit(0.0))
-            if fn in ("var_pop", "stddev_pop"):
-                var, floor = m2 / n, 1
-            else:
-                var, floor = m2 / (n - 1), 2  # sample stats: NULL at n<2
-            val = F.sqrt(var) if fn.startswith("stddev") else var
-            df = df.withColumn(
-                alias,
-                F.when(F.col(hcnt) >= floor, val).cast(dtypes[alias]),
-            )
-        for alias, (fn, hn, hm1, hm2a, hq1, hq2, hc) in analysis.corrs.items():
-            # positional state: 1 = FIRST argument (y for regr_*(y, x)),
-            # 2 = second; q's are the centered moments, c the co-moment
-            n = F.col(hn).cast("double")
-            m12 = F.col(hc)
-            m11 = F.greatest(F.col(hq1), F.lit(0.0))
-            m22 = F.greatest(F.col(hq2), F.lit(0.0))
-            one = F.col(hn) >= 1
-            if fn == "covar_pop":
-                val, guard = m12 / n, one
-            elif fn == "covar_samp":
-                val, guard = m12 / (n - 1), F.col(hn) >= 2
-            elif fn == "corr":
-                # zero-variance sides -> NULL (PostgreSQL convention —
-                # Spark's native ANSI corr raises here)
-                val = m12 / F.sqrt(m11 * m22)
-                guard = one & (m11 > 0) & (m22 > 0)
-            elif fn == "regr_count":
-                val, guard = F.col(hn), F.lit(True)
-            elif fn == "regr_avgx":
-                val, guard = F.col(hm2a), one
-            elif fn == "regr_avgy":
-                val, guard = F.col(hm1), one
-            elif fn == "regr_slope":
-                val, guard = m12 / m22, one & (m22 > 0)
-            elif fn == "regr_intercept":
-                val = F.col(hm1) - (m12 / m22) * F.col(hm2a)
-                guard = one & (m22 > 0)
-            elif fn == "regr_r2":
-                # Spark/PostgreSQL: NULL when var(x)=0; 1.0 when
-                # var(y)=0 (x varying); else corr²
-                val = F.when(m11 > 0, m12 * m12 / (m22 * m11)).otherwise(1.0)
-                guard = one & (m22 > 0)
-            elif fn == "regr_sxx":
-                val, guard = m22, one
-            elif fn == "regr_syy":
-                val, guard = m11, one
-            else:  # regr_sxy
-                val, guard = m12, one
-            df = df.withColumn(
-                alias, F.when(guard, val).cast(dtypes[alias])
-            )
-        for alias, (fn, hn, hm1, hq2, hq3, hq4) in analysis.moments.items():
-            # population central-moment forms (probed against Spark:
-            # NULL when M2 = 0 — constant or single-value groups)
-            n = F.col(hn).cast("double")
-            m2 = F.greatest(F.col(hq2), F.lit(0.0))
-            guard = (F.col(hn) >= 1) & (m2 > 0)
-            if fn == "skewness":
-                val = (F.col(hq3) / n) / F.pow(m2 / n, 1.5)
-            else:  # kurtosis (excess)
-                val = (F.col(hq4) / n) / F.pow(m2 / n, 2.0) - 3.0
-            df = df.withColumn(
-                alias, F.when(guard, val).cast(dtypes[alias])
-            )
-        for alias, h in analysis.approxs.items():
-            # DataSketches HLL estimate from the mergeable sketch
-            # state (deliberate deviation from HyperLogLog++ — both
-            # refresh paths use this estimator, so the MV is
-            # self-consistent; the delta merge is the same union
-            # Spark runs across partitions, see incremental.py).
-            # All-NULL group -> NULL sketch -> coalesce to 0: plain
-            # approx_count_distinct is count-like and never NULL.
-            df = df.withColumn(
-                alias,
-                F.coalesce(
-                    F.hll_sketch_estimate(F.col(h)), F.lit(0)
-                ).cast(dtypes[alias]),
-            )
-        for alias, (_arg, prob, h) in analysis.klls.items():
-            df = df.withColumn(
-                alias,
-                Ella._kll_quantile_expr(h, prob, dtypes[alias]),
-            )
-        for alias, (_fn, h) in analysis.argmaxs.items():
-            # visible argument from the lexicographic (ord, arg)
-            # struct state; all-NULL-ord group -> NULL state -> NULL,
-            # matching plain max_by over zero qualifying rows
-            df = df.withColumn(
-                alias, F.col(h).getField("a").cast(dtypes[alias])
-            )
-        for alias, h in analysis.dists.items():
-            # count(DISTINCT x) = size of the hidden distinct set;
-            # NULL state (left-join-introduced empty group) -> 0,
-            # exactly count distinct over zero rows
-            df = df.withColumn(
-                alias,
-                F.when(F.col(h).isNull(), F.lit(0))
-                .otherwise(F.size(F.col(h)))
-                .cast(dtypes[alias]),
-            )
-        for alias, (fn, h) in analysis.dsums.items():
-            # sum/avg(DISTINCT): fold the SORTED distinct set so float
-            # folds are order-deterministic (delta merge == full
-            # recompute bit-for-bit); empty/NULL set -> NULL, matching
-            # sum/avg over zero non-null rows
-            t = dtypes[alias].simpleString()
-            if fn == "sum":
-                val = F.expr(
-                    f"aggregate(array_sort({h}), CAST(0 AS {t}), "
-                    f"(acc, x) -> acc + CAST(x AS {t}))"
-                )
-            else:  # avg: fold in double, divide by the set size
-                val = F.expr(
-                    f"aggregate(array_sort({h}), CAST(0 AS DOUBLE), "
-                    f"(acc, x) -> acc + CAST(x AS DOUBLE))"
-                ) / F.size(F.col(h))
-            df = df.withColumn(
-                alias,
-                F.when(
-                    F.col(h).isNotNull() & (F.size(F.col(h)) > 0), val
-                ).cast(dtypes[alias]),
-            )
-        for alias, (_arg, h) in analysis.modes.items():
-            df = df.withColumn(
-                alias, Ella._mode_visible_expr(h).cast(dtypes[alias])
-            )
-        for alias, (kk, _mm, h) in analysis.topks.items():
-            # DataSketches frequent-items estimate from the mergeable
-            # sketch state (exact while distinct items fit
-            # maxItemsTracked; the HLL drift-band caveat applies
-            # beyond it — both refresh paths use the same estimator)
-            df = df.withColumn(
-                alias,
-                F.expr(f"approx_top_k_estimate({h}, {kk})").cast(
-                    dtypes[alias]
-                ),
-            )
-        hidden = (
-            [c for pair in analysis.avgs.values() for c in pair]
-            + [c for tup in analysis.stats.values() for c in tup[1:]]
-            + [c for tup in analysis.corrs.values() for c in tup[1:]]
-            + [c for tup in analysis.moments.values() for c in tup[1:]]
-            + list(analysis.approxs.values())
-            + [h for _, h in analysis.argmaxs.values()]
-            + [h for _, _, h in analysis.klls.values()]
-            + list(analysis.dists.values())
-            + [h for _, h in analysis.dsums.values()]
-            + [h for _, h in analysis.modes.values()]
-            + [h for _, _, h in analysis.topks.values()]
-        )
-        return df.select(*analysis.out_cols, *hidden)
+        """The out_cols in select order — each derived one from its
+        family's hidden state, cast to ``dtypes`` — followed by the
+        hidden columns in snapshot order."""
+        return df.withColumns(
+            {
+                it.alias: it.family.visible(it, dtypes[it.alias])
+                for it in analysis.derived
+            }
+        ).select(*analysis.out_cols, *analysis.hidden_cols)
 
     def _refresh_delta(self, entry: TableEntry, analysis, topic) -> int | None:
         """Delta refresh; None → caller falls back to full recompute."""
@@ -1702,8 +1381,7 @@ class Ella:
             )
             delta_df = self.spark.sql(analysis.hidden_sql or entry.sql)
             if analysis.mode == "agg":
-                delta_df = self._attach_kll_state(delta_df, analysis)
-                delta_df = self._attach_mode_state(delta_df, analysis)
+                delta_df = self._attach_side_state(delta_df, analysis)
             if analysis.mode == "spf":
                 # structural guard behind the regex analyzer: an
                 # aggregate the blacklist does not know must NEVER be
@@ -1741,305 +1419,34 @@ class Ella:
         self, entry: TableEntry, analysis, delta_df: DataFrame, new_state: dict
     ) -> int:
         """Re-aggregate snapshot ∪ delta partials into the next
-        snapshot version (sum/count merge via SUM, min via MIN, max
-        via MAX; avg by SUMming its hidden sum+count state and
-        recomputing the visible column; distinct-keys via
-        dropDuplicates)."""
+        snapshot version: each aggregate by its family's merge
+        (incremental.FAMILIES), then the derived visible columns
+        recomputed from the merged hidden state; distinct-keys via
+        dropDuplicates."""
         from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
         old = self._frame_for(entry, include_hidden=True)
-        derived = (
-            set(analysis.avgs)
-            | set(analysis.stats)
-            | set(analysis.corrs)
-            | set(analysis.moments)
-            | set(analysis.approxs)
-            | set(analysis.klls)
-            | set(analysis.argmaxs)
-            | set(analysis.dists)
-            | set(analysis.dsums)
-            | set(analysis.modes)
-            | set(analysis.topks)
-        )
+        derived = [it.alias for it in analysis.derived]
         if derived:
-            # the snapshot's visible avg/variance columns are derived,
-            # not mergeable state — drop them before unioning with the
-            # delta partials (which carry only the hidden state)
+            # the snapshot's derived visible columns are not mergeable
+            # state — drop them before unioning with the delta partials
+            # (which carry only the hidden state)
             old = old.drop(*derived)
         union = old.unionByName(delta_df)
         schema = StructType.fromJson(json.loads(entry.result_schema))
         dtypes = {f.name: f.dataType for f in schema.fields}
-        if analysis.aggs:
-            # self-mergeable aggregates: re-aggregating partials with
-            # the listed fn gives the total (sum/count via SUM; min/
-            # max, bool and bit families are associative+idempotent —
-            # bit_xor is associative and each input row lands in
-            # exactly one partial, so partial-xor folds exactly)
-            merge_fns = {
-                "sum": F.sum, "count": F.sum, "min": F.min, "max": F.max,
-                "count_if": F.sum,
-                "bool_and": F.bool_and, "every": F.bool_and,
-                "bool_or": F.bool_or,
-                "bit_and": F.bit_and, "bit_or": F.bit_or,
-                "bit_xor": F.bit_xor,
-            }
-            aggs = [
-                merge_fns[fn](c).alias(c)
-                for c, fn in analysis.aggs.items()
-                if c not in derived and c not in analysis.argmaxs
-            ]
-            # max_by/min_by: the hidden (ord, arg) struct merges via
-            # lexicographic max/min — deterministic on ordering-value
-            # ties, so delta merge ≡ full recompute; the visible
-            # argument is re-derived from the struct afterwards
-            for c, (fn, h) in analysis.argmaxs.items():
-                ext = F.max if fn == "max_by" else F.min
-                aggs.append(ext(F.col(h)).alias(h))
-            aggs += [
-                F.sum(h).alias(h)
-                for pair in analysis.avgs.values()
-                for h in pair
-            ]
-            aggs += [
-                F.hll_union_agg(h).alias(h)
-                for h in analysis.approxs.values()
-            ]
-            # approx_top_k frequent-items state: combine snapshot ∪
-            # delta sketches (same maxItemsTracked by construction)
-            aggs += [
-                F.expr(f"approx_top_k_combine({h}, {mm})").alias(h)
-                for _kk, mm, h in analysis.topks.values()
-            ]
-            # count(DISTINCT) set state: distinct-flatten of the
-            # per-partial sets (snapshot + delta(s) — one array per
-            # partial, never per input row)
-            aggs += [
-                F.array_distinct(F.flatten(F.collect_list(F.col(h)))).alias(h)
-                for h in analysis.dists.values()
-            ]
-            # sum/avg(DISTINCT) share the distinct-set merge
-            aggs += [
-                F.array_distinct(F.flatten(F.collect_list(F.col(h)))).alias(h)
-                for _, h in analysis.dsums.values()
-            ]
-            # approx_percentile KLL state: fold snapshot ∪ delta
-            # sketches per group (bounded: one struct per partial)
-            kll_tmps: list[str] = []
-            for alias, (_arg, _prob, h) in analysis.klls.items():
-                tmp = f"__mv_klltmp__{alias}"
-                kll_tmps.append(tmp)
-                aggs.append(F.collect_list(F.col(h)).alias(tmp))
-            # mode() count-map state: collect the per-partial maps
-            # (bounded: one map per partial), then fold them with
-            # map_zip_with summing counts — exact and order-free, so
-            # delta merge ≡ full recompute; the state never grows
-            # beyond O(distinct values per group)
-            mode_tmps: list[str] = []
-            for alias, (_arg, h) in analysis.modes.items():
-                tmp = f"__mv_modetmp__{alias}"
-                mode_tmps.append(tmp)
-                aggs.append(F.collect_list(F.col(h)).alias(tmp))
-            # Welford state (variance/corr families): counts merge
-            # exactly via SUM; means and centered moments merge via
-            # the grand-mean identity over the per-partial structs —
-            #   mean = Σ nᵢ·meanᵢ / N
-            #   M2   = Σ M2ᵢ + Σ nᵢ·(meanᵢ − mean)²
-            #   C    = Σ Cᵢ  + Σ nᵢ·(mxᵢ − mx)(myᵢ − my)
-            # Subtracting NEARBY means is stable where re-deriving
-            # from raw Σx² is not (values ~1e9, variance ~1 cancels
-            # catastrophically). collect_list is bounded: one struct
-            # per partial — the snapshot plus one delta term (or one
-            # per leapfrog join term), never per input row.
-            tmps: list[str] = []
-            for alias, (fn, hcnt, hmean, hm2) in analysis.stats.items():
-                tmp = f"__mv_tmp__{alias}"
-                tmps.append(tmp)
-                aggs.append(F.sum(hcnt).alias(hcnt))
-                aggs.append(
-                    F.collect_list(
-                        F.struct(
-                            F.col(hcnt).cast("double").alias("n"),
-                            F.coalesce(F.col(hmean), F.lit(0.0)).alias("m"),
-                            F.coalesce(F.col(hm2), F.lit(0.0)).alias("q"),
-                        )
-                    ).alias(tmp)
-                )
-            for alias, (fn, hn, hm1, hq2, hq3, hq4) in analysis.moments.items():
-                tmp = f"__mv_tmp__{alias}"
-                tmps.append(tmp)
-                aggs.append(F.sum(hn).alias(hn))
-                aggs.append(
-                    F.collect_list(
-                        F.struct(
-                            F.col(hn).cast("double").alias("n"),
-                            F.coalesce(F.col(hm1), F.lit(0.0)).alias("m"),
-                            F.coalesce(F.col(hq2), F.lit(0.0)).alias("q2"),
-                            F.coalesce(F.col(hq3), F.lit(0.0)).alias("q3"),
-                            F.coalesce(F.col(hq4), F.lit(0.0)).alias("q4"),
-                        )
-                    ).alias(tmp)
-                )
-            for alias, (fn, hn, hm1, hm2a, hq1, hq2, hc) in analysis.corrs.items():
-                tmp = f"__mv_tmp__{alias}"
-                tmps.append(tmp)
-                aggs.append(F.sum(hn).alias(hn))
-                aggs.append(
-                    F.collect_list(
-                        F.struct(
-                            F.col(hn).cast("double").alias("n"),
-                            F.coalesce(F.col(hm1), F.lit(0.0)).alias("m1"),
-                            F.coalesce(F.col(hm2a), F.lit(0.0)).alias("m2"),
-                            F.coalesce(F.col(hq1), F.lit(0.0)).alias("q1"),
-                            F.coalesce(F.col(hq2), F.lit(0.0)).alias("q2"),
-                            F.coalesce(F.col(hc), F.lit(0.0)).alias("c"),
-                        )
-                    ).alias(tmp)
-                )
-            merged = (
-                union.groupBy(*analysis.keys).agg(*aggs)
-                if analysis.keys
-                else union.agg(*aggs)
-            )
-            zero = F.lit(0.0)
-            for alias, (fn, hcnt, hmean, hm2) in analysis.stats.items():
-                arr = F.col(f"__mv_tmp__{alias}")
-                n = F.col(hcnt).cast("double")
-                wsum = F.aggregate(arr, zero, lambda a, s: a + s["n"] * s["m"])
-                merged = merged.withColumn(
-                    hmean, F.when(F.col(hcnt) > 0, wsum / n)
-                )
-                mean = F.coalesce(F.col(hmean), zero)
-                merged = merged.withColumn(
-                    hm2,
-                    F.aggregate(
-                        arr,
-                        zero,
-                        lambda a, s: a
-                        + s["q"]
-                        + s["n"] * (s["m"] - mean) * (s["m"] - mean),
-                    ),
-                )
-            for alias, (fn, hn, hm1, hm2a, hq1, hq2, hc) in analysis.corrs.items():
-                arr = F.col(f"__mv_tmp__{alias}")
-                n = F.col(hn).cast("double")
-                pos = F.col(hn) > 0
-                s1 = F.aggregate(arr, zero, lambda a, s: a + s["n"] * s["m1"])
-                s2 = F.aggregate(arr, zero, lambda a, s: a + s["n"] * s["m2"])
-                merged = merged.withColumn(hm1, F.when(pos, s1 / n))
-                merged = merged.withColumn(hm2a, F.when(pos, s2 / n))
-                mx = F.coalesce(F.col(hm1), zero)
-                my = F.coalesce(F.col(hm2a), zero)
-                merged = merged.withColumn(
-                    hq1,
-                    F.aggregate(
-                        arr,
-                        zero,
-                        lambda a, s: a
-                        + s["q1"]
-                        + s["n"] * (s["m1"] - mx) * (s["m1"] - mx),
-                    ),
-                ).withColumn(
-                    hq2,
-                    F.aggregate(
-                        arr,
-                        zero,
-                        lambda a, s: a
-                        + s["q2"]
-                        + s["n"] * (s["m2"] - my) * (s["m2"] - my),
-                    ),
-                ).withColumn(
-                    hc,
-                    F.aggregate(
-                        arr,
-                        zero,
-                        lambda a, s: a
-                        + s["c"]
-                        + s["n"] * (s["m1"] - mx) * (s["m2"] - my),
-                    ),
-                )
-            for alias, (fn, hn, hm1, hq2, hq3, hq4) in analysis.moments.items():
-                arr = F.col(f"__mv_tmp__{alias}")
-                n = F.col(hn).cast("double")
-                wsum = F.aggregate(arr, zero, lambda a, s: a + s["n"] * s["m"])
-                merged = merged.withColumn(
-                    hm1, F.when(F.col(hn) > 0, wsum / n)
-                )
-                mean = F.coalesce(F.col(hm1), zero)
-                # grand-mean identities for higher central moments
-                # (d = partial mean - grand mean; sum of (x-m_i) is 0
-                # inside each partial, so the binomial expansions
-                # collapse to these closed forms):
-                #   M2 += q2 + n d^2
-                #   M3 += q3 + 3 d q2 + n d^3
-                #   M4 += q4 + 4 d q3 + 6 d^2 q2 + n d^4
-                merged = (
-                    merged.withColumn(
-                        hq2,
-                        F.aggregate(
-                            arr,
-                            zero,
-                            lambda a, s: a
-                            + s["q2"]
-                            + s["n"] * (s["m"] - mean) * (s["m"] - mean),
-                        ),
-                    )
-                    .withColumn(
-                        hq3,
-                        F.aggregate(
-                            arr,
-                            zero,
-                            lambda a, s: a
-                            + s["q3"]
-                            + F.lit(3.0) * (s["m"] - mean) * s["q2"]
-                            + s["n"]
-                            * (s["m"] - mean)
-                            * (s["m"] - mean)
-                            * (s["m"] - mean),
-                        ),
-                    )
-                    .withColumn(
-                        hq4,
-                        F.aggregate(
-                            arr,
-                            zero,
-                            lambda a, s: a
-                            + s["q4"]
-                            + F.lit(4.0) * (s["m"] - mean) * s["q3"]
-                            + F.lit(6.0)
-                            * (s["m"] - mean)
-                            * (s["m"] - mean)
-                            * s["q2"]
-                            + s["n"]
-                            * (s["m"] - mean)
-                            * (s["m"] - mean)
-                            * (s["m"] - mean)
-                            * (s["m"] - mean),
-                        ),
-                    )
-                )
-            for alias, (_arg, _prob, h) in analysis.klls.items():
-                merged = merged.withColumn(
-                    h, self._kll_merge_udf()(F.col(f"__mv_klltmp__{alias}"))
-                )
-            for alias, (_arg, h) in analysis.modes.items():
-                tmp = f"__mv_modetmp__{alias}"
-                # collect_list skips NULL maps; guard the empty list
-                # (a group whose every partial had NULL state) to a
-                # NULL map rather than ANSI-error on element_at
-                merged = merged.withColumn(
-                    h,
-                    F.expr(
-                        f"CASE WHEN size({tmp}) = 0 THEN NULL ELSE "
-                        f"aggregate(slice({tmp}, 2, size({tmp})), "
-                        f"element_at({tmp}, 1), "
-                        "(acc, m) -> map_zip_with(acc, m, "
-                        "(k, a, b) -> coalesce(a, 0L) + coalesce(b, 0L))) "
-                        "END"
-                    ),
-                )
-            if tmps or kll_tmps or mode_tmps:
-                merged = merged.drop(*tmps, *kll_tmps, *mode_tmps)
+        if analysis.items:
+            # each family merges its own state (incremental.FAMILIES):
+            # aggregates over the union, then post-aggregation steps
+            aggs, post = [], []
+            for it in analysis.items:
+                a, p = it.family.merge(it)
+                aggs += a
+                post += p
+            merged = union.groupBy(*analysis.keys).agg(*aggs)
+            for c, expr in post:
+                merged = merged.withColumn(c, expr)
             if derived:
                 merged = self._derive_visible(merged, analysis, dtypes)
         else:
@@ -2198,8 +1605,21 @@ class Ella:
             if path.exists():
                 shutil.rmtree(path)
 
+    @staticmethod
+    def _split_schema(name: str) -> tuple[str, str]:
+        """``[catalog.]schema`` -> (catalog, schema)."""
+        parts = name.split(".")
+        if len(parts) == 1:
+            return DEFAULT_CATALOG, parts[0]
+        if len(parts) == 2:
+            return parts[0], parts[1]
+        raise ValueError(f"invalid schema name {name!r}")
+
     def create_schema(self, name: str, if_not_exists: bool = False) -> None:
-        self.store.create_schema(name, if_not_exists=if_not_exists)
+        catalog, schema = self._split_schema(name)
+        self.store.create_schema(
+            schema, catalog=catalog, if_not_exists=if_not_exists
+        )
 
     def drop_schema(
         self, name: str, *, cascade: bool = False, if_exists: bool = False
@@ -2208,13 +1628,7 @@ class Ella:
         lazy/backend.rs:104-128). Without CASCADE a non-empty schema is
         an error; with CASCADE its tables are unregistered and their
         data removed first."""
-        parts = name.split(".")
-        if len(parts) == 2:
-            catalog, schema = parts
-        elif len(parts) == 1:
-            catalog, schema = DEFAULT_CATALOG, parts[0]
-        else:
-            raise ValueError(f"invalid schema name {name!r}")
+        catalog, schema = self._split_schema(name)
         if (catalog, schema) not in self.store.schemas:
             if if_exists:
                 return

@@ -1,178 +1,65 @@
-"""Incremental materialized-view refresh: SQL shape analysis.
+"""Incremental materialized-view refresh: SQL shape analysis and the
+table of mergeable aggregate families.
 
 The reference declares materialized views but cannot execute them
 (ella-engine/src/table/view.rs:36-39 `todo!()`); this repo's MVs work,
 and this module makes `REFRESH MATERIALIZED VIEW` O(new data) instead
-of O(history) for the common single-topic shapes:
+of O(history) for these shapes:
 
-- **SPF** (select/project/filter, no aggregation): the view over
-  (history ∪ delta) equals snapshot ∪ view(delta), so a refresh only
-  scans the shards published since the last snapshot and appends their
-  projected rows.
+- **SPF** (select/project/filter over one topic, no aggregation): the
+  view over (history ∪ delta) equals snapshot ∪ view(delta), so a
+  refresh scans only the shards published since the last snapshot and
+  appends their projected rows.
 - **Mergeable aggregate** (`SELECT keys…, agg(expr) AS a… FROM topic
-  [WHERE …] [GROUP BY keys…]` with agg ∈ {sum, count, min, max,
-  count_if, bool_and, bool_or, every, bit_and, bit_or, bit_xor — the
-  self-mergeable set: re-aggregating partials with the same fn (SUM
-  for the counts) is exact; bit_xor because every input row lands in
-  exactly one partial}):
-  partial aggregates over the delta shards merge with the stored
-  snapshot by re-aggregating snapshot ∪ delta-partials — sum/count via
-  SUM, min via MIN, max via MAX. A GROUP BY with no aggregates (a
+  [WHERE …] [GROUP BY keys…]`): every aggregate belongs to one family
+  of ``FAMILIES``, which states how it keeps mergeable state, how that
+  state merges over snapshot ∪ delta partials and how the visible
+  column is derived from it. A GROUP BY with no aggregates (a
   DISTINCT-keys view) merges by dropping duplicate keys.
-- **avg** rides the same merge as a REWRITE: `avg(e) AS a` is
-  maintained as two HIDDEN snapshot columns `__mv_sum__a` /
-  `__mv_cnt__a` (merged via SUM like any mergeable aggregate) and the
-  visible column is recomputed as `sum/cnt` on every commit — exactly
-  the sum÷count evaluation Spark's own `Average` performs, so the
-  visible values match a full recompute. Hidden columns live in the
-  snapshot files but are projected away on every read.
-- **variance family** (`stddev[_samp]`, `stddev_pop`, `variance`,
-  `var_samp`, `var_pop`) extends the avg rewrite with WELFORD hidden
-  state `(count, mean, M2)` — the exact state Spark's own
-  `CentralMomentAgg` carries between partitions. Each delta partial
-  computes `avg(x)` and `var_pop(x) * count(x)` (Welford inside
-  Spark, no cancellation); partials merge with the snapshot via the
-  grand-mean identity `M2 = Σ M2ᵢ + Σ nᵢ·(meanᵢ − mean)²`, which
-  subtracts NEARBY means instead of astronomically large raw
-  sums-of-squares. With values ~1e9 and variance ~1 the old
-  `sumsq − sum²/n` form lost all significant digits; the Welford
-  state keeps ~9 of them (pinned by
-  test_stats_mv_large_magnitude_stability). Visible value is
-  `M2/n` (`/(n−1)` for sample stats), sqrt for stddev, NULL below
-  the sample-count floor.
-- **correlation/regression family** (`corr`, `covar_samp`,
-  `covar_pop`, and all nine `regr_*` functions): same Welford recipe
-  with six state columns `(n, mean_x, mean_y, M2x, M2y, C)` counted
-  over BOTH-non-null pairs — the state of Spark's own `Covariance`
-  aggregate (co-moment `C` merged via
-  `C = Σ Cᵢ + Σ nᵢ·(mxᵢ − mx)(myᵢ − my)`). One deliberate deviation:
-  `corr` over a zero-variance side returns NULL (the PostgreSQL
-  convention) where Spark's native ANSI-mode corr raises
-  DIVIDE_BY_ZERO — both refresh paths use the rewrite, so the MV is
-  self-consistent.
-- **moments family** (`skewness`, `kurtosis`): the Welford recipe
-  extended to third and fourth central moments — hidden state
-  `(n, mean, M2, M3, M4)` recovered from Spark's own outputs per
-  partial (`M3 = skewness·n·var_pop^1.5`,
-  `M4 = (kurtosis+3)·n·var_pop²` — exact inversions of
-  `CentralMomentAgg`'s definitions, probed), merged by the
-  grand-mean binomial identities
-  `M3 += M3ᵢ + 3dᵢM2ᵢ + nᵢdᵢ³` and
-  `M4 += M4ᵢ + 4dᵢM3ᵢ + 6dᵢ²M2ᵢ + nᵢdᵢ⁴` (dᵢ = meanᵢ − mean).
-  NULL when M2 = 0 (constant / single-value groups), matching
-  Spark's probed convention on both refresh paths.
-- **max_by / min_by** (`max_by(arg, ord) AS a`): the hidden column
-  `__mv_ord__a` carries the full `(o=ord, a=arg)` PAIR as a struct,
-  aggregated lexicographically (`max(struct)` compares field by
-  field), and the visible column is derived as `state.a`. Storing
-  the pair — not just the winning ordering value — makes the state
-  DETERMINISTIC on ordering-value ties: both refresh paths resolve a
-  tie to the same argument (the lexicographically extreme one), so
-  delta merge ≡ full recompute always, where plain Spark's max_by
-  leaves the tied choice implementation-defined. Rows with NULL
-  ordering value contribute nothing (max_by semantics: the CASE
-  guard yields a NULL struct, which max/min skip); a NULL argument
-  with a non-NULL ordering value participates and loses ties under
-  max (struct comparison orders NULL first) / wins them under min —
-  deterministic either way. Deliberate deviation (documented): on
-  ties the MV may return a different argument than plain Spark's
-  max_by would — both are valid answers under max_by's contract.
-- **count(DISTINCT x)** (single argument): EXACT via a hidden
-  distinct-value set column `__mv_set__a` (delta partials
-  `collect_set`, snapshot ∪ delta merge by distinct-flatten; visible
-  value is the set size). State is O(distinct values per group) —
-  the price any exact engine pays for this aggregate (one Spark
-  count-distinct job holds the same set in its hash aggregate);
-  when the cardinality is too large to store, use
-  approx_count_distinct instead (bounded ~4 KB HLL state, below).
-  Multi-argument `count(DISTINCT a, b)` disqualifies (full
-  recompute).
-- **sum(DISTINCT x) / avg(DISTINCT x)**: EXACT via the SAME hidden
-  distinct-set state; the visible value folds the set — SORTED first,
-  so a float fold is order-deterministic and delta merge ≡ full
-  recompute bit-for-bit (sum folds in the result dtype: exact for
-  int/decimal; avg folds in double — a documented hair of deviation
-  from Spark's decimal-avg rounding, self-consistent across both
-  refresh paths). Other DISTINCT aggregates disqualify.
-- **mode()** (single argument): EXACT via a hidden value -> count MAP
-  column `__mv_cmap__a`. The count-per-value partial needs a second
-  grouping level, inexpressible in the one-pass hidden SQL, so a
-  pure-SQL side-query over the same FROM/WHERE binding builds it
-  (the KLL-state pattern, engine._attach_mode_state); snapshot ∪
-  delta maps fold with `map_zip_with` count sums — exact, order-free,
-  state bounded at O(distinct values per group) forever (Spark's own
-  Mode aggregate holds the same map per group). The visible value is
-  the highest-count entry, count ties to the SMALLEST value —
-  deterministic in both refresh paths, a documented deviation from
-  plain mode()'s implementation-chosen tied pick (the max_by rule).
-  `mode(x, deterministic)` 2-arg form disqualifies.
-- **approx_count_distinct** rides the rewrite as a hidden DataSketches
-  HLL sketch column `__mv_hll__a` (binary): delta partials compute
-  `hll_sketch_agg`, snapshots merge via `hll_union_agg`, and the
-  visible value is `hll_sketch_estimate` at every commit. The delta
-  merge is the SAME union algebra Spark itself applies across
-  partitions inside one `hll_sketch_agg` job, so the delta path adds
-  no error class — but union-built and direct-built sketches are not
-  bit-identical (estimates may differ by a fraction of the ~1.6%
-  lgK=12 standard error; a full recompute can nudge the value within
-  that band). Deliberate deviation: the estimator is DataSketches
-  HLL, not the HyperLogLog++ behind Spark's plain
-  `approx_count_distinct` — both refresh paths use the rewrite, so
-  the MV is self-consistent (same pattern as the corr → NULL
-  deviation). An explicit rsd argument disqualifies (the rewrite
-  cannot honor it).
-- **approx_top_k** (`approx_top_k(x[, k[, maxItemsTracked]])`,
-  literal args): hidden DataSketches frequent-items sketch column
-  `__mv_topk__a` — delta partials `approx_top_k_accumulate`,
-  snapshots merge via `approx_top_k_combine`, visible value
-  `approx_top_k_estimate` at every commit (the HLL pattern verbatim).
-  EXACT while distinct items fit maxItemsTracked (default 10000);
-  beyond it the documented sketch error band applies to both refresh
-  paths identically. Non-literal k/maxItemsTracked disqualify.
-- **approx_percentile / percentile_approx** (`approx_percentile(e,
-  p) AS a`, scalar literal p): hidden state `__mv_kll__a` is a
-  mergeable KLL sketch (operators.sketch — derandomized compaction,
-  so state is a pure function of the group's sorted multiset),
-  serialized as `array<array<double>>`. Sketches are not
-  SQL-expressible, so the state is computed by an applyInPandas
-  side-query over the same FROM/WHERE binding (engine._attach_
-  kll_state) and joined onto the hidden partials by the group keys;
-  snapshot ∪ delta states merge with `kll_merge`. Deliberate
-  deviation: the estimator is this KLL, not Spark's GK — both
-  refresh paths use it, so the MV is self-consistent, and whenever a
-  group fits uncompacted (n ≤ 2048) the estimate IS the exact
-  discrete quantile (rank ceil(p·n)). Multi-prob arrays, an explicit
-  accuracy argument, percentile-over-join, and a global percentile
-  with no sibling aggregate all disqualify (full recompute).
-- **SPF / aggregate inner-join CHAIN of n ≥ 2 distinct topics**
-  (`SELECT … FROM t1 JOIN t2 ON … [JOIN t3 ON …] [WHERE …] [GROUP BY
-  …]`): for append-only inputs the leapfrog insert-delta identity
+- **Inner-join CHAIN of n ≥ 2 distinct topics** (`SELECT … FROM t1 JOIN
+  t2 ON … [JOIN t3 ON …] [WHERE …] [GROUP BY …]`), SPF or aggregate:
+  for append-only inputs the leapfrog insert-delta identity
   Δ(T1 ⋈ … ⋈ Tn) = ⋃ᵢ T1ᵒˡᵈ ⋈ … ⋈ Tᵢ₋₁ᵒˡᵈ ⋈ ΔTᵢ ⋈ Tᵢ₊₁ⁿᵉʷ ⋈ … ⋈ Tnⁿᵉʷ
   partitions the new result rows exactly (every new row contains a
   delta row from some FIRST position i; terms are disjoint because
-  positions before i are bound to old data only), so a refresh never
-  joins history against history on every side at once. Inner joins
-  only: outer variants can RETRACT earlier null-padded rows on
-  insert, which append-only snapshots cannot express.
+  positions before i are bound to old data only). Inner joins only:
+  outer variants can RETRACT earlier null-padded rows on insert,
+  which append-only snapshots cannot express. Families whose state
+  comes from a side query (KLL, mode) do not ride joins.
 
-Anything else (outer joins, subqueries, windows, DISTINCT aggs,
-set ops) falls back to a full recompute —
-correctness first; the analyzer is deliberately conservative, and
-every token it does not understand disqualifies the plan.
+Shared contract:
+
+- **Shard cursor.** A snapshot records the immutable shard basenames
+  it consumed per topic; a refresh reads only the shards not in that
+  set. Compaction renames shards, which invalidates the cursor and
+  forces a full recompute.
+- **Full-recompute fallback.** Anything the analyzer does not fully
+  understand (outer joins, subqueries, windows, other DISTINCT forms,
+  set ops, an argument shape a family refuses) falls back to a full
+  recompute — correctness first; every token it does not understand
+  disqualifies the plan. So does a snapshot whose hidden-state layout
+  no longer unions with the delta partials.
+- **The ``__mv_`` namespace.** Hidden state lives in snapshot columns
+  ``__mv_<part>__<alias>``; every read projects them away, and a user
+  output column in that namespace is refused.
 
 At 100 TB this is the difference between a rollup refresh that reads a
 day of new shards and one that rescans the whole fact history. The
 same partial-aggregate + merge shape is what Spark itself does
 map-side within one job; here it is carried ACROSS refreshes via the
-snapshot, with the topic's immutable shard basenames as the cursor
-(compaction renames shards, which invalidates the cursor and safely
-forces a full recompute).
+snapshot.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 from dataclasses import dataclass, field
+from typing import Callable
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 #: tokens whose presence disqualifies delta refresh (conservative:
 #: matching plain words, not a parser — false positives only cause a
@@ -197,44 +84,6 @@ _SHAPE = re.compile(
     r"(?:\s+group\s+by\s+(?P<group>.+?))?\s*;?\s*$",
     re.I | re.S,
 )
-
-#: a mergeable aggregate select item: agg(expr) AS alias
-#: (avg and the variance family are mergeable VIA REWRITE to hidden
-#: sum/count[/sum-of-squares] columns; longest alternatives first so
-#: stddev_samp is not half-matched as stddev)
-_AGG_ITEM = re.compile(
-    r"^(?P<fn>sum|count_if|count|min|max|avg|"
-    r"bool_and|bool_or|every|bit_and|bit_or|bit_xor|"
-    r"stddev_samp|stddev_pop|stddev|"
-    r"var_samp|var_pop|variance|corr|covar_samp|covar_pop|"
-    r"skewness|kurtosis|"
-    r"approx_top_k|approx_count_distinct|approx_percentile|percentile_approx|"
-    r"max_by|min_by|mode|"
-    r"regr_(?:count|avgx|avgy|slope|intercept|r2|sxx|syy|sxy))"
-    r"\s*\((?P<arg>.+)\)\s+as\s+"
-    r"(?P<alias>[A-Za-z0-9_]+)$",
-    re.I | re.S,
-)
-
-#: variance-family fns rewritten to Welford (count, mean, M2) state
-_STATS_FNS = {
-    "stddev", "stddev_samp", "stddev_pop", "var_samp", "var_pop", "variance",
-}
-
-#: higher central moments rewritten to (n, mean, M2, M3, M4) state —
-#: skewness = (M3/n)/(M2/n)^1.5, excess kurtosis = (M4/n)/(M2/n)^2 - 3
-#: (Spark's own population forms; NULL when M2 = 0, probed)
-_MOMENT_FNS = {"skewness", "kurtosis"}
-
-#: two-argument correlation/regression family rewritten to Welford
-#: co-moment state (n, mean_a, mean_b, M2_a, M2_b, C over
-#: BOTH-non-null pairs, a = FIRST argument — note regr_*(y, x)
-#: passes y first)
-_CORR_FNS = {
-    "corr", "covar_samp", "covar_pop",
-    "regr_count", "regr_avgx", "regr_avgy", "regr_slope",
-    "regr_intercept", "regr_r2", "regr_sxx", "regr_syy", "regr_sxy",
-}
 
 #: ANY aggregate-function call (used to reject un-mergeable aggs and
 #: to tell SPF apart from a global aggregate)
@@ -288,78 +137,655 @@ _BANNED_JOIN = re.compile(
 _DOTTED_IDENT = re.compile(r"^[A-Za-z0-9_]+(\.[A-Za-z0-9_]+)?$")
 
 
-def hidden_cols(alias: str) -> tuple[str, str]:
-    """Snapshot column names carrying an avg's mergeable state."""
-    return f"__mv_sum__{alias}", f"__mv_cnt__{alias}"
+@dataclass(frozen=True)
+class Family:
+    """One mergeable aggregate family: an entry of ``FAMILIES``."""
+
+    name: str
+    #: the function names it accepts (lower case)
+    fns: frozenset[str]
+    #: argument shape: the item's top-level arguments -> its literal
+    #: parameters, or None to refuse the item (full recompute)
+    shape: Callable[[list[str]], tuple | None]
+    #: merge over snapshot ∪ delta partials: item -> (aggregate
+    #: columns, post-aggregation (column, expression) steps)
+    merge: Callable[[AggItem], tuple[list, list]]
+    #: hidden snapshot columns, ``__mv_<part>__<alias>`` each; none for
+    #: the plain family, whose visible column is its own state
+    parts: tuple[str, ...] = ()
+    #: partial-aggregate SQL, one expression per hidden column (the
+    #: plain family re-emits its select item); None when ``side``
+    #: builds the state instead
+    partial: Callable[[AggItem], list[str]] | None = None
+    #: side query for state the one-pass partial SQL cannot express:
+    #: (query, keys, items) -> state frames holding the keys and the
+    #: hidden columns, where query(extra select items) replays the
+    #: view's FROM/WHERE binding with the group keys selected
+    side: Callable | None = None
+    #: visible column from the hidden state: (item, dtype) -> Column
+    visible: Callable[[AggItem, object], Column] | None = None
+    #: True: the DISTINCT form of ``fns``
+    distinct: bool = False
 
 
-def stats_hidden_cols(alias: str) -> tuple[str, str, str]:
-    """Snapshot column names carrying a variance-family aggregate's
-    Welford state (count long, mean double, M2 double)."""
-    return (
-        f"__mv_cnt__{alias}",
-        f"__mv_mean__{alias}",
-        f"__mv_m2__{alias}",
+@dataclass(frozen=True)
+class AggItem:
+    """One parsed aggregate select item ``fn(arg) AS alias``."""
+
+    family: Family
+    fn: str
+    alias: str
+    text: str  # the select item as written
+    arg: str  # the argument text (DISTINCT stripped)
+    args: tuple[str, ...]  # its top-level arguments
+    params: tuple = ()  # literal parameters from ``Family.shape``
+
+    @property
+    def hidden(self) -> tuple[str, ...]:
+        return tuple(f"__mv_{p}__{self.alias}" for p in self.family.parts)
+
+    @property
+    def partial_sql(self) -> list[str]:
+        """Select items of the hidden partial-aggregate SQL."""
+        if self.family.partial is None:
+            return []
+        exprs = self.family.partial(self)
+        if not self.hidden:
+            return exprs
+        return [f"{e} AS {h}" for e, h in zip(exprs, self.hidden)]
+
+
+def _arity(n: int):
+    return lambda args: () if len(args) == n else None
+
+
+def _any_args(args):
+    return ()
+
+
+def _kll_shape(args):
+    # one scalar literal probability: prob arrays, an accuracy argument
+    # or a column refuse
+    if len(args) != 2:
+        return None
+    try:
+        prob = float(args[1])
+    except ValueError:
+        return None
+    return (prob,) if 0.0 <= prob <= 1.0 else None
+
+
+def _top_k_shape(args):
+    # literal k / maxItemsTracked (Spark's defaults 5 / 10000)
+    if len(args) > 3:
+        return None
+    try:
+        k = int(args[1]) if len(args) > 1 else 5
+        tracked = int(args[2]) if len(args) > 2 else 10000
+    except ValueError:
+        return None
+    return (k, tracked)
+
+
+def _each(agg: Callable[[str], Column]):
+    """Merge that re-aggregates every hidden column with ``agg``."""
+    return lambda it: ([agg(h).alias(h) for h in it.hidden], [])
+
+
+def _fold(fold: Callable[[str], Column]):
+    """Merge that collects the per-partial states of the one hidden
+    column (bounded: one per partial — the snapshot plus one delta
+    term, or one per leapfrog join term — never one per input row)
+    and folds the list with ``fold(list column name)``."""
+
+    def merge(it):
+        (h,) = it.hidden
+        tmp = f"__mv_tmp__{it.alias}"
+        return [F.collect_list(F.col(h)).alias(tmp)], [(h, fold(tmp))]
+
+    return merge
+
+
+def _weighted_sum(mean: str):
+    return lambda acc, s: acc + s["n"] * s[mean]
+
+
+def _welford(n_means: int, *moments):
+    """Merge for a Welford family whose hidden layout is (n, means…,
+    centered moments…). Counts merge exactly via SUM; means and
+    centered moments merge via the grand-mean identities over the
+    collected per-partial structs:
+
+        mean = Σ nᵢ·meanᵢ / N
+        M2   = Σ M2ᵢ + Σ nᵢ·(meanᵢ − mean)²
+        C    = Σ Cᵢ  + Σ nᵢ·(mxᵢ − mx)(myᵢ − my)
+
+    Subtracting NEARBY means is stable where re-deriving from raw Σx²
+    is not (values ~1e9 with variance ~1 cancel catastrophically).
+    Each of ``moments`` maps (nᵢ, d, q) to the summands one partial
+    adds, where d(j) is its j-th mean minus the merged mean and q(j)
+    its j-th centered moment."""
+
+    def merge(it):
+        n, *state = it.hidden
+        means, qs = state[:n_means], state[n_means:]
+        tmp = f"__mv_tmp__{it.alias}"
+        zero = F.lit(0.0)
+        aggs = [
+            F.sum(n).alias(n),
+            F.collect_list(
+                F.struct(
+                    F.col(n).cast("double").alias("n"),
+                    *[F.coalesce(F.col(c), zero).alias(c) for c in state],
+                )
+            ).alias(tmp),
+        ]
+        arr = F.col(tmp)
+        total = F.col(n).cast("double")
+        post = [
+            (
+                m,
+                F.when(
+                    F.col(n) > 0,
+                    F.aggregate(arr, zero, _weighted_sum(m)) / total,
+                ),
+            )
+            for m in means
+        ]
+        # the merged means (columns replaced by the steps above)
+        grand = [F.coalesce(F.col(m), zero) for m in means]
+
+        def summed(terms):
+            def step(acc, s):
+                d = functools.cache(lambda j: s[means[j]] - grand[j])
+                q = functools.cache(lambda j: s[qs[j]])
+                return functools.reduce(operator.add, terms(s["n"], d, q), acc)
+
+            return F.aggregate(arr, zero, step)
+
+        return aggs, post + [(q, summed(t)) for q, t in zip(qs, moments)]
+
+    return merge
+
+
+def _as_double(arg: str) -> str:
+    return f"CAST(({arg}) AS DOUBLE)"
+
+
+def _variance_partial(it):
+    # avg and var_pop are Welford-computed inside Spark
+    # (CentralMomentAgg), so the partial never forms a catastrophic
+    # sum of squares
+    d = _as_double(it.arg)
+    return [f"count({it.arg})", f"avg({d})", f"var_pop({d}) * count({it.arg})"]
+
+
+def _variance_visible(it, dtype):
+    hcnt, _, hm2 = it.hidden
+    n = F.col(hcnt).cast("double")
+    # M2 is already the centered second moment; clamp tiny negative
+    # rounding from the merge
+    m2 = F.greatest(F.col(hm2), F.lit(0.0))
+    if it.fn in ("var_pop", "stddev_pop"):
+        var, floor = m2 / n, 1
+    else:
+        var, floor = m2 / (n - 1), 2  # sample stats: NULL at n < 2
+    val = F.sqrt(var) if it.fn.startswith("stddev") else var
+    return F.when(F.col(hcnt) >= floor, val).cast(dtype)
+
+
+def _corr_partial(it):
+    # over BOTH-non-null rows (Spark's pair semantics): the
+    # cross-guards make each per-row value NULL when the OTHER argument
+    # is NULL, and covar_pop skips incomplete pairs natively
+    x, y = it.args
+    dx, dy = _as_double(x), _as_double(y)
+    gx = f"CASE WHEN ({y}) IS NOT NULL THEN {dx} END"
+    gy = f"CASE WHEN ({x}) IS NOT NULL THEN {dy} END"
+    return [
+        f"count({dx} + {dy})",
+        f"avg({gx})",
+        f"avg({gy})",
+        f"var_pop({gx}) * count({gx})",
+        f"var_pop({gy}) * count({gy})",
+        f"covar_pop({dx}, {dy}) * count({dx} + {dy})",
+    ]
+
+
+def _corr_visible(it, dtype):
+    # positional state: 1 = FIRST argument (y for regr_*(y, x)), 2 =
+    # second; q's are the centered moments, c the co-moment
+    hn, hm1, hm2, hq1, hq2, hc = it.hidden
+    cnt, c = F.col(hn), F.col(hc)
+    n = cnt.cast("double")
+    m11 = F.greatest(F.col(hq1), F.lit(0.0))
+    m22 = F.greatest(F.col(hq2), F.lit(0.0))
+    one = cnt >= 1
+    val, guard = {
+        "covar_pop": lambda: (c / n, one),
+        "covar_samp": lambda: (c / (n - 1), cnt >= 2),
+        # zero-variance sides -> NULL (PostgreSQL convention; Spark's
+        # native ANSI corr raises here)
+        "corr": lambda: (
+            c / F.sqrt(m11 * m22), one & (m11 > 0) & (m22 > 0)
+        ),
+        "regr_count": lambda: (cnt, F.lit(True)),
+        "regr_avgx": lambda: (F.col(hm2), one),
+        "regr_avgy": lambda: (F.col(hm1), one),
+        "regr_slope": lambda: (c / m22, one & (m22 > 0)),
+        "regr_intercept": lambda: (
+            F.col(hm1) - (c / m22) * F.col(hm2), one & (m22 > 0)
+        ),
+        # Spark/PostgreSQL: NULL when var(x) = 0; 1.0 when var(y) = 0
+        # (x varying); else corr²
+        "regr_r2": lambda: (
+            F.when(m11 > 0, c * c / (m22 * m11)).otherwise(1.0),
+            one & (m22 > 0),
+        ),
+        "regr_sxx": lambda: (m22, one),
+        "regr_syy": lambda: (m11, one),
+        "regr_sxy": lambda: (c, one),
+    }[it.fn]()
+    return F.when(guard, val).cast(dtype)
+
+
+def _moments_partial(it):
+    # central-moment state recovered from Spark's own CentralMomentAgg
+    # outputs (probed: var_pop = M2/n, skewness = (M3/n)/(M2/n)^1.5,
+    # kurtosis = (M4/n)/(M2/n)^2 - 3; both NULL when M2 = 0, so the
+    # coalesce(…) * var_pop^k product is exactly 0 there)
+    d = _as_double(it.arg)
+    n = f"count({it.arg})"
+    return [
+        n,
+        f"avg({d})",
+        f"var_pop({d}) * {n}",
+        f"coalesce(skewness({d}), 0) * {n} * pow(var_pop({d}), 1.5)",
+        f"(coalesce(kurtosis({d}), 0) + 3) * {n} * pow(var_pop({d}), 2)",
+    ]
+
+
+def _moments_visible(it, dtype):
+    # population central-moment forms (probed against Spark: NULL when
+    # M2 = 0 — constant or single-value groups)
+    hn, _, hq2, hq3, hq4 = it.hidden
+    n = F.col(hn).cast("double")
+    m2 = F.greatest(F.col(hq2), F.lit(0.0))
+    guard = (F.col(hn) >= 1) & (m2 > 0)
+    if it.fn == "skewness":
+        val = (F.col(hq3) / n) / F.pow(m2 / n, 1.5)
+    else:  # kurtosis (excess)
+        val = (F.col(hq4) / n) / F.pow(m2 / n, 2.0) - 3.0
+    return F.when(guard, val).cast(dtype)
+
+
+#: KLL capacity for approx_percentile MV state: groups up to this many
+#: rows keep an uncompacted sketch (estimates exactly the discrete
+#: quantile); larger groups stay within the KLL rank error. ~16 KB of
+#: doubles per group at the cap.
+KLL_K = 2048
+
+
+def _kll_side(query, keys, items):
+    # ONE side query + ONE applyInPandas pass builds every percentile
+    # column's state (several percentiles over the same argument would
+    # otherwise scan the source once each); one bucket-keyed shuffle,
+    # and the sketch rows are O(groups), never O(rows)
+    import pandas as pd
+
+    from ella_spark.operators.sketch import kll_build
+
+    val_cols = {it.hidden[0]: f"__v_{i}" for i, it in enumerate(items)}
+    src = query(
+        [
+            f"{_as_double(it.args[0])} AS {val_cols[it.hidden[0]]}"
+            for it in items
+        ]
+    )
+    state_fields = ", ".join(f"{h} array<array<double>>" for h in val_cols)
+    if keys:
+        grouped = src.groupBy(*keys)
+        key_fields = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in src.schema.fields
+            if f.name in keys
+        )
+        out_schema = f"{key_fields}, {state_fields}"
+    else:
+        src = src.withColumn("__g", F.lit(1))
+        grouped = src.groupBy("__g")
+        out_schema = f"__g int, {state_fields}"
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = {
+            c: [pdf[c].iloc[0]] for c in pdf.columns if not c.startswith("__v_")
+        }
+        for h, vc in val_cols.items():
+            levels = kll_build(pdf[vc].to_numpy(dtype=float), KLL_K)
+            row[h] = [[list(map(float, l)) for l in levels]]
+        return pd.DataFrame(row)
+
+    state = grouped.applyInPandas(build, schema=out_schema)
+    return [state if keys else state.drop("__g")]
+
+
+def _kll_merge(tmp):
+    from ella_spark.operators.sketch import kll_merge_states_udf
+
+    return kll_merge_states_udf(KLL_K)(F.col(tmp))
+
+
+def _kll_visible(it, dtype):
+    # None for empty state: Spark's own approx_percentile over zero
+    # non-null rows is NULL too
+    from ella_spark.operators.sketch import kll_quantile_udf
+
+    return kll_quantile_udf(it.params[0])(F.col(it.hidden[0])).cast(dtype)
+
+
+def _distinct_fold_visible(it, dtype):
+    # fold the SORTED distinct set so float folds are order-
+    # deterministic (delta merge == full recompute bit-for-bit);
+    # empty/NULL set -> NULL, matching sum/avg over zero non-null rows
+    (h,) = it.hidden
+    t = dtype.simpleString()
+    if it.fn == "sum":
+        val = F.expr(
+            f"aggregate(array_sort({h}), CAST(0 AS {t}), "
+            f"(acc, x) -> acc + CAST(x AS {t}))"
+        )
+    else:  # avg: fold in double, divide by the set size
+        val = F.expr(
+            f"aggregate(array_sort({h}), CAST(0 AS DOUBLE), "
+            f"(acc, x) -> acc + CAST(x AS DOUBLE))"
+        ) / F.size(F.col(h))
+    return F.when(F.col(h).isNotNull() & (F.size(F.col(h)) > 0), val).cast(
+        dtype
     )
 
 
-def ord_hidden_col(alias: str) -> str:
-    """Snapshot column carrying a max_by/min_by's mergeable state: the
-    extreme ORDERING value its stored argument is associated with."""
-    return f"__mv_ord__{alias}"
+def _mode_side(query, keys, items):
+    # two shuffles per mode column: (keys, value) counts, then (keys)
+    # map assembly; groups whose argument is all-NULL are absent from
+    # the state frame -> NULL state -> NULL mode, matching plain mode()
+    # over zero non-null rows
+    states = []
+    for it in items:
+        src = query([f"({it.args[0]}) AS __mv_x"])
+        counts = (
+            src.where(F.col("__mv_x").isNotNull())
+            .groupBy(*keys, "__mv_x")
+            .agg(F.count(F.lit(1)).alias("__mv_n"))
+        )
+        states.append(
+            counts.groupBy(*keys).agg(
+                F.map_from_entries(
+                    F.collect_list(F.struct("__mv_x", "__mv_n"))
+                ).alias(it.hidden[0])
+            )
+        )
+    return states
 
 
-def kll_hidden_col(alias: str) -> str:
-    """Snapshot column carrying an approx_percentile's mergeable
-    state: KLL sketch levels (array<array<double>>, level i holding
-    items of weight 2^i — operators.sketch)."""
-    return f"__mv_kll__{alias}"
-
-
-def set_hidden_col(alias: str) -> str:
-    """Snapshot column carrying a count(DISTINCT x)'s mergeable state:
-    the group's distinct-value set (array; O(distinct values))."""
-    return f"__mv_set__{alias}"
-
-
-def topk_hidden_col(alias: str) -> str:
-    """Snapshot column carrying an approx_top_k's mergeable state: a
-    DataSketches frequent-items sketch (approx_top_k_accumulate),
-    merged with approx_top_k_combine — the same bounded-state pattern
-    as the HLL approx_count_distinct family."""
-    return f"__mv_topk__{alias}"
-
-
-def mode_hidden_col(alias: str) -> str:
-    """Snapshot column carrying a mode()'s mergeable state: the
-    group's value -> count map (O(distinct values), the count-map any
-    exact mode computation holds; Spark's own Mode aggregate keeps the
-    same map in an OpenHashMap per group)."""
-    return f"__mv_cmap__{alias}"
-
-
-def approx_hidden_col(alias: str) -> str:
-    """Snapshot column carrying an approx_count_distinct's mergeable
-    state: a DataSketches HLL sketch (binary)."""
-    return f"__mv_hll__{alias}"
-
-
-def moment_hidden_cols(alias: str) -> tuple[str, str, str, str, str]:
-    """Snapshot column names carrying a skewness/kurtosis aggregate's
-    central-moment state (n, mean, M2, M3, M4)."""
-    return tuple(
-        f"__mv_{part}__{alias}" for part in ("n", "m1", "q2", "q3", "q4")
+def _mode_merge(tmp):
+    # map_zip_with summing counts: exact and order-free. collect_list
+    # skips NULL maps; the empty list (every partial had NULL state)
+    # becomes a NULL map rather than an ANSI error on element_at
+    return F.expr(
+        f"CASE WHEN size({tmp}) = 0 THEN NULL ELSE "
+        f"aggregate(slice({tmp}, 2, size({tmp})), element_at({tmp}, 1), "
+        "(acc, m) -> map_zip_with(acc, m, "
+        "(k, a, b) -> coalesce(a, 0L) + coalesce(b, 0L))) END"
     )
 
 
-def corr_hidden_cols(alias: str) -> tuple[str, str, str, str, str, str]:
-    """Snapshot column names carrying a correlation-family aggregate's
-    Welford co-moment state over BOTH-non-null pairs:
-    (n, mean of 1st arg, mean of 2nd arg, M2 of 1st, M2 of 2nd,
-    co-moment C)."""
-    return tuple(
-        f"__mv_{part}__{alias}" for part in ("n", "m1", "m2a", "q1", "q2", "c")
-    )
+def _mode_visible(it, dtype):
+    # the entry with the highest count, ties to the SMALLEST value;
+    # NULL/empty state -> NULL, matching mode() over zero non-null rows
+    return F.expr(
+        f"try_element_at(array_sort(map_entries({it.hidden[0]}), "
+        "(a, b) -> CASE WHEN a.value > b.value THEN -1 "
+        "WHEN a.value < b.value THEN 1 "
+        "WHEN a.key < b.key THEN -1 "
+        "WHEN a.key > b.key THEN 1 ELSE 0 END), 1).key"
+    ).cast(dtype)
+
+
+#: re-aggregating plain partials with these gives the total: sum/count
+#: via SUM; min/max, the bool and the bit families are associative and
+#: idempotent — bit_xor is associative and each input row lands in
+#: exactly one partial, so partial-xor folds exactly
+_SELF_MERGE = {
+    "sum": F.sum, "count": F.sum, "count_if": F.sum,
+    "min": F.min, "max": F.max,
+    "bool_and": F.bool_and, "every": F.bool_and, "bool_or": F.bool_or,
+    "bit_and": F.bit_and, "bit_or": F.bit_or, "bit_xor": F.bit_xor,
+}
+
+#: Every aggregate family a mergeable-aggregate MV keeps incrementally.
+#: Each entry states its accepted functions and argument shape, its
+#: hidden snapshot columns, its partial SQL (or side query), its merge
+#: and its visible column. The table order is the order of the hidden
+#: columns in a snapshot (family-major, then select order), which
+#: snapshots already written depend on.
+FAMILIES = (
+    # sum, count, min, max, count_if, bool_and/bool_or/every,
+    # bit_and/bit_or/bit_xor: self-mergeable; the visible column is
+    # its own state, merged by re-aggregating (_SELF_MERGE).
+    Family(
+        "plain",
+        frozenset(_SELF_MERGE),
+        _any_args,
+        lambda it: ([_SELF_MERGE[it.fn](it.alias).alias(it.alias)], []),
+        partial=lambda it: [it.text],
+    ),
+    # avg(e): hidden sum and count, merged via SUM; visible sum/count —
+    # exactly the evaluation Spark's own Average performs.
+    Family(
+        "avg",
+        frozenset({"avg"}),
+        _any_args,
+        _each(F.sum),
+        parts=("sum", "cnt"),
+        partial=lambda it: [f"sum({it.arg})", f"count({it.arg})"],
+        visible=lambda it, t: F.when(
+            F.col(it.hidden[1]) > 0,
+            F.col(it.hidden[0]) / F.col(it.hidden[1]),
+        ).cast(t),
+    ),
+    # stddev[_samp], stddev_pop, variance, var_samp, var_pop: Welford
+    # state (count, mean, M2), the state Spark's CentralMomentAgg
+    # carries between partitions; with values ~1e9 and variance ~1 it
+    # keeps ~9 significant digits where sumsq − sum²/n kept none
+    # (test_stats_mv_large_magnitude_stability). Visible M2/n
+    # (/(n−1) for sample stats, NULL below 2 rows), sqrt for stddev.
+    Family(
+        "variance",
+        frozenset({
+            "stddev", "stddev_samp", "stddev_pop",
+            "variance", "var_samp", "var_pop",
+        }),
+        _any_args,
+        _welford(1, lambda n, d, q: [q(0), n * d(0) * d(0)]),
+        parts=("cnt", "mean", "m2"),
+        partial=_variance_partial,
+        visible=_variance_visible,
+    ),
+    # corr, covar_samp, covar_pop and the nine regr_* (two arguments;
+    # regr_*(y, x) passes y first): Welford co-moment state (n, mean₁,
+    # mean₂, M2₁, M2₂, C) over BOTH-non-null pairs, the state of
+    # Spark's Covariance. Deviation: corr over a zero-variance side is
+    # NULL (PostgreSQL) where Spark's ANSI corr raises DIVIDE_BY_ZERO.
+    Family(
+        "corr",
+        frozenset({
+            "corr", "covar_samp", "covar_pop",
+            "regr_count", "regr_avgx", "regr_avgy", "regr_slope",
+            "regr_intercept", "regr_r2", "regr_sxx", "regr_syy", "regr_sxy",
+        }),
+        _arity(2),
+        _welford(
+            2,
+            lambda n, d, q: [q(0), n * d(0) * d(0)],
+            lambda n, d, q: [q(1), n * d(1) * d(1)],
+            lambda n, d, q: [q(2), n * d(0) * d(1)],
+        ),
+        parts=("n", "m1", "m2a", "q1", "q2", "c"),
+        partial=_corr_partial,
+        visible=_corr_visible,
+    ),
+    # skewness, kurtosis: (n, mean, M2, M3, M4) recovered from Spark's
+    # own outputs per partial (exact inversions of CentralMomentAgg),
+    # merged by the grand-mean binomial identities
+    # M3 += M3ᵢ + 3dᵢM2ᵢ + nᵢdᵢ³, M4 += M4ᵢ + 4dᵢM3ᵢ + 6dᵢ²M2ᵢ + nᵢdᵢ⁴
+    # (dᵢ = meanᵢ − mean). NULL when M2 = 0, as Spark.
+    Family(
+        "moments",
+        frozenset({"skewness", "kurtosis"}),
+        _any_args,
+        _welford(
+            1,
+            lambda n, d, q: [q(0), n * d(0) * d(0)],
+            lambda n, d, q: [
+                q(1), F.lit(3.0) * d(0) * q(0), n * d(0) * d(0) * d(0)
+            ],
+            lambda n, d, q: [
+                q(2),
+                F.lit(4.0) * d(0) * q(1),
+                F.lit(6.0) * d(0) * d(0) * q(0),
+                n * d(0) * d(0) * d(0) * d(0),
+            ],
+        ),
+        parts=("n", "m1", "q2", "q3", "q4"),
+        partial=_moments_partial,
+        visible=_moments_visible,
+    ),
+    # approx_count_distinct(x) (no rsd argument: the rewrite cannot
+    # honor it): a DataSketches HLL sketch (hll_sketch_agg), merged by
+    # hll_union_agg — the union Spark applies across partitions, so no
+    # new error class, though union-built and direct-built sketches may
+    # differ by a fraction of the ~1.6% lgK=12 error. Visible
+    # hll_sketch_estimate, 0 for an all-NULL group. Deviation: the
+    # estimator is DataSketches HLL, not HyperLogLog++.
+    Family(
+        "hll",
+        frozenset({"approx_count_distinct"}),
+        _arity(1),
+        _each(F.hll_union_agg),
+        parts=("hll",),
+        partial=lambda it: [f"hll_sketch_agg({it.arg})"],
+        visible=lambda it, t: F.coalesce(
+            F.hll_sketch_estimate(F.col(it.hidden[0])), F.lit(0)
+        ).cast(t),
+    ),
+    # max_by/min_by(arg, ord): the (o=ord, a=arg) PAIR as a struct,
+    # merged by lexicographic max/min, visible state.a. Rows with NULL
+    # ord contribute nothing (the CASE guard nulls the struct); a NULL
+    # arg loses ties under max and wins them under min. Deviation: on
+    # ord ties the lexicographically extreme arg wins in both refresh
+    # paths, where plain max_by leaves the pick implementation-defined.
+    Family(
+        "max_by",
+        frozenset({"max_by", "min_by"}),
+        _arity(2),
+        lambda it: _each(F.max if it.fn == "max_by" else F.min)(it),
+        parts=("ord",),
+        partial=lambda it: [
+            ("max" if it.fn == "max_by" else "min")
+            + f"(CASE WHEN ({it.args[1]}) IS NOT NULL THEN "
+            f"named_struct('o', ({it.args[1]}), 'a', ({it.args[0]})) END)"
+        ],
+        visible=lambda it, t: F.col(it.hidden[0]).getField("a").cast(t),
+    ),
+    # approx_percentile/percentile_approx(e, p), scalar literal p: a
+    # KLL sketch (operators.sketch, derandomized compaction: the state
+    # is a pure function of the group's sorted multiset) as
+    # array<array<double>>, built by an applyInPandas side query and
+    # merged with kll_merge. Deviation: KLL, not Spark's GK; exact
+    # discrete quantile (rank ceil(p·n)) while a group has ≤ KLL_K rows.
+    Family(
+        "kll",
+        frozenset({"approx_percentile", "percentile_approx"}),
+        _kll_shape,
+        _fold(_kll_merge),
+        parts=("kll",),
+        side=_kll_side,
+        visible=_kll_visible,
+    ),
+    # count(DISTINCT x), one argument: EXACT via the group's distinct
+    # set (collect_set), merged by distinct-flatten; visible its size
+    # (0 for a NULL set). State is O(distinct values per group), as in
+    # any exact engine; approx_count_distinct is the bounded one.
+    Family(
+        "count_distinct",
+        frozenset({"count"}),
+        _arity(1),
+        _each(lambda h: F.array_distinct(F.flatten(F.collect_list(F.col(h))))),
+        parts=("set",),
+        partial=lambda it: [f"collect_set({it.arg})"],
+        visible=lambda it, t: F.when(F.col(it.hidden[0]).isNull(), F.lit(0))
+        .otherwise(F.size(F.col(it.hidden[0])))
+        .cast(t),
+        distinct=True,
+    ),
+    # sum/avg(DISTINCT x), one argument: the same distinct-set state;
+    # the visible value folds the SORTED set (sum in the result dtype;
+    # avg in double — a hair of deviation from Spark's decimal-avg
+    # rounding, the same in both refresh paths).
+    Family(
+        "distinct_fold",
+        frozenset({"sum", "avg"}),
+        _arity(1),
+        _each(lambda h: F.array_distinct(F.flatten(F.collect_list(F.col(h))))),
+        parts=("set",),
+        partial=lambda it: [f"collect_set({it.arg})"],
+        visible=_distinct_fold_visible,
+        distinct=True,
+    ),
+    # mode(x), one argument (not the deterministic flag): EXACT via a
+    # value -> count map built by a SQL side query (a count per value
+    # needs a second grouping level), merged by map_zip_with count
+    # sums. Deviation: count ties go to the SMALLEST value in both
+    # refresh paths, where plain mode() picks implementation-defined.
+    Family(
+        "mode",
+        frozenset({"mode"}),
+        _arity(1),
+        _fold(_mode_merge),
+        parts=("cmap",),
+        side=_mode_side,
+        visible=_mode_visible,
+    ),
+    # approx_top_k(x[, k[, maxItemsTracked]]), literal k and
+    # maxItemsTracked: a DataSketches frequent-items sketch
+    # (approx_top_k_accumulate), merged by approx_top_k_combine,
+    # visible approx_top_k_estimate. Exact while distinct items fit
+    # maxItemsTracked; beyond it the sketch's error band, the same in
+    # both refresh paths.
+    Family(
+        "top_k",
+        frozenset({"approx_top_k"}),
+        _top_k_shape,
+        lambda it: _each(
+            lambda h: F.expr(f"approx_top_k_combine({h}, {it.params[1]})")
+        )(it),
+        parts=("topk",),
+        partial=lambda it: [
+            f"approx_top_k_accumulate(({it.args[0]}), {it.params[1]})"
+        ],
+        visible=lambda it, t: F.expr(
+            f"approx_top_k_estimate({it.hidden[0]}, {it.params[0]})"
+        ).cast(t),
+    ),
+)
+
+#: a mergeable aggregate select item: fn(arg) AS alias
+_AGG_ITEM = re.compile(
+    r"^(?P<fn>"
+    + "|".join(sorted({f for fam in FAMILIES for f in fam.fns}, key=len, reverse=True))
+    + r")\s*\((?P<arg>.+)\)\s+as\s+(?P<alias>[A-Za-z0-9_]+)$",
+    re.I | re.S,
+)
 
 
 @dataclass
@@ -369,47 +795,49 @@ class MvAnalysis:
     table: str  # the FROM identifier (the topic's registered view name)
     mode: str  # "spf" | "agg" | "spf_join" | "agg_join"
     keys: list[str] = field(default_factory=list)  # agg: group-key out cols
-    aggs: dict[str, str] = field(default_factory=dict)  # agg: out col -> fn
     out_cols: list[str] = field(default_factory=list)  # agg: select order
     table2: str | None = None  # join: the second topic (compat accessor)
     #: every FROM-chain table in join order (len 1 for single-topic)
     tables: list[str] = field(default_factory=list)
-    #: visible avg alias -> (hidden sum col, hidden cnt col)
-    avgs: dict[str, tuple[str, str]] = field(default_factory=dict)
-    #: visible variance-family alias -> (fn, cnt col, mean col, M2 col)
-    stats: dict[str, tuple[str, str, str, str]] = field(default_factory=dict)
-    #: visible correlation-family alias -> (fn, n, m1, m2a, q1, q2, c)
-    corrs: dict[str, tuple] = field(default_factory=dict)
-    #: visible skewness/kurtosis alias -> (fn, n, mean, M2, M3, M4)
-    moments: dict[str, tuple] = field(default_factory=dict)
-    #: visible approx_count_distinct alias -> hidden HLL sketch col
-    approxs: dict[str, str] = field(default_factory=dict)
-    #: visible max_by/min_by alias -> (fn, hidden ordering-value col)
-    argmaxs: dict[str, tuple[str, str]] = field(default_factory=dict)
-    #: visible approx_percentile alias -> (arg SQL, prob, hidden col)
-    klls: dict[str, tuple[str, float, str]] = field(default_factory=dict)
-    #: visible count(DISTINCT x) alias -> hidden distinct-set col
-    dists: dict[str, str] = field(default_factory=dict)
-    #: visible sum/avg(DISTINCT x) alias -> (fn, hidden set col)
-    dsums: dict[str, tuple[str, str]] = field(default_factory=dict)
-    #: visible mode() alias -> (arg SQL, hidden count-map col)
-    modes: dict[str, tuple[str, str]] = field(default_factory=dict)
-    #: visible approx_top_k alias -> (k, maxItemsTracked, hidden col)
-    topks: dict[str, tuple[int, int, str]] = field(default_factory=dict)
-    #: raw SELECT items for the group keys (the kll state side-query
-    #: re-selects them next to the percentile argument)
+    #: the aggregate select items, in select order
+    items: list[AggItem] = field(default_factory=list)
+    #: raw SELECT items for the group keys (side queries re-select them)
     key_items: list[str] = field(default_factory=list)
-    #: FROM body + optional WHERE of the analyzed SQL (single-topic
-    #: modes; the kll state side-query replays them)
+    #: FROM body + optional WHERE of the analyzed SQL (side queries
+    #: replay them)
     from_text: str | None = None
     where: str | None = None
-    #: SQL computing the MERGEABLE partials (avg / variance items
-    #: replaced by hidden-state items); None when neither is present
+    #: SQL computing the MERGEABLE partials (every item with hidden
+    #: state replaced by its partial items); None when no item has any
     hidden_sql: str | None = None
 
     def __post_init__(self):
         if not self.tables:
             self.tables = [self.table] + ([self.table2] if self.table2 else [])
+
+    @property
+    def aggs(self) -> dict[str, str]:
+        """Aggregate output column -> function name."""
+        return {it.alias: it.fn for it in self.items}
+
+    @property
+    def derived(self) -> list[AggItem]:
+        """Items whose visible column is derived from hidden state."""
+        return [it for it in self.items if it.hidden]
+
+    def by_family(self):
+        """(family, its items) for each family present, in table order."""
+        for fam in FAMILIES:
+            items = [it for it in self.items if it.family is fam]
+            if items:
+                yield fam, items
+
+    @property
+    def hidden_cols(self) -> list[str]:
+        """Every hidden snapshot column, in snapshot order."""
+        return [
+            h for _, items in self.by_family() for it in items for h in it.hidden
+        ]
 
 
 def _split_top_level(text: str) -> list[str]:
@@ -434,54 +862,113 @@ def _norm(expr: str) -> str:
 def analyze_mv_sql(sql: str) -> MvAnalysis | None:
     """Classify a stored MV SQL as delta-refreshable, or None."""
     m = _SHAPE.match(sql)
-    # count(DISTINCT x) is the ONE distinct form the rewrite handles
-    # (hidden set state) — mask it so the conservative banned-token
-    # scan does not reject it; every other DISTINCT (SELECT DISTINCT,
-    # sum(DISTINCT), multi-arg) still disqualifies here or in
-    # _classify_agg_select.
+    # count/sum/avg(DISTINCT x) are the DISTINCT forms the families
+    # handle — mask them so the conservative banned-token scan does not
+    # reject them; every other DISTINCT (SELECT DISTINCT, multi-arg,
+    # min(DISTINCT)) still disqualifies here or in _agg_analysis.
     scan_sql = _COUNT_DISTINCT.sub("count(", sql)
     if m is None or _BANNED.search(scan_sql):
         return _analyze_join(sql)
     table = m.group("table")
-    select_items = _split_top_level(m.group("select"))
     group = m.group("group")
-
-    if group is None:
-        if not _ANY_AGG.search(m.group("select")):
-            # plain select/project/filter: append-only delta
-            return MvAnalysis(table=table, mode="spf")
-        # global aggregate: every item must be a mergeable agg
-        group_exprs: list[str] = []
-    else:
-        group_exprs = [_norm(g) for g in _split_top_level(group)]
-
-    parsed = _classify_agg_select(select_items, group_exprs)
-    if parsed is None:
-        return None
-    (keys, aggs, out_cols, avgs, stats, corrs, moments, approxs, argmaxs,
-     klls, dists, dsums, modes, topks, key_items, hidden_items) = parsed
-    if group is None and not aggs:
-        return None
-    if (klls or modes) and not hidden_items:
-        # a GLOBAL percentile/mode with no sibling aggregate/key
-        # leaves the hidden partial SQL with an empty select list —
-        # full recompute (add e.g. count(*) to the view to make it
-        # delta)
-        return None
+    if group is None and not _ANY_AGG.search(m.group("select")):
+        # plain select/project/filter: append-only delta
+        return MvAnalysis(table=table, mode="spf")
     alias = m.group("alias")
-    from_text = table + (f" {alias}" if alias else "")
+    return _agg_analysis(
+        m.group("select"),
+        group,
+        table + (f" {alias}" if alias else ""),
+        m.group("where"),
+        table=table,
+        mode="agg",
+    )
+
+
+def _agg_item(text: str) -> AggItem | None:
+    """Parse one aggregate select item, or None when no family merges
+    it (full recompute)."""
+    am = _AGG_ITEM.match(text)
+    if am is None:
+        return None  # an aggregate shape we can't merge (expr-of-aggs, …)
+    fn, arg = am.group("fn").lower(), am.group("arg")
+    if _ANY_AGG.search(arg):
+        return None  # nested aggregate: not mergeable
+    dm = re.match(r"^\s*distinct\b(?P<inner>.+)$", arg, re.I | re.S)
+    if dm is not None:
+        arg = dm.group("inner").strip()
+    family = next(
+        (
+            fam
+            for fam in FAMILIES
+            if fn in fam.fns and fam.distinct == (dm is not None)
+        ),
+        None,
+    )
+    if family is None:
+        return None  # another DISTINCT aggregate: full recompute
+    args = _split_top_level(arg)
+    params = family.shape(args)
+    if params is None:
+        return None
+    return AggItem(
+        family, fn, am.group("alias"), text, arg, tuple(args), params
+    )
+
+
+def _agg_analysis(select, group, from_text, where, **kw) -> MvAnalysis | None:
+    """The mergeable-aggregate analysis of a select list (single-topic
+    or join), or None when any item disqualifies."""
+    group_exprs = [_norm(g) for g in _split_top_level(group or "")]
+    keys: list[str] = []
+    out_cols: list[str] = []
+    items: list[AggItem] = []
+    key_items: list[str] = []
+    partial: list[str] = []
+    for text in _split_top_level(select):
+        if _ANY_AGG.search(text):
+            it = _agg_item(text)
+            if it is None:
+                return None
+            items.append(it)
+            out_cols.append(it.alias)
+            partial += it.partial_sql
+            continue
+        # must be a group key with a derivable output column name
+        alm = _ALIASED.match(text)
+        if alm is not None:
+            expr, alias = alm.group("expr"), alm.group("alias")
+        else:
+            expr, alias = text, None
+        # the key may appear in GROUP BY as the expression or its alias
+        if _norm(expr) not in group_exprs and (
+            alias is None or _norm(alias) not in group_exprs
+        ):
+            return None
+        if alias is None:
+            if not _DOTTED_IDENT.match(expr):
+                return None  # unaliased computed key: output name unknowable
+            alias = expr.split(".")[-1]
+        keys.append(alias)
+        out_cols.append(alias)
+        key_items.append(text)
+        partial.append(text)
+    if not partial:
+        # e.g. a GLOBAL percentile/mode with no sibling aggregate or
+        # key: the partial SQL would select nothing — full recompute
+        # (add e.g. count(*) to the view to make it delta)
+        return None
     return MvAnalysis(
-        table=table, mode="agg", keys=keys, aggs=aggs, out_cols=out_cols,
-        avgs=avgs, stats=stats, corrs=corrs, moments=moments,
-        approxs=approxs,
-        argmaxs=argmaxs, klls=klls, dists=dists, dsums=dsums, modes=modes,
-        topks=topks,
+        keys=keys,
+        out_cols=out_cols,
+        items=items,
         key_items=key_items,
-        from_text=from_text, where=m.group("where"),
-        hidden_sql=_rebuild(hidden_items, from_text, m.group("where"), group)
-        if (avgs or stats or corrs or moments or approxs or argmaxs or klls or dists
-            or dsums or modes or topks)
+        from_text=from_text,
+        where=where,
+        hidden_sql=_rebuild(partial, from_text, where, group)
+        if any(it.hidden for it in items)
         else None,
+        **kw,
     )
 
 
@@ -493,248 +980,6 @@ def _rebuild(select_items, from_text, where, group) -> str:
     if group:
         sql += f" GROUP BY {group}"
     return sql
-
-
-def _classify_agg_select(select_items, group_exprs):
-    """Split select items into (keys, aggs, out_cols, avgs, stats,
-    corrs, approxs, hidden_items) for the mergeable-aggregate modes;
-    None when any item disqualifies. ``hidden_items`` is the select
-    list with every avg / variance / corr / approx-distinct item
-    replaced by its mergeable hidden-column items."""
-    keys: list[str] = []
-    aggs: dict[str, str] = {}
-    out_cols: list[str] = []
-    avgs: dict[str, tuple[str, str]] = {}
-    stats: dict[str, tuple[str, str, str, str]] = {}
-    corrs: dict[str, tuple] = {}
-    moments: dict[str, tuple] = {}
-    approxs: dict[str, str] = {}
-    argmaxs: dict[str, tuple[str, str]] = {}
-    klls: dict[str, tuple[str, float, str]] = {}
-    dists: dict[str, str] = {}
-    dsums: dict[str, tuple[str, str]] = {}
-    modes: dict[str, tuple[str, str]] = {}
-    topks: dict[str, tuple[int, int, str]] = {}
-    key_items: list[str] = []
-    hidden_items: list[str] = []
-    for item in select_items:
-        am = _AGG_ITEM.match(item.strip())
-        if am is not None:
-            arg = am.group("arg")
-            if _ANY_AGG.search(arg):
-                return None  # nested agg: not mergeable
-            dm = re.match(r"^\s*distinct\b(?P<inner>.+)$", arg, re.I | re.S)
-            if dm is not None:
-                # count(DISTINCT x): EXACT via a hidden per-group
-                # distinct-value set (collect_set partials, distinct-
-                # flatten merge). State is O(distinct values per
-                # group) — the price ANY exact engine pays for this
-                # aggregate (Spark itself keeps the same set inside
-                # one count-distinct job); approx_count_distinct is
-                # the bounded-state (4 KB HLL) alternative when the
-                # cardinality is too high to store. Other DISTINCT
-                # aggregates stay disqualified (full recompute).
-                alias, fn = am.group("alias"), am.group("fn").lower()
-                inner = dm.group("inner").strip()
-                if fn not in ("count", "sum", "avg") or len(
-                    _split_top_level(inner)
-                ) != 1:
-                    return None  # other DISTINCT/multi-arg: full recompute
-                h = set_hidden_col(alias)
-                if fn == "count":
-                    dists[alias] = h
-                else:
-                    # sum/avg(DISTINCT x): SAME distinct-set state; the
-                    # visible value folds the set (sorted, so float
-                    # folds are order-deterministic: delta merge ≡ full
-                    # recompute bit-for-bit) — engine._derive_visible
-                    dsums[alias] = (fn, h)
-                aggs[alias] = fn
-                out_cols.append(alias)
-                hidden_items.append(f"collect_set({inner}) AS {h}")
-                continue
-            alias = am.group("alias")
-            fn = am.group("fn").lower()
-            aggs[alias] = fn
-            out_cols.append(alias)
-            if fn == "avg":
-                hsum, hcnt = hidden_cols(alias)
-                avgs[alias] = (hsum, hcnt)
-                hidden_items.append(f"sum({arg}) AS {hsum}")
-                hidden_items.append(f"count({arg}) AS {hcnt}")
-            elif fn in _STATS_FNS:
-                hcnt, hmean, hm2 = stats_hidden_cols(alias)
-                stats[alias] = (fn, hcnt, hmean, hm2)
-                # Welford state: avg and var_pop are Welford-computed
-                # inside Spark (CentralMomentAgg), so the partial
-                # itself never forms catastrophic sum-of-squares
-                d = f"CAST(({arg}) AS DOUBLE)"
-                hidden_items.append(f"count({arg}) AS {hcnt}")
-                hidden_items.append(f"avg({d}) AS {hmean}")
-                hidden_items.append(f"var_pop({d}) * count({arg}) AS {hm2}")
-            elif fn in ("approx_percentile", "percentile_approx"):
-                parts = _split_top_level(arg)
-                if len(parts) != 2:
-                    return None  # prob arrays / accuracy arg: bail
-                try:
-                    prob = float(parts[1])
-                except ValueError:
-                    return None
-                if not 0.0 <= prob <= 1.0:
-                    return None
-                h = kll_hidden_col(alias)
-                klls[alias] = (parts[0], prob, h)
-                # state is a KLL sketch built OUTSIDE the hidden SQL
-                # (engine._attach_kll_state): sketches are not
-                # SQL-expressible, so the select item is simply
-                # omitted here and the state column joined on the
-                # group keys afterwards. Deliberate deviation
-                # (documented): the estimator is the repo's
-                # derandomized KLL, not Spark's GK — both refresh
-                # paths use it, so the MV is self-consistent, and
-                # whenever a group fits uncompacted (n <= k=2048) the
-                # estimate is the exact discrete quantile.
-            elif fn in ("max_by", "min_by"):
-                parts = _split_top_level(arg)
-                if len(parts) != 2:
-                    return None
-                h = ord_hidden_col(alias)
-                argmaxs[alias] = (fn, h)
-                # deterministic mergeable state: the (ord, arg) PAIR
-                # as a struct, aggregated lexicographically — a tied
-                # ordering value always resolves to the same argument
-                # in BOTH refresh paths (delta merge ≡ full
-                # recompute). NULL ord rows contribute nothing (the
-                # CASE guard nulls the whole struct, exactly max_by's
-                # skip rule); the visible column is derived as
-                # state.a by _derive_visible.
-                agg = "max" if fn == "max_by" else "min"
-                hidden_items.append(
-                    f"{agg}(CASE WHEN ({parts[1]}) IS NOT NULL THEN "
-                    f"named_struct('o', ({parts[1]}), 'a', ({parts[0]})) "
-                    f"END) AS {h}"
-                )
-            elif fn == "mode":
-                if len(_split_top_level(arg)) != 1:
-                    return None  # mode(x, deterministic): full recompute
-                h = mode_hidden_col(alias)
-                modes[alias] = (arg.strip(), h)
-                # mergeable state: the group's value -> count map,
-                # built by a SQL side-query over the same FROM/WHERE
-                # binding (a count-per-value needs a second grouping
-                # level, inexpressible in the one-pass hidden SQL —
-                # the KLL-state pattern, engine._attach_mode_state).
-                # Deliberate deviation (documented): count ties
-                # resolve to the SMALLEST value in both refresh
-                # paths, where plain Spark's mode leaves the tied
-                # pick implementation-defined.
-            elif fn == "approx_top_k":
-                parts = _split_top_level(arg)
-                if len(parts) > 3:
-                    return None
-                try:
-                    kk = int(parts[1]) if len(parts) > 1 else 5
-                    mm = int(parts[2]) if len(parts) > 2 else 10000
-                except ValueError:
-                    return None  # non-literal k / maxItemsTracked
-                h = topk_hidden_col(alias)
-                topks[alias] = (kk, mm, h)
-                # DataSketches frequent-items state: partials
-                # accumulate, snapshots merge with
-                # approx_top_k_combine — the HLL pattern. Exact while
-                # distinct items fit maxItemsTracked (default 10000);
-                # beyond that, the documented sketch error band.
-                hidden_items.append(
-                    f"approx_top_k_accumulate(({parts[0]}), {mm}) AS {h}"
-                )
-            elif fn == "approx_count_distinct":
-                parts = _split_top_level(arg)
-                if len(parts) != 1:
-                    return None  # explicit rsd: estimator differs, bail
-                h = approx_hidden_col(alias)
-                approxs[alias] = h
-                # DataSketches HLL state: the delta merge is the same
-                # union algebra Spark applies across partitions, so
-                # no new error class (see module docstring for the
-                # union-vs-direct estimate nuance and the estimator
-                # deviation from HyperLogLog++).
-                hidden_items.append(f"hll_sketch_agg({arg}) AS {h}")
-            elif fn in _MOMENT_FNS:
-                cols = moment_hidden_cols(alias)
-                moments[alias] = (fn, *cols)
-                hn, hm1, hq2, hq3, hq4 = cols
-                # central-moment state recovered from Spark's own
-                # CentralMomentAgg outputs (probed: var_pop = M2/n,
-                # skewness = (M3/n)/(M2/n)^1.5, kurtosis =
-                # (M4/n)/(M2/n)^2 - 3; both NULL when M2 = 0, so the
-                # coalesce(…)*var_pop^k product is exactly 0 there)
-                d = f"CAST(({arg}) AS DOUBLE)"
-                hidden_items.append(f"count({arg}) AS {hn}")
-                hidden_items.append(f"avg({d}) AS {hm1}")
-                hidden_items.append(f"var_pop({d}) * count({arg}) AS {hq2}")
-                hidden_items.append(
-                    f"coalesce(skewness({d}), 0) * count({arg})"
-                    f" * pow(var_pop({d}), 1.5) AS {hq3}"
-                )
-                hidden_items.append(
-                    f"(coalesce(kurtosis({d}), 0) + 3) * count({arg})"
-                    f" * pow(var_pop({d}), 2) AS {hq4}"
-                )
-            elif fn in _CORR_FNS:
-                parts = _split_top_level(arg)
-                if len(parts) != 2:
-                    return None
-                cols = corr_hidden_cols(alias)
-                corrs[alias] = (fn, *cols)
-                hn, hm1, hm2a, hq1, hq2, hc = cols
-                # Welford co-moment state over BOTH-non-null rows
-                # (x NULL or y NULL contributes nothing — Spark's pair
-                # semantics): the cross-guards make each per-row value
-                # NULL when the OTHER argument is NULL, and Spark's
-                # covar_pop skips incomplete pairs natively
-                dx = f"CAST(({parts[0]}) AS DOUBLE)"
-                dy = f"CAST(({parts[1]}) AS DOUBLE)"
-                gx = f"CASE WHEN ({parts[1]}) IS NOT NULL THEN {dx} END"
-                gy = f"CASE WHEN ({parts[0]}) IS NOT NULL THEN {dy} END"
-                hidden_items.append(f"count({dx} + {dy}) AS {hn}")
-                hidden_items.append(f"avg({gx}) AS {hm1}")
-                hidden_items.append(f"avg({gy}) AS {hm2a}")
-                hidden_items.append(
-                    f"var_pop({gx}) * count({gx}) AS {hq1}"
-                )
-                hidden_items.append(
-                    f"var_pop({gy}) * count({gy}) AS {hq2}"
-                )
-                hidden_items.append(
-                    f"covar_pop({dx}, {dy}) * count({dx} + {dy}) AS {hc}"
-                )
-            else:
-                hidden_items.append(item.strip())
-            continue
-        if _ANY_AGG.search(item):
-            return None  # an aggregate shape we can't merge (expr-of-aggs, …)
-        # must be a group key with a derivable output column name
-        alm = _ALIASED.match(item.strip())
-        if alm is not None:
-            expr, alias = alm.group("expr"), alm.group("alias")
-        else:
-            expr, alias = item, None
-        # the key may appear in GROUP BY as the expression or its alias
-        if _norm(expr) not in group_exprs and (
-            alias is None or _norm(alias) not in group_exprs
-        ):
-            return None
-        if alias is None:
-            if not _DOTTED_IDENT.match(expr.strip()):
-                return None  # unaliased computed key: output name unknowable
-            alias = expr.strip().split(".")[-1]
-        keys.append(alias)
-        out_cols.append(alias)
-        key_items.append(item.strip())
-        hidden_items.append(item.strip())
-    return (keys, aggs, out_cols, avgs, stats, corrs, moments, approxs,
-            argmaxs, klls, dists, dsums, modes, topks, key_items,
-            hidden_items)
 
 
 def _parse_chain(chain: str) -> list[str] | None:
@@ -785,30 +1030,19 @@ def _analyze_join(sql: str) -> MvAnalysis | None:
         return MvAnalysis(
             table=tables[0], mode="spf_join", table2=tables[1], tables=tables
         )
-    parsed = _classify_agg_select(
-        _split_top_level(m.group("select")),
-        [_norm(g) for g in _split_top_level(group)],
+    a = _agg_analysis(
+        m.group("select"),
+        group,
+        m.group("chain"),
+        m.group("where"),
+        table=tables[0],
+        mode="agg_join",
+        table2=tables[1],
+        tables=tables,
     )
-    if parsed is None:
-        return None
-    (keys, aggs, out_cols, avgs, stats, corrs, moments, approxs, argmaxs,
-     klls, dists, dsums, modes, topks, key_items, hidden_items) = parsed
-    if not aggs:
+    if a is None or not a.items:
         return None  # distinct-keys over a join: keep it simple, full
-    if klls or modes:
+    if any(it.family.side for it in a.items):
         return None  # percentile/mode over a join: full recompute (no
-        # state side-query over a join chain yet)
-    return MvAnalysis(
-        table=tables[0], mode="agg_join", table2=tables[1], tables=tables,
-        keys=keys, aggs=aggs, out_cols=out_cols, avgs=avgs, stats=stats,
-        corrs=corrs, moments=moments, approxs=approxs, argmaxs=argmaxs,
-        dists=dists,
-        dsums=dsums, topks=topks,
-        hidden_sql=_rebuild(
-            hidden_items, m.group("chain"), m.group("where"), group
-        )
-        if (avgs or stats or corrs or moments or approxs or argmaxs or dists or dsums
-            or topks)
-        else None,
-    )
-
+        # side query over a join chain yet)
+    return a

@@ -312,7 +312,7 @@ def kll_quantile_udf(prob: float):
     """Arrow-batched UDF: serialized KLL levels -> the prob-quantile
     estimate (None for empty state — count-like aggregates over zero
     non-null rows are NULL in Spark too). Used by the incremental-MV
-    approx_percentile rewrite (engine._derive_visible)."""
+    approx_percentile family (incremental.FAMILIES)."""
     import math
 
     @F.pandas_udf("double")
@@ -332,7 +332,7 @@ def kll_quantile_udf(prob: float):
 def kll_merge_states_udf(k: int):
     """Arrow-batched fold of collected per-partial KLL states (array
     of levels-arrays) into one merged state per group. Used by the
-    incremental-MV merge (engine._merge_agg_snapshot)."""
+    incremental-MV approx_percentile family (incremental.FAMILIES)."""
 
     @F.pandas_udf("array<array<double>>")
     def _m(states: pd.Series) -> pd.Series:

@@ -136,6 +136,49 @@ def test_materialized_view_lifecycle(db):
     assert not db.store.table_path(entry).exists()
 
 
+def test_create_existing_materialized_view_keeps_it(db):
+    """CREATE MATERIALIZED VIEW without OR REPLACE over an existing
+    view is refused before any side effect: the view keeps its catalog
+    entry and still reads its old snapshot (API and SQL forms)."""
+    topic = db.create_topic("mvk_src", [Column("v", "float64")])
+    with topic.publish() as pub:
+        pub.write(1_000, 2.0)
+    db.create_materialized_view("mvk", "SELECT sum(v) AS s FROM mvk_src")
+    with topic.publish() as pub:
+        pub.write(2_000, 5.0)
+    for attempt in (
+        lambda: db.create_materialized_view(
+            "mvk", "SELECT count(*) AS s FROM mvk_src", replace=False
+        ),
+        lambda: db.query(
+            "CREATE MATERIALIZED VIEW mvk AS SELECT count(*) AS s FROM mvk_src"
+        ).execute(),
+    ):
+        with pytest.raises(ValueError, match="already exists"):
+            attempt()
+        assert "ella.public.mvk" in db.tables()
+        assert db.store.resolve("mvk").sql == "SELECT sum(v) AS s FROM mvk_src"
+        assert db.query("SELECT s FROM mvk").execute()["s"].tolist() == [2.0]
+
+
+def test_create_schema_in_named_catalog(db):
+    """``CREATE SCHEMA catalog.schema`` creates the schema in that
+    catalog, and DROP SCHEMA parses the name the same way."""
+    db.query("CREATE CATALOG side").execute()
+    db.query("CREATE SCHEMA side.sx").execute()
+    assert ("side", "sx") in db.store.schemas
+    assert ("ella", "side.sx") not in db.store.schemas
+    db.create_schema("side.sy")
+    assert ("side", "sy") in db.store.schemas
+    with pytest.raises(ValueError, match="already exists"):
+        db.query("CREATE SCHEMA side.sx").execute()
+    db.query("CREATE SCHEMA IF NOT EXISTS side.sx").execute()
+    with pytest.raises(ValueError, match="invalid schema name"):
+        db.create_schema("a.b.c")
+    db.query("DROP SCHEMA side.sx").execute()
+    assert ("side", "sx") not in db.store.schemas
+
+
 def test_materialized_view_via_lazy_and_durability(spark, tmp_path):
     """Lazy.create_view(materialize=True) + reopen sees the snapshot."""
     root = str(tmp_path / "mvdb")

@@ -51,6 +51,15 @@ def _tamper_shard(topic, consumed: set[str], col: str = "v") -> None:
     crc.unlink(missing_ok=True)
 
 
+def _item_facts(a) -> dict:
+    """alias -> (fn, family, literal params, hidden columns) of an
+    analysis's aggregate items."""
+    return {
+        it.alias: (it.fn, it.family.name, it.params, it.hidden)
+        for it in a.items
+    }
+
+
 def test_agg_delta_reads_only_new_shards(db, spark):
     t = _mk_topic(db, spark)
     db.create_materialized_view(
@@ -236,14 +245,19 @@ def test_analyzer_shapes():
     # avg: mergeable VIA REWRITE to hidden sum+count state
     av = analyze_mv_sql("SELECT k, avg(v) AS m FROM t GROUP BY k")
     assert av is not None and av.mode == "agg" and av.aggs == {"m": "avg"}
-    assert av.avgs == {"m": ("__mv_sum__m", "__mv_cnt__m")}
+    assert _item_facts(av) == {
+        "m": ("avg", "avg", (), ("__mv_sum__m", "__mv_cnt__m"))
+    }
     assert "sum(v) AS __mv_sum__m" in av.hidden_sql
     assert "count(v) AS __mv_cnt__m" in av.hidden_sql
     avj = analyze_mv_sql(
         "SELECT a.k AS k, avg(b.v) AS m FROM a JOIN b ON a.k = b.k "
         "GROUP BY a.k"
     )
-    assert avj is not None and avj.mode == "agg_join" and avj.avgs
+    assert avj is not None and avj.mode == "agg_join"
+    assert _item_facts(avj) == {
+        "m": ("avg", "avg", (), ("__mv_sum__m", "__mv_cnt__m"))
+    }
     # uppercase AS in the chain head alias (regression: _CHAIN_HEAD
     # must be case-insensitive like the rest of the analyzer)
     up = analyze_mv_sql("SELECT x.v FROM a AS x JOIN b ON x.k = b.k")
@@ -251,9 +265,15 @@ def test_analyzer_shapes():
     # count/sum/avg(DISTINCT x) became mergeable in round 6 (hidden
     # distinct-set state); every OTHER distinct form still disqualifies
     cd = analyze_mv_sql("SELECT k, count(DISTINCT v) AS d FROM t GROUP BY k")
-    assert cd is not None and cd.dists == {"d": "__mv_set__d"}
+    assert cd is not None
+    assert _item_facts(cd) == {
+        "d": ("count", "count_distinct", (), ("__mv_set__d",))
+    }
     ad = analyze_mv_sql("SELECT k, avg(DISTINCT v) AS m FROM t GROUP BY k")
-    assert ad is not None and ad.dsums == {"m": ("avg", "__mv_set__m")}
+    assert ad is not None
+    assert _item_facts(ad) == {
+        "m": ("avg", "distinct_fold", (), ("__mv_set__m",))
+    }
     for bad in (
         "SELECT k, max(DISTINCT v) AS m FROM t GROUP BY k",
         "SELECT a.v FROM a JOIN b ON a.k = b.k JOIN a x ON b.k = x.k",
@@ -2087,12 +2107,21 @@ def test_count_distinct_mv_disqualifiers():
     multi-arg count(DISTINCT a, b) and other DISTINCT aggregates
     (min/max/collect) fall back to full recompute."""
     ok = analyze_mv_sql("SELECT k, count(DISTINCT v) AS dv FROM t GROUP BY k")
-    assert ok is not None and ok.dists == {"dv": "__mv_set__dv"}
+    assert ok is not None
+    assert _item_facts(ok) == {
+        "dv": ("count", "count_distinct", (), ("__mv_set__dv",))
+    }
     assert "collect_set" in ok.hidden_sql
     ok2 = analyze_mv_sql("SELECT k, sum(DISTINCT v) AS s FROM t GROUP BY k")
-    assert ok2 is not None and ok2.dsums == {"s": ("sum", "__mv_set__s")}
+    assert ok2 is not None
+    assert _item_facts(ok2) == {
+        "s": ("sum", "distinct_fold", (), ("__mv_set__s",))
+    }
     ok3 = analyze_mv_sql("SELECT k, avg(DISTINCT v) AS a FROM t GROUP BY k")
-    assert ok3 is not None and ok3.dsums == {"a": ("avg", "__mv_set__a")}
+    assert ok3 is not None
+    assert _item_facts(ok3) == {
+        "a": ("avg", "distinct_fold", (), ("__mv_set__a",))
+    }
     assert (
         analyze_mv_sql("SELECT k, count(DISTINCT v, w) AS c FROM t GROUP BY k")
         is None
@@ -2498,7 +2527,10 @@ def test_approx_top_k_mv_disqualifiers(db):
     ok = analyze_mv_sql(
         "SELECT k, approx_top_k(v, 3, 500) AS tk FROM t GROUP BY k"
     )
-    assert ok is not None and ok.topks == {"tk": (3, 500, "__mv_topk__tk")}
+    assert ok is not None
+    assert _item_facts(ok) == {
+        "tk": ("approx_top_k", "top_k", (3, 500), ("__mv_topk__tk",))
+    }
     assert "approx_top_k_accumulate((v), 500)" in ok.hidden_sql
 
 
@@ -2562,3 +2594,1086 @@ def test_skewness_kurtosis_mv_delta(db, spark):
     rows = {r.g: r for r in db.query("SELECT * FROM mocv").df.collect()}
     assert rows["const"].sk is None and rows["const"].ku is None
     assert rows["lone"].sk is None and rows["lone"].ku is None
+
+
+# ── Mergeable-aggregate families: analyzer and refresh, golden ──────
+
+#: every aggregate family in one select list, over topic columns
+#: k, v (float), w (float), u (int)
+_EVERY_FAMILY = (
+    "count(*) AS n, sum(v) AS s, min(v) AS lo, max(v) AS hi, "
+    "count_if(v > 10) AS ci, bool_and(v >= 0) AS ba, bool_or(v > 20) AS bo, "
+    "every(u >= 0) AS ev, bit_and(u) AS ban, bit_or(u) AS bor, "
+    "bit_xor(u) AS bx, avg(v) AS m, "
+    "stddev(v) AS sd, stddev_samp(v) AS sds, stddev_pop(v) AS sdp, "
+    "variance(v) AS vr, var_samp(v) AS vs, var_pop(v) AS vp, "
+    "corr(v, w) AS r, covar_samp(v, w) AS cs, covar_pop(v, w) AS cp, "
+    "regr_count(w, v) AS rc, regr_avgx(w, v) AS rax, "
+    "regr_avgy(w, v) AS ray, regr_slope(w, v) AS rsl, "
+    "regr_intercept(w, v) AS ri, regr_r2(w, v) AS rr2, "
+    "regr_sxx(w, v) AS rxx, regr_syy(w, v) AS ryy, regr_sxy(w, v) AS rxy, "
+    "skewness(v) AS sk, kurtosis(v) AS ku, approx_count_distinct(u) AS hc, "
+    "max_by(u, v) AS mb, min_by(u, v) AS nb, "
+    "approx_percentile(v, 0.5) AS p50, percentile_approx(v, 0.9) AS p90, "
+    "count(DISTINCT u) AS cd, sum(DISTINCT u) AS sdu, "
+    "avg(DISTINCT v) AS adv, mode(u) AS md, approx_top_k(u, 3) AS tk"
+)
+
+#: the aggregates an inner-join MV keeps incrementally (no side-query
+#: state, no DISTINCT), over topics ja(k, v) and jb(k, v, u)
+_JOIN_FAMILIES = (
+    "count(*) AS n, sum(jb.v) AS s, min(jb.v) AS lo, avg(jb.v) AS m, "
+    "stddev(jb.v) AS sd, corr(ja.v, jb.v) AS r, "
+    "regr_slope(jb.v, ja.v) AS rs, skewness(jb.v) AS sk, "
+    "approx_count_distinct(jb.u) AS hc, max_by(jb.u, jb.v) AS mb, "
+    "approx_top_k(jb.u, 2) AS tk, bit_xor(jb.u) AS bx"
+)
+
+_MV_ANALYZER_GOLDEN = [
+    # every family, single topic and over an inner join
+    (
+        f"SELECT k, {_EVERY_FAMILY} FROM g GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['g'],
+         'keys': ['k'],
+         'out_cols': ['k', 'n', 's', 'lo', 'hi', 'ci', 'ba', 'bo', 'ev',
+                      'ban', 'bor', 'bx', 'm', 'sd', 'sds', 'sdp', 'vr', 'vs',
+                      'vp', 'r', 'cs', 'cp', 'rc', 'rax', 'ray', 'rsl', 'ri',
+                      'rr2', 'rxx', 'ryy', 'rxy', 'sk', 'ku', 'hc', 'mb',
+                      'nb', 'p50', 'p90', 'cd', 'sdu', 'adv', 'md', 'tk'],
+         'aggs': ['n count plain', 's sum plain', 'lo min plain',
+                  'hi max plain', 'ci count_if plain', 'ba bool_and plain',
+                  'bo bool_or plain', 'ev every plain', 'ban bit_and plain',
+                  'bor bit_or plain', 'bx bit_xor plain',
+                  'm avg avg __mv_sum__m __mv_cnt__m',
+                  'sd stddev variance __mv_cnt__sd __mv_mean__sd __mv_m2__sd',
+                  'sds stddev_samp variance __mv_cnt__sds __mv_mean__sds '
+                  '__mv_m2__sds',
+                  'sdp stddev_pop variance __mv_cnt__sdp __mv_mean__sdp '
+                  '__mv_m2__sdp',
+                  'vr variance variance __mv_cnt__vr __mv_mean__vr '
+                  '__mv_m2__vr',
+                  'vs var_samp variance __mv_cnt__vs __mv_mean__vs '
+                  '__mv_m2__vs',
+                  'vp var_pop variance __mv_cnt__vp __mv_mean__vp '
+                  '__mv_m2__vp',
+                  'r corr corr __mv_n__r __mv_m1__r __mv_m2a__r __mv_q1__r '
+                  '__mv_q2__r __mv_c__r',
+                  'cs covar_samp corr __mv_n__cs __mv_m1__cs __mv_m2a__cs '
+                  '__mv_q1__cs __mv_q2__cs __mv_c__cs',
+                  'cp covar_pop corr __mv_n__cp __mv_m1__cp __mv_m2a__cp '
+                  '__mv_q1__cp __mv_q2__cp __mv_c__cp',
+                  'rc regr_count corr __mv_n__rc __mv_m1__rc __mv_m2a__rc '
+                  '__mv_q1__rc __mv_q2__rc __mv_c__rc',
+                  'rax regr_avgx corr __mv_n__rax __mv_m1__rax __mv_m2a__rax '
+                  '__mv_q1__rax __mv_q2__rax __mv_c__rax',
+                  'ray regr_avgy corr __mv_n__ray __mv_m1__ray __mv_m2a__ray '
+                  '__mv_q1__ray __mv_q2__ray __mv_c__ray',
+                  'rsl regr_slope corr __mv_n__rsl __mv_m1__rsl '
+                  '__mv_m2a__rsl __mv_q1__rsl __mv_q2__rsl __mv_c__rsl',
+                  'ri regr_intercept corr __mv_n__ri __mv_m1__ri '
+                  '__mv_m2a__ri __mv_q1__ri __mv_q2__ri __mv_c__ri',
+                  'rr2 regr_r2 corr __mv_n__rr2 __mv_m1__rr2 __mv_m2a__rr2 '
+                  '__mv_q1__rr2 __mv_q2__rr2 __mv_c__rr2',
+                  'rxx regr_sxx corr __mv_n__rxx __mv_m1__rxx __mv_m2a__rxx '
+                  '__mv_q1__rxx __mv_q2__rxx __mv_c__rxx',
+                  'ryy regr_syy corr __mv_n__ryy __mv_m1__ryy __mv_m2a__ryy '
+                  '__mv_q1__ryy __mv_q2__ryy __mv_c__ryy',
+                  'rxy regr_sxy corr __mv_n__rxy __mv_m1__rxy __mv_m2a__rxy '
+                  '__mv_q1__rxy __mv_q2__rxy __mv_c__rxy',
+                  'sk skewness moments __mv_n__sk __mv_m1__sk __mv_q2__sk '
+                  '__mv_q3__sk __mv_q4__sk',
+                  'ku kurtosis moments __mv_n__ku __mv_m1__ku __mv_q2__ku '
+                  '__mv_q3__ku __mv_q4__ku',
+                  'hc approx_count_distinct hll __mv_hll__hc',
+                  'mb max_by max_by __mv_ord__mb',
+                  'nb min_by max_by __mv_ord__nb',
+                  'p50 approx_percentile kll __mv_kll__p50',
+                  'p90 percentile_approx kll __mv_kll__p90',
+                  'cd count count_distinct __mv_set__cd',
+                  'sdu sum distinct_fold __mv_set__sdu',
+                  'adv avg distinct_fold __mv_set__adv',
+                  'md mode mode __mv_cmap__md',
+                  'tk approx_top_k top_k __mv_topk__tk'],
+         'hidden_sql': 'SELECT k, count(*) AS n, sum(v) AS s, min(v) AS lo, '
+                       'max(v) AS hi, count_if(v > 10) AS ci, bool_and(v >= '
+                       '0) AS ba, bool_or(v > 20) AS bo, every(u >= 0) AS '
+                       'ev, bit_and(u) AS ban, bit_or(u) AS bor, bit_xor(u) '
+                       'AS bx, sum(v) AS __mv_sum__m, count(v) AS '
+                       '__mv_cnt__m, count(v) AS __mv_cnt__sd, avg(CAST((v) '
+                       'AS DOUBLE)) AS __mv_mean__sd, var_pop(CAST((v) AS '
+                       'DOUBLE)) * count(v) AS __mv_m2__sd, count(v) AS '
+                       '__mv_cnt__sds, avg(CAST((v) AS DOUBLE)) AS '
+                       '__mv_mean__sds, var_pop(CAST((v) AS DOUBLE)) * '
+                       'count(v) AS __mv_m2__sds, count(v) AS __mv_cnt__sdp, '
+                       'avg(CAST((v) AS DOUBLE)) AS __mv_mean__sdp, '
+                       'var_pop(CAST((v) AS DOUBLE)) * count(v) AS '
+                       '__mv_m2__sdp, count(v) AS __mv_cnt__vr, avg(CAST((v) '
+                       'AS DOUBLE)) AS __mv_mean__vr, var_pop(CAST((v) AS '
+                       'DOUBLE)) * count(v) AS __mv_m2__vr, count(v) AS '
+                       '__mv_cnt__vs, avg(CAST((v) AS DOUBLE)) AS '
+                       '__mv_mean__vs, var_pop(CAST((v) AS DOUBLE)) * '
+                       'count(v) AS __mv_m2__vs, count(v) AS __mv_cnt__vp, '
+                       'avg(CAST((v) AS DOUBLE)) AS __mv_mean__vp, '
+                       'var_pop(CAST((v) AS DOUBLE)) * count(v) AS '
+                       '__mv_m2__vp, count(CAST((v) AS DOUBLE) + CAST((w) AS '
+                       'DOUBLE)) AS __mv_n__r, avg(CASE WHEN (w) IS NOT NULL '
+                       'THEN CAST((v) AS DOUBLE) END) AS __mv_m1__r, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m2a__r, var_pop(CASE WHEN (w) '
+                       'IS NOT NULL THEN CAST((v) AS DOUBLE) END) * '
+                       'count(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_q1__r, var_pop(CASE WHEN (v) IS '
+                       'NOT NULL THEN CAST((w) AS DOUBLE) END) * count(CASE '
+                       'WHEN (v) IS NOT NULL THEN CAST((w) AS DOUBLE) END) '
+                       'AS __mv_q2__r, covar_pop(CAST((v) AS DOUBLE), '
+                       'CAST((w) AS DOUBLE)) * count(CAST((v) AS DOUBLE) + '
+                       'CAST((w) AS DOUBLE)) AS __mv_c__r, count(CAST((v) AS '
+                       'DOUBLE) + CAST((w) AS DOUBLE)) AS __mv_n__cs, '
+                       'avg(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_m1__cs, avg(CASE WHEN (v) IS '
+                       'NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_m2a__cs, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q1__cs, var_pop(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) IS '
+                       'NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q2__cs, covar_pop(CAST((v) AS DOUBLE), CAST((w) '
+                       'AS DOUBLE)) * count(CAST((v) AS DOUBLE) + CAST((w) '
+                       'AS DOUBLE)) AS __mv_c__cs, count(CAST((v) AS DOUBLE) '
+                       '+ CAST((w) AS DOUBLE)) AS __mv_n__cp, avg(CASE WHEN '
+                       '(w) IS NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_m1__cp, avg(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) AS __mv_m2a__cp, '
+                       'var_pop(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) * count(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) AS __mv_q1__cp, '
+                       'var_pop(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) * count(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) AS __mv_q2__cp, '
+                       'covar_pop(CAST((v) AS DOUBLE), CAST((w) AS DOUBLE)) '
+                       '* count(CAST((v) AS DOUBLE) + CAST((w) AS DOUBLE)) '
+                       'AS __mv_c__cp, count(CAST((w) AS DOUBLE) + CAST((v) '
+                       'AS DOUBLE)) AS __mv_n__rc, avg(CASE WHEN (v) IS NOT '
+                       'NULL THEN CAST((w) AS DOUBLE) END) AS __mv_m1__rc, '
+                       'avg(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_m2a__rc, var_pop(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) * '
+                       'count(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_q1__rc, var_pop(CASE WHEN (w) '
+                       'IS NOT NULL THEN CAST((v) AS DOUBLE) END) * '
+                       'count(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_q2__rc, covar_pop(CAST((w) AS '
+                       'DOUBLE), CAST((v) AS DOUBLE)) * count(CAST((w) AS '
+                       'DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_c__rc, '
+                       'count(CAST((w) AS DOUBLE) + CAST((v) AS DOUBLE)) AS '
+                       '__mv_n__rax, avg(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) AS __mv_m1__rax, avg(CASE '
+                       'WHEN (w) IS NOT NULL THEN CAST((v) AS DOUBLE) END) '
+                       'AS __mv_m2a__rax, var_pop(CASE WHEN (v) IS NOT NULL '
+                       'THEN CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__rax, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__rax, covar_pop(CAST((w) AS DOUBLE), '
+                       'CAST((v) AS DOUBLE)) * count(CAST((w) AS DOUBLE) + '
+                       'CAST((v) AS DOUBLE)) AS __mv_c__rax, count(CAST((w) '
+                       'AS DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_n__ray, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m1__ray, avg(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_m2a__ray, var_pop(CASE WHEN (v) IS NOT NULL '
+                       'THEN CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__ray, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__ray, covar_pop(CAST((w) AS DOUBLE), '
+                       'CAST((v) AS DOUBLE)) * count(CAST((w) AS DOUBLE) + '
+                       'CAST((v) AS DOUBLE)) AS __mv_c__ray, count(CAST((w) '
+                       'AS DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_n__rsl, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m1__rsl, avg(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_m2a__rsl, var_pop(CASE WHEN (v) IS NOT NULL '
+                       'THEN CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__rsl, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__rsl, covar_pop(CAST((w) AS DOUBLE), '
+                       'CAST((v) AS DOUBLE)) * count(CAST((w) AS DOUBLE) + '
+                       'CAST((v) AS DOUBLE)) AS __mv_c__rsl, count(CAST((w) '
+                       'AS DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_n__ri, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m1__ri, avg(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_m2a__ri, var_pop(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) IS '
+                       'NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__ri, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__ri, covar_pop(CAST((w) AS DOUBLE), CAST((v) '
+                       'AS DOUBLE)) * count(CAST((w) AS DOUBLE) + CAST((v) '
+                       'AS DOUBLE)) AS __mv_c__ri, count(CAST((w) AS DOUBLE) '
+                       '+ CAST((v) AS DOUBLE)) AS __mv_n__rr2, avg(CASE WHEN '
+                       '(v) IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_m1__rr2, avg(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) AS __mv_m2a__rr2, '
+                       'var_pop(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) * count(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) AS __mv_q1__rr2, '
+                       'var_pop(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) * count(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) AS __mv_q2__rr2, '
+                       'covar_pop(CAST((w) AS DOUBLE), CAST((v) AS DOUBLE)) '
+                       '* count(CAST((w) AS DOUBLE) + CAST((v) AS DOUBLE)) '
+                       'AS __mv_c__rr2, count(CAST((w) AS DOUBLE) + CAST((v) '
+                       'AS DOUBLE)) AS __mv_n__rxx, avg(CASE WHEN (v) IS NOT '
+                       'NULL THEN CAST((w) AS DOUBLE) END) AS __mv_m1__rxx, '
+                       'avg(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_m2a__rxx, var_pop(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) * '
+                       'count(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_q1__rxx, var_pop(CASE WHEN (w) '
+                       'IS NOT NULL THEN CAST((v) AS DOUBLE) END) * '
+                       'count(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_q2__rxx, covar_pop(CAST((w) AS '
+                       'DOUBLE), CAST((v) AS DOUBLE)) * count(CAST((w) AS '
+                       'DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_c__rxx, '
+                       'count(CAST((w) AS DOUBLE) + CAST((v) AS DOUBLE)) AS '
+                       '__mv_n__ryy, avg(CASE WHEN (v) IS NOT NULL THEN '
+                       'CAST((w) AS DOUBLE) END) AS __mv_m1__ryy, avg(CASE '
+                       'WHEN (w) IS NOT NULL THEN CAST((v) AS DOUBLE) END) '
+                       'AS __mv_m2a__ryy, var_pop(CASE WHEN (v) IS NOT NULL '
+                       'THEN CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__ryy, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__ryy, covar_pop(CAST((w) AS DOUBLE), '
+                       'CAST((v) AS DOUBLE)) * count(CAST((w) AS DOUBLE) + '
+                       'CAST((v) AS DOUBLE)) AS __mv_c__ryy, count(CAST((w) '
+                       'AS DOUBLE) + CAST((v) AS DOUBLE)) AS __mv_n__rxy, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m1__rxy, avg(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_m2a__rxy, var_pop(CASE WHEN (v) IS NOT NULL '
+                       'THEN CAST((w) AS DOUBLE) END) * count(CASE WHEN (v) '
+                       'IS NOT NULL THEN CAST((w) AS DOUBLE) END) AS '
+                       '__mv_q1__rxy, var_pop(CASE WHEN (w) IS NOT NULL THEN '
+                       'CAST((v) AS DOUBLE) END) * count(CASE WHEN (w) IS '
+                       'NOT NULL THEN CAST((v) AS DOUBLE) END) AS '
+                       '__mv_q2__rxy, covar_pop(CAST((w) AS DOUBLE), '
+                       'CAST((v) AS DOUBLE)) * count(CAST((w) AS DOUBLE) + '
+                       'CAST((v) AS DOUBLE)) AS __mv_c__rxy, count(v) AS '
+                       '__mv_n__sk, avg(CAST((v) AS DOUBLE)) AS __mv_m1__sk, '
+                       'var_pop(CAST((v) AS DOUBLE)) * count(v) AS '
+                       '__mv_q2__sk, coalesce(skewness(CAST((v) AS DOUBLE)), '
+                       '0) * count(v) * pow(var_pop(CAST((v) AS DOUBLE)), '
+                       '1.5) AS __mv_q3__sk, (coalesce(kurtosis(CAST((v) AS '
+                       'DOUBLE)), 0) + 3) * count(v) * pow(var_pop(CAST((v) '
+                       'AS DOUBLE)), 2) AS __mv_q4__sk, count(v) AS '
+                       '__mv_n__ku, avg(CAST((v) AS DOUBLE)) AS __mv_m1__ku, '
+                       'var_pop(CAST((v) AS DOUBLE)) * count(v) AS '
+                       '__mv_q2__ku, coalesce(skewness(CAST((v) AS DOUBLE)), '
+                       '0) * count(v) * pow(var_pop(CAST((v) AS DOUBLE)), '
+                       '1.5) AS __mv_q3__ku, (coalesce(kurtosis(CAST((v) AS '
+                       'DOUBLE)), 0) + 3) * count(v) * pow(var_pop(CAST((v) '
+                       'AS DOUBLE)), 2) AS __mv_q4__ku, hll_sketch_agg(u) AS '
+                       '__mv_hll__hc, max(CASE WHEN (v) IS NOT NULL THEN '
+                       "named_struct('o', (v), 'a', (u)) END) AS "
+                       '__mv_ord__mb, min(CASE WHEN (v) IS NOT NULL THEN '
+                       "named_struct('o', (v), 'a', (u)) END) AS "
+                       '__mv_ord__nb, collect_set(u) AS __mv_set__cd, '
+                       'collect_set(u) AS __mv_set__sdu, collect_set(v) AS '
+                       '__mv_set__adv, approx_top_k_accumulate((u), 10000) '
+                       'AS __mv_topk__tk FROM g GROUP BY k'},
+    ),
+    (
+        "SELECT avg(v) AS m, corr(v, w) AS r, count(*) AS n FROM t "
+        "WHERE v > 0",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': [],
+         'out_cols': ['m', 'r', 'n'],
+         'aggs': ['m avg avg __mv_sum__m __mv_cnt__m',
+                  'r corr corr __mv_n__r __mv_m1__r __mv_m2a__r __mv_q1__r '
+                  '__mv_q2__r __mv_c__r',
+                  'n count plain'],
+         'hidden_sql': 'SELECT sum(v) AS __mv_sum__m, count(v) AS '
+                       '__mv_cnt__m, count(CAST((v) AS DOUBLE) + CAST((w) AS '
+                       'DOUBLE)) AS __mv_n__r, avg(CASE WHEN (w) IS NOT NULL '
+                       'THEN CAST((v) AS DOUBLE) END) AS __mv_m1__r, '
+                       'avg(CASE WHEN (v) IS NOT NULL THEN CAST((w) AS '
+                       'DOUBLE) END) AS __mv_m2a__r, var_pop(CASE WHEN (w) '
+                       'IS NOT NULL THEN CAST((v) AS DOUBLE) END) * '
+                       'count(CASE WHEN (w) IS NOT NULL THEN CAST((v) AS '
+                       'DOUBLE) END) AS __mv_q1__r, var_pop(CASE WHEN (v) IS '
+                       'NOT NULL THEN CAST((w) AS DOUBLE) END) * count(CASE '
+                       'WHEN (v) IS NOT NULL THEN CAST((w) AS DOUBLE) END) '
+                       'AS __mv_q2__r, covar_pop(CAST((v) AS DOUBLE), '
+                       'CAST((w) AS DOUBLE)) * count(CAST((v) AS DOUBLE) + '
+                       'CAST((w) AS DOUBLE)) AS __mv_c__r, count(*) AS n '
+                       'FROM t WHERE v > 0'},
+    ),
+    (
+        f"SELECT ja.k AS k, {_JOIN_FAMILIES} FROM ja JOIN jb ON ja.k = jb.k "
+        "GROUP BY ja.k",
+        {'mode': 'agg_join',
+         'tables': ['ja', 'jb'],
+         'keys': ['k'],
+         'out_cols': ['k', 'n', 's', 'lo', 'm', 'sd', 'r', 'rs', 'sk', 'hc',
+                      'mb', 'tk', 'bx'],
+         'aggs': ['n count plain', 's sum plain', 'lo min plain',
+                  'm avg avg __mv_sum__m __mv_cnt__m',
+                  'sd stddev variance __mv_cnt__sd __mv_mean__sd __mv_m2__sd',
+                  'r corr corr __mv_n__r __mv_m1__r __mv_m2a__r __mv_q1__r '
+                  '__mv_q2__r __mv_c__r',
+                  'rs regr_slope corr __mv_n__rs __mv_m1__rs __mv_m2a__rs '
+                  '__mv_q1__rs __mv_q2__rs __mv_c__rs',
+                  'sk skewness moments __mv_n__sk __mv_m1__sk __mv_q2__sk '
+                  '__mv_q3__sk __mv_q4__sk',
+                  'hc approx_count_distinct hll __mv_hll__hc',
+                  'mb max_by max_by __mv_ord__mb',
+                  'tk approx_top_k top_k __mv_topk__tk', 'bx bit_xor plain'],
+         'hidden_sql': 'SELECT ja.k AS k, count(*) AS n, sum(jb.v) AS s, '
+                       'min(jb.v) AS lo, sum(jb.v) AS __mv_sum__m, '
+                       'count(jb.v) AS __mv_cnt__m, count(jb.v) AS '
+                       '__mv_cnt__sd, avg(CAST((jb.v) AS DOUBLE)) AS '
+                       '__mv_mean__sd, var_pop(CAST((jb.v) AS DOUBLE)) * '
+                       'count(jb.v) AS __mv_m2__sd, count(CAST((ja.v) AS '
+                       'DOUBLE) + CAST((jb.v) AS DOUBLE)) AS __mv_n__r, '
+                       'avg(CASE WHEN (jb.v) IS NOT NULL THEN CAST((ja.v) AS '
+                       'DOUBLE) END) AS __mv_m1__r, avg(CASE WHEN (ja.v) IS '
+                       'NOT NULL THEN CAST((jb.v) AS DOUBLE) END) AS '
+                       '__mv_m2a__r, var_pop(CASE WHEN (jb.v) IS NOT NULL '
+                       'THEN CAST((ja.v) AS DOUBLE) END) * count(CASE WHEN '
+                       '(jb.v) IS NOT NULL THEN CAST((ja.v) AS DOUBLE) END) '
+                       'AS __mv_q1__r, var_pop(CASE WHEN (ja.v) IS NOT NULL '
+                       'THEN CAST((jb.v) AS DOUBLE) END) * count(CASE WHEN '
+                       '(ja.v) IS NOT NULL THEN CAST((jb.v) AS DOUBLE) END) '
+                       'AS __mv_q2__r, covar_pop(CAST((ja.v) AS DOUBLE), '
+                       'CAST((jb.v) AS DOUBLE)) * count(CAST((ja.v) AS '
+                       'DOUBLE) + CAST((jb.v) AS DOUBLE)) AS __mv_c__r, '
+                       'count(CAST((jb.v) AS DOUBLE) + CAST((ja.v) AS '
+                       'DOUBLE)) AS __mv_n__rs, avg(CASE WHEN (ja.v) IS NOT '
+                       'NULL THEN CAST((jb.v) AS DOUBLE) END) AS '
+                       '__mv_m1__rs, avg(CASE WHEN (jb.v) IS NOT NULL THEN '
+                       'CAST((ja.v) AS DOUBLE) END) AS __mv_m2a__rs, '
+                       'var_pop(CASE WHEN (ja.v) IS NOT NULL THEN '
+                       'CAST((jb.v) AS DOUBLE) END) * count(CASE WHEN (ja.v) '
+                       'IS NOT NULL THEN CAST((jb.v) AS DOUBLE) END) AS '
+                       '__mv_q1__rs, var_pop(CASE WHEN (jb.v) IS NOT NULL '
+                       'THEN CAST((ja.v) AS DOUBLE) END) * count(CASE WHEN '
+                       '(jb.v) IS NOT NULL THEN CAST((ja.v) AS DOUBLE) END) '
+                       'AS __mv_q2__rs, covar_pop(CAST((jb.v) AS DOUBLE), '
+                       'CAST((ja.v) AS DOUBLE)) * count(CAST((jb.v) AS '
+                       'DOUBLE) + CAST((ja.v) AS DOUBLE)) AS __mv_c__rs, '
+                       'count(jb.v) AS __mv_n__sk, avg(CAST((jb.v) AS '
+                       'DOUBLE)) AS __mv_m1__sk, var_pop(CAST((jb.v) AS '
+                       'DOUBLE)) * count(jb.v) AS __mv_q2__sk, '
+                       'coalesce(skewness(CAST((jb.v) AS DOUBLE)), 0) * '
+                       'count(jb.v) * pow(var_pop(CAST((jb.v) AS DOUBLE)), '
+                       '1.5) AS __mv_q3__sk, (coalesce(kurtosis(CAST((jb.v) '
+                       'AS DOUBLE)), 0) + 3) * count(jb.v) * '
+                       'pow(var_pop(CAST((jb.v) AS DOUBLE)), 2) AS '
+                       '__mv_q4__sk, hll_sketch_agg(jb.u) AS __mv_hll__hc, '
+                       'max(CASE WHEN (jb.v) IS NOT NULL THEN '
+                       "named_struct('o', (jb.v), 'a', (jb.u)) END) AS "
+                       '__mv_ord__mb, approx_top_k_accumulate((jb.u), 10000) '
+                       'AS __mv_topk__tk, bit_xor(jb.u) AS bx FROM ja JOIN '
+                       'jb ON ja.k = jb.k GROUP BY ja.k'},
+    ),
+    # select order differs from family order
+    (
+        "SELECT avg(v) AS m, k, count(DISTINCT u) AS d, stddev(v) AS sd, "
+        "sum(v) AS s, approx_percentile(v, 0.25) AS p FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['m', 'k', 'd', 'sd', 's', 'p'],
+         'aggs': ['m avg avg __mv_sum__m __mv_cnt__m',
+                  'd count count_distinct __mv_set__d',
+                  'sd stddev variance __mv_cnt__sd __mv_mean__sd __mv_m2__sd',
+                  's sum plain', 'p approx_percentile kll __mv_kll__p'],
+         'hidden_sql': 'SELECT sum(v) AS __mv_sum__m, count(v) AS '
+                       '__mv_cnt__m, k, collect_set(u) AS __mv_set__d, '
+                       'count(v) AS __mv_cnt__sd, avg(CAST((v) AS DOUBLE)) '
+                       'AS __mv_mean__sd, var_pop(CAST((v) AS DOUBLE)) * '
+                       'count(v) AS __mv_m2__sd, sum(v) AS s FROM t GROUP BY '
+                       'k'},
+    ),
+    # plain self-mergeable only: no hidden state
+    (
+        "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'n', 's'],
+         'aggs': ['n count plain', 's sum plain'],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT K, AVG(V) AS M FROM T GROUP BY K",
+        {'mode': 'agg',
+         'tables': ['T'],
+         'keys': ['K'],
+         'out_cols': ['K', 'M'],
+         'aggs': ['M avg avg __mv_sum__M __mv_cnt__M'],
+         'hidden_sql': 'SELECT K, sum(V) AS __mv_sum__M, count(V) AS '
+                       '__mv_cnt__M FROM T GROUP BY K'},
+    ),
+    (
+        "SELECT time div 3600 AS h, max(v) AS m FROM t GROUP BY h",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['h'],
+         'out_cols': ['h', 'm'],
+         'aggs': ['m max plain'],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT x.k, avg(x.v) AS m FROM t x WHERE x.v > 0 GROUP BY x.k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'm'],
+         'aggs': ['m avg avg __mv_sum__m __mv_cnt__m'],
+         'hidden_sql': 'SELECT x.k, sum(x.v) AS __mv_sum__m, count(x.v) AS '
+                       '__mv_cnt__m FROM t x WHERE x.v > 0 GROUP BY x.k'},
+    ),
+    (
+        "SELECT k FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k'],
+         'aggs': [],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT time, v FROM t WHERE v > 0",
+        {'mode': 'spf',
+         'tables': ['t'],
+         'keys': [],
+         'out_cols': [],
+         'aggs': [],
+         'hidden_sql': None},
+    ),
+    # argument shapes, accepted
+    (
+        "SELECT k, count( DISTINCT u % 7 ) AS d FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'd'],
+         'aggs': ['d count count_distinct __mv_set__d'],
+         'hidden_sql': 'SELECT k, collect_set(u % 7) AS __mv_set__d FROM t '
+                       'GROUP BY k'},
+    ),
+    (
+        "SELECT k, sum(DISTINCT u) AS s, avg(distinct v) AS a FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 's', 'a'],
+         'aggs': ['s sum distinct_fold __mv_set__s',
+                  'a avg distinct_fold __mv_set__a'],
+         'hidden_sql': 'SELECT k, collect_set(u) AS __mv_set__s, '
+                       'collect_set(v) AS __mv_set__a FROM t GROUP BY k'},
+    ),
+    (
+        "SELECT k, approx_top_k(u) AS a, approx_top_k(u, 4) AS b, "
+        "approx_top_k(u, 3, 500) AS c FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'a', 'b', 'c'],
+         'aggs': ['a approx_top_k top_k __mv_topk__a',
+                  'b approx_top_k top_k __mv_topk__b',
+                  'c approx_top_k top_k __mv_topk__c'],
+         'hidden_sql': 'SELECT k, approx_top_k_accumulate((u), 10000) AS '
+                       '__mv_topk__a, approx_top_k_accumulate((u), 10000) AS '
+                       '__mv_topk__b, approx_top_k_accumulate((u), 500) AS '
+                       '__mv_topk__c FROM t GROUP BY k'},
+    ),
+    (
+        "SELECT approx_percentile(v, 0.5) AS p, count(*) AS n FROM t",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': [],
+         'out_cols': ['p', 'n'],
+         'aggs': ['p approx_percentile kll __mv_kll__p', 'n count plain'],
+         'hidden_sql': 'SELECT count(*) AS n FROM t'},
+    ),
+    (
+        "SELECT mode(u) AS md, sum(v) AS s FROM t",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': [],
+         'out_cols': ['md', 's'],
+         'aggs': ['md mode mode __mv_cmap__md', 's sum plain'],
+         'hidden_sql': 'SELECT sum(v) AS s FROM t'},
+    ),
+    (
+        "SELECT k, approx_percentile(v + 1, 1) AS p FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'p'],
+         'aggs': ['p approx_percentile kll __mv_kll__p'],
+         'hidden_sql': 'SELECT k FROM t GROUP BY k'},
+    ),
+    (
+        "SELECT k, max_by(u, v * 2) AS mb FROM t GROUP BY k",
+        {'mode': 'agg',
+         'tables': ['t'],
+         'keys': ['k'],
+         'out_cols': ['k', 'mb'],
+         'aggs': ['mb max_by max_by __mv_ord__mb'],
+         'hidden_sql': 'SELECT k, max(CASE WHEN (v * 2) IS NOT NULL THEN '
+                       "named_struct('o', (v * 2), 'a', (u)) END) AS "
+                       '__mv_ord__mb FROM t GROUP BY k'},
+    ),
+    # argument shapes, rejected (full recompute)
+    (
+        "SELECT k, approx_percentile(v, array(0.5, 0.9)) AS p FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_percentile(v, 0.5, 100) AS p FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_percentile(v, p) AS p FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_percentile(v, 1.5) AS p FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT approx_percentile(v, 0.5) AS p FROM t",
+        None,
+    ),
+    (
+        "SELECT mode(u) AS md FROM t",
+        None,
+    ),
+    (
+        "SELECT k, mode(u, true) AS md FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, max_by(u) AS mb FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, min_by(u, v, w) AS mb FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, corr(v) AS r FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, regr_slope(w, v, u) AS r FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_top_k(u, n) AS tk FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_top_k(u, 3, 500, 1) AS tk FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, approx_count_distinct(u, 0.01) AS hc FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, count(DISTINCT u, v) AS d FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, sum(DISTINCT u, v) AS d FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, min(DISTINCT v) AS d FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, sum(max(v)) AS s FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, sum(v) + 1 AS s FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, collect_list(v) AS c FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, count(*) FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k, v FROM t GROUP BY k",
+        None,
+    ),
+    (
+        "SELECT k + 1, count(*) AS n FROM t GROUP BY k + 1",
+        None,
+    ),
+    (
+        "SELECT k, sum(v) AS s FROM t GROUP BY k HAVING sum(v) > 1",
+        None,
+    ),
+    # join chain shapes
+    (
+        "SELECT a.v FROM a JOIN b ON a.k = b.k",
+        {'mode': 'spf_join',
+         'tables': ['a', 'b'],
+         'keys': [],
+         'out_cols': [],
+         'aggs': [],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT a.v FROM a INNER JOIN b ON a.k = b.k JOIN c ON b.k = c.k "
+        "WHERE a.v > 1",
+        {'mode': 'spf_join',
+         'tables': ['a', 'b', 'c'],
+         'keys': [],
+         'out_cols': [],
+         'aggs': [],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT a.k AS k, sum(b.v) AS s FROM a AS x JOIN b ON x.k = b.k "
+        "JOIN c ON b.k = c.k GROUP BY a.k",
+        {'mode': 'agg_join',
+         'tables': ['a', 'b', 'c'],
+         'keys': ['k'],
+         'out_cols': ['k', 's'],
+         'aggs': ['s sum plain'],
+         'hidden_sql': None},
+    ),
+    (
+        "SELECT a.k AS k, approx_percentile(b.v, 0.5) AS p FROM a "
+        "JOIN b ON a.k = b.k GROUP BY a.k",
+        None,
+    ),
+    (
+        "SELECT a.k AS k, mode(b.u) AS md FROM a JOIN b ON a.k = b.k "
+        "GROUP BY a.k",
+        None,
+    ),
+    (
+        "SELECT a.k AS k, count(DISTINCT b.u) AS d FROM a JOIN b ON a.k = b.k "
+        "GROUP BY a.k",
+        None,
+    ),
+    (
+        "SELECT a.k AS k FROM a JOIN b ON a.k = b.k GROUP BY a.k",
+        None,
+    ),
+    (
+        "SELECT count(*) AS n FROM a JOIN b ON a.k = b.k",
+        None,
+    ),
+    (
+        "SELECT a.v FROM a LEFT JOIN b ON a.k = b.k",
+        None,
+    ),
+    (
+        "SELECT a.v FROM a JOIN a x ON a.k = x.k",
+        None,
+    ),
+]
+
+#: the per-family fields of the analysis layout the item list
+#: replaced; read only when an analysis has no ``items``
+_FAMILY_FIELDS = {
+    "avgs": "avg", "stats": "variance", "corrs": "corr",
+    "moments": "moments", "approxs": "hll", "argmaxs": "max_by",
+    "klls": "kll", "dists": "count_distinct", "dsums": "distinct_fold",
+    "modes": "mode", "topks": "top_k",
+}
+
+
+def _alias_state(a) -> dict:
+    """alias -> [family name, hidden snapshot columns…] of an
+    analysis, read from its aggregate item list (or, for the
+    per-family-field layout, from those fields)."""
+    if hasattr(a, "items"):
+        return {it.alias: [it.family.name, *it.hidden] for it in a.items}
+    state = {alias: ["plain"] for alias in a.aggs}
+    for fld, family in _FAMILY_FIELDS.items():
+        for alias, v in getattr(a, fld).items():
+            state[alias] = [family] + [
+                x
+                for x in (v if isinstance(v, tuple) else (v,))
+                if isinstance(x, str) and x.startswith("__mv_")
+            ]
+    return state
+
+
+def _analysis_facts(a) -> dict | None:
+    """What the golden pins of an analysis; each aggregate reads
+    "alias fn family hidden-columns…", in select order."""
+    if a is None:
+        return None
+    state = _alias_state(a)
+    return {
+        "mode": a.mode,
+        "tables": a.tables,
+        "keys": a.keys,
+        "out_cols": a.out_cols,
+        "aggs": [
+            " ".join([c, a.aggs[c], *state[c]])
+            for c in a.out_cols
+            if c in a.aggs
+        ],
+        "hidden_sql": a.hidden_sql,
+    }
+
+
+def test_mv_analyzer_golden():
+    """Every family and argument shape the MV analyzer accepts or
+    rejects, pinned: mode, keys, output columns, each alias's family
+    and hidden snapshot columns, and the hidden partial-aggregate SQL
+    text (snapshots written earlier must keep merging)."""
+    for sql, want in _MV_ANALYZER_GOLDEN:
+        assert _analysis_facts(analyze_mv_sql(sql)) == want, sql
+
+
+def _golden_value(v):
+    """Floats to 10 significant digits (numerical zero snapped), rows
+    and lists to tuples, recursively."""
+    import math
+
+    if isinstance(v, float):
+        if abs(v) < 1e-9:
+            return 0.0
+        return round(v, 9 - int(math.floor(math.log10(abs(v)))))
+    if isinstance(v, (list, tuple)):
+        return tuple(_golden_value(x) for x in v)
+    return v
+
+
+def _golden_snapshot(db, name: str) -> dict:
+    import hashlib
+
+    entry = db.store.resolve(name)
+    rows = db.query(f"SELECT * FROM {name}").df.collect()
+    return {
+        "version": entry.version,
+        "incremental": entry.refresh_state is not None,
+        "schema_sha256": hashlib.sha256(
+            entry.result_schema.encode()
+        ).hexdigest(),
+        "rows": sorted((_golden_value(r) for r in rows), key=repr),
+    }
+
+
+_MV_REFRESH_GOLDEN = {
+    ('every_mv', 'created'): {'version': 1,
+                              'incremental': True,
+                              'schema_sha256': '93dadc880cc49d11e1cae383c356cf6c33673ec6bc0ffcaf6bee5506ad1083e0',
+                              'rows': [(0, 12, 115.0, 0.0, 22.0, 5, True,
+                                        True, True, 0, 15, 1, 10.45454545,
+                                        8.017027334, 8.017027334, 7.64393564,
+                                        64.27272727, 64.27272727,
+                                        58.42975207, 0.948405454,
+                                        32.76363636, 29.78512397, 11,
+                                        10.45454545, 6.772727273,
+                                        0.5097595474, 1.443422914,
+                                        0.8994729052, 642.7272727,
+                                        185.6818182, 327.6363636,
+                                        0.1704714987, -1.402503996, 10, 3, 0,
+                                        9.0, 21.0, 10, 46, 10.45454545, 0,
+                                        ((0, 2), (3, 2), (7, 1))),
+                                       (1, 12, 114.0, 1.0, 22.0, 5, True,
+                                        True, True, 0, 15, 6, 10.36363636,
+                                        6.946549176, 6.946549176,
+                                        6.623274764, 48.25454545,
+                                        48.25454545, 43.8677686,
+                                        0.9278412273, 24.42727273,
+                                        22.20661157, 11, 10.36363636,
+                                        7.181818182, 0.5062170309,
+                                        1.935568953, 0.8608893431,
+                                        482.5454545, 143.6363636,
+                                        244.2727273, 0.3732935639,
+                                        -1.104438765, 10, 2, 10, 8.0, 20.0,
+                                        10, 47, 10.36363636, 1,
+                                        ((4, 2), (1, 2), (0, 1))),
+                                       (2, 12, 110.0, 0.0, 21.0, 5, True,
+                                        True, True, 0, 15, 11, 10.0,
+                                        6.633249581, 6.633249581, 6.32455532,
+                                        44.0, 44.0, 40.0, 0.9227689333, 20.2,
+                                        18.36363636, 11, 10.0, 6.909090909,
+                                        0.4590909091, 2.318181818,
+                                        0.8515025042, 440.0, 108.9090909,
+                                        202.0, 0.03234147607, -1.087045455,
+                                        10, 4, 1, 10.0, 17.0, 10, 48, 10.0,
+                                        2, ((5, 2), (2, 2), (0, 1))),
+                                       (None, 4, 74.0, 17.0, 20.0, 4, True,
+                                        False, True, 0, 15, 0, 18.5,
+                                        1.290994449, 1.290994449,
+                                        1.118033989, 1.666666667,
+                                        1.666666667, 1.25, 1.0, 0.8333333333,
+                                        0.625, 4, 18.5, 13.25, 0.5, 4.0, 1.0,
+                                        5.0, 1.25, 2.5, 0.0, -1.36, 4, 6, 9,
+                                        18.0, 20.0, 4, 30, 18.5, 6,
+                                        ((7, 1), (8, 1), (9, 1)))]},
+    ('every_mv', 'schema'): 'k:bigint n:bigint s:double lo:double hi:double '
+                            'ci:bigint ba:boolean bo:boolean ev:boolean '
+                            'ban:bigint bor:bigint bx:bigint m:double '
+                            'sd:double sds:double sdp:double vr:double '
+                            'vs:double vp:double r:double cs:double '
+                            'cp:double rc:bigint rax:double ray:double '
+                            'rsl:double ri:double rr2:double rxx:double '
+                            'ryy:double rxy:double sk:double ku:double '
+                            'hc:bigint mb:bigint nb:bigint p50:double '
+                            'p90:double cd:bigint sdu:bigint adv:double '
+                            'md:bigint '
+                            'tk:array<struct<item:bigint,count:bigint>> '
+                            '__mv_sum__m:double __mv_cnt__m:bigint '
+                            '__mv_cnt__sd:bigint __mv_mean__sd:double '
+                            '__mv_m2__sd:double __mv_cnt__sds:bigint '
+                            '__mv_mean__sds:double __mv_m2__sds:double '
+                            '__mv_cnt__sdp:bigint __mv_mean__sdp:double '
+                            '__mv_m2__sdp:double __mv_cnt__vr:bigint '
+                            '__mv_mean__vr:double __mv_m2__vr:double '
+                            '__mv_cnt__vs:bigint __mv_mean__vs:double '
+                            '__mv_m2__vs:double __mv_cnt__vp:bigint '
+                            '__mv_mean__vp:double __mv_m2__vp:double '
+                            '__mv_n__r:bigint __mv_m1__r:double '
+                            '__mv_m2a__r:double __mv_q1__r:double '
+                            '__mv_q2__r:double __mv_c__r:double '
+                            '__mv_n__cs:bigint __mv_m1__cs:double '
+                            '__mv_m2a__cs:double __mv_q1__cs:double '
+                            '__mv_q2__cs:double __mv_c__cs:double '
+                            '__mv_n__cp:bigint __mv_m1__cp:double '
+                            '__mv_m2a__cp:double __mv_q1__cp:double '
+                            '__mv_q2__cp:double __mv_c__cp:double '
+                            '__mv_n__rc:bigint __mv_m1__rc:double '
+                            '__mv_m2a__rc:double __mv_q1__rc:double '
+                            '__mv_q2__rc:double __mv_c__rc:double '
+                            '__mv_n__rax:bigint __mv_m1__rax:double '
+                            '__mv_m2a__rax:double __mv_q1__rax:double '
+                            '__mv_q2__rax:double __mv_c__rax:double '
+                            '__mv_n__ray:bigint __mv_m1__ray:double '
+                            '__mv_m2a__ray:double __mv_q1__ray:double '
+                            '__mv_q2__ray:double __mv_c__ray:double '
+                            '__mv_n__rsl:bigint __mv_m1__rsl:double '
+                            '__mv_m2a__rsl:double __mv_q1__rsl:double '
+                            '__mv_q2__rsl:double __mv_c__rsl:double '
+                            '__mv_n__ri:bigint __mv_m1__ri:double '
+                            '__mv_m2a__ri:double __mv_q1__ri:double '
+                            '__mv_q2__ri:double __mv_c__ri:double '
+                            '__mv_n__rr2:bigint __mv_m1__rr2:double '
+                            '__mv_m2a__rr2:double __mv_q1__rr2:double '
+                            '__mv_q2__rr2:double __mv_c__rr2:double '
+                            '__mv_n__rxx:bigint __mv_m1__rxx:double '
+                            '__mv_m2a__rxx:double __mv_q1__rxx:double '
+                            '__mv_q2__rxx:double __mv_c__rxx:double '
+                            '__mv_n__ryy:bigint __mv_m1__ryy:double '
+                            '__mv_m2a__ryy:double __mv_q1__ryy:double '
+                            '__mv_q2__ryy:double __mv_c__ryy:double '
+                            '__mv_n__rxy:bigint __mv_m1__rxy:double '
+                            '__mv_m2a__rxy:double __mv_q1__rxy:double '
+                            '__mv_q2__rxy:double __mv_c__rxy:double '
+                            '__mv_n__sk:bigint __mv_m1__sk:double '
+                            '__mv_q2__sk:double __mv_q3__sk:double '
+                            '__mv_q4__sk:double __mv_n__ku:bigint '
+                            '__mv_m1__ku:double __mv_q2__ku:double '
+                            '__mv_q3__ku:double __mv_q4__ku:double '
+                            '__mv_hll__hc:binary '
+                            '__mv_ord__mb:struct<o:double,a:bigint> '
+                            '__mv_ord__nb:struct<o:double,a:bigint> '
+                            '__mv_kll__p50:array<array<double>> '
+                            '__mv_kll__p90:array<array<double>> '
+                            '__mv_set__cd:array<bigint> '
+                            '__mv_set__sdu:array<bigint> '
+                            '__mv_set__adv:array<double> '
+                            '__mv_cmap__md:map<bigint,bigint> '
+                            '__mv_topk__tk:struct<sketch:binary,maxItemsTracked:int,itemDataType:bigint,itemDataTypeDDL:string>',
+    ('join_mv', 'created'): {'version': 1,
+                             'incremental': True,
+                             'schema_sha256': '87aff9d6527c643eb3edc76402796011860f621426c64fda72a7f259a1baa945',
+                             'rows': [(0, 4, 39.0, 0.0, 9.75, 6.701989754,
+                                       0.7510207443, 2.013333333,
+                                       -0.9536804628, 4, 3, ((0, 1), (4, 1)),
+                                       6),
+                                      (1, 4, 25.0, 1.0, 6.25, 6.701989754,
+                                       0.408626824, 1.5, 0.9536804628, 4, 0,
+                                       ((0, 1), (4, 1)), 7),
+                                      (2, 4, 28.0, 4.0, 7.0, 2.581988897,
+                                       -0.1414213562, -0.2, 0.0, 4, 2,
+                                       ((0, 1), (2, 1)), 0)]},
+    ('join_mv', 'schema'): 'k:bigint n:bigint s:double lo:double m:double '
+                           'sd:double r:double rs:double sk:double '
+                           'hc:bigint mb:bigint '
+                           'tk:array<struct<item:bigint,count:bigint>> '
+                           'bx:bigint __mv_sum__m:double __mv_cnt__m:bigint '
+                           '__mv_cnt__sd:bigint __mv_mean__sd:double '
+                           '__mv_m2__sd:double __mv_n__r:bigint '
+                           '__mv_m1__r:double __mv_m2a__r:double '
+                           '__mv_q1__r:double __mv_q2__r:double '
+                           '__mv_c__r:double __mv_n__rs:bigint '
+                           '__mv_m1__rs:double __mv_m2a__rs:double '
+                           '__mv_q1__rs:double __mv_q2__rs:double '
+                           '__mv_c__rs:double __mv_n__sk:bigint '
+                           '__mv_m1__sk:double __mv_q2__sk:double '
+                           '__mv_q3__sk:double __mv_q4__sk:double '
+                           '__mv_hll__hc:binary '
+                           '__mv_ord__mb:struct<o:double,a:bigint> '
+                           '__mv_topk__tk:struct<sketch:binary,maxItemsTracked:int,itemDataType:bigint,itemDataTypeDDL:string>',
+    ('every_mv', 'refreshed'): {'version': 2,
+                                'incremental': True,
+                                'schema_sha256': '979e5574512c4134b0d8e125a5781a8f020df3f9ea5362ef42c5784138c41ab0',
+                                'rows': [(0, 18, 185.0, 0.0, 22.0, 9, True,
+                                          True, True, 0, 15, 2, 11.5625,
+                                          6.956711388, 6.956711388,
+                                          6.735806837, 48.39583333,
+                                          48.39583333, 45.37109375,
+                                          0.9282480715, 24.31875,
+                                          22.79882813, 16, 11.5625, 7.46875,
+                                          0.5024967714, 1.65863108,
+                                          0.8616444822, 725.9375, 212.734375,
+                                          364.78125, -0.1940513073,
+                                          -1.081822535, 11, 3, 0, 12.0, 21.0,
+                                          11, 55, 11.5625, 0,
+                                          ((0, 2), (7, 2), (4, 2))),
+                                         (1, 18, 171.0, 0.0, 22.0, 8, True,
+                                          True, True, 0, 15, 2, 10.05882353,
+                                          7.241120323, 7.241120323,
+                                          7.024918574, 52.43382353,
+                                          52.43382353, 49.34948097,
+                                          0.9368269283, 26.72794118,
+                                          25.15570934, 17, 10.05882353,
+                                          6.852941176, 0.5097461787,
+                                          1.725494321, 0.8776446936,
+                                          838.9411765, 248.3823529,
+                                          427.6470588, 0.1766266655,
+                                          -1.382644154, 11, 2, 2, 8.0, 20.0,
+                                          11, 55, 10.05882353, 0,
+                                          ((0, 2), (10, 2), (4, 2))),
+                                         (2, 18, 137.0, 0.0, 21.0, 6, True,
+                                          True, True, 0, 15, 14, 8.5625,
+                                          6.174881915, 6.174881915,
+                                          5.978803706, 38.12916667,
+                                          38.12916667, 35.74609375,
+                                          0.9229073678, 18.21458333,
+                                          17.07617188, 16, 8.5625, 6.03125,
+                                          0.4777073544, 1.940880778,
+                                          0.8517580095, 571.9375, 153.234375,
+                                          273.21875, 0.4038622567,
+                                          -0.8420467581, 10, 4, 1, 7.0, 17.0,
+                                          10, 48, 8.5625, 0,
+                                          ((0, 2), (8, 2), (5, 2))),
+                                         (None, 6, 117.0, 17.0, 22.0, 6,
+                                          True, True, True, 0, 15, 1, 19.5,
+                                          1.870828693, 1.870828693,
+                                          1.707825128, 3.5, 3.5, 2.916666667,
+                                          1.0, 1.75, 1.458333333, 6, 19.5,
+                                          13.75, 0.5, 4.0, 1.0, 17.5, 4.375,
+                                          8.75, 0.0, -1.268571429, 6, 4, 9,
+                                          19.0, 22.0, 6, 39, 19.5, 4,
+                                          ((9, 1), (5, 1), (7, 1)))]},
+    ('join_mv', 'refreshed'): {'version': 2,
+                               'incremental': True,
+                               'schema_sha256': '994fc8b8e740cfeeb72adcc00de4492db061998d7efaee31c88247f0858b507d',
+                               'rows': [(0, 6, 55.0, 0.0, 9.166666667,
+                                         5.307227776, 0.669662008,
+                                         1.534161491, -0.7613012504, 5, 3,
+                                         ((0, 2), (4, 1)), 4),
+                                        (1, 6, 51.0, 1.0, 8.5, 6.284902545,
+                                         0.5450417639, 1.585714286, 0.0, 5,
+                                         0, ((1, 2), (0, 1)), 5),
+                                        (2, 6, 30.0, 0.0, 5.0, 3.741657387,
+                                         0.2, 0.4, 0.0, 5, 2,
+                                         ((2, 2), (0, 1)), 6)]},
+}
+
+
+def test_mv_refresh_golden(db, spark, monkeypatch):
+    """One single-topic MV holding every family and one inner-join MV:
+    create, publish a delta, refresh incrementally; the rows and the
+    committed result schema (hidden columns and their order included)
+    are pinned after each step."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    fulls = []
+    real_full = Ella._refresh_full
+
+    def spy_full(self, entry, *a, **kw):
+        fulls.append(entry.name)
+        return real_full(self, entry, *a, **kw)
+
+    monkeypatch.setattr(Ella, "_refresh_full", spy_full)
+    g = db.create_topic(
+        "g",
+        [Column("k", "int64"), Column("v", "float64"),
+         Column("w", "float64"), Column("u", "int64")],
+    )
+    gen = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id * 1000 AS time",
+        "CASE WHEN id % 10 = 9 THEN NULL ELSE id % 3 END AS k",
+        "CASE WHEN id % 13 = 5 THEN NULL "
+        "ELSE CAST(pmod(id * 7, 23) AS double) END AS v",
+        "CAST(pmod(id * 7, 23) AS double) * 0.5 + CAST(id % 5 AS double) AS w",
+        "id % 11 AS u",
+    )
+    ja = db.create_topic("ja", [Column("k", "int64"), Column("v", "float64")])
+    jb = db.create_topic(
+        "jb",
+        [Column("k", "int64"), Column("v", "float64"), Column("u", "int64")],
+    )
+    gen_a = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id * 1000 AS time", "id % 3 AS k", "CAST(id % 7 AS double) AS v"
+    )
+    gen_b = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id * 1000 AS time", "id % 3 AS k",
+        "CAST(pmod(id * 5, 17) AS double) AS v", "id % 5 AS u",
+    )
+    g.insert(gen(0, 40))
+    ja.insert(gen_a(0, 12))
+    jb.insert(gen_b(0, 15))
+    views = {
+        "every_mv": f"SELECT k, {_EVERY_FAMILY} FROM g GROUP BY k",
+        "join_mv": f"SELECT ja.k AS k, {_JOIN_FAMILIES} FROM ja "
+        "JOIN jb ON ja.time = jb.time GROUP BY ja.k",
+    }
+    got = {}
+    for name, sql in views.items():
+        db.create_materialized_view(name, sql)
+        got[name, "created"] = _golden_snapshot(db, name)
+        got[name, "schema"] = " ".join(
+            f"{f.name}:{f.dataType.simpleString()}"
+            for f in StructType.fromJson(
+                json.loads(db.store.resolve(name).result_schema)
+            ).fields
+        )
+    g.insert(gen(40, 60))
+    ja.insert(gen_a(12, 18))
+    jb.insert(gen_b(15, 20))
+    fulls.clear()
+    for name in views:
+        db.refresh_materialized(name)
+        got[name, "refreshed"] = _golden_snapshot(db, name)
+    assert fulls == []  # both refreshes merged the delta
+    assert sorted(got) == sorted(_MV_REFRESH_GOLDEN)
+    for key in _MV_REFRESH_GOLDEN:
+        assert got[key] == _MV_REFRESH_GOLDEN[key], key

@@ -51,6 +51,14 @@ FAMILIES = [
     ("bool_and(v >= 0) AS ba", "exact"),
     ("bool_or(v > 1000) AS bo", "exact"),
     ("bit_xor(u) AS bx", "exact"),
+    ("avg(DISTINCT u % 97) AS adv", "approx"),
+    ("stddev_pop(v) AS sdp", "approx"),
+    ("covar_samp(v, w) AS cs", "approx"),
+    ("regr_intercept(w, v) AS ri", "approx"),
+    ("regr_r2(w, v) AS rr2", "approx"),
+    ("bit_and(u) AS ban", "exact"),
+    ("bit_or(u) AS bor", "exact"),
+    ("every(v >= 0) AS ev", "exact"),
 ]
 
 
