@@ -13,6 +13,7 @@ from __future__ import annotations
 import collections
 import itertools
 import json
+import operator
 import os
 import re
 import shutil
@@ -35,7 +36,7 @@ from ella_spark.catalog import (
 )
 from ella_spark.lazy import Lazy
 from ella_spark.topic import Publisher, Topic
-from ella_spark.tvf import TVFS
+from ella_spark.tvf import TVFS, own_tables_blanked
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
 
 #: SQL type name -> ella dtype (ella dtype names pass through)
@@ -283,6 +284,64 @@ def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
     }
 
 
+def _ref_tokens(sql: str) -> set[str]:
+    """``_name_tokens`` of ``sql`` without the table argument of the
+    table functions that read their table themselves: such a call
+    needs no registration of that table."""
+    return _name_tokens(own_tables_blanked(sql))
+
+
+def _reads_own_table(sql: str) -> bool:
+    return any(t.reads_table and t.pattern.search(sql) for t in TVFS)
+
+
+#: stored SQL text -> the relation names its parse reads (_relations)
+_RELATIONS: dict[str, frozenset | None] = {}
+_RELATIONS_CAP = 256
+
+
+def _relations(spark, sql: str) -> frozenset | None:
+    """The relation names ``sql`` reads in Spark's parse, lower-cased
+    (a multi-part name keeps its parts joined by ``, ``, a CTE name
+    counts), or None when the text does not parse, names a relation
+    through ``IDENTIFIER(...)``, or the plan is not inspectable
+    (Spark Connect, FORCE_PLAN_OPAQUE). A parse depends on the text
+    alone, so it is kept per text."""
+    if FORCE_PLAN_OPAQUE or getattr(spark, "_jsparkSession", None) is None:
+        return None
+    if sql in _RELATIONS:
+        return _RELATIONS[sql]
+    from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
+
+    names: set | None = set()
+
+    def walk(value) -> None:
+        nonlocal names
+        if isinstance(value, list):
+            for v in value:
+                walk(v)
+        elif isinstance(value, dict) and names is not None:
+            cls = value.get("class", "")
+            if cls.endswith(".UnresolvedRelation"):
+                names.add(value["multipartIdentifier"].strip("[]").lower())
+            elif "UnresolvedIdentifier" in cls:
+                names = None
+                return
+            for v in value.values():
+                walk(v)
+
+    try:
+        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+        walk(json.loads(parsed.toJSON()))
+    except (PySparkException, Py4JError, ValueError, LookupError, RecursionError):
+        names = None
+    if len(_RELATIONS) >= _RELATIONS_CAP:
+        _RELATIONS.pop(next(iter(_RELATIONS)), None)
+    _RELATIONS[sql] = None if names is None else frozenset(names)
+    return _RELATIONS[sql]
+
+
 def _hull(windows) -> tuple:
     """The smallest window covering all ``windows`` (``None`` = open)."""
     los, his = zip(*windows)
@@ -489,6 +548,9 @@ class Ella:
         # is analyzed, then promoted to the process-wide live window.
         self._tvf_views_pending: list[str] = []
         self._tvf_rewrite_depth = 0
+        #: ident -> (stamp, input frames, frame) of each view and
+        #: refreshed materialized view a statement bound (_bound_frame)
+        self._frames: dict[tuple, tuple] = {}
         for ddl in self._SQL_COMPAT_FNS:
             spark.sql(ddl)
         self._register_all()
@@ -548,14 +610,14 @@ class Ella:
             repls = []
             for m in tvf.pattern.finditer(sql):
                 table, *args = m.groups()
-                if tvf.resolve:
+                if tvf.reads_table:
+                    res = tvf.op(self, table, *tvf.bind(*args))
+                else:
                     entry = self.store.resolve(table)
                     if entry is None:
                         raise ValueError(f"{tvf.name}: unknown table {table!r}")
                     args = tvf.bind(*args)
                     res = tvf.op(self._frame_for(entry), *args)
-                else:
-                    res = tvf.op(self, table, *tvf.bind(*args))
                 view = f"__{tvf.name}_{next(_TVF_VIEW_SEQ)}"
                 res.createOrReplaceTempView(view)
                 self._register_tvf_view(view)
@@ -630,8 +692,12 @@ class Ella:
     # -- registration ----------------------------------------------------------
 
     def _register_all(self) -> None:
-        for entry in list(self.store.tables.values()):
-            self._register(entry)
+        """Register every catalog object, each after what its stored
+        SQL reads: a topic dropped and re-created after a view over it
+        comes after that view in the catalog."""
+        self._register_referenced(
+            " ".join(f"`{self._view_name(e)}`" for e in self.store.tables.values())
+        )
 
     def _register_referenced(
         self, sql: str, params: dict | list | None = None
@@ -651,26 +717,41 @@ class Ella:
         stored SQL visited (bucket and manifest pruning in
         ``Topic.read``), so a range query lists and opens only the
         shards its window touches; a topic any text reads unbounded, or
-        a string parameter names, is registered whole."""
+        a string parameter names, is registered whole.
+
+        Every referenced name is re-pointed, but a frame is rebuilt only
+        when what it reads changed: ``Topic.read`` returns the frame it
+        built before while the topic's shard set is unchanged, and a
+        stored view keeps its frame while its text and the frames bound
+        to its inputs in this statement are the same (``_bound_frame``).
+        The table argument of a table function that reads its table
+        itself (``Tvf.reads_table``) registers nothing."""
         done: set = set()
         order: list[TableEntry] = []
         texts: list[tuple[str, set]] = []
+        #: ident -> the entries its stored SQL names
+        inputs: dict[tuple, list[TableEntry]] = {}
 
-        def visit(text: str, tokens: set) -> None:
+        def visit(text: str, tokens: set) -> list[TableEntry]:
             texts.append((text, tokens))
+            named = []
             for entry in list(self.store.tables.values()):
-                if entry.ident in done or not (
+                if not (
                     {entry.name.lower(), self._view_name(entry).lower()} & tokens
                 ):
                     continue
+                named.append(entry)
+                if entry.ident in done:
+                    continue
                 done.add(entry.ident)
                 if self._reads_sql(entry):
-                    visit(entry.sql, _name_tokens(entry.sql))
+                    inputs[entry.ident] = visit(entry.sql, _ref_tokens(entry.sql))
                 order.append(entry)
+            return named
 
         values = params.values() if isinstance(params, dict) else params or ()
         named = _name_tokens(" ".join(f"'{v}'" for v in values if isinstance(v, str)))
-        visit(sql, _name_tokens(sql) | named)
+        visit(sql, _ref_tokens(sql) | named)
         topics = {
             self._view_name(e).lower(): e for e in order if e.kind == "topic"
         }
@@ -678,19 +759,72 @@ class Ella:
             (tokens, _time_windows(self.spark, text) if topics.keys() & tokens else {})
             for text, tokens in texts
         ] + [(named, {})]
+        bound: dict[tuple, DataFrame] = {}
         for entry in order:
             view = self._view_name(entry).lower()
-            found = [
-                w.get(view)
-                for tokens, w in windows
-                if {entry.name.lower(), view} & tokens
-            ]
-            if view not in topics or None in found:
-                self._register(entry)
+            if view in topics:
+                found = [
+                    w.get(view)
+                    for tokens, w in windows
+                    if {entry.name.lower(), view} & tokens
+                ]
+                window = (None, None) if None in found else _hull(found)
+                frame = Topic(self.store, entry).read(self.spark, *window)
             else:
-                Topic(self.store, entry).read(
-                    self.spark, *_hull(found)
-                ).createOrReplaceTempView(self._view_name(entry))
+                frame = self._bound_frame(entry, inputs.get(entry.ident, []), bound)
+            bound[entry.ident] = frame
+            frame.createOrReplaceTempView(self._view_name(entry))
+
+    def _bound_frame(
+        self, entry: TableEntry, reads: list[TableEntry], bound: dict
+    ) -> DataFrame:
+        """The frame a statement binds to a non-topic ``entry``, given
+        the frames ``bound`` to the entries it ``reads``. A stored view
+        (or a materialized view before its first refresh) reuses its
+        last frame while its text and those input frames (compared by
+        identity) are unchanged, so a table-function view such as
+        ``psi_drift`` over an unchanged view is not rebuilt; a view
+        that may read anything else (a relation outside the catalog,
+        ``information_schema``, a table function that reads its own
+        table) is rebuilt every time. A refreshed materialized view
+        reuses its snapshot frame while its version, result schema and
+        snapshot directory are unchanged. External tables are rebuilt
+        every time: ella does not own their files."""
+        if entry.kind == "external":
+            return self._frame_for(entry)
+        if self._reads_sql(entry):
+            # a column may share the view's own name
+            reads = [e for e in reads if e.ident != entry.ident]
+            names = {self._view_name(e).lower() for e in reads}
+            rels = _relations(self.spark, entry.sql)
+            frames = tuple(bound.get(e.ident) for e in reads)
+            if (
+                rels is None
+                or not rels <= names
+                or None in frames  # an input bound after it (a name cycle)
+                or _reads_own_table(entry.sql)
+            ):
+                return self._frame_for(entry)
+            stamp = entry.sql
+        else:
+            snap = self.store.table_path(entry) / f"v={entry.version}"
+            try:
+                st = os.stat(snap)
+            except OSError:
+                return self._frame_for(entry)
+            stamp = (entry.version, entry.result_schema, st.st_ino, st.st_mtime_ns)
+            frames = ()
+        hit = self._frames.get(entry.ident)
+        if (
+            hit is not None
+            and hit[0] == stamp
+            and len(hit[1]) == len(frames)
+            and all(map(operator.is_, hit[1], frames))
+        ):
+            return hit[2]
+        frame = self._frame_for(entry)
+        self._frames[entry.ident] = (stamp, frames, frame)
+        return frame
 
     @staticmethod
     def _reads_sql(entry: TableEntry) -> bool:
@@ -732,6 +866,7 @@ class Ella:
         return self.spark.sql(self._rewrite_reads(entry.sql))
 
     def _unregister(self, entry: TableEntry) -> None:
+        self._frames.pop(entry.ident, None)
         self.spark.catalog.dropTempView(self._view_name(entry))
 
     @staticmethod
@@ -1712,10 +1847,15 @@ class Ella:
         semantics). A topic is registered over the ``time`` window the
         statement needs (every reading scan filtered on literal ``time``
         bounds; otherwise the whole topic), so only the shards that
-        window touches are listed and opened. Nothing else is touched,
-        so a direct ``spark.sql``/``spark.table`` on a catalog name sees
-        what that name's last registration covered: for a topic, only
-        the window of the last statement that referenced it.
+        window touches are listed and opened. The shard set is
+        re-checked for every statement and nothing is rebuilt unless it
+        changed: a topic reuses its frame while its shards, manifest
+        and columns are unchanged (``Topic.read``), and a stored view
+        while its text and its inputs' frames are (``_bound_frame``).
+        Every referenced name is still re-pointed. Nothing else is
+        touched, so a direct ``spark.sql``/``spark.table`` on a catalog
+        name sees what that name's last registration covered: for a
+        topic, only the window of the last statement that referenced it.
 
         Every read runs through ``_rewrite_reads`` (information_schema,
         table functions, time travel), and the returned Lazy keeps the

@@ -676,7 +676,12 @@ def build_manifest(
                 if not k.startswith("_")
             }
     else:
-        stats = topic.manifest()
+        # copies: the entries below gain blooms in place, and
+        # topic.manifest() hands out its shared parse
+        stats = {
+            k: {**v, "b": dict(v.get("b") or {})}
+            for k, v in topic.manifest().items()
+        }
     live = {p.name: p for p in topic.shards()}
     # drop entries whose files are gone (compacted/cleaned)
     stats = {k: v for k, v in stats.items() if k in live}

@@ -67,7 +67,14 @@ def configure(spark: SparkSession) -> SparkSession:
     executor Python workers (addPyFile) so Pandas-UDF / mapInPandas
     closures that reference this module deserialize on workers even
     when the application was launched outside the repo directory.
+
+    Runs once per session, which is then marked the way
+    ``_ship_package`` marks its context: every read calls this, and
+    re-applying the confs each time would undo a user's later ``SET``
+    (and cost a JVM round trip per conf).
     """
+    if getattr(spark, "_ella_spark_configured", False):
+        return spark
     for k, v in {**REQUIRED_CONFS, **PERF_CONFS}.items():
         try:
             spark.conf.set(k, v)
@@ -77,6 +84,7 @@ def configure(spark: SparkSession) -> SparkSession:
             # are all runtime-settable.
             pass
     _ship_package(spark)
+    spark._ella_spark_configured = True
     return spark
 
 

@@ -18,8 +18,11 @@ row-group min/max stats prune time-range scans.
 
 from __future__ import annotations
 
+import collections
 import functools
 import operator
+import os
+import threading
 import time as _time
 import uuid
 from pathlib import Path
@@ -44,9 +47,34 @@ DEFAULT_CAPACITY = 1024
 DAY_NS = 86_400 * 1_000_000_000
 PARTITION_COL = "__bucket"
 
+#: read arguments (windows, column ranges, probes) whose frames
+#: ``Topic.read`` keeps per topic and session, and topics it keeps
+#: them for per session; least recently used out
+_FRAME_CAP = 8
+_TOPIC_CAP = 64
+#: topics whose parsed shard-stats manifest ``Topic.manifest`` keeps
+_MANIFEST_CAP = 16
+#: topic path -> (manifest file stamp, parsed manifest), in use order
+_MANIFESTS: "collections.OrderedDict[str, tuple]" = collections.OrderedDict()
+#: guards both memos: reads may run on several threads at once
+_MEMO_LOCK = threading.Lock()
+
 
 def time_bucket(time_ns: int) -> int:
     return time_ns // DAY_NS  # floor division — negative times bucket left
+
+
+def _session_frames(spark: SparkSession) -> "collections.OrderedDict":
+    """``Topic.read``'s frames for ``spark``: topic path -> (version
+    stamp, {read arguments: frame}). The memo lives on the session
+    object, so it dies with the session and never hands a frame to
+    another one. A module-level map weakly keyed on the session could
+    not do that: every cached frame holds its session strongly, so the
+    key would never be released."""
+    frames = getattr(spark, "_ella_topic_frames", None)
+    if frames is None:
+        frames = spark._ella_topic_frames = collections.OrderedDict()
+    return frames
 
 
 def _arrow_type(col: Column) -> pa.DataType:
@@ -116,16 +144,48 @@ class Topic:
         JSON (human-greppable); past ~10⁵ shards build_manifest
         switches to parquet (columnar, ~10× smaller, sub-second load
         where json.loads dominates) — whichever single file exists is
-        authoritative, the reader normalizes both."""
+        authoritative, the reader normalizes both.
+
+        The parse is kept per topic until the file's ``(inode, size,
+        mtime_ns)`` changes (build_manifest replaces it by rename), so
+        the returned dict is shared: callers must not mutate it."""
+        stamp = self._manifest_stamp()
+        if stamp is None:
+            return {}
+        key = str(self.path)
+        with _MEMO_LOCK:
+            hit = _MANIFESTS.get(key)
+            if hit is not None and hit[0] == stamp:
+                _MANIFESTS.move_to_end(key)
+                return hit[1]
+        # stamp before parse: a file replaced in between pairs the old
+        # stamp with the new content, which the next call re-parses
+        stats = self._parse_manifest(stamp[0])
+        with _MEMO_LOCK:
+            _MANIFESTS[key] = (stamp, stats)
+            if len(_MANIFESTS) > _MANIFEST_CAP:
+                _MANIFESTS.popitem(last=False)
+        return stats
+
+    def _manifest_stamp(self) -> tuple | None:
+        """``(file, inode, size, mtime_ns)`` of the authoritative
+        manifest file (parquet before JSON), or None if never built."""
+        for name in ("stats.parquet", "stats.json"):
+            path = self.path / "_manifest" / name
+            try:
+                st = os.stat(path)
+            except OSError:
+                continue
+            return (path, st.st_ino, st.st_size, st.st_mtime_ns)
+        return None
+
+    @staticmethod
+    def _parse_manifest(path: Path) -> dict:
         import json
 
-        mdir = self.path / "_manifest"
-        ppath = mdir / "stats.parquet"
-        if ppath.exists():
+        if path.suffix == ".parquet":
             try:
-                import pyarrow.parquet as _pq
-
-                tbl = _pq.read_table(ppath)
+                tbl = pq.read_table(path)
             except (OSError, ValueError):
                 return {}
             cjson = tbl.column("c").to_pylist()
@@ -148,11 +208,8 @@ class Topic:
                     blooms,
                 )
             }
-        mpath = mdir / "stats.json"
-        if not mpath.exists():
-            return {}
         try:
-            raw = json.loads(mpath.read_text())
+            raw = json.loads(path.read_text())
         except (ValueError, OSError):
             return {}
         # Column ranges are only SOUND from format v3 (the
@@ -224,10 +281,49 @@ class Topic:
         proven-absent only); the residual equality filter applies to
         surviving rows either way, so results never depend on bloom
         coverage.
+
+        The frame is reused while the topic is unchanged: each call
+        re-lists the shard set, and returns the frame an earlier call
+        with the same arguments built on the same session if the
+        topic's version stamp still matches — its columns, each shard's
+        ``(name, size, mtime_ns)`` and the manifest file's ``(inode,
+        size, mtime_ns)``. Any publish, insert, compaction, manifest
+        build or ALTER changes the stamp and drops every frame kept
+        for the topic, so nothing is rebuilt unless it changed.
         """
         from ella_spark.session import configure
 
         configure(spark)
+        # the stamp is taken BEFORE Spark lists the files: a shard
+        # published in between then makes the next call rebuild,
+        # instead of pairing an old file index with the new stamp
+        listing = self._listing()
+        stamp = (self.entry.columns, listing, self._manifest_stamp())
+        key = (start_ns, end_ns, repr(sorted((col_ranges or {}).items())),
+               repr(sorted((col_eq or {}).items())))
+        topics, path = _session_frames(spark), str(self.path)
+        with _MEMO_LOCK:
+            kept = topics.get(path)
+            if kept is None or kept[0] != stamp:
+                kept = topics[path] = (stamp, collections.OrderedDict())
+            topics.move_to_end(path)
+            if len(topics) > _TOPIC_CAP:
+                topics.popitem(last=False)
+            frames = kept[1]
+            if key in frames:
+                frames.move_to_end(key)
+                return frames[key]
+        df = self._read(
+            spark, [Path(p) for p, _, _ in listing], start_ns, end_ns,
+            col_ranges, col_eq,
+        )
+        with _MEMO_LOCK:
+            frames[key] = df
+            if len(frames) > _FRAME_CAP:
+                frames.popitem(last=False)
+        return df
+
+    def _read(self, spark, files, start_ns, end_ns, col_ranges, col_eq) -> DataFrame:
         bounded = (
             start_ns is not None
             or end_ns is not None
@@ -245,7 +341,6 @@ class Topic:
                 if v is not None
             }
         if bounded and (stats := self.manifest()):
-            files = self.shards()
             keep = []
             for p in files:
                 ent = stats.get(p.name)
@@ -429,7 +524,35 @@ class Topic:
         raise ValueError(f"mode must be history|live|auto, got {mode!r}")
 
     def shards(self) -> list[Path]:
-        return sorted(self.path.glob(f"{PARTITION_COL}=*/part-*.parquet"))
+        return [Path(p) for p, _, _ in self._listing()]
+
+    def _listing(self) -> list[tuple[str, int, int]]:
+        """``(path, size, mtime_ns)`` of every shard
+        (``__bucket=*/part-*.parquet``), in path order."""
+        out = []
+        try:
+            with os.scandir(self.path) as it:
+                dirs = sorted(
+                    e.path for e in it
+                    if e.name.startswith(f"{PARTITION_COL}=") and e.is_dir()
+                )
+        except OSError:
+            return out
+        for d in dirs:
+            files = []
+            try:
+                with os.scandir(d) as it:
+                    for e in it:
+                        if e.name.startswith("part-") and e.name.endswith(".parquet"):
+                            try:
+                                st = e.stat()
+                            except OSError:
+                                continue  # compacted away mid-listing
+                            files.append((e.path, st.st_size, st.st_mtime_ns))
+            except OSError:
+                continue  # bucket removed mid-listing
+            out.extend(sorted(files))
+        return out
 
     def read_files(self, spark: SparkSession, paths: list) -> DataFrame:
         """Batch scan of an EXPLICIT shard subset (same schema handling

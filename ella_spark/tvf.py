@@ -7,7 +7,8 @@ ordinary Spark SQL (``Ella._apply_tvf_rewrites``). Every entry shares
 one contract:
 
 - Stored views and materialized views keep the durable call text and
-  rewrite it again on every read (``Ella._frame_for``), so a saved
+  rewrite it again whenever their frame is rebuilt (``Ella._frame_for``;
+  ``Ella._bound_frame`` rebuilds it once an input changed), so a saved
   dashboard always scores current data; ``Lazy`` keeps the text from
   before the rewrite for the same reason.
 - Every call gets its own view, ``__<name>_<n>`` from one process-wide
@@ -53,7 +54,7 @@ _LITERAL = r"('[^']*'|-?\d+(?:\.\d+)?)"
 class Tvf:
     """``name('<table>', *args[, *optional])``: the result is
     ``op(frame, *bind(*args))`` over the table's frame, or with
-    ``resolve=False`` ``op(db, table, *bind(*args))``."""
+    ``reads_table`` ``op(db, table, *bind(*args))``."""
 
     name: str
     args: tuple[str, ...]
@@ -61,7 +62,10 @@ class Tvf:
     #: regex groups -> operator arguments: defaults, rebinds, validation
     bind: Callable[..., tuple] = lambda *args: args
     optional: tuple[str, ...] = ()
-    resolve: bool = True
+    #: the operator reads its table argument itself (a pruned
+    #: ``Topic.read``, a vector index), so a statement registers
+    #: nothing for that argument (``own_tables_blanked``)
+    reads_table: bool = False
 
     @cached_property
     def pattern(self) -> re.Pattern:
@@ -162,9 +166,9 @@ def _point_lookup(db, table, column, literal):
 
 TVFS: tuple[Tvf, ...] = (
     # ann_search('table', 'vec', 'queries'[, k=5][, n_probe=4]) -> Ella.vector_search
-    Tvf("ann_search", (_NAME, _NAME), _ann_search, optional=(_INT, _INT), resolve=False),
+    Tvf("ann_search", (_NAME, _NAME), _ann_search, optional=(_INT, _INT), reads_table=True),
     # point_lookup('topic', 'col', 42 | -1.5 | 'text') -> Topic.read(col_eq=...)
-    Tvf("point_lookup", (_NAME, _LITERAL), _point_lookup, resolve=False),
+    Tvf("point_lookup", (_NAME, _LITERAL), _point_lookup, reads_table=True),
     # psi_drift('table', 'value', 'slice'[, buckets=10]) -> drift.psi_by_slice
     Tvf(
         "psi_drift",
@@ -271,3 +275,16 @@ TVFS: tuple[Tvf, ...] = (
         optional=(_NAME, _FRAC),
     ),
 )
+
+
+def own_tables_blanked(sql: str) -> str:
+    """``sql`` with the table argument of every ``reads_table`` call
+    emptied (``point_lookup('', 'k', 1)``), for finding the names a
+    statement must register: that table is read by the operator."""
+    for tvf in TVFS:
+        if tvf.reads_table:
+            sql = tvf.pattern.sub(
+                lambda m: m.string[m.start() : m.start(1)] + m.string[m.end(1) : m.end()],
+                sql,
+            )
+    return sql

@@ -2289,3 +2289,234 @@ def test_explain_rewrites_and_binds(statement_db, sql, params, row_count):
     assert all(r.plan for r in rows)
     if row_count is not None:
         assert dict(rows)["row_count"] == row_count
+
+
+# ── frame reuse: rebuild only what changed since the last statement ──
+
+
+def test_set_survives_a_topic_read(db, spark):
+    """Session confs are applied once per session, so a user's `SET`
+    is not undone by the next read."""
+    with db.create_topic("st", [Column("v", "float64")]).publish() as pub:
+        pub.write(1_000, 1.0)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        db.query("SET spark.sql.shuffle.partitions = 7")
+        db.query("SET spark.sql.adaptive.enabled = false")
+        assert db.query("SELECT count(*) AS n FROM st").df.collect()[0].n == 1
+        assert db.topic("st").read(spark).count() == 1
+        assert spark.conf.get(keys[0]) == "7"
+        assert spark.conf.get(keys[1]) == "false"
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_point_lookup_reads_its_topic_once(db, monkeypatch):
+    """`point_lookup`'s table argument registers nothing: the one read
+    of its topic is the operator's own, pruned by the probe."""
+    from ella_spark.topic import Topic
+
+    with db.create_topic("pk", [Column("k", "int64")]).publish() as pub:
+        pub.write(1_000, 1)
+        pub.write(2_000, 2)
+    calls: list = []
+    orig = Topic.read
+
+    def spying(self, spark, *a, **kw):
+        calls.append((self.entry.name, a, kw))
+        return orig(self, spark, *a, **kw)
+
+    monkeypatch.setattr(Topic, "read", spying)
+    rows = db.query("SELECT k FROM point_lookup('pk', 'k', 1)").df.collect()
+    assert [r.k for r in rows] == [1]
+    assert calls == [("pk", (), {"col_eq": {"k": 1}})]
+
+
+def test_unchanged_inputs_reuse_their_frames(db, monkeypatch):
+    """Two identical statements over an unchanged topic get the same
+    frame from `Topic.read`, and a table-function view over a view of
+    it is not rebuilt; a publish rebuilds both."""
+    import ella_spark.operators.drift as drift
+    from ella_spark.topic import Topic
+
+    cols = [Column("v", "float64"), Column("kind", "string")]
+    t = db.create_topic("ru", cols)
+    with t.publish() as pub:
+        pub.write(1_000, 1.0, "a")
+        pub.write(2_000, 2.0, "b")
+    db.create_view("ru_base", "SELECT * FROM ru")
+    db.create_view("ru_drift", "SELECT * FROM psi_drift('ru_base', 'v', 'kind')")
+    frames: list = []
+    builds: list = []
+    orig_read, orig_psi = Topic.read, drift.psi_by_slice
+
+    def reading(self, *a, **kw):
+        frames.append(orig_read(self, *a, **kw))
+        return frames[-1]
+
+    def building(*a, **kw):
+        builds.append(1)
+        return orig_psi(*a, **kw)
+
+    monkeypatch.setattr(Topic, "read", reading)
+    monkeypatch.setattr(drift, "psi_by_slice", building)
+
+    def run(sql):
+        return sorted(tuple(r) for r in db.query(sql).df.collect())
+
+    assert run("SELECT sum(v) AS s FROM ru") == run("SELECT sum(v) AS s FROM ru")
+    assert len(frames) == 2 and frames[0] is frames[1]
+
+    first = run("SELECT kind, n FROM ru_drift")
+    assert run("SELECT kind, n FROM ru_drift") == first == [("a", 1), ("b", 1)]
+    assert frames[2] is frames[3] is frames[0]
+    assert len(builds) == 1
+
+    with t.publish() as pub:
+        pub.write(3_000, 3.0, "a")
+    assert run("SELECT kind, n FROM ru_drift") == [("a", 2), ("b", 1)]
+    assert frames[4] is not frames[0]
+    assert len(builds) == 2
+
+
+def _rows(db, sql):
+    """Sorted rows of ``sql``, floats to 9 significant digits."""
+    return sorted(
+        (
+            tuple(float(f"{x:.9g}") if isinstance(x, float) else x for x in r)
+            for r in db.query(sql).df.collect()
+        ),
+        key=repr,
+    )
+
+
+def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
+    """Read, change, read again: after every kind of change the second
+    read equals the same statement on a new `Ella` over a new session,
+    which has reused nothing."""
+    from ella_spark.maintenance import build_manifest
+    from ella_spark.topic import DAY_NS as D
+
+    root = str(tmp_path / "db")
+    cols = [Column("k", "int64"), Column("v", "float64"), Column("kind", "string")]
+
+    def make_topic():
+        t = db.create_topic("dt", cols)
+        with t.publish() as pub:
+            for d in range(3):
+                pub.write_batch(
+                    [(d * D + i, i % 4, float(i + d), "ab"[i % 2]) for i in range(6)]
+                )
+                pub.flush()
+
+    make_topic()
+    db.create_view("dt_agg", "SELECT kind, count(*) AS n, sum(v) AS s FROM dt GROUP BY kind")
+    db.create_view("dt_base", "SELECT * FROM dt")
+    db.create_view("dt_drift", "SELECT * FROM psi_drift('dt_base', 'v', 'kind')")
+    db.create_materialized_view(
+        "dt_mv", "SELECT k, count(*) AS n, sum(v) AS s FROM dt GROUP BY k"
+    )
+    statements = [
+        "SELECT * FROM dt",
+        f"SELECT k, v FROM dt WHERE time >= {D} AND time < {2 * D}",
+        "SELECT kind, n, s FROM dt_agg",
+        "SELECT kind, n, psi FROM dt_drift",
+        "SELECT k, v FROM point_lookup('dt', 'k', 3)",
+        "SELECT k, n, s FROM dt_mv",
+    ]
+
+    def publish(rows):
+        with db.topic("dt").publish() as pub:
+            pub.write_batch(rows)
+
+    def flushed():
+        pub = db.topic("dt").publish(capacity=100)
+        pub.write(D + 500, 3, 50.0, "a")
+        pub.flush()
+        pub.close()
+
+    def second_writer():
+        # another Ella on the same root and session (the `maintain`
+        # CLI shape): its open re-registers every name
+        other = Ella.open(root, spark)
+        with other.topic("dt").publish() as pub:
+            pub.write(2 * D + 700, 3, 70.0, "b", 0.5)
+        compact_topic(other.topic("dt"), min_shards=2)
+        build_manifest(other.topic("dt"), bloom_cols=["k"])
+
+    def recreate():
+        db.query("DROP TABLE dt")
+        db.create_topic("dt", cols)
+        publish([(D + 1, 3, 9.0, "b"), (D + 2, 5, 1.0, "a")])
+
+    changes = [
+        ("publish + flush", True, flushed),
+        ("distributed insert", True, lambda: db.query(
+            f"INSERT INTO dt SELECT {D} + id AS time, id % 4 AS k, "
+            "CAST(id AS double) AS v, 'b' AS kind FROM range(5)"
+        )),
+        ("compact_topic", False, lambda: compact_topic(db.topic("dt"), min_shards=2)),
+        ("build_manifest", False, lambda: build_manifest(db.topic("dt"), bloom_cols=["k"])),
+        ("publish after the manifest", True, lambda: publish([(D + 9, 3, 3.0, "a")])),
+        ("incremental MV refresh", True, lambda: db.refresh_materialized("dt_mv")),
+        ("ALTER ADD COLUMN", True, lambda: db.query("ALTER TABLE dt ADD COLUMN w double")),
+        ("full MV refresh", True, lambda: (
+            publish([(D + 10, 3, 4.0, None, 1.5)]),
+            db.refresh_materialized("dt_mv", incremental=False),
+        )),
+        ("second Ella writing", True, second_writer),
+        ("drop + re-create", True, recreate),
+    ]
+    before = [_rows(db, sql) for sql in statements]
+    for name, changes_rows, change in changes:
+        change()
+        after = [_rows(db, sql) for sql in statements]
+        fresh = Ella.open(root, spark.newSession())
+        assert after == [_rows(fresh, sql) for sql in statements], name
+        assert (after != before) == changes_rows, name
+        before = after
+
+
+def test_concurrent_reads_share_the_frame_memo(db, spark):
+    """Threads reading one topic over more windows than the memo keeps
+    (so entries are evicted while others are reused) all get a frame of
+    their own window, and the memo stays bounded."""
+    import sys
+    import threading
+
+    from ella_spark.topic import _FRAME_CAP, _session_frames
+
+    t = db.create_topic("cr", [Column("v", "int64")])
+    with t.publish() as pub:
+        for i in range(16):
+            pub.write(i * 1_000, i)
+    windows = [(i * 1_000, (i + 4) * 1_000) for i in range(_FRAME_CAP + 4)]
+    got: list = []
+    errors: list = []
+
+    def reader(k: int) -> None:
+        try:
+            for j in range(24):
+                w = windows[(k + j) % len(windows)]
+                got.append((w, t.read(spark, *w)))
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,)) for k in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(got) == 8 * 24
+    assert len(_session_frames(spark)[str(t.path)][1]) <= _FRAME_CAP
+    for w, df in dict(got).items():  # the last frame of each window
+        assert df.count() == 4, w
