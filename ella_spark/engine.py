@@ -23,7 +23,7 @@ import weakref
 from dataclasses import dataclass
 from functools import cached_property
 from pathlib import Path
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +35,7 @@ from ella_spark.catalog import (
     TableEntry,
 )
 from ella_spark.lazy import Lazy
+from ella_spark.session import conf_version
 from ella_spark.topic import Publisher, Topic
 from ella_spark.tvf import TVFS, own_tables_blanked
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
@@ -121,12 +122,37 @@ _NAMING_NODES = {
 }
 
 
-def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
-    """The ``time`` window each relation of ``sql`` needs, from Spark's
-    own parse: ``{name: (start_ns, end_ns)}``, half-open, ``None`` for
-    an open end, keyed by the lower-cased single-part relation name.
+class _Reads(NamedTuple):
+    """What a SQL text reads, from Spark's own parse (``_parse_reads``)."""
 
-    A name is in the result only when every mention of it in the parse
+    #: relation -> the ``time`` window it needs
+    windows: dict[str, tuple[int | None, int | None]]
+    #: every relation name, or None when not known
+    relations: frozenset | None
+
+
+def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
+    """The ``time`` window each relation of ``sql`` needs: the
+    ``windows`` of ``_parse_reads``."""
+    return _parse_reads(spark, sql).windows
+
+
+def _parse_reads(spark, sql: str) -> _Reads:
+    """What ``sql`` reads, from one parse by Spark's own parser, kept
+    per session, text and session conf version (the parser follows
+    session confs; ``session.conf_version``).
+
+    ``relations`` holds every relation name the parse scans,
+    lower-cased (a multi-part name keeps its parts joined by ``, ``; a
+    CTE name counts). It is None when the text names a relation
+    through ``IDENTIFIER(...)``, and, with ``windows`` empty, when
+    there is no parse to walk (below).
+
+    ``windows`` is the ``time`` window each relation needs:
+    ``{name: (start_ns, end_ns)}``, half-open, ``None`` for an open
+    end, keyed by the lower-cased single-part relation name.
+
+    A name is in ``windows`` only when every mention of it in the parse
     is a scan directly under a ``Filter`` (through at most a
     ``SubqueryAlias``) whose condition ANDs at least one comparison
     (``<``, ``<=``, ``>``, ``>=``, ``=``, ``BETWEEN``) of ``time`` —
@@ -140,13 +166,28 @@ def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
     may be too wide, never too narrow. Subquery plans and CTE bodies
     nest in the parse and are walked like the outer plan."""
     if FORCE_PLAN_OPAQUE or getattr(spark, "_jsparkSession", None) is None:
-        return {}
+        return _Reads({}, None)
+    memo = getattr(spark, "_ella_parses", None)
+    if memo is None:
+        memo = spark._ella_parses = collections.OrderedDict()
+    key = (conf_version(spark), sql)
+    hit = memo.get(key)
+    if hit is None:
+        hit = memo[key] = _parse(spark, sql)
+        if len(memo) > _PARSE_CAP:
+            memo.popitem(last=False)
+    return hit
+
+
+def _parse(spark, sql: str) -> _Reads:
+    """``_parse_reads`` without its memo."""
     from py4j.protocol import Py4JError
     from pyspark.errors import PySparkException
 
     scans: dict[str, list] = {}  # name -> windows of its bounded scans
     mentioned: set[str] = set()
     strings: list[str] = []  # every string of the parse
+    relations: set[str] | None = set()
 
     def tree(flat: list, i: int = 0):
         # toJSON flattens a tree pre-order; num-children rebuilds it
@@ -237,7 +278,12 @@ def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
                     walk(v, names and not naming)
 
     def walk_tree(t, bounded_scan=None) -> None:
+        nonlocal relations
         node, kids = t
+        if cls(t) == "UnresolvedRelation" and relations is not None:
+            relations.add(node["multipartIdentifier"].strip("[]").lower())
+        elif "UnresolvedIdentifier" in cls(t):
+            relations = None
         if cls(t) == "Filter":
             scan, alias = kids[0], None
             if cls(scan) == "SubqueryAlias":
@@ -269,19 +315,20 @@ def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
         RecursionError,
     ):
         # a parse error or a plan shape not walked here: whole topics
-        return {}
+        return _Reads({}, None)
     low = sql.lower()
 
     def count(name: str, text: str) -> int:
         return len(re.findall(rf"(?<!\w){re.escape(name)}(?!\w)", text))
 
-    return {
+    windows = {
         name: _hull(ws)
         for name, ws in scans.items()
         if name not in mentioned
         # every mention in the text is one the parse carries
         and count(name, low) <= sum(count(name, s.lower()) for s in strings)
     }
+    return _Reads(windows, None if relations is None else frozenset(relations))
 
 
 def _ref_tokens(sql: str) -> set[str]:
@@ -291,55 +338,8 @@ def _ref_tokens(sql: str) -> set[str]:
     return _name_tokens(own_tables_blanked(sql))
 
 
-def _reads_own_table(sql: str) -> bool:
-    return any(t.reads_table and t.pattern.search(sql) for t in TVFS)
-
-
-#: stored SQL text -> the relation names its parse reads (_relations)
-_RELATIONS: dict[str, frozenset | None] = {}
-_RELATIONS_CAP = 256
-
-
-def _relations(spark, sql: str) -> frozenset | None:
-    """The relation names ``sql`` reads in Spark's parse, lower-cased
-    (a multi-part name keeps its parts joined by ``, ``, a CTE name
-    counts), or None when the text does not parse, names a relation
-    through ``IDENTIFIER(...)``, or the plan is not inspectable
-    (Spark Connect, FORCE_PLAN_OPAQUE). A parse depends on the text
-    alone, so it is kept per text."""
-    if FORCE_PLAN_OPAQUE or getattr(spark, "_jsparkSession", None) is None:
-        return None
-    if sql in _RELATIONS:
-        return _RELATIONS[sql]
-    from py4j.protocol import Py4JError
-    from pyspark.errors import PySparkException
-
-    names: set | None = set()
-
-    def walk(value) -> None:
-        nonlocal names
-        if isinstance(value, list):
-            for v in value:
-                walk(v)
-        elif isinstance(value, dict) and names is not None:
-            cls = value.get("class", "")
-            if cls.endswith(".UnresolvedRelation"):
-                names.add(value["multipartIdentifier"].strip("[]").lower())
-            elif "UnresolvedIdentifier" in cls:
-                names = None
-                return
-            for v in value.values():
-                walk(v)
-
-    try:
-        parsed = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-        walk(json.loads(parsed.toJSON()))
-    except (PySparkException, Py4JError, ValueError, LookupError, RecursionError):
-        names = None
-    if len(_RELATIONS) >= _RELATIONS_CAP:
-        _RELATIONS.pop(next(iter(_RELATIONS)), None)
-    _RELATIONS[sql] = None if names is None else frozenset(names)
-    return _RELATIONS[sql]
+#: parses ``_parse_reads`` keeps per session, oldest out
+_PARSE_CAP = 256
 
 
 def _hull(windows) -> tuple:
@@ -551,6 +551,15 @@ class Ella:
         #: ident -> (stamp, input frames, frame) of each view and
         #: refreshed materialized view a statement bound (_bound_frame)
         self._frames: dict[tuple, tuple] = {}
+        # Table-function operators cut lineage with localCheckpoint,
+        # whose blocks die with the executor that holds them. Only on
+        # a local master is that executor the driver, which outlives
+        # every frame; elsewhere a view calling a table function is
+        # rebuilt for every statement (_bound_frame).
+        classic = getattr(spark, "_jsparkSession", None) is not None
+        self._checkpoints_outlive_frames = classic and bool(
+            re.fullmatch(r"local(\[.*\])?", spark.sparkContext.master)
+        )
         for ddl in self._SQL_COMPAT_FNS:
             spark.sql(ddl)
         self._register_all()
@@ -726,6 +735,7 @@ class Ella:
         to its inputs in this statement are the same (``_bound_frame``).
         The table argument of a table function that reads its table
         itself (``Tvf.reads_table``) registers nothing."""
+        conf = conf_version(self.spark)
         done: set = set()
         order: list[TableEntry] = []
         texts: list[tuple[str, set]] = []
@@ -771,48 +781,57 @@ class Ella:
                 window = (None, None) if None in found else _hull(found)
                 frame = Topic(self.store, entry).read(self.spark, *window)
             else:
-                frame = self._bound_frame(entry, inputs.get(entry.ident, []), bound)
+                frame = self._bound_frame(
+                    entry, inputs.get(entry.ident, []), bound, conf
+                )
             bound[entry.ident] = frame
             frame.createOrReplaceTempView(self._view_name(entry))
 
     def _bound_frame(
-        self, entry: TableEntry, reads: list[TableEntry], bound: dict
+        self, entry: TableEntry, reads: list[TableEntry], bound: dict, conf: int | None
     ) -> DataFrame:
         """The frame a statement binds to a non-topic ``entry``, given
-        the frames ``bound`` to the entries it ``reads``. A stored view
-        (or a materialized view before its first refresh) reuses its
-        last frame while its text and those input frames (compared by
+        the frames ``bound`` to the entries it ``reads`` and the
+        session's ``conf`` version. A stored view (or a materialized
+        view before its first refresh) reuses its last frame while its
+        text, the session confs and those input frames (compared by
         identity) are unchanged, so a table-function view such as
         ``psi_drift`` over an unchanged view is not rebuilt; a view
         that may read anything else (a relation outside the catalog,
         ``information_schema``, a table function that reads its own
-        table) is rebuilt every time. A refreshed materialized view
-        reuses its snapshot frame while its version, result schema and
-        snapshot directory are unchanged. External tables are rebuilt
-        every time: ella does not own their files."""
+        table) is rebuilt every time, and so is a view calling a table
+        function where checkpoint blocks may die with an executor (a
+        master other than local). A refreshed materialized view reuses
+        its snapshot frame while its version, result schema, snapshot
+        directory and the session confs are unchanged. External tables
+        are rebuilt every time: ella does not own their files."""
         if entry.kind == "external":
             return self._frame_for(entry)
         if self._reads_sql(entry):
             # a column may share the view's own name
             reads = [e for e in reads if e.ident != entry.ident]
             names = {self._view_name(e).lower() for e in reads}
-            rels = _relations(self.spark, entry.sql)
+            rels = _parse_reads(self.spark, entry.sql).relations
             frames = tuple(bound.get(e.ident) for e in reads)
+            called = [t for t in TVFS if t.pattern.search(entry.sql)]
             if (
                 rels is None
                 or not rels <= names
                 or None in frames  # an input bound after it (a name cycle)
-                or _reads_own_table(entry.sql)
+                or any(t.reads_table for t in called)
+                or (called and not self._checkpoints_outlive_frames)
             ):
                 return self._frame_for(entry)
-            stamp = entry.sql
+            stamp = (conf, entry.sql)
         else:
             snap = self.store.table_path(entry) / f"v={entry.version}"
             try:
                 st = os.stat(snap)
             except OSError:
                 return self._frame_for(entry)
-            stamp = (entry.version, entry.result_schema, st.st_ino, st.st_mtime_ns)
+            stamp = (
+                conf, entry.version, entry.result_schema, st.st_ino, st.st_mtime_ns
+            )
             frames = ()
         hit = self._frames.get(entry.ident)
         if (
@@ -1849,9 +1868,10 @@ class Ella:
         bounds; otherwise the whole topic), so only the shards that
         window touches are listed and opened. The shard set is
         re-checked for every statement and nothing is rebuilt unless it
-        changed: a topic reuses its frame while its shards, manifest
-        and columns are unchanged (``Topic.read``), and a stored view
-        while its text and its inputs' frames are (``_bound_frame``).
+        changed: a topic reuses its frame while its shards, manifest,
+        columns and the session confs are unchanged (``Topic.read``),
+        and a stored view while its text, the session confs and its
+        inputs' frames are (``_bound_frame``).
         Every referenced name is still re-pointed. Nothing else is
         touched, so a direct ``spark.sql``/``spark.table`` on a catalog
         name sees what that name's last registration covered: for a

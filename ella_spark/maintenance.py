@@ -676,12 +676,9 @@ def build_manifest(
                 if not k.startswith("_")
             }
     else:
-        # copies: the entries below gain blooms in place, and
-        # topic.manifest() hands out its shared parse
-        stats = {
-            k: {**v, "b": dict(v.get("b") or {})}
-            for k, v in topic.manifest().items()
-        }
+        # topic.manifest() hands out its shared parse: entries below
+        # are replaced, never changed in place
+        stats = topic.manifest()
     live = {p.name: p for p in topic.shards()}
     # drop entries whose files are gone (compacted/cleaned)
     stats = {k: v for k, v in stats.items() if k in live}
@@ -707,7 +704,7 @@ def build_manifest(
             if need_blooms:
                 blooms = _shard_blooms(path, need_blooms, col_dtypes, fpp)
                 if blooms:
-                    ent.setdefault("b", {}).update(blooms)
+                    stats[name] = {**ent, "b": {**ent.get("b", {}), **blooms}}
             continue
         # new shard, or a v1-era entry with no column stats yet: (re)read
         # the footer so pre-upgrade shards gain col_ranges skipping too
@@ -757,7 +754,7 @@ def build_manifest(
             if need:
                 blooms = _shard_blooms(path, need, col_dtypes, fpp)
                 if blooms:
-                    stats[name].setdefault("b", {}).update(blooms)
+                    stats[name]["b"] = {**have_b, **blooms}
         added += 1
     mdir.mkdir(exist_ok=True)
     if len(stats) > MANIFEST_PARQUET_THRESHOLD:

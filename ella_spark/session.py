@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -57,6 +58,32 @@ PERF_CONFS = {
     # serves: list on the driver at every path count.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
 }
+
+
+#: guards each session's conf snapshot (conf_version)
+_CONF_LOCK = threading.Lock()
+
+
+def conf_version(spark: SparkSession) -> int | None:
+    """A number that changes whenever a SQL conf of ``spark`` changes
+    (``SET``, ``RESET``, ``spark.conf.set``). A classic DataFrame fixes
+    conf-dependent semantics when it is analyzed (ANSI casts and
+    overflow, the session time zone), so a frame kept for reuse is kept
+    per this number. One JVM call: the session's conf map is compared
+    with a copy taken when the number last changed. None under Spark
+    Connect, whose server analyzes a plan again at every action."""
+    jss = getattr(spark, "_jsparkSession", None)
+    if jss is None:
+        return None
+    with _CONF_LOCK:
+        state = getattr(spark, "_ella_conf_state", None)
+        if state is None:
+            settings = jss.sessionState().conf().settings()
+            state = spark._ella_conf_state = [settings, None, -1]
+        if state[1] is None or not state[0].equals(state[1]):
+            state[1] = spark._jvm.java.util.HashMap(state[0])
+            state[2] += 1
+        return state[2]
 
 
 def configure(spark: SparkSession) -> SparkSession:

@@ -286,19 +286,23 @@ class Topic:
         re-lists the shard set, and returns the frame an earlier call
         with the same arguments built on the same session if the
         topic's version stamp still matches — its columns, each shard's
-        ``(name, size, mtime_ns)`` and the manifest file's ``(inode,
-        size, mtime_ns)``. Any publish, insert, compaction, manifest
-        build or ALTER changes the stamp and drops every frame kept
-        for the topic, so nothing is rebuilt unless it changed.
+        ``(name, size, mtime_ns)``, the manifest file's ``(inode,
+        size, mtime_ns)`` and the session's SQL confs
+        (``session.conf_version``). Any publish, insert, compaction,
+        manifest build, ALTER or ``SET`` changes the stamp and drops
+        every frame kept for the topic, so nothing is rebuilt unless
+        it changed.
         """
-        from ella_spark.session import configure
+        from ella_spark.session import conf_version, configure
 
         configure(spark)
         # the stamp is taken BEFORE Spark lists the files: a shard
         # published in between then makes the next call rebuild,
         # instead of pairing an old file index with the new stamp
         listing = self._listing()
-        stamp = (self.entry.columns, listing, self._manifest_stamp())
+        stamp = (
+            conf_version(spark), self.entry.columns, listing, self._manifest_stamp()
+        )
         key = (start_ns, end_ns, repr(sorted((col_ranges or {}).items())),
                repr(sorted((col_eq or {}).items())))
         topics, path = _session_frames(spark), str(self.path)

@@ -2334,6 +2334,27 @@ def test_point_lookup_reads_its_topic_once(db, monkeypatch):
     assert calls == [("pk", (), {"col_eq": {"k": 1}})]
 
 
+def test_build_manifest_leaves_the_shared_manifest_parse_alone(db, monkeypatch):
+    """`Topic.manifest()` hands out one parse per manifest file; a
+    bloom pass over a parquet manifest (which build_manifest starts
+    from that parse) replaces its entries instead of changing them."""
+    import copy
+
+    import ella_spark.maintenance as mnt
+
+    monkeypatch.setattr(mnt, "MANIFEST_PARQUET_THRESHOLD", 0)
+    t = db.create_topic("bm", [Column("k", "int64")])
+    for i in range(3):
+        with t.publish() as pub:
+            pub.write(i * 1_000, i)
+    mnt.build_manifest(t)
+    shared = t.manifest()
+    kept = copy.deepcopy(shared)
+    mnt.build_manifest(t, bloom_cols=["k"])
+    assert shared == kept and not any(e["b"] for e in shared.values())
+    assert all(e["b"].keys() == {"k"} for e in t.manifest().values())
+
+
 def test_unchanged_inputs_reuse_their_frames(db, monkeypatch):
     """Two identical statements over an unchanged topic get the same
     frame from `Topic.read`, and a table-function view over a view of
@@ -2380,6 +2401,13 @@ def test_unchanged_inputs_reuse_their_frames(db, monkeypatch):
     assert frames[4] is not frames[0]
     assert len(builds) == 2
 
+    # where a checkpoint block may die with its executor (a master
+    # other than local), a table-function view is rebuilt every time
+    db._checkpoints_outlive_frames = False
+    run("SELECT kind, n FROM ru_drift")
+    run("SELECT kind, n FROM ru_drift")
+    assert len(builds) == 4
+
 
 def _rows(db, sql):
     """Sorted rows of ``sql``, floats to 9 significant digits."""
@@ -2397,6 +2425,7 @@ def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
     read equals the same statement on a new `Ella` over a new session,
     which has reused nothing."""
     from ella_spark.maintenance import build_manifest
+    from ella_spark.session import configure
     from ella_spark.topic import DAY_NS as D
 
     root = str(tmp_path / "db")
@@ -2415,6 +2444,13 @@ def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
     db.create_view("dt_agg", "SELECT kind, count(*) AS n, sum(v) AS s FROM dt GROUP BY kind")
     db.create_view("dt_base", "SELECT * FROM dt")
     db.create_view("dt_drift", "SELECT * FROM psi_drift('dt_base', 'v', 'kind')")
+    # the session time zone and ANSI mode (size of NULL) fix what
+    # this view returns when its frame is analyzed
+    db.create_view(
+        "dt_conf",
+        "SELECT k, CAST(timestamp_micros(time DIV 1000) AS STRING) AS ts, "
+        "size(CASE WHEN kind = 'a' THEN array(k) END) AS n FROM dt",
+    )
     db.create_materialized_view(
         "dt_mv", "SELECT k, count(*) AS n, sum(v) AS s FROM dt GROUP BY k"
     )
@@ -2425,7 +2461,13 @@ def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
         "SELECT kind, n, psi FROM dt_drift",
         "SELECT k, v FROM point_lookup('dt', 'k', 3)",
         "SELECT k, n, s FROM dt_mv",
+        "SELECT k, ts, n FROM dt_conf",
     ]
+    confs: dict[str, str] = {}
+
+    def set_conf(key, value):
+        db.query(f"SET {key} = {value}")
+        confs[key] = value
 
     def publish(rows):
         with db.topic("dt").publish() as pub:
@@ -2466,17 +2508,32 @@ def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
             publish([(D + 10, 3, 4.0, None, 1.5)]),
             db.refresh_materialized("dt_mv", incremental=False),
         )),
+        ("SET the session time zone", True, lambda: set_conf(
+            "spark.sql.session.timeZone", "America/Los_Angeles"
+        )),
+        ("SET spark.sql.ansi.enabled", True, lambda: set_conf(
+            "spark.sql.ansi.enabled",
+            "false" if spark.conf.get("spark.sql.ansi.enabled") == "true" else "true",
+        )),
         ("second Ella writing", True, second_writer),
         ("drop + re-create", True, recreate),
     ]
+    old = {k: spark.conf.get(k) for k in ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")}
     before = [_rows(db, sql) for sql in statements]
-    for name, changes_rows, change in changes:
-        change()
-        after = [_rows(db, sql) for sql in statements]
-        fresh = Ella.open(root, spark.newSession())
-        assert after == [_rows(fresh, sql) for sql in statements], name
-        assert (after != before) == changes_rows, name
-        before = after
+    try:
+        for name, changes_rows, change in changes:
+            change()
+            after = [_rows(db, sql) for sql in statements]
+            session = configure(spark.newSession())
+            for k, v in confs.items():
+                session.conf.set(k, v)
+            fresh = Ella.open(root, session)
+            assert after == [_rows(fresh, sql) for sql in statements], name
+            assert (after != before) == changes_rows, name
+            before = after
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_concurrent_reads_share_the_frame_memo(db, spark):
