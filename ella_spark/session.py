@@ -169,6 +169,12 @@ def get_session(app_name: str = "ella_spark", master: str | None = None) -> Spar
     for k, v in {**REQUIRED_CONFS, **PERF_CONFS}.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.ui.enabled", "false")
+    # PySpark's DataFrame debugging captures the Python call site of
+    # every F.*/DataFrame call for error contexts: about half the py4j
+    # round trips of building a statement. It is a static conf, so it
+    # is set here, never on a session a caller hands in. Without it an
+    # error's DataFrame context names the JVM frame, not file:line
+    builder = builder.config("spark.python.sql.dataFrameDebugging.enabled", "false")
     # managed-table warehouse (bucketed layouts) outside the repo tree
     builder = builder.config(
         "spark.sql.warehouse.dir",

@@ -11,6 +11,14 @@ one contract:
   ``Ella._bound_frame`` rebuilds it once an input changed), so a saved
   dashboard always scores current data; ``Lazy`` keeps the text from
   before the rewrite for the same reason.
+- A result is computed once per input version, not once per statement
+  (``Ella._tvf_result``): within a statement ``Ella.query`` runs on a
+  local master, a call on a table the statement bound is kept per
+  function, table, arguments, that table's frame and the session
+  confs, as a lazy ``localCheckpoint``, and every later call, direct
+  or through a stored view, scans it while those are unchanged. Entries
+  with ``reads_table`` are never kept; off a local master, or outside
+  ``Ella.query``, every call is computed again.
 - Every call gets its own view, ``__<name>_<n>`` from one process-wide
   counter, so statements sharing a session never clobber each other's
   view between its creation and the statement's analysis.

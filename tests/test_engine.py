@@ -2462,6 +2462,7 @@ def test_reads_after_each_change_match_a_fresh_session(db, spark, tmp_path):
         "SELECT k, v FROM point_lookup('dt', 'k', 3)",
         "SELECT k, n, s FROM dt_mv",
         "SELECT k, ts, n FROM dt_conf",
+        "SELECT kind, n, psi FROM psi_drift('dt', 'v', 'kind')",
     ]
     confs: dict[str, str] = {}
 
@@ -2577,3 +2578,143 @@ def test_concurrent_reads_share_the_frame_memo(db, spark):
     assert len(_session_frames(spark)[str(t.path)][1]) <= _FRAME_CAP
     for w, df in dict(got).items():  # the last frame of each window
         assert df.count() == 4, w
+
+
+def _with_jobs(spark, run):
+    """``(run(), the number of Spark jobs it started)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(list(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, jobs
+
+
+def test_kept_table_function_results_run_one_job(db, spark, monkeypatch):
+    """A table function's result is computed once per input version:
+    the read that builds it runs no more Spark jobs than a read that
+    keeps nothing, each later read scans its checkpoint in one job, and
+    a publish rebuilds it once, with the new rows. Where results are
+    not kept, every read rebuilds."""
+    import ella_spark.operators.drift as drift
+
+    t = db.create_topic("jc", [Column("v", "float64"), Column("kind", "string")])
+    with t.publish() as pub:
+        for i in range(12):
+            pub.write(i * 1_000, float(i % 5), "ab"[i % 2])
+    db.create_view("jc_base", "SELECT * FROM jc")
+    db.create_view("jc_drift", "SELECT * FROM psi_drift('jc_base', 'v', 'kind')")
+    builds: list = []
+    orig_psi = drift.psi_by_slice
+
+    def building(*a, **kw):
+        builds.append(1)
+        return orig_psi(*a, **kw)
+
+    monkeypatch.setattr(drift, "psi_by_slice", building)
+
+    def read(sql):
+        return _with_jobs(
+            spark, lambda: sorted((r.kind, r.n) for r in db.query(sql).df.collect())
+        )
+
+    for n, sql in enumerate((
+        "SELECT kind, n FROM jc_drift",
+        "SELECT kind, n FROM psi_drift('jc', 'v', 'kind', 4)",
+    )):
+        db._checkpoints_outlive_frames = False
+        builds.clear()
+        (rows, jobs), again = read(sql), read(sql)
+        assert len(builds) == 2 and again == (rows, jobs), sql
+        db._checkpoints_outlive_frames = True
+        builds.clear()
+        first, second, third = read(sql), read(sql), read(sql)
+        assert len(builds) == 1, sql
+        assert first[0] == second[0] == third[0] == rows, sql
+        assert first[1] <= jobs and second[1] == third[1] == 1, sql
+        with t.publish() as pub:
+            pub.write((100 + n) * 1_000, 9.0, "a")
+        builds.clear()
+        after, later = read(sql), read(sql)
+        assert len(builds) == 1, sql
+        assert after[0] == later[0] == [("a", 7 + n), ("b", 6)], sql
+        assert after[1] <= jobs and later[1] == 1, sql
+
+
+def test_concurrent_reads_of_kept_table_function_results(db, spark):
+    """Threads reading a table-function view and direct calls (more
+    distinct calls than the results kept) while another thread
+    publishes each get the rows of a version they could have bound,
+    never older than one they read before, and the kept results stay
+    within their cap."""
+    import sys
+    import threading
+    import time
+
+    from ella_spark.engine import _TVF_RESULT_CAP
+
+    t = db.create_topic("cc", [Column("v", "float64"), Column("kind", "string")])
+    with t.publish() as pub:
+        for i in range(8):
+            pub.write(i * 1_000, float(i), "ab"[i % 2])
+    db.create_view("cc_base", "SELECT * FROM cc")
+    db.create_view("cc_drift", "SELECT * FROM psi_drift('cc_base', 'v', 'kind')")
+    statements = ["SELECT kind, n FROM cc_drift"] + [
+        f"SELECT kind, n FROM psi_drift('cc', 'v', 'kind', {b})"
+        for b in range(1, _TVF_RESULT_CAP + 2)
+    ]
+    publishes = 4
+    errors: list = []
+    got: list = []
+
+    def reader(k: int) -> None:
+        seen = 0
+        try:
+            for j in range(8):
+                sql = statements[(3 * k + j) % len(statements)]
+                n = dict(tuple(r) for r in db.query(sql).df.collect())
+                # version i holds 4 + i rows of kind a and 4 of kind b
+                version = n["a"] - 4
+                assert n["b"] == 4 and 0 <= version <= publishes, (sql, n)
+                assert version >= seen, (sql, version, seen)
+                seen = version
+                got.append(version)
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    def publisher() -> None:
+        deadline = time.monotonic() + 240
+        try:
+            for i in range(publishes):
+                # publish between reads: some results are kept at each version
+                while len(got) < 6 * (i + 1) and not errors and time.monotonic() < deadline:
+                    time.sleep(0.005)
+                with t.publish() as pub:
+                    pub.write((100 + i) * 1_000, 1.0, "a")
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(k,)) for k in range(4)]
+        threads.append(threading.Thread(target=publisher))
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(got) == 4 * 8
+    assert len(db._tvf_results) <= _TVF_RESULT_CAP
+    for sql in statements:
+        n = dict(tuple(r) for r in db.query(sql).df.collect())
+        assert n == {"a": 4 + publishes, "b": 4}, sql
