@@ -11,14 +11,12 @@ so the full Spark SQL surface (the DataFusion-27 superset, SURVEY.md
 from __future__ import annotations
 
 import collections
-import contextlib
 import itertools
 import json
 import operator
 import os
 import re
 import shutil
-import threading
 import time
 import uuid
 import weakref
@@ -39,7 +37,7 @@ from ella_spark.catalog import (
 from ella_spark.lazy import Lazy
 from ella_spark.session import conf_version
 from ella_spark.topic import Publisher, Topic
-from ella_spark.tvf import TVFS, Tvf, own_tables_blanked
+from ella_spark.tvf import TVFS, own_tables_blanked
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
 
 #: SQL type name -> ella dtype (ella dtype names pass through)
@@ -384,17 +382,6 @@ _TVF_VIEW_CAP = 64
 #: eviction (ADVICE r10)
 _TVF_VIEW_LIVE: "collections.deque[tuple[object, str]]" = collections.deque()
 
-#: table-function results an ``Ella`` keeps per (function, table,
-#: arguments) for reuse (``Ella._tvf_result``); least recently used out
-_TVF_RESULT_CAP = 16
-
-
-class _Statement(threading.local):
-    """Per thread: what the statement ``Ella.query`` runs binds."""
-
-    #: the frames bound so far, by entry ident; None outside a statement
-    bound: dict | None = None
-
 
 def _relax_nullability(dt):
     """The same value type with every containsNull / valueContainsNull /
@@ -564,21 +551,16 @@ class Ella:
         #: ident -> (stamp, input frames, frame) of each view and
         #: refreshed materialized view a statement bound (_bound_frame)
         self._frames: dict[tuple, tuple] = {}
-        # Kept table-function results (and operators) cut lineage with
-        # localCheckpoint, whose blocks die with the executor that holds
-        # them. Only on a local master is that executor the driver,
-        # which outlives every frame; elsewhere every table-function
-        # call is computed again for every statement (_keeps_results).
+        # A kept table-function view frame is a localCheckpoint (and
+        # operators cut lineage with one), whose blocks die with the
+        # executor that holds them. Only on a local master is that
+        # executor the driver, which outlives every frame; elsewhere a
+        # view calling a table function is rebuilt for every statement
+        # (_bound_frame).
         classic = getattr(spark, "_jsparkSession", None) is not None
         self._checkpoints_outlive_frames = classic and bool(
             re.fullmatch(r"local(\[.*\])?", spark.sparkContext.master)
         )
-        #: (function, table ident, bound arguments) -> (conf version,
-        #: input frame, checkpointed result) of each table-function call
-        #: a statement made (_tvf_result), least recently used out
-        self._tvf_results: collections.OrderedDict = collections.OrderedDict()
-        self._tvf_results_lock = threading.Lock()
-        self._statement = _Statement()
         for ddl in self._SQL_COMPAT_FNS:
             spark.sql(ddl)
         self._register_all()
@@ -644,60 +626,14 @@ class Ella:
                     entry = self.store.resolve(table)
                     if entry is None:
                         raise ValueError(f"{tvf.name}: unknown table {table!r}")
-                    res = self._tvf_result(tvf, entry, tvf.bind(*args))
+                    args = tvf.bind(*args)
+                    res = tvf.op(self._frame_for(entry), *args)
                 view = f"__{tvf.name}_{next(_TVF_VIEW_SEQ)}"
                 res.createOrReplaceTempView(view)
                 self._register_tvf_view(view)
                 repls.append((m.start(), m.end(), view))
             sql = _splice_spans(sql, repls)
         return sql
-
-    def _tvf_result(self, tvf: Tvf, entry: TableEntry, args: tuple) -> DataFrame:
-        """``tvf``'s result over ``entry`` with bound ``args``, computed
-        once per input version where results are kept
-        (``_keeps_results``): the input is the frame the running
-        statement bound to ``entry``, and the result is kept per
-        function, table and arguments with that frame (compared by
-        identity) and the session's conf version. A kept result is a
-        lazy ``localCheckpoint``: the statement that builds it computes
-        it once, and every later call while its input is unchanged
-        scans the checkpoint blocks. A replaced result is never
-        unpersisted (a statement on another thread may still read it);
-        its blocks go when its frame is garbage-collected. Elsewhere the
-        result is built over ``_frame_for(entry)`` for every call."""
-        frame = self._statement.bound.get(entry.ident) if self._keeps_results() else None
-        if frame is None:
-            return tvf.op(self._frame_for(entry), *args)
-        key, conf = (tvf.name, entry.ident, args), conf_version(self.spark)
-        with self._tvf_results_lock:
-            hit = self._tvf_results.get(key)
-            if hit is not None and hit[0] == conf and hit[1] is frame:
-                self._tvf_results.move_to_end(key)
-                return hit[2]
-        res = tvf.op(frame, *args).localCheckpoint(eager=False)
-        with self._tvf_results_lock:
-            self._tvf_results[key] = (conf, frame, res)
-            self._tvf_results.move_to_end(key)
-            if len(self._tvf_results) > _TVF_RESULT_CAP:
-                self._tvf_results.popitem(last=False)
-        return res
-
-    def _keeps_results(self) -> bool:
-        """Table-function results are kept for reuse inside a statement
-        ``query`` runs, where checkpoints outlive frames (a local
-        master)."""
-        return self._checkpoints_outlive_frames and self._statement.bound is not None
-
-    @contextlib.contextmanager
-    def _reading(self, bound: dict | None):
-        """Within, ``bound`` is this thread's ``_Statement.bound``; the
-        outer value comes back after."""
-        outer = self._statement.bound
-        self._statement.bound = bound
-        try:
-            yield
-        finally:
-            self._statement.bound = outer
 
     # -- open/create (ella/src/lib.rs:86-105) --------------------------------
 
@@ -774,8 +710,8 @@ class Ella:
         )
 
     def _register_referenced(
-        self, sql: str, params: dict | list | None = None, statement: bool = False
-    ) -> dict:
+        self, sql: str, params: dict | list | None = None
+    ) -> None:
         """Re-register the catalog objects ``sql`` may reference, and
         what their stored SQL reads, transitively — each object after
         the objects it reads, so a view's plan captures fresh topic
@@ -799,12 +735,7 @@ class Ella:
         stored view keeps its frame while its text and the frames bound
         to its inputs in this statement are the same (``_bound_frame``).
         The table argument of a table function that reads its table
-        itself (``Tvf.reads_table``) registers nothing.
-
-        Returns the frames bound, by entry ident. With ``statement``
-        (the registration of a statement ``query`` runs) a table
-        function over a bound entry reads that entry's bound frame, and
-        its result is kept per input version (``_tvf_result``)."""
+        itself (``Tvf.reads_table``) registers nothing."""
         conf = conf_version(self.spark)
         done: set = set()
         order: list[TableEntry] = []
@@ -840,24 +771,22 @@ class Ella:
             for text, tokens in texts
         ] + [(named, {})]
         bound: dict[tuple, DataFrame] = {}
-        with self._reading(bound if statement else None):
-            for entry in order:
-                view = self._view_name(entry).lower()
-                if view in topics:
-                    found = [
-                        w.get(view)
-                        for tokens, w in windows
-                        if {entry.name.lower(), view} & tokens
-                    ]
-                    window = (None, None) if None in found else _hull(found)
-                    frame = Topic(self.store, entry).read(self.spark, *window)
-                else:
-                    frame = self._bound_frame(
-                        entry, inputs.get(entry.ident, []), bound, conf
-                    )
-                bound[entry.ident] = frame
-                frame.createOrReplaceTempView(self._view_name(entry))
-        return bound
+        for entry in order:
+            view = self._view_name(entry).lower()
+            if view in topics:
+                found = [
+                    w.get(view)
+                    for tokens, w in windows
+                    if {entry.name.lower(), view} & tokens
+                ]
+                window = (None, None) if None in found else _hull(found)
+                frame = Topic(self.store, entry).read(self.spark, *window)
+            else:
+                frame = self._bound_frame(
+                    entry, inputs.get(entry.ident, []), bound, conf
+                )
+            bound[entry.ident] = frame
+            frame.createOrReplaceTempView(self._view_name(entry))
 
     def _bound_frame(
         self, entry: TableEntry, reads: list[TableEntry], bound: dict, conf: int | None
@@ -868,17 +797,21 @@ class Ella:
         view before its first refresh) reuses its last frame while its
         text, the session confs and those input frames (compared by
         identity) are unchanged, so a table-function view such as
-        ``psi_drift`` over an unchanged view is not rebuilt, and reads
-        its result's checkpoint (``_tvf_result``); a view that may read
-        anything else (a relation outside the catalog,
-        ``information_schema``, a table function that reads its own
-        table) is rebuilt every time, and so is a view calling a table
-        function where its result is not kept (``_keeps_results``: a
-        master other than local, or a registration outside a statement,
-        such as ``Ella.open``'s). A refreshed materialized view reuses
-        its snapshot frame while its version, result schema, snapshot
-        directory and the session confs are unchanged. External tables
-        are rebuilt every time: ella does not own their files."""
+        ``psi_drift`` over an unchanged view is not rebuilt. Such a
+        view's kept frame is a lazy ``localCheckpoint`` of its result:
+        the statement that builds it computes it once, and every later
+        read while its inputs are unchanged scans the checkpoint blocks.
+        A replaced checkpoint is never unpersisted (a statement on
+        another thread may still read it); its blocks go when its frame
+        is garbage-collected. A view that may read anything else (a
+        relation outside the catalog, ``information_schema``, a table
+        function that reads its own table) is rebuilt every time, and
+        so is a view calling a table function where checkpoint blocks
+        may die with an executor (a master other than local). A
+        refreshed materialized view reuses its snapshot frame while its
+        version, result schema, snapshot directory and the session
+        confs are unchanged. External tables are rebuilt every time:
+        ella does not own their files."""
         if entry.kind == "external":
             return self._frame_for(entry)
         if self._reads_sql(entry):
@@ -893,7 +826,7 @@ class Ella:
                 or not rels <= names
                 or None in frames  # an input bound after it (a name cycle)
                 or any(t.reads_table for t in called)
-                or (called and not self._keeps_results())
+                or (called and not self._checkpoints_outlive_frames)
             ):
                 return self._frame_for(entry)
             stamp = (conf, entry.sql)
@@ -906,7 +839,7 @@ class Ella:
             stamp = (
                 conf, entry.version, entry.result_schema, st.st_ino, st.st_mtime_ns
             )
-            frames = ()
+            frames, called = (), []
         hit = self._frames.get(entry.ident)
         if (
             hit is not None
@@ -916,6 +849,8 @@ class Ella:
         ):
             return hit[2]
         frame = self._frame_for(entry)
+        if called:
+            frame = frame.localCheckpoint(eager=False)
         self._frames[entry.ident] = (stamp, frames, frame)
         return frame
 
@@ -1969,9 +1904,9 @@ class Ella:
                 break
         if params is not None and not verb.params:
             raise ValueError("params apply to relational statements, not DDL")
-        bound = self._register_referenced(sql, params, True) if verb.reads else None
-        with self._reading(bound):
-            out = verb.run(self, m, params) if verb.params else verb.run(self, m)
+        if verb.reads:
+            self._register_referenced(sql, params)
+        out = verb.run(self, m, params) if verb.params else verb.run(self, m)
         if verb.result == _OK:
             out = self.spark.createDataFrame([], _OK)
         elif verb.result is not None:

@@ -11,14 +11,14 @@ one contract:
   ``Ella._bound_frame`` rebuilds it once an input changed), so a saved
   dashboard always scores current data; ``Lazy`` keeps the text from
   before the rewrite for the same reason.
-- A result is computed once per input version, not once per statement
-  (``Ella._tvf_result``): within a statement ``Ella.query`` runs on a
-  local master, a call on a table the statement bound is kept per
-  function, table, arguments, that table's frame and the session
-  confs, as a lazy ``localCheckpoint``, and every later call, direct
-  or through a stored view, scans it while those are unchanged. Entries
-  with ``reads_table`` are never kept; off a local master, or outside
-  ``Ella.query``, every call is computed again.
+- A stored view's result is computed once per input version, not once
+  per statement (``Ella._bound_frame``): on a local master the view's
+  kept frame is a lazy ``localCheckpoint`` of its result, and every
+  later read scans it while the frames bound to its inputs and the
+  session confs are unchanged. Views calling an entry with
+  ``reads_table`` are never kept; off a local master every read
+  computes it again, and so does every call written directly in a
+  statement.
 - Every call gets its own view, ``__<name>_<n>`` from one process-wide
   counter, so statements sharing a session never clobber each other's
   view between its creation and the statement's analysis.

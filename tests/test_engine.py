@@ -2596,12 +2596,12 @@ def _with_jobs(spark, run):
     return out, jobs
 
 
-def test_kept_table_function_results_run_one_job(db, spark, monkeypatch):
-    """A table function's result is computed once per input version:
-    the read that builds it runs no more Spark jobs than a read that
-    keeps nothing, each later read scans its checkpoint in one job, and
-    a publish rebuilds it once, with the new rows. Where results are
-    not kept, every read rebuilds."""
+def test_kept_table_function_views_run_one_job(db, spark, monkeypatch):
+    """A table-function view's result is computed once per input
+    version: the read that builds it runs no more Spark jobs than a read
+    that keeps nothing, each later read scans its checkpoint in one job,
+    and a publish rebuilds it once, with the new rows. Where checkpoints
+    may not outlive frames, every read rebuilds."""
     import ella_spark.operators.drift as drift
 
     t = db.create_topic("jc", [Column("v", "float64"), Column("kind", "string")])
@@ -2619,45 +2619,43 @@ def test_kept_table_function_results_run_one_job(db, spark, monkeypatch):
 
     monkeypatch.setattr(drift, "psi_by_slice", building)
 
-    def read(sql):
+    def read():
         return _with_jobs(
-            spark, lambda: sorted((r.kind, r.n) for r in db.query(sql).df.collect())
+            spark,
+            lambda: sorted(
+                (r.kind, r.n)
+                for r in db.query("SELECT kind, n FROM jc_drift").df.collect()
+            ),
         )
 
-    for n, sql in enumerate((
-        "SELECT kind, n FROM jc_drift",
-        "SELECT kind, n FROM psi_drift('jc', 'v', 'kind', 4)",
-    )):
-        db._checkpoints_outlive_frames = False
-        builds.clear()
-        (rows, jobs), again = read(sql), read(sql)
-        assert len(builds) == 2 and again == (rows, jobs), sql
-        db._checkpoints_outlive_frames = True
-        builds.clear()
-        first, second, third = read(sql), read(sql), read(sql)
-        assert len(builds) == 1, sql
-        assert first[0] == second[0] == third[0] == rows, sql
-        assert first[1] <= jobs and second[1] == third[1] == 1, sql
-        with t.publish() as pub:
-            pub.write((100 + n) * 1_000, 9.0, "a")
-        builds.clear()
-        after, later = read(sql), read(sql)
-        assert len(builds) == 1, sql
-        assert after[0] == later[0] == [("a", 7 + n), ("b", 6)], sql
-        assert after[1] <= jobs and later[1] == 1, sql
+    db._checkpoints_outlive_frames = False
+    (rows, jobs), again = read(), read()
+    assert len(builds) == 2 and again == (rows, jobs)
+
+    db._checkpoints_outlive_frames = True
+    builds.clear()
+    first, second, third = read(), read(), read()
+    assert len(builds) == 1
+    assert first[0] == second[0] == third[0] == rows
+    assert first[1] <= jobs and second[1] == third[1] == 1
+
+    with t.publish() as pub:
+        pub.write(100_000, 9.0, "a")
+    builds.clear()
+    after, later = read(), read()
+    assert len(builds) == 1
+    assert after[0] == later[0] == [("a", 7), ("b", 6)]
+    assert after[1] <= jobs and later[1] == 1
 
 
-def test_concurrent_reads_of_kept_table_function_results(db, spark):
-    """Threads reading a table-function view and direct calls (more
-    distinct calls than the results kept) while another thread
-    publishes each get the rows of a version they could have bound,
-    never older than one they read before, and the kept results stay
-    within their cap."""
+def test_concurrent_reads_of_kept_table_function_views(db, spark):
+    """Threads reading table-function views (kept, and rebuilt after
+    each publish) and a direct call while another thread publishes
+    each get the rows of a version they could have bound, never older
+    than one they read before."""
     import sys
     import threading
     import time
-
-    from ella_spark.engine import _TVF_RESULT_CAP
 
     t = db.create_topic("cc", [Column("v", "float64"), Column("kind", "string")])
     with t.publish() as pub:
@@ -2665,9 +2663,11 @@ def test_concurrent_reads_of_kept_table_function_results(db, spark):
             pub.write(i * 1_000, float(i), "ab"[i % 2])
     db.create_view("cc_base", "SELECT * FROM cc")
     db.create_view("cc_drift", "SELECT * FROM psi_drift('cc_base', 'v', 'kind')")
-    statements = ["SELECT kind, n FROM cc_drift"] + [
-        f"SELECT kind, n FROM psi_drift('cc', 'v', 'kind', {b})"
-        for b in range(1, _TVF_RESULT_CAP + 2)
+    db.create_view("cc_drift4", "SELECT * FROM psi_drift('cc', 'v', 'kind', 4)")
+    statements = [
+        "SELECT kind, n FROM cc_drift",
+        "SELECT kind, n FROM cc_drift4",
+        "SELECT kind, n FROM psi_drift('cc', 'v', 'kind')",
     ]
     publishes = 4
     errors: list = []
@@ -2677,7 +2677,7 @@ def test_concurrent_reads_of_kept_table_function_results(db, spark):
         seen = 0
         try:
             for j in range(8):
-                sql = statements[(3 * k + j) % len(statements)]
+                sql = statements[(k + j) % len(statements)]
                 n = dict(tuple(r) for r in db.query(sql).df.collect())
                 # version i holds 4 + i rows of kind a and 4 of kind b
                 version = n["a"] - 4
@@ -2692,7 +2692,7 @@ def test_concurrent_reads_of_kept_table_function_results(db, spark):
         deadline = time.monotonic() + 240
         try:
             for i in range(publishes):
-                # publish between reads: some results are kept at each version
+                # publish between reads: some views are kept at each version
                 while len(got) < 6 * (i + 1) and not errors and time.monotonic() < deadline:
                     time.sleep(0.005)
                 with t.publish() as pub:
@@ -2714,7 +2714,6 @@ def test_concurrent_reads_of_kept_table_function_results(db, spark):
     assert not any(th.is_alive() for th in threads)
     assert errors == []
     assert len(got) == 4 * 8
-    assert len(db._tvf_results) <= _TVF_RESULT_CAP
     for sql in statements:
         n = dict(tuple(r) for r in db.query(sql).df.collect())
         assert n == {"a": 4 + publishes, "b": 4}, sql
