@@ -131,12 +131,6 @@ class _Reads(NamedTuple):
     relations: frozenset | None
 
 
-def _time_windows(spark, sql: str) -> dict[str, tuple[int | None, int | None]]:
-    """The ``time`` window each relation of ``sql`` needs: the
-    ``windows`` of ``_parse_reads``."""
-    return _parse_reads(spark, sql).windows
-
-
 def _parse_reads(spark, sql: str) -> _Reads:
     """What ``sql`` reads, from one parse by Spark's own parser, kept
     per session, text and session conf version (the parser follows
@@ -509,6 +503,17 @@ def _state_key(prefix: str, i: int) -> str:
     return prefix if i == 0 else f"{prefix}{i + 1}"
 
 
+def _cursor_state(tables: list[str], listings: list[list]) -> dict:
+    """refresh_state of a snapshot over ``tables`` (its row count is
+    added at commit): each FROM table's name and the basenames of the
+    shards the snapshot consumed."""
+    state = {}
+    for i, (name, shards) in enumerate(zip(tables, listings)):
+        state[_state_key("topic", i)] = name
+        state[_state_key("shards", i)] = [p.name for p in shards]
+    return state
+
+
 def _trim_log(entry: TableEntry, new_version: int) -> list:
     """Append (new_version, now_ns) to the MV's commit log, trimmed to
     the retention window — the map `FOR TIMESTAMP AS OF` resolves
@@ -564,11 +569,6 @@ class Ella:
         for ddl in self._SQL_COMPAT_FNS:
             spark.sql(ddl)
         self._register_all()
-
-    def _register_tvf_view(self, name: str) -> None:
-        """Track a TVF-rewrite temp view as pending: it must survive
-        until the statement that references it has been analyzed."""
-        self._tvf_views_pending.append(name)
 
     def _tvf_gc_flush(self) -> None:
         """Promote this instance's pending TVF views to the process-
@@ -630,7 +630,7 @@ class Ella:
                     res = tvf.op(self._frame_for(entry), *args)
                 view = f"__{tvf.name}_{next(_TVF_VIEW_SEQ)}"
                 res.createOrReplaceTempView(view)
-                self._register_tvf_view(view)
+                self._tvf_views_pending.append(view)
                 repls.append((m.start(), m.end(), view))
             sql = _splice_spans(sql, repls)
         return sql
@@ -723,7 +723,7 @@ class Ella:
         O(catalog).
 
         A topic is registered over the hull of the ``time`` windows
-        ``_time_windows`` finds for it in the statement and in every
+        ``_parse_reads`` finds for it in the statement and in every
         stored SQL visited (bucket and manifest pruning in
         ``Topic.read``), so a range query lists and opens only the
         shards its window touches; a topic any text reads unbounded, or
@@ -767,7 +767,12 @@ class Ella:
             self._view_name(e).lower(): e for e in order if e.kind == "topic"
         }
         windows = [
-            (tokens, _time_windows(self.spark, text) if topics.keys() & tokens else {})
+            (
+                tokens,
+                _parse_reads(self.spark, text).windows
+                if topics.keys() & tokens
+                else {},
+            )
             for text, tokens in texts
         ] + [(named, {})]
         bound: dict[tuple, DataFrame] = {}
@@ -1154,16 +1159,18 @@ class Ella:
     def refresh_materialized(self, name: str, incremental: bool = True) -> int:
         """Refresh a materialized view and return its snapshot row count.
 
-        Incremental when possible: for single-topic SPF / mergeable-
-        aggregate SQL (ella_spark/incremental.py) the refresh reads ONLY
-        the shards published since the last snapshot — the immutable
-        shard basenames are the cursor — and appends (SPF) or
-        partial-aggregates-and-merges (sum/count/min/max) into the next
-        snapshot. O(new data), not O(history): at 100 TB a rollup
-        refresh touches a day of shards, never the full fact table.
-        Compaction renames shards, which invalidates the cursor and
-        safely falls back to a full recompute, as does any SQL shape
-        the analyzer does not fully understand.
+        Incremental when possible: for SPF / mergeable-aggregate SQL
+        over one topic or an inner-join chain (ella_spark/incremental.py)
+        the refresh reads ONLY the shards published since the last
+        snapshot — the immutable shard basenames are the cursor — and
+        appends (SPF) or partial-aggregates-and-merges (each family of
+        ``incremental.FAMILIES``) into the next snapshot. O(new data),
+        not O(history): at 100 TB a rollup refresh touches a day of
+        shards, never the full fact table. Compaction renames shards,
+        which invalidates the cursor and safely falls back to a full
+        recompute, as does a topic schema change since the last
+        snapshot that changes the view's columns and any SQL shape the
+        analyzer does not fully understand.
         """
         from ella_spark.incremental import analyze_mv_sql
 
@@ -1187,10 +1194,7 @@ class Ella:
                 for i, t in enumerate(analysis.tables)
             )
         ):
-            if analysis.mode in ("spf_join", "agg_join"):
-                n = self._refresh_delta_join(entry, analysis, topics)
-            else:
-                n = self._refresh_delta(entry, analysis, topics[0])
+            n = self._refresh_delta(entry, analysis, topics)
             if n is not None:
                 return n
         return self._refresh_full(entry, analysis, topics)
@@ -1207,9 +1211,19 @@ class Ella:
             return Topic(self.store, entry)
         return None
 
-    def _commit_snapshot(self, entry: TableEntry, df: DataFrame, state) -> int:
+    def _commit_snapshot(
+        self, entry: TableEntry, df: DataFrame, state, append_to: int | None = None
+    ) -> int:
         """Write df as the next snapshot version, flip the catalog
-        pointer atomically, prune old versions. Returns row count."""
+        pointer atomically, prune old versions. Returns row count.
+
+        ``append_to`` (the current row count) makes it the O(delta) SPF
+        commit: the current version's files are hardlinked into v=N+1
+        (metadata-only on one filesystem; an object store would
+        server-side-copy), df is appended there and the recorded result
+        schema is kept. A crash before the flip leaves an orphan dir
+        that the next commit clears — never a half-visible snapshot and
+        never a double-applied delta."""
         import dataclasses
 
         from pyspark.sql import Observation
@@ -1217,20 +1231,33 @@ class Ella:
 
         new_version = entry.version + 1
         snap = self.store.table_path(entry) / f"v={new_version}"
+        if append_to is None:
+            schema = df.schema.json()
+        else:
+            if snap.exists():  # uncommitted orphan from a crash
+                shutil.rmtree(snap)
+            snap.mkdir(parents=True)
+            old_snap = self.store.table_path(entry) / f"v={entry.version}"
+            for f in old_snap.glob("*.parquet"):
+                try:
+                    os.link(f, snap / f.name)
+                except OSError:
+                    shutil.copy2(f, snap / f.name)
+            schema = entry.result_schema
         df = self._apply_mv_indexes(entry, df)
         obs = Observation()
         (
             df.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
+            .write.mode("overwrite" if append_to is None else "append")
             .parquet(str(snap))
         )
-        n = int(obs.get["n"])
+        n = (append_to or 0) + int(obs.get["n"])
         if state is not None:
             state = dict(state, rows=n)
         updated = dataclasses.replace(
             entry,
             version=new_version,
-            result_schema=df.schema.json(),
+            result_schema=schema,
             refresh_state=state,
             version_log=_trim_log(entry, new_version),
         )
@@ -1388,11 +1415,9 @@ class Ella:
         repaired by re-running against the post-compaction listing."""
         state = None
         if analysis is not None and topics:
-            state = {"rows": 0}
-            for i, (t, name) in enumerate(zip(topics, analysis.tables)):
-                shard_paths = t.shards()
-                state[_state_key("topic", i)] = name
-                state[_state_key("shards", i)] = [p.name for p in shard_paths]
+            listings = [t.shards() for t in topics]
+            state = _cursor_state(analysis.tables, listings)
+            for t, name, shard_paths in zip(topics, analysis.tables, listings):
                 t.read_files(self.spark, shard_paths).createOrReplaceTempView(
                     name
                 )
@@ -1519,65 +1544,6 @@ class Ella:
             }
         ).select(*analysis.out_cols, *analysis.hidden_cols)
 
-    def _refresh_delta(self, entry: TableEntry, analysis, topic) -> int | None:
-        """Delta refresh; None → caller falls back to full recompute."""
-        import dataclasses
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-
-        state = entry.refresh_state
-        current = topic.shards()
-        names = [p.name for p in current]
-        consumed = set(state["shards"])
-        if not consumed.issubset(names):
-            return None  # compaction rewrote consumed shards
-        delta = [p for p in current if p.name not in consumed]
-        if not delta:
-            return int(state["rows"])
-
-        new_state = {"topic": analysis.table, "shards": names, "rows": 0}
-        try:
-            topic.read_files(self.spark, delta).createOrReplaceTempView(
-                analysis.table
-            )
-            delta_df = self.spark.sql(analysis.hidden_sql or entry.sql)
-            if analysis.mode == "agg":
-                delta_df = self._attach_side_state(delta_df, analysis)
-            if analysis.mode == "spf":
-                # structural guard behind the regex analyzer: an
-                # aggregate the blacklist does not know must NEVER be
-                # treated as append-only — a partial per-delta result
-                # would silently corrupt the snapshot. The analyzed
-                # plan is ground truth; when it is not inspectable
-                # (Spark Connect has no _jdf), fail CLOSED to a full
-                # recompute rather than trust the regex alone.
-                try:
-                    plan = _jdf_qe(delta_df).analyzed().toString()
-                except Exception:
-                    return None
-                if "Aggregate" in plan:
-                    return None
-                return self._append_snapshot_version(
-                    entry, delta_df, new_state, int(state["rows"])
-                )
-            # mergeable aggregate: snapshot ∪ delta partials,
-            # re-aggregated. A snapshot written by an OLDER hidden-
-            # state layout (e.g. pre-Welford raw sums) fails the
-            # unionByName at analysis time — fall back to a full
-            # recompute, which rewrites the state in the new layout.
-            from pyspark.errors import AnalysisException
-
-            try:
-                return self._merge_agg_snapshot(
-                    entry, analysis, delta_df, new_state
-                )
-            except AnalysisException:
-                return None
-        finally:
-            self._register(topic.entry)
-
     def _merge_agg_snapshot(
         self, entry: TableEntry, analysis, delta_df: DataFrame, new_state: dict
     ) -> int:
@@ -1632,65 +1598,21 @@ class Ella:
         )
         return self._commit_snapshot(entry, merged, new_state)
 
-    def _append_snapshot_version(
-        self, entry: TableEntry, delta_df: DataFrame, new_state: dict, prev_rows: int
-    ) -> int:
-        """O(delta) SPF refresh WITH the old-or-new snapshot contract:
-        hardlink the current version's files into v=N+1 (metadata-only
-        on one filesystem; an object store would server-side-copy),
-        append the delta there, then flip the catalog pointer. A crash
-        before the flip leaves an orphan dir that the next refresh
-        clears — never a half-visible snapshot and never a
-        double-applied delta."""
-        import dataclasses
-        import os as _os
-        import shutil as _shutil
-
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        old_snap = self.store.table_path(entry) / f"v={entry.version}"
-        new_version = entry.version + 1
-        snap = self.store.table_path(entry) / f"v={new_version}"
-        if snap.exists():  # uncommitted orphan from a crash
-            _shutil.rmtree(snap)
-        snap.mkdir(parents=True)
-        for f in old_snap.glob("*.parquet"):
-            try:
-                _os.link(f, snap / f.name)
-            except OSError:
-                _shutil.copy2(f, snap / f.name)
-        obs = Observation()
-        (
-            self._apply_mv_indexes(entry, delta_df)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .parquet(str(snap))
-        )
-        total = prev_rows + int(obs.get["n"])
-        updated = dataclasses.replace(
-            entry,
-            version=new_version,
-            refresh_state=dict(new_state, rows=total),
-            version_log=_trim_log(entry, new_version),
-        )
-        self.store.put_table(updated, replace=True)
-        self._register(updated)
-        self._prune_versions(entry, new_version)
-        return total
-
-    def _refresh_delta_join(
+    def _refresh_delta(
         self, entry: TableEntry, analysis, topics: list
     ) -> int | None:
-        """Insert-only delta maintenance of an inner-join chain via the
-        leapfrog identity: Δ(T1 ⋈ … ⋈ Tn) = ⋃ᵢ old₁ ⋈ … ⋈ oldᵢ₋₁ ⋈ Δᵢ ⋈
-        curᵢ₊₁ ⋈ … ⋈ curₙ — an exact partition of the new result rows
-        (each new row is claimed by the FIRST position holding one of
-        its delta inputs), so the refresh never joins history against
-        history on all sides at once. None → full recompute."""
+        """Insert-only delta maintenance of one topic or an inner-join
+        chain via the leapfrog identity: Δ(T1 ⋈ … ⋈ Tn) = ⋃ᵢ old₁ ⋈ … ⋈
+        oldᵢ₋₁ ⋈ Δᵢ ⋈ curᵢ₊₁ ⋈ … ⋈ curₙ (ΔT for one topic) — an exact
+        partition of the new result rows (each new row is claimed by the
+        FIRST position holding one of its delta inputs), so the refresh
+        never joins history against history on all sides at once. SPF
+        rows append to the snapshot; aggregate partials merge with it.
+        None → full recompute."""
+        from pyspark.sql.types import StructType
+
         state = entry.refresh_state
-        n_tables = len(topics)
-        cur, consumed, deltas, olds = [], [], [], []
+        cur, deltas, olds = [], [], []
         for i, t in enumerate(topics):
             shards = t.shards()
             names = {p.name for p in shards}
@@ -1698,20 +1620,16 @@ class Ella:
             if not cons.issubset(names):
                 return None  # compaction/retention rewrote consumed shards
             cur.append(shards)
-            consumed.append(cons)
             deltas.append([p for p in shards if p.name not in cons])
             olds.append([p for p in shards if p.name in cons])
         if not any(deltas):
             return int(state["rows"])
 
-        new_state = {"rows": 0}
-        for i, name in enumerate(analysis.tables):
-            new_state[_state_key("topic", i)] = name
-            new_state[_state_key("shards", i)] = [p.name for p in cur[i]]
+        new_state = _cursor_state(analysis.tables, cur)
         sql = self._rewrite_reads(analysis.hidden_sql or entry.sql)
         try:
             terms = []
-            for i in range(n_tables):
+            for i in range(len(topics)):
                 if not deltas[i]:
                     continue
                 # positions before i: OLD only; i: its delta; after i:
@@ -1721,33 +1639,44 @@ class Ella:
                     t.read_files(self.spark, files).createOrReplaceTempView(
                         analysis.tables[j]
                     )
-                terms.append(self.spark.sql(sql))
+                terms.append(self._attach_side_state(self.spark.sql(sql), analysis))
             delta_df = terms[0]
             for t_df in terms[1:]:
                 delta_df = delta_df.unionByName(t_df)
-            if analysis.mode == "agg_join":
+            if analysis.mode in ("agg", "agg_join"):
                 # the delta terms arrive ALREADY partially aggregated
-                # by the SQL; merge with the snapshot like the
-                # single-topic agg mode (layout-mismatch fallback as
-                # in _refresh_delta)
-                from pyspark.errors import AnalysisException
-
+                # by the SQL: merge with the snapshot. A snapshot
+                # written by an OLDER hidden-state layout (e.g.
+                # pre-Welford raw sums) fails the unionByName at
+                # analysis time — fall back to a full recompute, which
+                # rewrites the state in the new layout.
                 try:
                     return self._merge_agg_snapshot(
                         entry, analysis, delta_df, new_state
                     )
                 except AnalysisException:
                     return None
-            # structural guard, same as the single-topic SPF path
-            # (fail closed when the plan is not inspectable — Connect)
+            # structural guard behind the regex analyzer: an aggregate
+            # the blacklist does not know must NEVER be treated as
+            # append-only — a partial per-delta result would silently
+            # corrupt the snapshot. The analyzed plan is ground truth;
+            # when it is not inspectable (Spark Connect has no _jdf),
+            # fail CLOSED to a full recompute rather than trust the
+            # regex alone.
             try:
                 plan = _jdf_qe(delta_df).analyzed().toString()
             except Exception:
                 return None
             if "Aggregate" in plan:
                 return None
-            return self._append_snapshot_version(
-                entry, delta_df, new_state, int(state["rows"])
+            # a topic schema change since the last snapshot (ALTER
+            # TABLE ADD/DROP COLUMN): the append keeps the recorded
+            # columns, so only a full recompute reads the new ones
+            recorded = StructType.fromJson(json.loads(entry.result_schema))
+            if _relax_nullability(delta_df.schema) != _relax_nullability(recorded):
+                return None
+            return self._commit_snapshot(
+                entry, delta_df, new_state, append_to=int(state["rows"])
             )
         finally:
             for t in topics:

@@ -97,12 +97,13 @@ _ANY_AGG = re.compile(
     r"count_min_sketch|bitmap_\w+|bloom_filter_agg|mode_agg)\s*\(",
     re.I,
 )
-# NOTE: this blacklist is the FIRST line of defense only. The delta
-# path additionally inspects the analyzed Spark plan of the bound
-# delta query and refuses SPF treatment if any Aggregate node appears
-# (engine._refresh_delta) — so an aggregate this regex does not know
-# can never silently append partial results; worst case is a full
-# recompute.
+# NOTE: this blacklist is the FIRST line of defense only. For an SPF
+# view over one topic or a join chain, the delta path additionally
+# inspects the analyzed Spark plan of the bound delta query
+# (engine.Ella._refresh_delta) and refuses the append if any Aggregate
+# node appears, or if the plan cannot be inspected (Spark Connect) —
+# so an aggregate this regex does not know can never silently append
+# partial results; worst case is a full recompute.
 
 _ALIASED = re.compile(r"^(?P<expr>.+?)\s+as\s+(?P<alias>[A-Za-z0-9_]+)$", re.I | re.S)
 

@@ -1550,7 +1550,12 @@ def test_time_window_registration_matches_whole_topic(db, monkeypatch):
         if bounded is not None:
             assert any(w != (None, None) for w in windows) == bounded, stmts
         with monkeypatch.context() as whole:
-            whole.setattr(engine, "_time_windows", lambda spark, sql: {})
+            parse = engine._parse_reads
+            whole.setattr(
+                engine,
+                "_parse_reads",
+                lambda spark, sql: parse(spark, sql)._replace(windows={}),
+            )
             want = rows(stmts, params)
         assert got and got == want, stmts
 

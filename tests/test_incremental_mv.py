@@ -1816,6 +1816,191 @@ def test_agg_join_mv_delta_merge(db, spark):
     assert got == exp
 
 
+def _schema_fields(result_schema: str) -> list:
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return [
+        (f.name, f.dataType.simpleString(), f.nullable)
+        for f in StructType.fromJson(json.loads(result_schema)).fields
+    ]
+
+
+#: view -> (analyzer mode, SQL)
+_DURABLE_VIEWS = {
+    "d_spf": (
+        "spf",
+        "SELECT time, k, v * 2 AS v2 FROM sa WHERE v >= 3",
+    ),
+    "d_agg": (
+        "agg",
+        "SELECT k, count(*) AS n, sum(v) AS s, min(v) AS lo, avg(v) AS m, "
+        "approx_percentile(v, 0.5) AS p50 FROM sa GROUP BY k",
+    ),
+    "d_spf3": (
+        "spf_join",
+        "SELECT sa.time AS ts, sa.v + sb.v + sc.v AS s FROM sa "
+        "JOIN sb ON sa.time = sb.time JOIN sc ON sb.time = sc.time",
+    ),
+    "d_aggj": (
+        "agg_join",
+        "SELECT sa.k AS k, count(*) AS n, sum(sb.v) AS total, "
+        "avg(sb.v) AS m FROM sa JOIN sb ON sa.time = sb.time GROUP BY sa.k",
+    ),
+}
+
+#: view -> the result schema committed at CREATE and at every delta
+#: commit: (name, type, nullable) per column and the sha256 of its JSON
+#: text. A merge relaxes the nullability of the counts; an SPF append
+#: keeps the schema recorded at CREATE.
+_DURABLE_SCHEMAS = {
+    "d_spf": 2 * [(
+        [("time", "bigint", True), ("k", "bigint", True), ("v2", "double", True)],
+        "20c559a2ab4160e18dcb887567c5d1e98cdd5fa00a9043a7511a7a5caef57433",
+    )],
+    "d_agg": [
+        (
+            [("k", "bigint", True), ("n", "bigint", False),
+             ("s", "double", True), ("lo", "double", True),
+             ("m", "double", True), ("p50", "double", True),
+             ("__mv_sum__m", "double", True), ("__mv_cnt__m", "bigint", False),
+             ("__mv_kll__p50", "array<array<double>>", True)],
+            "8df881890bff5a445c18c408b636045ec6a8a9882e3ad2b5615fd6da779dce29",
+        ),
+        (
+            [("k", "bigint", True), ("n", "bigint", True),
+             ("s", "double", True), ("lo", "double", True),
+             ("m", "double", True), ("p50", "double", True),
+             ("__mv_sum__m", "double", True), ("__mv_cnt__m", "bigint", True),
+             ("__mv_kll__p50", "array<array<double>>", True)],
+            "8a6c3166aa8dbe256a91d76e1f7ce6a0c776b82c3cd0b8b8ebf136e6b43e6432",
+        ),
+    ],
+    "d_spf3": 2 * [(
+        [("ts", "bigint", True), ("s", "double", True)],
+        "288e3739d7f6d9d30d1a97f48bc1ce3b75f31d077ffab107215f5c123462146d",
+    )],
+    "d_aggj": [
+        (
+            [("k", "bigint", True), ("n", "bigint", False),
+             ("total", "double", True), ("m", "double", True),
+             ("__mv_sum__m", "double", True), ("__mv_cnt__m", "bigint", False)],
+            "9a1e880f1672498621d2cb030f40a6d0b37be6498b1ae0de84e30e6131f8c08e",
+        ),
+        (
+            [("k", "bigint", True), ("n", "bigint", True),
+             ("total", "double", True), ("m", "double", True),
+             ("__mv_sum__m", "double", True), ("__mv_cnt__m", "bigint", True)],
+            "1a0c5312c8887c88236493f1301661fea519c54cbec806c866980e9c279f3398",
+        ),
+    ],
+}
+
+
+def test_delta_commit_durable_state(db, spark, monkeypatch):
+    """What a delta commit writes to the catalog, for every delta mode
+    (SPF, agg with a side-query family, a 3-topic SPF join chain and
+    an aggregate over a join): after CREATE and two publish+refresh
+    steps, each entry holds the next version, a cursor naming every
+    input topic with its whole current shard listing, the row count
+    and the pinned result schema, its rows equal the view's SQL over
+    all rows, and only CREATE ran a full recompute. Roots written by
+    one release must keep refreshing incrementally under the next."""
+    import hashlib
+
+    from ella_spark.engine import _state_key
+
+    fulls = []
+    real_full = Ella._refresh_full
+
+    def spy_full(self, entry, *a, **kw):
+        fulls.append(entry.name)
+        return real_full(self, entry, *a, **kw)
+
+    monkeypatch.setattr(Ella, "_refresh_full", spy_full)
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id * 1000 AS time", "id % 3 AS k", "CAST(id AS double) AS v"
+    )
+    topics = {}
+    for name, n in (("sa", 20), ("sb", 15), ("sc", 12)):
+        topics[name] = db.create_topic(
+            name, [Column("k", "int64"), Column("v", "float64")]
+        )
+        topics[name].insert(mk(0, n))
+    for name, (mode, sql) in _DURABLE_VIEWS.items():
+        assert analyze_mv_sql(sql).mode == mode, name
+        db.create_materialized_view(name, sql)
+    assert sorted(fulls) == sorted(_DURABLE_VIEWS)
+    fulls.clear()
+
+    def check(step: int, counts: dict) -> None:
+        for name, (_, sql) in _DURABLE_VIEWS.items():
+            entry = db.store.resolve(name)
+            rows = db.query(f"SELECT * FROM {name}").df.collect()
+            assert _normalize_rows(rows) == _normalize_rows(
+                spark.sql(sql).collect()
+            ), (name, step)
+            assert counts.get(name, len(rows)) == len(rows), (name, step)
+            assert entry.version == step + 1, (name, step)
+            want = {"rows": len(rows)}
+            for i, t in enumerate(analyze_mv_sql(sql).tables):
+                want[_state_key("topic", i)] = t
+                want[_state_key("shards", i)] = [
+                    p.name for p in topics[t].shards()
+                ]
+            assert entry.refresh_state == want, (name, step)
+            got = (
+                _schema_fields(entry.result_schema),
+                hashlib.sha256(entry.result_schema.encode()).hexdigest(),
+            )
+            assert got == _DURABLE_SCHEMAS[name][min(step, 1)], (name, step)
+
+    check(0, {})
+    for step, inserts in enumerate(
+        ({"sa": (20, 30), "sb": (15, 25)}, {"sa": (30, 36), "sb": (25, 32), "sc": (12, 28)}),
+        start=1,
+    ):
+        for t, (lo, hi) in inserts.items():
+            topics[t].insert(mk(lo, hi))
+        counts = {name: db.refresh_materialized(name) for name in _DURABLE_VIEWS}
+        check(step, counts)
+    assert fulls == []
+
+
+@pytest.mark.parametrize("alter", ["ADD COLUMN w bigint", "DROP COLUMN v"])
+def test_spf_delta_after_alter_matches_full(db, spark, alter):
+    """A topic schema change between two refreshes of an SPF view (one
+    topic, and a join of two) makes the next refresh equal a full
+    recompute: an added column appears with its published values and
+    NULL in older rows, a dropped column disappears."""
+    views = {
+        "m1": "SELECT * FROM t",
+        "m2": "SELECT a.*, b.v AS bv FROM a JOIN b ON a.time = b.time",
+    }
+    for name in ("t", "a", "b"):
+        with db.create_topic(name, [Column("v", "int64")]).publish() as p:
+            p.write(1, 10)
+            p.write(2, 20)
+    for name, sql in views.items():
+        db.create_materialized_view(name, sql)
+    db.query(f"ALTER TABLE t {alter}")
+    db.query(f"ALTER TABLE a {alter}")
+    for name in ("t", "a", "b"):
+        with db.topic(name).publish() as p:
+            p.write(*(3, 30, 300)[: len(p.columns)])
+
+    def read(name):
+        df = db.query(f"SELECT * FROM {name}").df
+        return df.columns, sorted(map(tuple, df.collect()), key=repr)
+
+    for name in views:
+        db.refresh_materialized(name)
+        delta = read(name)
+        db.refresh_materialized(name, incremental=False)
+        assert delta == read(name), name
+
+
 def test_mv_randomized_family_equivalence(db, spark):
     """Randomized delta-vs-direct equivalence across the mergeable
     families: a random subset of aggregates, random grouping, random
