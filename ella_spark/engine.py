@@ -11,7 +11,6 @@ so the full Spark SQL surface (the DataFusion-27 superset, SURVEY.md
 from __future__ import annotations
 
 import collections
-import itertools
 import json
 import operator
 import os
@@ -19,7 +18,6 @@ import re
 import shutil
 import time
 import uuid
-import weakref
 from dataclasses import dataclass
 from functools import cached_property
 from pathlib import Path
@@ -37,7 +35,7 @@ from ella_spark.catalog import (
 from ella_spark.lazy import Lazy
 from ella_spark.session import conf_version
 from ella_spark.topic import Publisher, Topic
-from ella_spark.tvf import TVFS, own_tables_blanked
+from ella_spark.tvf import TVFS, Tvf, own_tables_blanked
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
 
 #: SQL type name -> ella dtype (ella dtype names pass through)
@@ -342,41 +340,6 @@ def _hull(windows) -> tuple:
     return (None if None in los else min(los), None if None in his else max(his))
 
 
-#: monotonic suffix for TVF-rewrite temp views. The Spark session is
-#: shared (two Ella instances, or concurrent Lazy reads, may rewrite
-#: at once), so fixed per-statement names like ``__psi_drift_0`` can
-#: be clobbered between createOrReplaceTempView and analysis; a
-#: process-unique counter makes every rewrite's view name fresh.
-_TVF_VIEW_SEQ = itertools.count()
-
-#: bounded GC for TVF-rewrite views: unique names fix the clobbering
-#: race but would otherwise LEAK one temp view per rewrite in
-#: long-lived sessions (a drift dashboard polled each minute = 1440+
-#: catalog entries/day, ann_search views additionally pinning
-#: driver-collected query batches). Dropping is safe once the
-#: surrounding statement has been ANALYZED — spark.sql() resolves the
-#: view into the plan eagerly, and execution never re-consults the
-#: catalog. Design (r9 ADVICE + round-10 self-review):
-#:   - pending views live on the OWNING Ella instance until that
-#:     instance starts its next TOP-LEVEL rewrite batch (a depth
-#:     guard in _apply_tvf_rewrites keeps nested rewrites — a view
-#:     entry resolved via _frame_for mid-batch — from flushing the
-#:     outer statement's pending views early), so a statement with
-#:     more TVF matches than the cap can never evict a view it has
-#:     not yet analyzed;
-#:   - ANALYZED views move to ONE process-wide live window of
-#:     (session, name) pairs, so the total catalog footprint stays
-#:     bounded at the cap regardless of how many Ella instances churn
-#:     on the session, and each entry is dropped via ITS OWN session
-#:     handle (the r9 bug was a global deque of bare names dropping
-#:     through whichever session triggered eviction).
-_TVF_VIEW_CAP = 64
-#: (weakref.ref(session), view_name) pairs — weak so an entry never
-#: keeps a stopped session's JVM handles alive while it waits for
-#: eviction (ADVICE r10)
-_TVF_VIEW_LIVE: "collections.deque[tuple[object, str]]" = collections.deque()
-
-
 def _relax_nullability(dt):
     """The same value type with every containsNull / valueContainsNull /
     struct-field nullable flag forced TRUE. Spark refuses a cast from a
@@ -406,16 +369,19 @@ def _relax_nullability(dt):
 
 
 def _splice_spans(sql: str, repls: list[tuple[int, int, str]]) -> str:
-    """Replace [start, end) spans of ``sql`` with view names, left to
-    right. Span-based (not str.replace) so identical text inside
-    string literals or repeated calls is never rewritten by accident."""
+    """``sql`` with each [start, end) span, left to right, replaced by
+    a ``{name}`` placeholder and every other brace doubled, so the
+    ``str.format`` that ``spark.sql`` runs over a text with DataFrame
+    arguments gives the rest back verbatim. Span-based (not
+    str.replace), so identical text elsewhere, such as inside a string
+    literal, is never replaced."""
     out: list[str] = []
     last = 0
-    for start, end, text in repls:
-        out.append(sql[last:start])
-        out.append(text)
+    for start, end, name in repls:
+        out.append(sql[last:start].replace("{", "{{").replace("}", "}}"))
+        out.append("{" + name + "}")
         last = end
-    out.append(sql[last:])
+    out.append(sql[last:].replace("{", "{{").replace("}", "}}"))
     return "".join(out)
 
 
@@ -427,9 +393,12 @@ def _splice_spans(sql: str, repls: list[tuple[int, int, str]]) -> str:
 _VERSION_ASOF_RE = re.compile(
     r"([A-Za-z0-9_.]+)\s+FOR\s+VERSION\s+AS\s+OF\s+(\d+)", re.I
 )
-#: single-quoted SQL string literal ('' = escaped quote) — spans the
-#: version-asof rewrite must never touch
-_SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
+#: text ``_rewrite_reads`` never replaces: a quoted SQL string literal
+#: (a backslash escapes the next character; `'it''s'` is two adjacent
+#: literals) or a comment
+_SQL_VERBATIM_RE = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|--[^\n]*|/\*.*?\*/", re.S
+)
 #: `<mv> FOR TIMESTAMP AS OF '<iso>'|<epoch_ns>` — resolved to the
 #: newest version committed at-or-before the bound via version_log
 _TIMESTAMP_ASOF_RE = re.compile(
@@ -548,11 +517,6 @@ class Ella:
     def __init__(self, store: CatalogStore, spark: SparkSession):
         self.store = store
         self.spark = spark
-        # TVF-rewrite view GC (see _TVF_VIEW_CAP comment): views made
-        # by THIS instance's rewrites, pending until their statement
-        # is analyzed, then promoted to the process-wide live window.
-        self._tvf_views_pending: list[str] = []
-        self._tvf_rewrite_depth = 0
         #: ident -> (stamp, input frames, frame) of each view and
         #: refreshed materialized view a statement bound (_bound_frame)
         self._frames: dict[tuple, tuple] = {}
@@ -569,71 +533,6 @@ class Ella:
         for ddl in self._SQL_COMPAT_FNS:
             spark.sql(ddl)
         self._register_all()
-
-    def _tvf_gc_flush(self) -> None:
-        """Promote this instance's pending TVF views to the process-
-        wide live window and evict past the cap. Called at the START
-        of each TOP-LEVEL rewrite batch — any previously-pending
-        view's statement has been analyzed by then (spark.sql
-        resolves views into the plan eagerly), so dropping the oldest
-        live names can never break an in-flight statement, and a
-        single statement with >cap TVF matches keeps all of its own
-        views pending until the next batch. Live entries carry their
-        owning session, so eviction triggered by one instance drops
-        another instance's (analyzed) view via the RIGHT session."""
-        # weakref so a live-window entry never keeps a STOPPED
-        # session (and its JVM handles) alive until 64 newer views
-        # evict it (ADVICE r10) — a dead ref just skips the drop
-        _TVF_VIEW_LIVE.extend(
-            (weakref.ref(self.spark), n) for n in self._tvf_views_pending
-        )
-        self._tvf_views_pending.clear()
-        while len(_TVF_VIEW_LIVE) > _TVF_VIEW_CAP:
-            session_ref, old = _TVF_VIEW_LIVE.popleft()
-            session = session_ref()
-            if session is None:
-                continue  # session garbage-collected — view died with it
-            try:
-                session.catalog.dropTempView(old)
-            except Exception:
-                pass  # session stopped / already dropped
-
-    def _apply_tvf_rewrites(self, sql: str) -> str:
-        """Run every table-valued-function rewrite that matches. One
-        dispatch point so the GC flush precedes each TOP-LEVEL batch
-        exactly once. The depth guard matters: rewrites resolve their
-        table argument via _frame_for, which for a stored-VIEW entry
-        re-enters this method — a nested flush would promote (and
-        possibly evict) the OUTER statement's still-unanalyzed views."""
-        if self._tvf_rewrite_depth == 0:
-            self._tvf_gc_flush()
-        self._tvf_rewrite_depth += 1
-        try:
-            return self._apply_tvf_rewrites_inner(sql)
-        finally:
-            self._tvf_rewrite_depth -= 1
-
-    def _apply_tvf_rewrites_inner(self, sql: str) -> str:
-        """One pass per entry of the SQL table-function table, in its
-        order: each call becomes a fresh temp view (tvf.py)."""
-        for tvf in TVFS:
-            repls = []
-            for m in tvf.pattern.finditer(sql):
-                table, *args = m.groups()
-                if tvf.reads_table:
-                    res = tvf.op(self, table, *tvf.bind(*args))
-                else:
-                    entry = self.store.resolve(table)
-                    if entry is None:
-                        raise ValueError(f"{tvf.name}: unknown table {table!r}")
-                    args = tvf.bind(*args)
-                    res = tvf.op(self._frame_for(entry), *args)
-                view = f"__{tvf.name}_{next(_TVF_VIEW_SEQ)}"
-                res.createOrReplaceTempView(view)
-                self._tvf_views_pending.append(view)
-                repls.append((m.start(), m.end(), view))
-            sql = _splice_spans(sql, repls)
-        return sql
 
     # -- open/create (ella/src/lib.rs:86-105) --------------------------------
 
@@ -896,7 +795,7 @@ class Ella:
                 df = df.drop(*[c for c in df.columns if c.startswith("__mv_")])
             return df
         # view, or a materialized view before its first refresh
-        return self.spark.sql(self._rewrite_reads(entry.sql))
+        return self._sql(entry.sql)
 
     def _unregister(self, entry: TableEntry) -> None:
         self._frames.pop(entry.ident, None)
@@ -1314,71 +1213,27 @@ class Ella:
             name, self.resolve_mv_version_asof(name, ts_ns)
         )
 
-    def _rewrite_version_asof(self, sql: str) -> str:
-        """Substitute every `<mv> FOR VERSION AS OF <n>` with a temp
-        view over that retained snapshot (re-applied at every read, so
-        stored view SQL keeps the durable time-travel text).
-        Single-quoted string literals are masked first — `'mv FOR
-        VERSION AS OF 1'` is data, not time travel."""
+    def _version_asof(self, m: re.Match) -> int:
+        """The MV version a `FOR VERSION|TIMESTAMP AS OF` match reads."""
+        ident, bound = m.groups()
+        if m.re is _VERSION_ASOF_RE:
+            return int(bound)
+        if bound.startswith("'"):
+            from datetime import datetime, timezone
 
-        def version_at(ident: str, bound: str) -> int:
-            if bound.startswith("'"):
-                from datetime import datetime, timezone
-
-                dt = datetime.fromisoformat(bound.strip("'"))
-                if dt.tzinfo is None:
-                    dt = dt.replace(tzinfo=timezone.utc)
-                # integer epoch-ns: float timestamp()*1e9 rounds above
-                # 2^53 and could land a few hundred ns off the bound
-                delta = dt - datetime(1970, 1, 1, tzinfo=timezone.utc)
-                ts_ns = (
-                    (delta.days * 86_400 + delta.seconds) * 10**9
-                    + delta.microseconds * 1_000
-                )
-            else:
-                ts_ns = int(bound)
-            return self.resolve_mv_version_asof(ident, ts_ns)
-
-        def _sub(m: re.Match, version_of: Callable[[str, str], int]) -> str:
-            ident = m.group(1)
-            entry = self.store.tables.get(self._split(ident))
-            if entry is None or entry.kind != "materialized_view":
-                # not an MV (e.g. the token sequence inside a string
-                # literal): leave the text for Spark to parse
-                return m.group(0)
-            version = version_of(ident, m.group(2))
-            view = f"__mv_asof_{ident.replace('.', '_')}_{version}"
-            self.read_mv_version(ident, version).createOrReplaceTempView(view)
-            return view
-
-        # One left-to-right scan over string literals and both
-        # time-travel patterns: the EARLIEST match at each position
-        # wins. A literal containing the token sequence (`SELECT 'mv
-        # FOR TIMESTAMP AS OF 123'`) starts at its opening quote —
-        # before the ident — so it is skipped whole; a real `mv FOR
-        # TIMESTAMP AS OF '<iso>'` starts at the ident — before its
-        # quoted bound — so the bound is consumed as part of the
-        # match instead of masking the rewrite away.
-        out: list[str] = []
-        pos = 0
-        while pos < len(sql):
-            cands = []
-            for rx, fn in (
-                (_SQL_STRING_RE, None),
-                (_TIMESTAMP_ASOF_RE, version_at),
-                (_VERSION_ASOF_RE, lambda ident, version: int(version)),
-            ):
-                m = rx.search(sql, pos)
-                if m is not None:
-                    cands.append((m.start(), len(cands), m, fn))
-            if not cands:
-                break
-            _, _, m, fn = min(cands)
-            out.append(sql[pos : m.start()])
-            out.append(m.group(0) if fn is None else _sub(m, fn))
-            pos = m.end()
-        out.append(sql[pos:])
-        return "".join(out)
+            dt = datetime.fromisoformat(bound.strip("'"))
+            if dt.tzinfo is None:
+                dt = dt.replace(tzinfo=timezone.utc)
+            # integer epoch-ns: float timestamp()*1e9 rounds above
+            # 2^53 and could land a few hundred ns off the bound
+            delta = dt - datetime(1970, 1, 1, tzinfo=timezone.utc)
+            ts_ns = (
+                (delta.days * 86_400 + delta.seconds) * 10**9
+                + delta.microseconds * 1_000
+            )
+        else:
+            ts_ns = int(bound)
+        return self.resolve_mv_version_asof(ident, ts_ns)
 
     def _prune_versions(self, entry: TableEntry, new_version: int) -> None:
         """Drop snapshot dirs older than the retention window
@@ -1422,7 +1277,6 @@ class Ella:
                     name
                 )
         try:
-            sql = self._rewrite_reads(entry.sql)
             if analysis is not None and topics and analysis.hidden_sql:
                 try:
                     df = self._with_visible(entry.sql, analysis)
@@ -1435,11 +1289,11 @@ class Ella:
                     # MV instead of failing CREATE. Runtime errors
                     # (transient executor/IO failures) propagate: a
                     # retry must keep the incremental state.
-                    df = self.spark.sql(sql)
+                    df = self._sql(entry.sql)
                     state = None
                     analysis = None
             else:
-                df = self.spark.sql(sql)
+                df = self._sql(entry.sql)
             self._check_reserved_aliases(df, analysis)
             n = self._commit_snapshot(entry, df, state)
         finally:
@@ -1626,7 +1480,9 @@ class Ella:
             return int(state["rows"])
 
         new_state = _cursor_state(analysis.tables, cur)
-        sql = self._rewrite_reads(analysis.hidden_sql or entry.sql)
+        # rewritten once: each term's spark.sql binds the same frames
+        # and resolves the topic names as re-pointed for that term
+        text, frames = self._rewrite_reads(analysis.hidden_sql or entry.sql)
         try:
             terms = []
             for i in range(len(topics)):
@@ -1639,7 +1495,8 @@ class Ella:
                     t.read_files(self.spark, files).createOrReplaceTempView(
                         analysis.tables[j]
                     )
-                terms.append(self._attach_side_state(self.spark.sql(sql), analysis))
+                df = self.spark.sql(text, **frames)
+                terms.append(self._attach_side_state(df, analysis))
             delta_df = terms[0]
             for t_df in terms[1:]:
                 delta_df = delta_df.unionByName(t_df)
@@ -1815,10 +1672,12 @@ class Ella:
         name sees what that name's last registration covered: for a
         topic, only the window of the last statement that referenced it.
 
-        Every read runs through ``_rewrite_reads`` (information_schema,
-        table functions, time travel), and the returned Lazy keeps the
-        text from before it: a view or MV created from the Lazy, like
-        one created by ``CREATE VIEW``, stores the durable text.
+        Every read runs through ``_sql``: Spark gets the text with each
+        ``information_schema`` name, table-function call and time-travel
+        read passed as a DataFrame argument (``_rewrite_reads``), so no
+        read leaves a view in the session catalog. The returned Lazy
+        keeps the text as written: a view or MV created from the Lazy,
+        like one created by ``CREATE VIEW``, stores the durable text.
 
         ``now()`` is substituted once per statement with the current
         epoch-ns, so ``WHERE time < now()`` is the reference's bounded
@@ -1843,59 +1702,110 @@ class Ella:
             out = self.spark.createDataFrame(rows, verb.result)
         return Lazy(out, engine=self, sql=sql)
 
-    def _rewrite_reads(self, sql: str) -> str:
-        """The text Spark runs for a read: ``information_schema``
-        names, table-function calls and time travel become temp views.
-        Stored view/MV SQL keeps the durable text and is rewritten at
-        every read, so no session-scoped view name is ever persisted."""
-        if _INFO_SCHEMA_RE.search(sql):
-            sql = self._register_information_schema(sql)
-        sql = self._apply_tvf_rewrites(sql)
-        if _VERSION_ASOF_RE.search(sql) or _TIMESTAMP_ASOF_RE.search(sql):
-            sql = self._rewrite_version_asof(sql)
-        return sql
+    def _sql(self, sql: str, params: dict | list | None = None) -> DataFrame:
+        """Run a read: ``spark.sql`` over ``sql`` as ``_rewrite_reads``
+        splits it, with ``params`` bound to its parameter markers."""
+        text, frames = self._rewrite_reads(sql)
+        return self.spark.sql(text, args=params, **frames)
 
-    def _register_information_schema(self, sql: str) -> str:
-        """information_schema.tables / .columns over the catalog store.
+    def _rewrite_reads(self, sql: str) -> tuple[str, dict[str, DataFrame]]:
+        """The text and DataFrame arguments ``spark.sql`` runs for a
+        read. Each ``information_schema`` name, table-function call and
+        time-travel read of a materialized view becomes a ``{name}``
+        placeholder for its frame. ``spark.sql`` gives each frame a temp
+        view for the length of the call (Spark Connect inlines it), so
+        no read leaves a name in the session catalog. With no frame the
+        text is ``sql`` itself; with frames every other brace is
+        doubled (``_splice_spans``). Stored view/MV SQL keeps the
+        durable text and is rewritten at every read.
+
+        One left-to-right scan finds the spans, the earliest match at
+        each position winning, and skips string literals and comments
+        whole: a literal spelling a call or `mv FOR TIMESTAMP AS OF 123`
+        starts at its quote, before the name, while a real `mv FOR
+        TIMESTAMP AS OF '<iso>'` starts at the name, before its quoted
+        bound. The frames are built ``information_schema`` first, then
+        the table functions in table order, then time travel, so the
+        first function's error wins whatever the text order."""
+        tvfs = {t.pattern: t for t in TVFS}
+        rules = (
+            _SQL_VERBATIM_RE, _INFO_SCHEMA_RE, *tvfs, _TIMESTAMP_ASOF_RE, _VERSION_ASOF_RE
+        )
+        #: (build rank, match, placeholder label), in text order
+        found: list[tuple[int, re.Match, str]] = []
+        nxt = [rx.search(sql) for rx in rules]
+        while any(nxt):
+            _, rank, m = min((m.start(), i, m) for i, m in enumerate(nxt) if m)
+            if m.re in tvfs:
+                found.append((rank, m, tvfs[m.re].name))
+            elif m.re is _INFO_SCHEMA_RE:
+                found.append((rank, m, f"information_schema_{m[1].lower()}"))
+            elif m.re is not _SQL_VERBATIM_RE:
+                entry = self.store.tables.get(self._split(m[1]))
+                # anything but a materialized view is left for Spark
+                if entry is not None and entry.kind == "materialized_view":
+                    found.append((len(rules), m, m[1].replace(".", "_")))
+            nxt = [
+                n if n is None or n.start() >= m.end() else rx.search(sql, m.end())
+                for rx, n in zip(rules, nxt)
+            ]
+        names = [f"{label}_{k}" for k, (_, _, label) in enumerate(found)]
+        frames = {}
+        for k in sorted(range(len(found)), key=lambda k: found[k][0]):
+            m = found[k][1]
+            frames[names[k]] = self._read_frame(m, tvfs.get(m.re))
+        if not frames:
+            return sql, frames
+        spans = [(m.start(), m.end(), n) for (_, m, _), n in zip(found, names)]
+        return _splice_spans(sql, spans), frames
+
+    def _read_frame(self, m: re.Match, tvf: Tvf | None) -> DataFrame:
+        """The frame of one ``_rewrite_reads`` span: the call of ``tvf``,
+        an ``information_schema`` table or a materialized-view version."""
+        if m.re is _INFO_SCHEMA_RE:
+            return self._information_schema(m[1].lower())
+        if tvf is None:
+            return self.read_mv_version(m[1], self._version_asof(m))
+        table, *args = m.groups()
+        if tvf.reads_table:
+            return tvf.op(self, table, *tvf.bind(*args))
+        entry = self.store.resolve(table)
+        if entry is None:
+            raise ValueError(f"{tvf.name}: unknown table {table!r}")
+        args = tvf.bind(*args)
+        return tvf.op(self._frame_for(entry), *args)
+
+    def _information_schema(self, table: str) -> DataFrame:
+        """information_schema.tables or .columns over the catalog store.
 
         The reference builds its SessionState with
         ``with_information_schema(true)`` (ella-engine/src/engine/
         state.rs:115-133), so ``SELECT * FROM information_schema.tables``
         works out of the box there. Spark has no information_schema;
-        the ANSI-shaped views are materialized from the catalog store
-        at query time (tiny — catalog metadata, never data) and the
-        statement is rewritten to reference them.
+        the ANSI-shaped frame is built from the catalog store at query
+        time (tiny — catalog metadata, never data).
         """
         entries = sorted(self.store.tables.values(), key=lambda e: e.ident)
-        kind_to_type = {"topic": "BASE TABLE", "external": "BASE TABLE",
-                        "view": "VIEW",
-                        "materialized_view": "VIEW"}
-        tables = [
-            (e.catalog, e.schema, e.name, kind_to_type.get(e.kind, e.kind.upper()))
-            for e in entries
-        ]
-        columns = [
+        key = "table_catalog string, table_schema string, table_name string, "
+        if table == "tables":
+            kind_to_type = {"topic": "BASE TABLE", "external": "BASE TABLE",
+                            "view": "VIEW",
+                            "materialized_view": "VIEW"}
+            rows = [
+                (e.catalog, e.schema, e.name, kind_to_type.get(e.kind, e.kind.upper()))
+                for e in entries
+            ]
+            return self.spark.createDataFrame(rows, key + "table_type string")
+        rows = [
             (e.catalog, e.schema, e.name, c.name, i + 1,
              "NO" if c.required else "YES", c.dtype)
             for e in entries
             for i, c in enumerate(e.columns)
         ]
-        for name, rows, schema in (
-            ("tables", tables, "table_type string"),
-            (
-                "columns",
-                columns,
-                "column_name string, ordinal_position int, "
-                "is_nullable string, data_type string",
-            ),
-        ):
-            self.spark.createDataFrame(
-                rows,
-                "table_catalog string, table_schema string, table_name string, "
-                + schema,
-            ).createOrReplaceTempView(f"__information_schema_{name}")
-        return _INFO_SCHEMA_RE.sub(
-            lambda m: f"__information_schema_{m.group(1).lower()}", sql
+        return self.spark.createDataFrame(
+            rows,
+            key + "column_name string, ordinal_position int, "
+            "is_nullable string, data_type string",
         )
 
     # -- SQL statements (LocalBackend::stream parity, lazy/backend.rs:66-161) --
@@ -1935,7 +1845,7 @@ class Ella:
                     f"{existing.kind} with that name already exists"
                 )
             return 0
-        df = self.spark.sql(self._rewrite_reads(m[3].strip()))
+        df = self._sql(m[3].strip())
         if TIME_COLUMN not in df.columns:
             raise ValueError(
                 "CREATE TOPIC ... AS SELECT requires the SELECT to "
@@ -2081,7 +1991,7 @@ class Ella:
         reference inherits `EXPLAIN [ANALYZE] <query>` from DataFusion's
         SessionState). ANALYZE executes the query first so the reported
         physical plan is the AQE-final one."""
-        df = self.spark.sql(self._rewrite_reads(m[2]), args=params)
+        df = self._sql(m[2], params)
         try:
             qe = _jdf_qe(df)
             logical = qe.optimizedPlan().toString()
@@ -2138,7 +2048,7 @@ class Ella:
         if entry.kind == "external":
             fields = self._external_frame(entry).schema.fields
         else:  # view: describe the resolved plan's schema
-            fields = self.spark.sql(self._rewrite_reads(entry.sql)).schema.fields
+            fields = self._sql(entry.sql).schema.fields
         return [(f.name, f.dataType.simpleString(), f.nullable) for f in fields]
 
     def _insert(self, m: re.Match, params) -> int:
@@ -2147,7 +2057,7 @@ class Ella:
         reference's DataSink path, topic.rs:205-213 via InsertExec) and
         returns the reference's row count."""
         topic = self.topic(m[1])
-        src = self.spark.sql(self._rewrite_reads(m[2]), args=params)
+        src = self._sql(m[2], params)
         names = [c.name for c in topic.entry.columns]
         if len(src.columns) == len(names) - 1:
             # time omitted: auto-fill now() like the publisher
@@ -2286,9 +2196,7 @@ class Ella:
         ),
         _Verb(
             "",
-            lambda db, m, params: db.spark.sql(
-                db._rewrite_reads(m.string), args=params
-            ),
+            lambda db, m, params: db._sql(m.string, params),
             None,
             params=True,
             reads=True,

@@ -1,10 +1,10 @@
 """SQL table functions (TVFs): one table drives every rewrite.
 
 A call such as ``psi_drift('events', 'value', 'kind')`` in a statement
-is replaced by the name of a temp view over its entry's operator
-applied to the named catalog object, so the statement around it stays
-ordinary Spark SQL (``Ella._apply_tvf_rewrites``). Every entry shares
-one contract:
+is replaced by a placeholder for its entry's operator applied to the
+named catalog object, and that frame goes to ``spark.sql`` as a
+DataFrame argument, so the statement around it stays ordinary Spark
+SQL (``Ella._rewrite_reads``). Every entry shares one contract:
 
 - Stored views and materialized views keep the durable call text and
   rewrite it again whenever their frame is rebuilt (``Ella._frame_for``;
@@ -19,11 +19,10 @@ one contract:
   ``reads_table`` are never kept; off a local master every read
   computes it again, and so does every call written directly in a
   statement.
-- Every call gets its own view, ``__<name>_<n>`` from one process-wide
-  counter, so statements sharing a session never clobber each other's
-  view between its creation and the statement's analysis.
-- Those views are dropped in a bounded window once the statement that
-  references them has been analyzed (``engine._TVF_VIEW_CAP``).
+- Every call gets its own frame. ``spark.sql`` gives it a temp view
+  of a fresh name for the length of that one call and drops it after
+  (Spark Connect inlines it instead), so statements sharing a session
+  never bind each other's result and no read leaves a view behind.
 
 A call is ``<name>(`` right after a word boundary, then the quoted
 table argument and the entry's argument shapes, separated by commas

@@ -306,12 +306,12 @@ def test_mutual_information_properties(spark, tmp_path):
 
 
 def test_tvf_rewrite_views_are_unique_and_span_spliced(spark, tmp_path):
-    """Regression (r9 ADVICE): TVF rewrites must not reuse fixed view
-    names across statements (a shared Spark session means two Ella
-    instances — or two Lazy reads of stored drift views — can race
-    between createOrReplaceTempView and analysis), and substitution
-    must be span-based so identical text inside a string literal is
-    never rewritten."""
+    """Regression (r9 ADVICE): every table-function call in a read gets
+    its own frame, passed to ``spark.sql`` as a DataFrame argument, so
+    two statements sharing a session (two Ella instances, or two Lazy
+    reads of stored drift views) never bind each other's result, and
+    substitution is span-based so identical text inside a string
+    literal is never rewritten."""
     from ella_spark import Column, Ella
     from ella_spark.engine import _splice_spans
 
@@ -325,48 +325,40 @@ def test_tvf_rewrite_views_are_unique_and_span_spliced(spark, tmp_path):
             pub.write((i + 1) * ns, "a", v)
             pub.write((100 + i) * ns, "b", v)
 
-    # two rewrites of the SAME call text -> distinct temp views, so a
-    # second statement can never clobber the first's view mid-analysis
-    s1 = db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
-    s2 = db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
-    v1 = s1.split("FROM ")[1].strip()
-    v2 = s2.split("FROM ")[1].strip()
-    assert v1 != v2 and v1.startswith("__psi_drift_")
-    # both remain independently queryable (neither was clobbered)
-    assert spark.table(v1).count() == 2 and spark.table(v2).count() == 2
+    # two rewrites of the SAME call text -> distinct frames, and both
+    # statements return their rows
+    s1, f1 = db._rewrite_reads("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    s2, f2 = db._rewrite_reads("SELECT * FROM psi_drift('m', 'v', 'kind')")
+    [(k1, df1)], [(k2, df2)] = f1.items(), f2.items()
+    assert df1 is not df2 and k1.startswith("psi_drift_")
+    assert s1 == "SELECT * FROM {%s}" % k1 and s2 == "SELECT * FROM {%s}" % k2
+    assert spark.sql(s1, **f1).count() == 2 and spark.sql(s2, **f2).count() == 2
 
-    # a string literal containing the substituted VIEW NAME (or any
-    # text equal to another occurrence) survives: replacement is by
-    # match span, not global str.replace
+    # a string literal containing the substituted text (or any text
+    # equal to another occurrence) survives: replacement is by match
+    # span, not global str.replace
     out = _splice_spans("SELECT 'xyz' FROM xyz", [(18, 21, "v9")])
-    assert out == "SELECT 'xyz' FROM v9"
+    assert out == "SELECT 'xyz' FROM {v9}"
 
-    # two distinct calls in ONE statement each get their own view
-    s3 = db._apply_tvf_rewrites(
+    # two distinct calls in ONE statement each get their own frame
+    s3, f3 = db._rewrite_reads(
         "SELECT * FROM psi_drift('m', 'v', 'kind') "
         "UNION ALL SELECT * FROM psi_drift('m', 'v', 'kind', 4)"
     )
-    names = [w for w in s3.replace(")", " ").split() if w.startswith("__psi_drift_")]
-    assert len(names) == 2 and names[0] != names[1]
+    assert len(f3) == 2 and all("{%s}" % k in s3 for k in f3)
+    assert spark.sql(s3, **f3).count() == 4
 
 
-def test_tvf_view_gc_deferred_and_session_correct(spark, tmp_path):
-    """Regression (r9 ADVICE + r10 self-review): TVF-view GC defers
-    eviction to the owning instance's NEXT top-level rewrite batch, so
-    (a) one statement with more TVF matches than the cap can never
-    evict a view it has not yet analyzed — including via the
-    _frame_for re-entrancy path, which a depth guard keeps from
-    flushing mid-batch; (b) the live window is process-wide (total
-    catalog footprint stays bounded no matter how many Ella instances
-    churn) and each entry is dropped via its OWNING session, so a
-    second session's views are actually removed from THAT session's
-    catalog."""
-    import ella_spark.engine as eng
+def _catalog_names(session) -> list[str]:
+    return sorted(t.name for t in session.catalog.listTables())
+
+
+def _drift_and_mv_db(spark, root):
+    """A topic ``m`` and a materialized view ``mv`` over it with two
+    retained versions; returns (db, commit time of version 1)."""
     from ella_spark import Column, Ella
-    from ella_spark.engine import _TVF_VIEW_CAP
 
-    eng._TVF_VIEW_LIVE.clear()  # isolate from earlier tests
-    db = Ella.create(str(tmp_path / "db"), spark)
+    db = Ella.create(str(root), spark)
     t = db.create_topic(
         "m", [Column("kind", "string", required=True), Column("v", "float64")]
     )
@@ -375,94 +367,50 @@ def test_tvf_view_gc_deferred_and_session_correct(spark, tmp_path):
         for i, v in enumerate([1.0, 11.0, 21.0, 31.0]):
             pub.write((i + 1) * ns, "a", v)
             pub.write((100 + i) * ns, "b", v)
-
-    # simulate a statement that registered cap+8 views: NONE may be
-    # evicted while pending (they are all part of the same statement)
-    db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
-    first_view = db._tvf_views_pending[0]
-    db._tvf_views_pending.extend(
-        f"__fake_{i}" for i in range(_TVF_VIEW_CAP + 8)
+    db.create_materialized_view(
+        "mv", "SELECT kind, count(*) AS n FROM m GROUP BY kind", keep_versions=2
     )
-    # a NESTED rewrite (the _frame_for re-entrancy path) must NOT
-    # flush the outer statement's pending views
-    db._tvf_rewrite_depth = 1
-    db._apply_tvf_rewrites("SELECT 1")
-    db._tvf_rewrite_depth = 0
-    assert len(db._tvf_views_pending) == _TVF_VIEW_CAP + 9
-    assert spark.table(first_view).count() == 2  # still live
-    # the NEXT top-level batch flushes pending -> live, bounded
-    db._apply_tvf_rewrites("SELECT 1")
-    assert not db._tvf_views_pending
-    assert len(eng._TVF_VIEW_LIVE) <= _TVF_VIEW_CAP
-    live_names = [n for _, n in eng._TVF_VIEW_LIVE]
-    # the oldest (the real view) was evicted only AFTER its statement
-    # window closed
-    assert first_view not in live_names
-
-    # session-correct eviction: an instance on a DIFFERENT session
-    # registers a real view; the first instance's churn evicts it
-    # from the OWNING session's catalog (the r9 bug dropped through
-    # whichever session triggered eviction, leaking the view forever)
-    spark2 = spark.newSession()
-    db2 = Ella.create(str(tmp_path / "db_b"), spark2)
-    t2 = db2.create_topic(
-        "m2", [Column("kind", "string", required=True), Column("v", "float64")]
-    )
-    with t2.publish() as pub:
-        for i, v in enumerate([1.0, 11.0]):
-            pub.write((i + 1) * ns, "a", v)
-    db2._apply_tvf_rewrites("SELECT * FROM psi_drift('m2', 'v', 'kind')")
-    v2 = db2._tvf_views_pending[0]
-    db2._apply_tvf_rewrites("SELECT 1")  # promote v2 to the live window
-    assert spark2.catalog.tableExists(v2)
-    # churn the shared window past the cap from the FIRST instance
-    db._tvf_views_pending.extend(f"__churn_{i}" for i in range(_TVF_VIEW_CAP * 2))
-    db._apply_tvf_rewrites("SELECT 1")
-    assert not spark2.catalog.tableExists(v2)  # dropped via session 2
-
-
-def test_tvf_live_window_holds_sessions_weakly(spark, tmp_path):
-    """ADVICE r10: live-window entries carry weakref(session), so an
-    entry can never keep a stopped/garbage-collected session's JVM
-    handles alive while it waits for 64 newer views to evict it; a
-    dead ref is skipped on eviction without error."""
-    import gc
-    import weakref
-
-    import ella_spark.engine as eng
-    from ella_spark import Column, Ella
-    from ella_spark.engine import _TVF_VIEW_CAP
-
-    eng._TVF_VIEW_LIVE.clear()
-    db = Ella.create(str(tmp_path / "db"), spark)
-    t = db.create_topic(
-        "m", [Column("kind", "string", required=True), Column("v", "float64")]
-    )
-    ns = 1_000_000_000
     with t.publish() as pub:
-        for i, v in enumerate([1.0, 11.0]):
-            pub.write((i + 1) * ns, "a", v)
-    db._apply_tvf_rewrites("SELECT * FROM psi_drift('m', 'v', 'kind')")
-    db._apply_tvf_rewrites("SELECT 1")  # promote pending -> live
-    ref, _name = eng._TVF_VIEW_LIVE[-1]
-    assert ref() is spark  # weak, but resolves while the session lives
+        pub.write(200 * ns, "a", 5.0)
+    db.refresh_materialized("mv")
+    return db, dict(db.store.resolve("mv").version_log)[1]
 
-    class Dummy:
-        pass
 
-    d = Dummy()
-    eng._TVF_VIEW_LIVE.appendleft((weakref.ref(d), "__dead_session_view"))
-    del d
-    gc.collect()
-    dead_ref, _ = eng._TVF_VIEW_LIVE[0]
-    assert dead_ref() is None
-    # churn past the cap: eviction must skip the dead entry silently
-    db._tvf_views_pending.extend(
-        f"__fake_{i}" for i in range(_TVF_VIEW_CAP + 4)
-    )
-    db._apply_tvf_rewrites("SELECT 1")
-    assert len(eng._TVF_VIEW_LIVE) <= _TVF_VIEW_CAP
-    assert all(n != "__dead_session_view" for _, n in eng._TVF_VIEW_LIVE)
+def test_reads_leave_no_temp_view(spark, tmp_path):
+    """Table functions, information_schema and time travel reach Spark
+    as DataFrame arguments of one ``spark.sql`` call, so a read leaves
+    the session catalog exactly as it found it, on the session the
+    datastore was opened with and on a second one."""
+    from ella_spark import Ella
+
+    db, ts1 = _drift_and_mv_db(spark, tmp_path / "db")
+    spark2 = spark.newSession()
+    for session, ella in ((spark, db), (spark2, Ella.open(str(db.store.root), spark2))):
+        before = _catalog_names(session)
+        for sql, n in (
+            ("SELECT * FROM psi_drift('m', 'v', 'kind')", 2),
+            ("SELECT * FROM psi_drift('m', 'v', 'kind')", 2),
+            ("SELECT * FROM information_schema.tables", 2),
+            ("SELECT * FROM mv FOR VERSION AS OF 1", 2),
+            (f"SELECT * FROM mv FOR TIMESTAMP AS OF {ts1}", 2),
+        ):
+            assert len(ella.query(sql).df.collect()) == n, sql
+        assert _catalog_names(session) == before
+
+
+def test_braces_reach_spark_verbatim(spark, tmp_path):
+    """A read that passes frames is formatted by ``spark.sql``; every
+    brace of the statement's own text must still reach Spark as
+    written, next to a table function and next to time travel."""
+    db, _ = _drift_and_mv_db(spark, tmp_path / "db")
+    rows = db.query(
+        "SELECT '{x}' AS s, * FROM psi_drift('m', 'v', 'kind')"
+    ).df.collect()
+    assert [r.s for r in rows] == ["{x}", "{x}"]
+    rows = db.query("SELECT '}{' AS s, * FROM mv FOR VERSION AS OF 1").df.collect()
+    assert sorted((r.s, r.kind, r.n) for r in rows) == [("}{", "a", 4), ("}{", "b", 4)]
+    # no frame: the text reaches Spark unformatted
+    assert db.query("SELECT '{x}' AS s").df.collect()[0].s == "{x}"
 
 
 def test_ks_zero_when_distributions_identical(spark, tmp_path):
@@ -1117,14 +1065,12 @@ def test_trend_robust_operator_bucket_width(spark, tmp_path):
 def test_nested_tvf_via_stored_view_reentrancy(spark, tmp_path):
     """End-to-end re-entrancy: a TVF whose TABLE ARGUMENT is a stored
     view that itself contains a TVF. Resolving the outer rewrite's
-    argument calls _frame_for -> _apply_tvf_rewrites on the inner
-    text MID-BATCH — the exact path the depth guard protects. Both
-    levels must produce correct rows and the outer statement's views
-    must survive to analysis."""
-    import ella_spark.engine as eng
+    argument calls _frame_for -> _sql on the inner text while the
+    outer statement is still being rewritten. Both levels must produce
+    correct rows and the outer statement's frames must survive to
+    analysis."""
     from ella_spark import Column, Ella
 
-    eng._TVF_VIEW_LIVE.clear()
     db = Ella.create(str(tmp_path / "db"), spark)
     t = db.create_topic(
         "m", [Column("kind", "string", required=True), Column("v", "float64")]
@@ -1146,8 +1092,7 @@ def test_nested_tvf_via_stored_view_reentrancy(spark, tmp_path):
     ).df.toPandas()
     # identical distributions -> psi == 0 for both kinds -> all ties
     assert len(out) == 2 and (out.auc == 0.5).all()
-    # and a plain re-read of the inner view still works (its pending
-    # views were not evicted by the nested flush)
+    # and a plain re-read of the inner view still works
     assert db.query("SELECT count(*) AS n FROM psi_v").df.collect()[0].n == 2
 
 

@@ -1811,7 +1811,8 @@ def test_tvf_rewrite_golden(tvf_db, sql, expected):
     from pyspark.errors import AnalysisException
 
     try:
-        got = tvf_db._apply_tvf_rewrites(sql)
+        text, frames = tvf_db._rewrite_reads(sql)
+        got = text.format_map({k: f"__{k}" for k in frames}) if frames else text
     except ValueError as e:
         got = str(e)
     except AnalysisException as e:

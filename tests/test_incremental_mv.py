@@ -939,7 +939,7 @@ def test_mv_create_or_replace_failure_preserves_old(db, spark):
 
 
 def test_time_travel_rewriter_literal_property(db, spark):
-    """Property test of _rewrite_version_asof (regex rewriting must
+    """Property test of the time-travel rewrite in _rewrite_reads (must
     survive quoted literals, escaped quotes, multiple refs in one
     statement): every string literal survives VERBATIM — including
     ones spelling `mv FOR TIMESTAMP AS OF 123` over a real MV name —
@@ -993,7 +993,8 @@ def test_time_travel_rewriter_literal_property(db, spark):
     @given(st.lists(seg, min_size=1, max_size=6))
     def check(segments):
         sql = "SELECT " + " ".join(s for _, s in segments)
-        out = db._rewrite_version_asof(sql)
+        text, frames = db._rewrite_reads(sql)
+        out = text.format_map({k: f"__mv_asof_{k}" for k in frames}) if frames else text
         # every literal survives verbatim
         for kind, s in segments:
             if kind == "lit":

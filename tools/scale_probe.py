@@ -106,8 +106,8 @@ def _tvf_specs():
     """TVF-dispatch probe specs (VERDICT r12 #2): each entry is
     (tvf_sql_template, direct_operator_callable, table_paths) where
     the template's {t} is the external-table name. Timing BOTH the
-    `Ella.query` dispatch route (regex rewrite → operator → unique
-    temp view → spark.sql over the spliced statement, re-run per
+    `Ella.query` dispatch route (regex rewrite → operator → frame
+    passed to spark.sql over the spliced statement, re-run per
     call per the durable-text contract) and the direct operator call
     on the same files isolates the route's per-call planning
     overhead — the question is whether the rewrite adds any
