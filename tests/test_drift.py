@@ -413,6 +413,22 @@ def test_braces_reach_spark_verbatim(spark, tmp_path):
     assert db.query("SELECT '{x}' AS s").df.collect()[0].s == "{x}"
 
 
+def test_literals_and_comments_are_not_rewritten(spark, tmp_path):
+    """A name inside a string literal is data, and a quote inside a
+    comment or a backslash-escaped one opens no literal: only the real
+    references around them are rewritten."""
+    db, _ = _drift_and_mv_db(spark, tmp_path / "db")
+    rows = db.query(
+        "SELECT 'information_schema.tables' AS s FROM information_schema.tables"
+    ).df.collect()
+    assert [r.s for r in rows] == ["information_schema.tables"] * 2
+    rows = db.query(
+        "SELECT 'it\\'s' AS s, * -- don't\n"
+        "FROM psi_drift('m', 'v', 'kind') /* 'mv FOR VERSION AS OF 1' */"
+    ).df.collect()
+    assert [r.s for r in rows] == ["it's", "it's"]
+
+
 def test_ks_zero_when_distributions_identical(spark, tmp_path):
     """Two-sample KS D is exactly 0 when every slice's value multiset
     equals the pooled distribution (F_t == F_p at every step point)."""
