@@ -19,7 +19,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, partial
 from pathlib import Path
 from typing import Callable, NamedTuple
 
@@ -1070,6 +1070,11 @@ class Ella:
         recompute, as does a topic schema change since the last
         snapshot that changes the view's columns and any SQL shape the
         analyzer does not fully understand.
+
+        An analyzable view binds its topics to the shards it reads
+        inside its own ``spark.sql`` calls (``_bound_sql``), where no
+        other statement resolves or changes them; any other view reads
+        the session views through ``_sql``, like a statement.
         """
         from ella_spark.incremental import analyze_mv_sql
 
@@ -1260,45 +1265,38 @@ class Ella:
     def _refresh_full(
         self, entry: TableEntry, analysis, topics: list, _retries: int = 2
     ) -> int:
-        """Full recompute. For an analyzable n-topic view the topics
-        are bound to EXPLICIT shard listings so the recorded cursors
-        equal the snapshot's exact inputs (rows published between
-        listing and compute are picked up next refresh, never
+        """Full recompute. An analyzable n-topic view binds its topics
+        to EXPLICIT shard listings (``_bound_sql``) so the recorded
+        cursors equal the snapshot's exact inputs (rows published
+        between listing and compute are picked up next refresh, never
         double-counted). If a concurrent compactor unlinked listed
         shards MID-JOB, ignoreMissingFiles would have silently dropped
         their rows — detected by re-listing after the commit and
         repaired by re-running against the post-compaction listing."""
-        state = None
+        sql, state = self._sql, None
         if analysis is not None and topics:
             listings = [t.shards() for t in topics]
             state = _cursor_state(analysis.tables, listings)
-            for t, name, shard_paths in zip(topics, analysis.tables, listings):
-                t.read_files(self.spark, shard_paths).createOrReplaceTempView(
-                    name
-                )
-        try:
-            if analysis is not None and topics and analysis.hidden_sql:
-                try:
-                    df = self._with_visible(entry.sql, analysis)
-                except AnalysisException:
-                    # the hidden rewrite can be unsupported for the
-                    # actual argument types (e.g. hll_sketch_agg
-                    # rejects double where approx_count_distinct
-                    # accepts it) — an ANALYSIS-time error, so fall
-                    # back to the PLAIN query as a full-recompute-only
-                    # MV instead of failing CREATE. Runtime errors
-                    # (transient executor/IO failures) propagate: a
-                    # retry must keep the incremental state.
-                    df = self._sql(entry.sql)
-                    state = None
-                    analysis = None
-            else:
-                df = self._sql(entry.sql)
-            self._check_reserved_aliases(df, analysis)
-            n = self._commit_snapshot(entry, df, state)
-        finally:
-            for t in topics:
-                self._register(t.entry)  # undo the delta/full binding
+            frames = [t.read_files(self.spark, p) for t, p in zip(topics, listings)]
+            sql = partial(self._bound_sql, names=analysis.tables, frames=frames)
+        if state is not None and analysis.hidden_sql:
+            try:
+                df = self._with_visible(entry.sql, analysis, sql)
+            except AnalysisException:
+                # the hidden rewrite can be unsupported for the actual
+                # argument types (e.g. hll_sketch_agg rejects double
+                # where approx_count_distinct accepts it) — an
+                # ANALYSIS-time error, so fall back to the PLAIN query
+                # as a full-recompute-only MV instead of failing CREATE.
+                # Runtime errors (transient executor/IO failures)
+                # propagate: a retry must keep the incremental state.
+                df = sql(entry.sql)
+                state = None
+                analysis = None
+        else:
+            df = sql(entry.sql)
+        self._check_reserved_aliases(df, analysis)
+        n = self._commit_snapshot(entry, df, state)
         if state is not None and _retries > 0:
             stale = any(
                 not set(state[_state_key("shards", i)]).issubset(
@@ -1310,6 +1308,19 @@ class Ella:
                 fresh = self.store.tables[entry.ident]
                 return self._refresh_full(fresh, analysis, topics, _retries - 1)
         return n
+
+    def _bound_sql(self, sql: str, names: list[str], frames: list) -> DataFrame:
+        """``spark.sql`` over ``sql`` with each of ``names`` bound to its
+        frame by a CTE, which takes precedence over a session view of
+        that name; ``spark.sql`` views a DataFrame argument for the
+        length of the call only, so no other statement sees the frames."""
+        ctes = ", ".join(
+            f"`{n}` AS (SELECT * FROM {{b{i}}})" for i, n in enumerate(names)
+        )
+        return self.spark.sql(
+            f"WITH {ctes} {_splice_spans(sql, [])}",
+            **{f"b{i}": f for i, f in enumerate(frames)},
+        )
 
     @staticmethod
     def _check_reserved_aliases(df: DataFrame, analysis) -> None:
@@ -1331,12 +1342,12 @@ class Ella:
                 "rename them"
             )
 
-    def _attach_side_state(self, df: DataFrame, analysis) -> DataFrame:
+    def _attach_side_state(self, df: DataFrame, analysis, sql: Callable) -> DataFrame:
         """Join the hidden state that families build by a side query
         (KLL sketches, mode count-maps — incremental.FAMILIES) onto
         the hidden-partials frame. Each side query replays the SAME
-        FROM/WHERE binding the hidden SQL used, selecting the group
-        keys next to the family's own items."""
+        FROM/WHERE binding the hidden SQL used, through the same
+        ``sql``, selecting the group keys next to the family's items."""
         import functools
 
         from pyspark.sql import functions as F
@@ -1344,15 +1355,13 @@ class Ella:
         def query(extra: list[str]) -> DataFrame:
             sel = ", ".join(analysis.key_items + extra)
             q = f"SELECT {sel} FROM {analysis.from_text}"
-            return self.spark.sql(
-                q + (f" WHERE {analysis.where}" if analysis.where else "")
-            )
+            return sql(q + (f" WHERE {analysis.where}" if analysis.where else ""))
 
         keys = analysis.keys
         # RENAME the state keys before joining: df and the state both
         # descend from the same base relation (both are spark.sql over
-        # the topic view), so df[k] and state[k] can resolve to the
-        # SAME attribute and the equality folds to trivially-true
+        # the same topic frames), so df[k] and state[k] can resolve to
+        # the SAME attribute and the equality folds to trivially-true
         # (observed: a cross-join-shaped result)
         ren = {kk: f"__mv_sidek_{kk}" for kk in keys}
         for fam, items in analysis.by_family():
@@ -1376,14 +1385,13 @@ class Ella:
                 ).drop(*ren.values())
         return df
 
-    def _with_visible(self, orig_sql: str, analysis) -> DataFrame:
-        """Run the hidden-partials SQL, attach side-query state and
-        derive the visible columns, each cast to the dtype the
+    def _with_visible(self, orig_sql: str, analysis, sql: Callable) -> DataFrame:
+        """Run the hidden-partials SQL through ``sql``, attach side-query
+        state and derive the visible columns, each cast to the dtype the
         ORIGINAL SQL would produce — the snapshot then carries visible
         cols in select order followed by the mergeable hidden state."""
-        orig_fields = {f.name: f.dataType for f in self.spark.sql(orig_sql).schema}
-        df = self.spark.sql(analysis.hidden_sql)
-        df = self._attach_side_state(df, analysis)
+        orig_fields = {f.name: f.dataType for f in sql(orig_sql).schema}
+        df = self._attach_side_state(sql(analysis.hidden_sql), analysis, sql)
         return self._derive_visible(df, analysis, orig_fields)
 
     @staticmethod
@@ -1460,9 +1468,10 @@ class Ella:
         oldᵢ₋₁ ⋈ Δᵢ ⋈ curᵢ₊₁ ⋈ … ⋈ curₙ (ΔT for one topic) — an exact
         partition of the new result rows (each new row is claimed by the
         FIRST position holding one of its delta inputs), so the refresh
-        never joins history against history on all sides at once. SPF
-        rows append to the snapshot; aggregate partials merge with it.
-        None → full recompute."""
+        never joins history against history on all sides at once; each
+        term binds its frames in its own calls (``_bound_sql``). SPF rows
+        append to the snapshot; aggregate partials merge with it. None →
+        full recompute."""
         from pyspark.sql.types import StructType
 
         state = entry.refresh_state
@@ -1480,64 +1489,51 @@ class Ella:
             return int(state["rows"])
 
         new_state = _cursor_state(analysis.tables, cur)
-        # rewritten once: each term's spark.sql binds the same frames
-        # and resolves the topic names as re-pointed for that term
-        text, frames = self._rewrite_reads(analysis.hidden_sql or entry.sql)
-        try:
-            terms = []
-            for i in range(len(topics)):
-                if not deltas[i]:
-                    continue
-                # positions before i: OLD only; i: its delta; after i:
-                # the full current listing (old + delta)
-                for j, t in enumerate(topics):
-                    files = olds[j] if j < i else deltas[i] if j == i else cur[j]
-                    t.read_files(self.spark, files).createOrReplaceTempView(
-                        analysis.tables[j]
-                    )
-                df = self.spark.sql(text, **frames)
-                terms.append(self._attach_side_state(df, analysis))
-            delta_df = terms[0]
-            for t_df in terms[1:]:
-                delta_df = delta_df.unionByName(t_df)
-            if analysis.mode in ("agg", "agg_join"):
-                # the delta terms arrive ALREADY partially aggregated
-                # by the SQL: merge with the snapshot. A snapshot
-                # written by an OLDER hidden-state layout (e.g.
-                # pre-Welford raw sums) fails the unionByName at
-                # analysis time — fall back to a full recompute, which
-                # rewrites the state in the new layout.
-                try:
-                    return self._merge_agg_snapshot(
-                        entry, analysis, delta_df, new_state
-                    )
-                except AnalysisException:
-                    return None
-            # structural guard behind the regex analyzer: an aggregate
-            # the blacklist does not know must NEVER be treated as
-            # append-only — a partial per-delta result would silently
-            # corrupt the snapshot. The analyzed plan is ground truth;
-            # when it is not inspectable (Spark Connect has no _jdf),
-            # fail CLOSED to a full recompute rather than trust the
-            # regex alone.
+        terms = []
+        for i in range(len(topics)):
+            if not deltas[i]:
+                continue
+            # positions before i: OLD only; i: its delta; after i: the
+            # full current listing (old + delta)
+            parts = olds[:i] + [deltas[i]] + cur[i + 1 :]
+            frames = [t.read_files(self.spark, p) for t, p in zip(topics, parts)]
+            sql = partial(self._bound_sql, names=analysis.tables, frames=frames)
+            df = sql(analysis.hidden_sql or entry.sql)
+            terms.append(self._attach_side_state(df, analysis, sql))
+        delta_df = terms[0]
+        for t_df in terms[1:]:
+            delta_df = delta_df.unionByName(t_df)
+        if analysis.mode in ("agg", "agg_join"):
+            # the delta terms arrive ALREADY partially aggregated by
+            # the SQL: merge with the snapshot. A snapshot written by an
+            # OLDER hidden-state layout (e.g. pre-Welford raw sums)
+            # fails the unionByName at analysis time — fall back to a
+            # full recompute, which rewrites the state in the new layout.
             try:
-                plan = _jdf_qe(delta_df).analyzed().toString()
-            except Exception:
+                return self._merge_agg_snapshot(entry, analysis, delta_df, new_state)
+            except AnalysisException:
                 return None
-            if "Aggregate" in plan:
-                return None
-            # a topic schema change since the last snapshot (ALTER
-            # TABLE ADD/DROP COLUMN): the append keeps the recorded
-            # columns, so only a full recompute reads the new ones
-            recorded = StructType.fromJson(json.loads(entry.result_schema))
-            if _relax_nullability(delta_df.schema) != _relax_nullability(recorded):
-                return None
-            return self._commit_snapshot(
-                entry, delta_df, new_state, append_to=int(state["rows"])
-            )
-        finally:
-            for t in topics:
-                self._register(t.entry)
+        # structural guard behind the regex analyzer: an aggregate the
+        # blacklist does not know must NEVER be treated as append-only —
+        # a partial per-delta result would silently corrupt the
+        # snapshot. The analyzed plan is ground truth; when it is not
+        # inspectable (Spark Connect has no _jdf), fail CLOSED to a full
+        # recompute rather than trust the regex alone.
+        try:
+            plan = _jdf_qe(delta_df).analyzed().toString()
+        except Exception:
+            return None
+        if "Aggregate" in plan:
+            return None
+        # a topic schema change since the last snapshot (ALTER TABLE
+        # ADD/DROP COLUMN): the append keeps the recorded columns, so
+        # only a full recompute reads the new ones
+        recorded = StructType.fromJson(json.loads(entry.result_schema))
+        if _relax_nullability(delta_df.schema) != _relax_nullability(recorded):
+            return None
+        return self._commit_snapshot(
+            entry, delta_df, new_state, append_to=int(state["rows"])
+        )
 
     def drop_table(self, name: str) -> None:
         catalog, schema, base = self._split(name)

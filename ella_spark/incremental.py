@@ -25,7 +25,9 @@ of O(history) for these shapes:
   positions before i are bound to old data only). Inner joins only:
   outer variants can RETRACT earlier null-padded rows on insert,
   which append-only snapshots cannot express. Families whose state
-  comes from a side query (KLL, mode) do not ride joins.
+  comes from a side query (KLL, mode) do not ride joins. A self-join
+  falls back to a full recompute: a refresh binds each topic name by
+  one CTE, which cannot hold the old and the delta file subsets at once.
 
 Shared contract:
 
@@ -1003,7 +1005,7 @@ def _parse_chain(chain: str) -> list[str] | None:
             return None
         tables.append(link.group("t"))
     if len({t.lower() for t in tables}) != len(tables):
-        return None  # self-join: one view name cannot bind two subsets
+        return None  # self-join: one CTE name cannot bind two file subsets
     return tables
 
 
@@ -1015,8 +1017,9 @@ def _analyze_join(sql: str) -> MvAnalysis | None:
     exactly like the single-topic agg mode).
 
     Self-joins are rejected: the delta identity needs the same table
-    bound to different file subsets simultaneously, which one view
-    name cannot express. Outer flavors / subqueries reject.
+    bound to different file subsets simultaneously, which one CTE name
+    of a refresh (``Ella._bound_sql``) cannot express. Outer flavors /
+    subqueries reject.
     """
     m = _JOIN_SHAPE.match(sql)
     if m is None or _BANNED_JOIN.search(sql):

@@ -1817,6 +1817,95 @@ def test_agg_join_mv_delta_merge(db, spark):
     assert got == exp
 
 
+def _ticks_and_dims(db, spark):
+    """Topics ``ticks`` (10 rows, keys 0..2) and ``dims`` (one row per
+    key) and a function inserting ticks ``[lo, hi)``."""
+    cols = [Column("k", "int64"), Column("v", "float64")]
+    ticks, dims = db.create_topic("ticks", cols), db.create_topic("dims", cols)
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "id * 1000 AS time", "id % 3 AS k", "CAST(id AS double) AS v"
+    )
+    dims.insert(mk(0, 3))
+    ticks.insert(mk(0, 10))
+    return lambda lo, hi: ticks.insert(mk(lo, hi))
+
+
+#: one MV per refresh shape: SPF (with braces, which ``spark.sql`` formats
+#: when given frames), agg, agg with a side query (KLL), join chain —
+#: each with the SQL that counts the ticks rows it consumed
+_SHAPED_MVS = {
+    "m_spf": (
+        "SELECT time, k, v, '{k}' AS tag FROM ticks",
+        "SELECT count(*) FROM m_spf WHERE tag = '{k}'",
+    ),
+    "m_agg": (
+        "SELECT k, count(*) AS n FROM ticks GROUP BY k",
+        "SELECT sum(n) FROM m_agg",
+    ),
+    "m_side": (
+        "SELECT k, count(*) AS n, approx_percentile(v, 0.5) AS p50 "
+        "FROM ticks GROUP BY k",
+        "SELECT sum(n) FROM m_side",
+    ),
+    "m_join": (
+        "SELECT t.k AS k, count(*) AS n FROM ticks t JOIN dims d ON t.k = d.k "
+        "GROUP BY t.k",
+        "SELECT sum(n) FROM m_join",
+    ),
+}
+
+
+def test_refresh_binds_topics_despite_concurrent_registration(
+    db, spark, monkeypatch
+):
+    """A refresh binds each topic to its shard listing inside its own
+    spark.sql call, so a statement on another thread re-pointing the
+    session's topic views mid-refresh cannot widen a delta term: here
+    every spark.sql of the refresh first re-points ``ticks`` and
+    ``dims`` to their whole topics, and each MV still counts every
+    published row once."""
+    insert = _ticks_and_dims(db, spark)
+    for name, (sql, _) in _SHAPED_MVS.items():
+        db.create_materialized_view(name, sql)
+        assert db.store.resolve(name).refresh_state is not None, name
+    insert(10, 20)
+    sql = db.spark.sql
+
+    def repointing_sql(*args, **kwargs):
+        for name in ("ticks", "dims"):
+            db.topic(name).read(spark).createOrReplaceTempView(name)
+        return sql(*args, **kwargs)
+
+    monkeypatch.setattr(db.spark, "sql", repointing_sql)
+    for name in _SHAPED_MVS:
+        db.refresh_materialized(name)
+    counts = {
+        name: db.query(count).df.collect()[0][0]
+        for name, (_, count) in _SHAPED_MVS.items()
+    }
+    assert counts == dict.fromkeys(_SHAPED_MVS, 20)
+
+
+@pytest.mark.parametrize("incremental", [True, False])
+def test_refresh_leaves_session_topic_views_whole(db, spark, monkeypatch, incremental):
+    """A statement analyzed mid-refresh (here: just before the snapshot
+    commit) resolves ``ticks`` to the whole topic, not to the delta or
+    full shard listing the refresh bound."""
+    insert = _ticks_and_dims(db, spark)
+    db.create_materialized_view("m_spf", _SHAPED_MVS["m_spf"][0])
+    insert(10, 20)
+    seen = []
+    commit = Ella._commit_snapshot
+
+    def counting_commit(self, *args, **kwargs):
+        seen.append(self.spark.sql("SELECT count(*) FROM ticks").collect()[0][0])
+        return commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(Ella, "_commit_snapshot", counting_commit)
+    assert db.refresh_materialized("m_spf", incremental=incremental) == 20
+    assert seen == [20]
+
+
 def _schema_fields(result_schema: str) -> list:
     import json
 
