@@ -33,7 +33,7 @@ from ella_spark.catalog import (
     TableEntry,
 )
 from ella_spark.lazy import Lazy
-from ella_spark.session import conf_version
+from ella_spark.session import conf_version, local_frame
 from ella_spark.topic import Publisher, Topic
 from ella_spark.tvf import TVFS, Tvf, own_tables_blanked
 from ella_spark.types import TIME_COLUMN, Column, topic_schema
@@ -1692,10 +1692,10 @@ class Ella:
             self._register_referenced(sql, params)
         out = verb.run(self, m, params) if verb.params else verb.run(self, m)
         if verb.result == _OK:
-            out = self.spark.createDataFrame([], _OK)
+            out = local_frame(self.spark, [], _OK)
         elif verb.result is not None:
             rows = out if isinstance(out, list) else [(out,)]
-            out = self.spark.createDataFrame(rows, verb.result)
+            out = local_frame(self.spark, rows, verb.result)
         return Lazy(out, engine=self, sql=sql)
 
     def _sql(self, sql: str, params: dict | list | None = None) -> DataFrame:
@@ -1791,14 +1791,15 @@ class Ella:
                 (e.catalog, e.schema, e.name, kind_to_type.get(e.kind, e.kind.upper()))
                 for e in entries
             ]
-            return self.spark.createDataFrame(rows, key + "table_type string")
+            return local_frame(self.spark, rows, key + "table_type string")
         rows = [
             (e.catalog, e.schema, e.name, c.name, i + 1,
              "NO" if c.required else "YES", c.dtype)
             for e in entries
             for i, c in enumerate(e.columns)
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             key + "column_name string, ordinal_position int, "
             "is_nullable string, data_type string",

@@ -43,6 +43,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ella_spark.session import local_frame
+
 
 def _closed_min(sym: DataFrame) -> DataFrame:
     """Per node u: min of its closed neighborhood min(Γ(u) ∪ {u})."""
@@ -283,7 +285,7 @@ def pagerank(
     edeg = e.join(deg, "src").localCheckpoint(eager=False)
     n = deg.count()  # one scalar to the driver (bounded by design)
     if n == 0:  # empty graph: no nodes, no ranks (avoid 0-division)
-        return edeg.sparkSession.createDataFrame([], "node long, pr long")
+        return local_frame(edeg.sparkSession, [], "node long, pr long")
 
     pr = deg.select(
         F.col("src").alias("node"),

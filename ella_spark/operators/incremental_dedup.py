@@ -45,6 +45,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ella_spark.operators.dedup import normalize_text, shingle_minhash_udf
+from ella_spark.session import local_frame
 
 
 class DedupIndex:
@@ -168,7 +169,7 @@ class DedupIndex:
     def _part(self, spark: SparkSession, name: str, schema: str) -> DataFrame:
         d = self.path / name
         if not d.exists():
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return spark.read.schema(schema).parquet(str(d))
 
     def exact_matches(self, df: DataFrame, _fp: DataFrame | None = None) -> DataFrame:

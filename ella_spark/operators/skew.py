@@ -15,6 +15,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ella_spark.session import local_frame
+
 
 def salted_join(
     left: DataFrame,
@@ -138,9 +140,7 @@ def global_order_stats(
     for r in counts:
         offsets.append((r._pid, acc))
         acc += r._n
-    off = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_pid long, _off long")
-    )
+    off = F.broadcast(local_frame(spark, offsets or [(0, 0)], "_pid long, _off long"))
     out = (
         s.join(off, s["_mid"].bitwiseAND(F.lit(-1 << 33)) == off["_pid"], "left")
         .withColumn(

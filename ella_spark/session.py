@@ -11,11 +11,13 @@ whole point of the rebuild.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # Configs that must be set for correctness (not just performance).
 REQUIRED_CONFS = {
@@ -62,6 +64,35 @@ PERF_CONFS = {
 
 #: guards each session's conf snapshot (conf_version)
 _CONF_LOCK = threading.Lock()
+
+
+@functools.lru_cache(maxsize=None)
+def _struct(ddl: str) -> StructType:
+    # a schema string parses over py4j: once per text, not per frame
+    return _parse_datatype_string(ddl)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """A driver-local frame of ``rows`` (tuples in field order) typed
+    by ``schema`` (a struct or a DDL string, fields nullable). It is
+    built from an Arrow table, so Spark holds it as a local relation:
+    collecting it runs no Spark job, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says (that conf
+    guards pandas input only), and under Spark Connect it is a plain
+    ``LocalRelation``. ``createDataFrame`` over a Python list instead
+    parallelizes an RDD, and every action on it runs a job on Python
+    workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _struct(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def conf_version(spark: SparkSession) -> int | None:

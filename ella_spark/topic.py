@@ -575,7 +575,9 @@ class Topic:
             # createDataFrame([], schema) builds an RDD-backed frame
             # whose every action pays a Python-RDD job (~1 s measured —
             # it dominated the bloom-skip point-lookup MISS, the case
-            # where skipping works best and the scan reads nothing)
+            # where skipping works best and the scan reads nothing).
+            # Rows the driver holds go through session.local_frame,
+            # an Arrow-built local relation, for the same reason
             from pyspark.sql import functions as F
 
             # All-nullable lit(NULL) projection MATCHES the non-empty

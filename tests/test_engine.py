@@ -2252,6 +2252,34 @@ def test_statement_golden(statement_db, tmp_path):
         assert _observe_statement(statement_db, sql, params, tmp) == expected, sql
 
 
+def test_statement_results_start_no_job(statement_db, spark):
+    """A statement's result frame holds rows the driver already has:
+    collecting it starts no Spark job, with Arrow for pandas on or off."""
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(arrow)
+    try:
+        for enabled in ("true", "false"):
+            statement_db.query(f"SET {arrow} = {enabled}")
+            for sql in [
+                "INSERT INTO h VALUES (7000, 7)",
+                "CREATE VIEW jv AS SELECT k FROM g",
+                "SHOW TABLES",
+                "DESCRIBE g",
+                "SHOW CREATE TABLE g",
+                "CREATE OR REPLACE MATERIALIZED VIEW jm AS SELECT k FROM g",
+                "REFRESH MATERIALIZED VIEW jm",
+                "DROP VIEW jv",
+                "SET spark.ella.no_job = 1",
+                "SELECT table_name FROM information_schema.tables",
+            ]:
+                df = statement_db.query(sql).df
+                _, jobs = _with_jobs(spark, df.collect)
+                assert jobs == 0, (enabled, sql)
+    finally:
+        spark.conf.set(arrow, before)
+        spark.conf.unset("spark.ella.no_job")
+
+
 def test_drop_with_params_drops_nothing(db):
     db.create_topic("u", [Column("k", "int64")])
     with pytest.raises(ValueError, match="params apply to relational statements"):
